@@ -1,26 +1,37 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SessionShim, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
-/** Size-gated execution profile, applied per query invocation.
+/** Size-gated execution profiles, held as long-lived sessions per
+  * root session.
   *
   * Spark's adaptive query execution materializes every exchange as its own
-  * job (stage-by-stage re-optimization) — the right trade on a 100 TB scan,
-  * where runtime stats drive coalescing, skew splitting, and join re-plans,
-  * but pure scheduling overhead on a small scan: a 5-exchange plan over a
-  * few MB pays 5 serialized job floors (~80 ms each on local[32]) to move
-  * kilobytes. Real engines special-case small inputs the same way (e.g. a
-  * single-stage "small query" path); the reference executes every query as
-  * one pipeline regardless of size, so its per-query floor is flat.
+  * job — the right trade on a 100 TB scan, where runtime stats drive
+  * coalescing, skew splitting and join re-plans, but pure scheduling
+  * overhead on a small scan: a 5-exchange plan over a few MB pays 5
+  * serialized job floors (~80 ms each on local[32]) to move kilobytes. The
+  * reference executes every query as one pipeline regardless of size, so
+  * its per-query floor is flat.
   *
-  * Policy: if the query's source directory holds less than
-  * [[smallInputBytes]] of parquet, run the query without AQE and with a
-  * small fixed shuffle fan-out (the whole DAG becomes ONE scheduled job);
-  * otherwise restore the session's scale profile (AQE on, fan-out =
-  * default parallelism). The gate is input-driven, so the ×10/×100 scale
-  * harness dirs and any real deployment keep AQE — only genuinely tiny
-  * inputs take the fast path.
+  * Each root session gets three clones, built on first use and kept for
+  * the root's life, each with its profile's confs laid over at
+  * construction — `small` (AQE off, a fixed small shuffle fan-out, no
+  * planner broadcasts, fine scan splits: the whole DAG of a query over
+  * less than [[smallInputBytes]] is ONE job), `scale` (AQE, fan-out =
+  * default parallelism, planner broadcasts, 128 MB splits) and
+  * `interpreted` (small, minus generated code and with one shuffle task,
+  * for ad-hoc statements below [[interpretedInputBytes]]). No shared
+  * session's conf changes afterwards, so concurrent queries on different
+  * profiles never see each other's confs. All share the root's
+  * SparkContext, CacheManager (and so the hot tier) and job groups. The
+  * read entry points pick the profile by their input's bytes —
+  * `SparkEntry.queries` by its source dir's files ([[session]]),
+  * `InfluxQL.executeStatement`/`executeShapedOrd` and `PromQL.evaluate`
+  * by the referenced catalog frames' plan size ([[statementSession]]) —
+  * and build the query on it; operators read the profile from their
+  * frame's own session. The gate is input-driven, so the ×10/×100 scale
+  * dirs and any real deployment keep AQE.
   */
 object ExecProfile {
 
@@ -32,7 +43,10 @@ object ExecProfile {
 
   /** Shuffle fan-out for the small path: enough to keep 32 cores busy on
     * a skewed few-MB shuffle, few enough that per-task overhead stays
-    * under the job floor. */
+    * under the job floor. (Round 17: fanning the text pipeline out to
+    * defaultParallelism instead MEASURED WORSE — q123 warm reps 12-30 s
+    * at 32 partitions vs 2.7-5.2 s at 8, q93 ~2× — more short tasks
+    * multiply scheduling jitter on a steal-prone host.) */
   val smallShufflePartitions = 8
 
   private val sizeCache =
@@ -53,58 +67,88 @@ object ExecProfile {
       }
     })
 
-  /** Apply the input-size profile for a query over `dir`. Runtime confs
-    * only — the session's builder-time settings are untouched.
-    *
-    * Round-17 note: a "compute-heavy" variant that fanned the text-
-    * pipeline queries out to defaultParallelism shuffle partitions under
-    * the small profile was tried and MEASURED WORSE (interleaved A/B at
-    * sf0.1: q123 warm reps 12-30 s at 32 partitions vs 2.7-5.2 s at 8;
-    * q93 likewise ~2×) — on a steal-prone virtualized host, 4× more
-    * short tasks multiply scheduling jitter where 8 longer tasks ride it
-    * out; the per-stage exec/wall ratios that motivated the idea were
-    * GC-inflated task times, not idle-core headroom. The 8-partition
-    * small fan-out stands. */
-  def tune(spark: SparkSession, dir: String): Unit = {
-    val small = dirBytes(dir) < smallInputBytes
-    spark.conf.set("spark.sql.adaptive.enabled", (!small).toString)
-    spark.conf.set("spark.sql.shuffle.partitions",
-      if (small) smallShufflePartitions.toString
-      else spark.sparkContext.defaultParallelism.toString)
-    // On the small path a planner-chosen broadcast join costs MORE than a
-    // shuffle: the broadcast build is its own scheduled job, serialized
-    // before the main job (one more job floor), while an 8-partition
-    // shuffle of a few MB is just one extra stage inside the same job.
-    // Explicit broadcast() hints in operators still win over this
-    // threshold, so deliberately-broadcast dimensions keep their shape.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-      if (small) "-1" else "10485760")
-    spark.conf.set("spark.sql.join.preferSortMergeJoin",
-      if (small) "false" else "true")
-    // A single small parquet file scans as ONE task under the default
-    // 128 MB split size — a serial scan stage on a 32-core machine. Split
-    // small inputs finer so scan stages parallelize; at scale the default
-    // keeps task counts sane.
-    spark.conf.set("spark.sql.files.maxPartitionBytes",
-      if (small) "4m" else "128m")
-    // …and 4 MB splits still under-provision CPU-heavy text work: a
-    // compressed text column decodes ~10× its file bytes and tokenizes at
-    // ~MB/s/core, so an 8 MB documents file became a 2-task scan doing
-    // 15 s of single-threaded folds while 30 cores idled (the honest ×10
-    // sweep's "superlinear" q107/q124 were exactly this). The open-cost
-    // floor is what pins maxSplitBytes at 4 MB; dropping it lets
-    // bytes-per-core drive the split so scans land near one task per
-    // core regardless of compression ratio. Scale path keeps defaults —
-    // at real input sizes bytes-per-core ≥ 4 MB anyway.
-    spark.conf.set("spark.sql.files.openCostInBytes",
-      if (small) "262144" else "4194304")
-    spark.conf.set("spark.sql.files.minPartitionNum",
-      spark.sparkContext.defaultParallelism.toString)
+  /** The runtime confs of one profile. */
+  private def confs(root: SparkSession, small: Boolean): Map[String, String] = {
+    val cores = root.sparkContext.defaultParallelism.toString
+    Map(
+      "spark.sql.adaptive.enabled" -> (!small).toString,
+      "spark.sql.shuffle.partitions" ->
+        (if (small) smallShufflePartitions.toString else cores),
+      // small: a planner-chosen broadcast build is its own scheduled job,
+      // an 8-partition shuffle of a few MB one more stage in the same job
+      // (explicit broadcast() hints still win over the threshold)
+      "spark.sql.autoBroadcastJoinThreshold" -> (if (small) "-1" else "10485760"),
+      "spark.sql.join.preferSortMergeJoin" -> (!small).toString,
+      // small: split fine, and let bytes-per-core rather than the 4 MB
+      // open-cost floor size the splits — one small parquet file was a
+      // serial scan, an 8 MB text file a 2-task scan doing 15 s of
+      // tokenizing while 30 cores idled; at scale the defaults hold
+      "spark.sql.files.maxPartitionBytes" -> (if (small) "4m" else "128m"),
+      "spark.sql.files.openCostInBytes" -> (if (small) "262144" else "4194304"),
+      "spark.sql.files.minPartitionNum" -> cores)
   }
 
-  /** Is the session currently tuned to the small-input profile? Reads
-    * the same runtime conf [[tune]] sets (AQE off ⇔ small path), so the
-    * answer always matches the profile the current query runs under. */
+  /** An ad-hoc statement reading less than this runs the small profile
+    * without generated code and with one task per shuffle. Its request
+    * literals (time bounds, steps) are inlined into generated Java, so
+    * its code never repeats and every request paid a Janino compile per
+    * stage; at this size a shuffle's data fits one task. (Measured at
+    * local[4]: 100k resident rows ~2× the statements/s of generated code
+    * with 8 partitions; at 2M rows interpretation was 1-15% slower.) */
+  val interpretedInputBytes: Long = 64L << 20
+
+  private final class Profiles(root: SparkSession) {
+    private def derive(c: Map[String, String]) = {
+      val s = SessionShim.derive(root, c)
+      rootOf.put(s, root)
+      s
+    }
+    lazy val small: SparkSession = derive(confs(root, small = true))
+    lazy val scale: SparkSession = derive(confs(root, small = false))
+    // factoryMode is internal to Spark; without it, expression
+    // projections and predicates still compile with wholeStage off
+    lazy val interpreted: SparkSession = derive(confs(root, small = true) ++ Map(
+      "spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+  }
+  private val profiles =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, Profiles]()
+  // profile session -> the root it was derived from
+  private val rootOf =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+
+  private def profilesOf(spark: SparkSession): Profiles =
+    profiles.computeIfAbsent(rootOf.getOrDefault(spark, spark), new Profiles(_))
+
+  /** The profile session for a prepared query reading `inputBytes` from
+    * frames of `spark` (a root session, or one of its profile sessions). */
+  def session(spark: SparkSession, inputBytes: BigInt): SparkSession =
+    if (inputBytes < smallInputBytes) profilesOf(spark).small
+    else profilesOf(spark).scale
+
+  /** Optimizer size estimate of a frame: its files' bytes for a scan,
+    * the resident size for a materialized cache. */
+  def planBytes(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** The profile session for an ad-hoc statement (the InfluxQL and
+    * PromQL frontends) reading `inputs`, by their summed [[planBytes]]:
+    * [[session]]'s choice, interpreted below [[interpretedInputBytes]].
+    * None when the statement reads no frame. */
+  def statementSession(inputs: Seq[DataFrame]): Option[SparkSession] =
+    inputs.headOption.map { d =>
+      val bytes = inputs.distinct.map(planBytes).sum
+      if (bytes < interpretedInputBytes) profilesOf(d.sparkSession).interpreted
+      else session(d.sparkSession, bytes)
+    }
+
+  /** Is `spark` the interpreted profile of ad-hoc statements over tiny
+    * inputs (see [[interpretedInputBytes]])? */
+  def isInterpreted(spark: SparkSession): Boolean =
+    spark.conf.get("spark.sql.codegen.wholeStage") == "false"
+
+  /** Is `spark` on the small-input profile (AQE off ⇔ small path)? */
   def isSmall(spark: SparkSession): Boolean =
     spark.conf.get("spark.sql.adaptive.enabled") == "false"
 
@@ -122,33 +166,34 @@ object ExecProfile {
       df.repartition(1).sortWithinPartitions(cols: _*)
     else df.orderBy(cols: _*)
 
-  /** Collect a LIMIT-bounded resident-tier probe in ONE scheduled job.
+  // session -> its clone with every partition scanned in the first take
+  private val takeAllSessions =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+
+  /** Collect a LIMIT-bounded probe in ONE scheduled job.
     * `Dataset.limit(n).collect()` runs executeTake, whose incremental
     * partition scan (1 → 4 → 16 …) schedules a separate job per
     * iteration — right for a genuine early-stop LIMIT over a huge scan,
-    * pure job floor for a probe whose plan stats already passed a byte
-    * gate and is expected to return (nearly) all of its rows (q104's
-    * two resident collects paid 3 jobs each this way). Scopes
-    * `spark.sql.limit.initialNumPartitions` to the call so every
-    * partition scans in the first take iteration; the conf is restored
-    * after, keeping genuine limits conservative. */
+    * pure job floor for a probe expected to return (nearly) all of its
+    * rows (q104's two resident collects paid 3 jobs each this way; a
+    * gateway `query_range` collect paid 3 where 1 does). The collect
+    * runs on a clone of `ds`'s session with
+    * `spark.sql.limit.initialNumPartitions` pinned to every partition;
+    * no shared session changes, so concurrent LIMIT queries keep Spark's
+    * incremental scan. */
   def takeAll[T](ds: org.apache.spark.sql.Dataset[T], n: Int): Array[T] = {
-    val c = ds.sparkSession.conf
-    val key = "spark.sql.limit.initialNumPartitions"
-    val old = c.getOption(key)
-    c.set(key, Int.MaxValue.toString)
-    try ds.limit(n).collect()
-    finally old match {
-      case Some(v) => c.set(key, v)
-      case None => c.unset(key)
-    }
+    val s = takeAllSessions.computeIfAbsent(ds.sparkSession, p =>
+      SessionShim.derive(p,
+        Map("spark.sql.limit.initialNumPartitions" -> Int.MaxValue.toString)))
+    SessionShim.rebind(ds.limit(n), s).collect()
   }
 
-  /** Broadcast `df` under the session's broadcast policy: the hint at
-    * scale, a plain (shuffle) join under the small-query profile where a
-    * broadcast build would be its own scheduled job. Use for operator-
-    * internal tiny frames whose join strategy should follow the profile;
-    * deliberately-broadcast DIMENSIONS keep an unconditional hint. */
+  /** Broadcast `df` under its session's profile: the hint at scale, a
+    * plain (shuffle) join under the small profile, where a broadcast build
+    * would be its own scheduled job before the main one. The rule is the
+    * job count, not the frame's role: dimension tables follow it too (q03's
+    * nation⋈region, q20's part). An unconditional `broadcast()` stays only
+    * where it was measured to win on both profiles. */
   def maybeBroadcast(df: DataFrame): DataFrame =
     if (df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1")
       df

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SessionShim, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -76,9 +76,10 @@ object SparkEntry extends EntryQueriesA with EntryQueriesB
     }
   }
 
-  /** Public inventory: every query runs under the input-size execution
-    * profile ([[ExecProfile.tune]] — AQE + shuffle fan-out keyed on the
-    * source dir's bytes) and through the prepared-plan cache.
+  /** Public inventory: every query is built on the input-size execution
+    * profile session ([[ExecProfile.session]] — AQE + shuffle fan-out
+    * keyed on the source dir's bytes) and through the prepared-plan
+    * cache.
     *
     * ONLY pure plans are cached: a query whose construction itself runs
     * Spark jobs (RCA's frontier search, connected-components rounds, PQ
@@ -109,13 +110,14 @@ object SparkEntry extends EntryQueriesA with EntryQueriesB
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     rawQueries.map { case (name, fn) =>
-      name -> ((s: SparkSession, dir: String) => {
-        ExecProfile.tune(s, dir)
+      name -> ((root: SparkSession, dir: String) => {
+        val s = ExecProfile.session(root, ExecProfile.dirBytes(dir))
         val key = (s, dir, name, dirFingerprint(dir))
         val hit = planCache.get(key)
         val strikeKey = (name, key._4)
         if (hit != null) hit
-        else if (impureNames.contains(strikeKey)) fn(s, dir)
+        else if (impureNames.contains(strikeKey))
+          SessionShim.withActive(s)(fn(s, dir))
         else {
           val sc = s.sparkContext
           val outerGroup = sc.getLocalProperty("spark.jobGroup.id")
@@ -130,7 +132,7 @@ object SparkEntry extends EntryQueriesA with EntryQueriesB
             s"plan-build-$name-${SparkEntry.probeSeq.incrementAndGet()}"
           sc.setJobGroup(probe, probe)
           val df =
-            try fn(s, dir)
+            try SessionShim.withActive(s)(fn(s, dir))
             finally {
               sc.setLocalProperty("spark.jobGroup.id", outerGroup)
               sc.setLocalProperty("spark.job.description", outerDesc)

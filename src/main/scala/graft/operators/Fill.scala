@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** `fill(none|null|<value>|previous|linear)` — gap-filling the time spine of
   * a `GROUP BY time(d)` result. Reference: fill transform
@@ -22,15 +24,35 @@ object Fill {
     * scan per consumer. Catalyst's column pruning + filter pushdown
     * specialize each subtree (a pruned distinct collapses onto the raw
     * scan, a pushed filter breaks exchange canonical-equality), so
-    * exchange reuse does NOT deduplicate them; persisting the aggregated
-    * frame (≈ n_series × n_buckets rows — the query's own output
-    * magnitude, NOT the raw input) is the standard Spark answer and is
-    * exactly the downsampled view a reference continuous query would
-    * maintain. */
+    * exchange reuse does NOT deduplicate them; the persisted frame
+    * (≈ n_series × n_buckets rows — the query's own output magnitude,
+    * NOT the raw input) lives until [[release]] frees it with its
+    * statement, or as long as a prepared query's plan does. An ad-hoc
+    * statement on the interpreted profile uses the frame as is: its input
+    * is tiny and re-reading it costs less than building the cache. */
   private def shared(agg: DataFrame): DataFrame = {
-    if (agg.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      agg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (!graft.ExecProfile.isInterpreted(agg.sparkSession) &&
+        agg.storageLevel == StorageLevel.NONE)
+      persisted.add(agg.persist(StorageLevel.MEMORY_AND_DISK)
+        .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
     agg
+  }
+  private val persisted = java.util.concurrent.ConcurrentHashMap
+    .newKeySet[org.apache.spark.sql.classic.Dataset[_]]()
+
+  /** Unpersist the bucketed frames [[shared]] persisted for `df`'s plan.
+    * Call after `df`'s last action. */
+  def release(df: DataFrame): Unit = {
+    val cm = df.sparkSession.sharedState.cacheManager
+    val builders = df.queryExecution.withCachedData.collect {
+      case r: InMemoryRelation => r.cacheBuilder
+    }
+    persisted.removeIf { p =>
+      val mine = cm.lookupCachedData(p)
+        .forall(c => builders.exists(_ eq c.cachedRepresentation.cacheBuilder))
+      if (mine) p.unpersist(blocking = false)
+      mine
+    }
   }
 
   /** Left-join the dense spine with the bucketed frame NULL-SAFELY: a

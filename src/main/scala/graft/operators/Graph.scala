@@ -57,8 +57,8 @@ object Graph {
             Seq("src"), "left_semi")
           .join(allowed.withColumnRenamed("node_id", "dst"),
             Seq("dst"), "left_semi")
-        if (planBytes(allowed) <= maxResidentBytes &&
-            planBytes(e1) <= maxResidentBytes) {
+        if (graft.ExecProfile.planBytes(allowed) <= maxResidentBytes &&
+            graft.ExecProfile.planBytes(e1) <= maxResidentBytes) {
           val sel = e2.select(col("src").cast("long"),
             col("dst").cast("long"))
           tryResident(sel, start, hopNum, undirected) match {
@@ -70,10 +70,6 @@ object Graph {
       case None => hops(e1, start, hopNum, maxDriverFrontier, undirected)
     }
   }
-
-  /** Optimizer size estimate for a plan's output (bytes). */
-  private def planBytes(df: DataFrame): BigInt =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** Resident-topology tier guard: how large an edge frame we are
     * willing to hold as a driver-side adjacency. The reference's graph
@@ -275,7 +271,7 @@ object Graph {
     // stats guard keeps the tier to graphs that trivially fit: at
     // 100 TB the estimate is in the terabytes and BFS goes straight to
     // the frontier tiers below.
-    if (planBytes(sel) <= maxResidentBytes) {
+    if (graft.ExecProfile.planBytes(sel) <= maxResidentBytes) {
       tryResident(sel, start, hopNum, undirected) match {
         case Some(df) => return df
         case None => () // fall through to the frontier tiers

@@ -149,9 +149,8 @@ object Rca {
       col("event_type").cast("string"), col("event_ms").cast("long"))
     val selR =
       edges.select(col("src").cast("string"), col("dst").cast("string"))
-    def stats(df: DataFrame) =
-      df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (stats(evSel) <= residentBytes && stats(selR) <= residentBytes) {
+    if (graft.ExecProfile.planBytes(evSel) <= residentBytes &&
+        graft.ExecProfile.planBytes(selR) <= residentBytes) {
       val evRows =
         graft.ExecProfile.takeAll(
           evSel.as[(String, String, Long)], evCap + 1)
@@ -217,8 +216,8 @@ object Rca {
     // Three scheduled jobs total instead of (hopCount+1) per expansion
     // round. At 100 TB the stats guard never engages and the frontier
     // tiers below run unchanged.
-    if (stats(selR) <= residentBytes &&
-        stats(correlatedPlan) <= residentBytes) {
+    if (graft.ExecProfile.planBytes(selR) <= residentBytes &&
+        graft.ExecProfile.planBytes(correlatedPlan) <= residentBytes) {
       val pairs =
         graft.ExecProfile.takeAll(selR.as[(String, String)], edgeCap + 1)
       val nodeBound = pairs.iterator

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SessionShim, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1526,10 +1526,84 @@ object InfluxQL {
     (q, df)
   }
 
+  /** The frames a statement reads: the measurements its FROM, JOIN,
+    * subquery, CTE and UNION sources name for a SELECT (a `/regex/`
+    * source expands over the catalog), the whole catalog for SHOW, and
+    * none otherwise — EXPLAIN resolves its inner statement itself, and a
+    * statement that does not parse fails on its own path. */
+  private def readSet(catalog: Map[String, Measurement],
+                      sql: String): Seq[DataFrame] = {
+    val lower = sql.trim.toLowerCase
+    if (lower.startsWith("show ")) catalog.values.map(_.df).toSeq
+    else if (!lower.startsWith("select") && !lower.startsWith("with")) Nil
+    else try {
+      val (ctes, q, arms) = new Parser(lex(sql)).parseStatementFull()
+      def armQs(a: UnionArm): Seq[Query] = a.q +: a.nested.flatMap(armQs)
+      def names(x: Query): Seq[String] =
+        (x.from +: x.fromMore) ++
+          (x.fromSub.toSeq ++ x.fromSubMore).flatMap(names) ++
+          (x.join.toSeq ++ x.joinMore).flatMap(j =>
+            j.rightSub.map(names).getOrElse(Seq(j.right)))
+      val qs = (q +: arms.flatMap(armQs)) ++ ctes.flatMap {
+        case (_, c, cArms) => c +: cArms.flatMap(armQs) }
+      qs.flatMap(names).distinct.flatMap { n =>
+        if (n.length > 1 && n.startsWith("/") && n.endsWith("/")) {
+          val re = n.substring(1, n.length - 1).r
+          catalog.collect {
+            case (k, m) if re.findFirstIn(k).isDefined => m.df }
+        } else lookupMeasurement(catalog, n).map(_.df)
+      }
+    } catch { case _: Exception => Nil }
+  }
+
+  /** A catalog read through session `s`: each lookup rebinds the
+    * measurement's frame onto `s` (memoized per name). Measurements
+    * registered into the view (CTEs, INTO targets) stay in it, and a
+    * qualified-name resolver stays one. */
+  private class OnSession(val u: Map[String, Measurement],
+                          val s: SparkSession)
+      extends scala.collection.immutable.AbstractMap[String, Measurement] {
+    private val bound = new java.util.concurrent.ConcurrentHashMap[
+      String, Option[Measurement]]()
+    override def get(k: String): Option[Measurement] =
+      bound.computeIfAbsent(k, _ =>
+        u.get(k).map(m => m.copy(df = SessionShim.rebind(m.df, s))))
+    override def iterator: Iterator[(String, Measurement)] =
+      u.keysIterator.map(k => k -> get(k).get)
+    override def removed(k: String): Map[String, Measurement] =
+      OnSession(u - k, s)
+    override def updated[V1 >: Measurement](
+        k: String, v: V1): Map[String, V1] = v match {
+      case m: Measurement => OnSession(u.updated(k, m), s)
+      case _ => u.updated(k, v)
+    }
+    override def size: Int = u.size
+  }
+  private object OnSession {
+    def apply(u: Map[String, Measurement],
+              s: SparkSession): Map[String, Measurement] = u match {
+      case o: OnSession if o.s eq s => o
+      case _: QualifiedResolver => new OnSession(u, s) with QualifiedResolver
+      case _ => new OnSession(u, s)
+    }
+  }
+
   /** [[executeStatement]] plus the UNION source names (the HTTP edge
-    * names a union series "src1,src2,…" sorted, tag-less). */
+    * names a union series "src1,src2,…" sorted, tag-less). The
+    * statement compiles on the execution profile its inputs' plan size
+    * selects ([[graft.ExecProfile.statementSession]]), so every caller —
+    * library or HTTP route — runs the same plan. */
   private def executeStatementU(catalog: Map[String, Measurement],
                                 sql: String)
+      : (Option[Query], DataFrame, Seq[String]) =
+    graft.ExecProfile.statementSession(readSet(catalog, sql)) match {
+      case Some(s) => SessionShim.withActive(s)(
+        executeStatementOn(OnSession(catalog, s), sql))
+      case None => executeStatementOn(catalog, sql)
+    }
+
+  private def executeStatementOn(catalog: Map[String, Measurement],
+                                 sql: String)
       : (Option[Query], DataFrame, Seq[String]) = {
     if (sql.trim.toLowerCase.startsWith("show "))
       return (None, executeShow(catalog, sql), Nil)

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SessionShim}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -173,18 +173,19 @@ object PromQL {
     * nor evaluate gaps with gap-sub-range bounds — the reference's
     * results-cache lineage (Cortex `isAtModifierCachable`) refuses to
     * cache such queries for the same reason. */
-  def usesBoundRelativeAt(query: String): Boolean = {
-    def walk(e: Expr): Boolean = e match {
-      case s: Sel =>
-        s.at.contains(AtStart) || s.at.contains(AtEnd)
-      case SubQ(inner, _, _) => walk(inner)
-      case FnCall(_, args) => args.exists(walk)
-      case Agg(_, _, _, param, body) =>
-        param.exists(walk) || walk(body)
-      case b: Bin => walk(b.l) || walk(b.r)
-      case _ => false
-    }
-    walk(parse(query))
+  def usesBoundRelativeAt(query: String): Boolean =
+    selectors(parse(query)).exists(s =>
+      s.at.contains(AtStart) || s.at.contains(AtEnd))
+
+  /** Every selector in `e`, in source order. */
+  private def selectors(e: Expr): Seq[Sel] = e match {
+    case s: Sel => Seq(s)
+    case SubQ(inner, _, _) => selectors(inner)
+    case FnCall(_, args) => args.flatMap(selectors)
+    case Agg(_, _, _, param, body) =>
+      param.toSeq.flatMap(selectors) ++ selectors(body)
+    case b: Bin => selectors(b.l) ++ selectors(b.r)
+    case _ => Nil
   }
 
   private class Parser(var toks: List[Tok]) {
@@ -458,9 +459,17 @@ object PromQL {
   def evaluate(catalog: Map[String, Metric], query: String,
                step: String, lookback: String = "5 minutes",
                boundsMs: Option[(Long, Long)] = None): DataFrame = {
-    val ev = new Eval(catalog, PromRange.durationSeconds(step),
+    val ast = parse(query)
+    // the referenced metrics, rebound onto the execution profile their
+    // plan size selects (graft.ExecProfile)
+    val used = selectors(ast).map(_.name).distinct
+      .flatMap(n => catalog.get(n).map(n -> _))
+    val profile = graft.ExecProfile.statementSession(used.map(_._2.df))
+    val cat = profile.fold(catalog)(s => used.map { case (n, m) =>
+      n -> m.copy(df = SessionShim.rebind(m.df, s)) }.toMap)
+    val ev = new Eval(cat, PromRange.durationSeconds(step),
       PromRange.durationSeconds(lookback), boundsMs)
-    ev.evalVec(parse(query)) match {
+    def run(): DataFrame = ev.evalVec(ast) match {
       case Left(v) =>
         v.df.select((v.labels.sorted.map(col) :+ col("eval_ms") :+
           col("value")): _*)
@@ -470,6 +479,7 @@ object PromQL {
         s"PromQL query is a grid-free scalar ($s): pass boundsMs and wrap" +
           " in vector() to materialize it")
     }
+    profile.fold(run())(SessionShim.withActive(_)(run()))
   }
 
   /** Fold a grid-free constant scalar expression (number literals and
@@ -660,22 +670,13 @@ object PromQL {
         }
     }
 
-    /** Grid values as a driver-side sequence when small enough to ride a
-      * plan literal (64k longs ≈ 512 KB); None past the cap. */
-    private def gridLiteral(m: Metric): Option[IndexedSeq[Long]] = {
-      val ssMs = stepS * 1000L
-      gridBounds(m) match {
-        case Some((kmin, kmax)) if kmax + 1 - kmin <= 65536 =>
-          Some((kmin to kmax).map(_ * ssMs))
-        case _ => None
-      }
-    }
-
-    /** The eval-step grid (one `eval_ms` per step) as a frame. */
-    private def evalGrid(m: Metric): DataFrame = {
+    /** The eval-step grid (one `eval_ms` per step) over `bounds` as a
+      * frame. */
+    private def evalGrid(m: Metric,
+                         bounds: Option[(Long, Long)]): DataFrame = {
       val spark = m.df.sparkSession
       val ssMs = stepS * 1000L
-      gridBounds(m) match {
+      bounds match {
         case None =>
           spark.range(0, 0).select((col("id") * ssMs).as("eval_ms"))
         case Some((kmin, kmax)) =>
@@ -691,18 +692,21 @@ object PromQL {
     }
 
     /** Replicate `df`'s rows across the eval grid. A driver-small grid
-      * attaches as ONE exploded array literal — a pure projection, no
-      * join and no scheduled job (round 18: the former
-      * crossJoin(broadcast(grid)) paid a broadcast-build job per query —
-      * even a LocalRelation grid collects through a parallelize job at
-      * defaultParallelism near-empty slices). Grids past the literal cap
-      * keep the broadcast cross join. Identical rows either way. */
-    private def withGrid(df: DataFrame, m: Metric): DataFrame =
-      gridLiteral(m) match {
-        case Some(ks) =>
-          df.withColumn("eval_ms", explode(typedlit(ks)))
-        case None => df.crossJoin(broadcast(evalGrid(m)))
+      * (≤ 64k steps, ≈ 512 KB of longs) attaches as ONE exploded array
+      * literal — a pure projection, no join and no scheduled job (round
+      * 18: the former crossJoin(broadcast(grid)) paid a broadcast-build
+      * job per query). Grids past the literal cap keep the broadcast
+      * cross join, over the same bounds (for a cold metric each bounds
+      * computation can be a scan job). Identical rows either way. */
+    private def withGrid(df: DataFrame, m: Metric): DataFrame = {
+      val bounds = gridBounds(m)
+      bounds match {
+        case Some((kmin, kmax)) if kmax + 1 - kmin <= 65536 =>
+          df.withColumn("eval_ms",
+            explode(typedlit((kmin to kmax).map(_ * stepS * 1000L))))
+        case _ => df.crossJoin(broadcast(evalGrid(m, bounds)))
       }
+    }
 
     /** A range-function argument: either a range selector `m[d]` (raw
       * samples) or a subquery `expr[d:r]` (the inner expression evaluated
@@ -1077,7 +1081,8 @@ object PromQL {
               case STime(g) => g(col("eval_ms"))
               case SSteps(_) => sys.error("unreachable")
             }
-            Left(Vec(evalGrid(anyMetric).withColumn("value", c), Nil))
+            Left(Vec(evalGrid(anyMetric, gridBounds(anyMetric))
+              .withColumn("value", c), Nil))
           case Left(v) => sys.error(s"vector() expects a scalar, got $v")
         }
       case "label_replace" =>
@@ -1119,7 +1124,7 @@ object PromQL {
           (if (fn == "absent") instant(s).df
            else rangeFn("count_over_time", s).df)
             .select(col("eval_ms")).distinct()
-        val grid = evalGrid(m)
+        val grid = evalGrid(m, gridBounds(m))
         val eqLabels = s.matchers.collect { case (l, "=", v) => l -> v }
         var out = grid.join(present, Seq("eval_ms"), "left_anti")
           .withColumn("value", lit(1.0))

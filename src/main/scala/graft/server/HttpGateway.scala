@@ -2835,11 +2835,12 @@ final class HttpGateway(spark: SparkSession,
           // non-chunked responses are bounded by http.max-row-limit
           // (config.go:37) — over-limit series are truncated and marked
           // partial; use chunked=true to stream past the limit
-          ResultShaper.toResultObj(df, name, tags, valueCols, epoch, id,
+          try ResultShaper.toResultObj(df, name, tags, valueCols, epoch, id,
             maxRowLimit, timeNs = timeNs, seriesDesc = desc,
             nameCol = nameCol,
             pruneNullCols = "(?is).*/\\*\\+\\s*filter_null_column\\s*\\*/.*"
               .r.matches(stmt))
+          finally graft.operators.Fill.release(df)
         }
 
       if (p.get("chunked").contains("true")) {
@@ -2880,7 +2881,7 @@ final class HttpGateway(spark: SparkSession,
         ex.sendResponseHeaders(200, 0)
         val os = ex.getResponseBody
         try lines.foreach { l => os.write(l.getBytes(UTF_8)); os.write('\n') }
-        finally { os.close(); ex.close() }
+        finally { os.close(); ex.close(); graft.operators.Fill.release(df) }
       } else {
         val objs = statements.zipWithIndex
           .map { case (s, i) =>
@@ -4256,7 +4257,7 @@ final class HttpGateway(spark: SparkSession,
     // (`http.max-row-limit`, handler.go getResultRowsCnt): a hostile
     // step/range combination must error, not materialize unbounded
     // rows on the driver — Prometheus's own "too many samples" refusal
-    val rows = df.limit(maxRowLimit + 1).collect()
+    val rows = graft.ExecProfile.takeAll(df, maxRowLimit + 1)
     if (rows.length > maxRowLimit) sys.error(
       s"query processing would load too many samples into memory: " +
         s"more than max-row-limit ($maxRowLimit) — reduce the range " +
@@ -4315,12 +4316,16 @@ final class HttpGateway(spark: SparkSession,
       val noStore =
         Option(ex.getRequestHeaders.getFirst("Cache-Control"))
           .exists(_.contains("no-store"))
+      // a job group like /query's: listed by SHOW QUERIES, killable
+      val rq = attachQuery(query, "")
       val samples =
-        if (range && !noStore && !PromQL.usesBoundRelativeAt(query))
-          resultsCache.fetch(s"$cacheKeyPrefix$query|$step", loMs, hiMs,
-            System.currentTimeMillis())(
-            collectSamples(cat0, query, step, _, _))
-        else collectSamples(cat0, query, step, loMs, hiMs)
+        try {
+          if (range && !noStore && !PromQL.usesBoundRelativeAt(query))
+            resultsCache.fetch(s"$cacheKeyPrefix$query|$step", loMs, hiMs,
+              System.currentTimeMillis())(
+              collectSamples(cat0, query, step, _, _))
+          else collectSamples(cat0, query, step, loMs, hiMs)
+        } finally detachQuery(rq)
       val grouped = samples.groupBy(_.labels)
         .toSeq.sortBy(_._1.map(_._2).mkString(" "))
       val result = grouped.flatMap { case (labels, rs) =>

@@ -1,66 +1,238 @@
 package graft
 
+import java.net.{URI, URLEncoder}
+import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.functions._
+
+import graft.query.{InfluxQL, PromQL}
+import graft.server.HttpGateway
+
 /** The size gate itself: below [[ExecProfile.smallInputBytes]] a query
-  * runs the single-job small profile; at/above it the scale profile
-  * (AQE, planner broadcasts, 128 MB splits) returns. The gate is what
-  * keeps the bench honest AND the ×10/×100 dirs on the real
-  * configuration — worth pinning directly, not only via plan shapes. */
+  * runs on the single-job small profile session; at/above it on the scale
+  * profile session (AQE, planner broadcasts, 128 MB splits). The gate is
+  * what keeps the bench honest AND the ×10/×100 dirs on the real
+  * configuration — worth pinning directly, not only via plan shapes. The
+  * profiles are sessions of their own, so nothing here may change the
+  * root session's conf. */
 class ExecProfileSpec extends SparkSpec {
 
-  test("small input -> single-job profile; >=1GiB -> scale profile") {
-    ExecProfile.tune(spark, sf) // sf0.001: a few hundred KB
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "false")
-    assert(spark.conf.get("spark.sql.shuffle.partitions") ==
-      ExecProfile.smallShufflePartitions.toString)
-    assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1")
-    assert(spark.conf.get("spark.sql.join.preferSortMergeJoin") == "false")
-    assert(spark.conf.get("spark.sql.files.maxPartitionBytes") == "4m")
-    // maybeBroadcast follows the profile: no hint on the small path
-    val noHint = ExecProfile.maybeBroadcast(spark.range(3).toDF())
-    assert(!noHint.queryExecution.logical.toString.contains("broadcast"))
-
-    // a sparse file makes a >=1GiB dir without writing a gigabyte
+  /** A >=1 GiB dir from one sparse file, without writing a gigabyte. */
+  private lazy val bigDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("execprofile").toFile
     dir.deleteOnExit()
     val big = new java.io.RandomAccessFile(
       new java.io.File(dir, "big.parquet"), "rw")
     try big.setLength(ExecProfile.smallInputBytes)
     finally big.close()
-    ExecProfile.tune(spark, dir.getAbsolutePath)
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-    assert(spark.conf.get("spark.sql.shuffle.partitions") ==
+    dir.getAbsolutePath
+  }
+  private def small = ExecProfile.session(spark, ExecProfile.dirBytes(sf))
+  private def scale = ExecProfile.session(spark, ExecProfile.dirBytes(bigDir))
+  private def rootConf = spark.conf.getAll
+
+  test("small input -> single-job profile; >=1GiB -> scale profile") {
+    val before = rootConf
+    val s = small // sf0.001: a few hundred KB
+    assert(s ne spark)
+    assert(s.conf.get("spark.sql.adaptive.enabled") == "false")
+    assert(s.conf.get("spark.sql.shuffle.partitions") ==
+      ExecProfile.smallShufflePartitions.toString)
+    assert(s.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1")
+    assert(s.conf.get("spark.sql.join.preferSortMergeJoin") == "false")
+    assert(s.conf.get("spark.sql.files.maxPartitionBytes") == "4m")
+    // maybeBroadcast follows the frame's profile: no hint on the small path
+    val noHint = ExecProfile.maybeBroadcast(s.range(3).toDF())
+    assert(!noHint.queryExecution.logical.toString.contains("broadcast"))
+
+    val b = scale
+    assert(b.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(b.conf.get("spark.sql.shuffle.partitions") ==
       spark.sparkContext.defaultParallelism.toString)
-    assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold") ==
-      "10485760")
-    assert(spark.conf.get("spark.sql.join.preferSortMergeJoin") == "true")
-    assert(spark.conf.get("spark.sql.files.maxPartitionBytes") == "128m")
-    val hinted = ExecProfile.maybeBroadcast(spark.range(3).toDF())
+    assert(b.conf.get("spark.sql.autoBroadcastJoinThreshold") == "10485760")
+    assert(b.conf.get("spark.sql.join.preferSortMergeJoin") == "true")
+    assert(b.conf.get("spark.sql.files.maxPartitionBytes") == "128m")
+    val hinted = ExecProfile.maybeBroadcast(b.range(3).toDF())
     assert(hinted.queryExecution.logical.toString.contains("broadcast"))
 
-    ExecProfile.tune(spark, sf) // restore for later suites
+    // an ad-hoc statement over a small input also drops generated code
+    val i = ExecProfile.statementSession(Seq(s.range(3).toDF())).get
+    assert(ExecProfile.isSmall(i))
+    assert(i.conf.get("spark.sql.codegen.wholeStage") == "false")
+    assert(ExecProfile.statementSession(Seq(spark.createDataFrame(
+      spark.range(3).toDF().rdd, spark.range(3).toDF().schema))).get eq b)
+
+    // long-lived: one set per root, reached from any profile session too
+    assert(small eq s)
+    assert(ExecProfile.session(s, ExecProfile.smallInputBytes) eq b)
+    assert(ExecProfile.session(b, 0L) eq s)
+    assert(rootConf == before)
   }
 
   test("boundedSort: identical rows and total order on both profiles; " +
       "single-task sort only under the small profile") {
-    import org.apache.spark.sql.functions._
-    val df = spark.range(0, 997).toDF("id")
-      .withColumn("k", pmod(col("id") * 7919, lit(101)))
-      .select(col("k"), col("id"))
-    def run() = ExecProfile.boundedSort(df, col("k"), col("id"))
-    ExecProfile.tune(spark, sf) // small profile
-    assert(ExecProfile.isSmall(spark))
-    val small = run()
-    assert(small.queryExecution.optimizedPlan.toString
+    def run(s: SparkSession) = ExecProfile.boundedSort(
+      s.range(0, 997).toDF("id")
+        .withColumn("k", pmod(col("id") * 7919, lit(101)))
+        .select(col("k"), col("id")), col("k"), col("id"))
+    assert(ExecProfile.isSmall(small) && !ExecProfile.isSmall(scale))
+    val smallDf = run(small)
+    assert(smallDf.queryExecution.optimizedPlan.toString
       .contains("Repartition")) // single-task shape
-    val smallRows = small.collect().toSeq
-    // scale profile: flip the gate the same way tune() does
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val scaleDf = run(scale)
+    assert(!scaleDf.queryExecution.optimizedPlan.toString
+      .contains("Repartition")) // plain global sort
+    assert(scaleDf.collect().toSeq == smallDf.collect().toSeq)
+  }
+
+  test("a small-profile and a scale-profile query run concurrently on one " +
+      "context, each with its own plan shape") {
+    val before = rootConf
+    def query(s: SparkSession): DataFrame =
+      s.range(0, 20000).toDF("id")
+        .groupBy(pmod(col("id"), lit(37)).as("k"))
+        .agg(count(lit(1)).as("n"), sum(col("id")).as("s"))
+        .orderBy(col("k"))
+    val expected = query(spark).collect().toSeq
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
-      assert(!ExecProfile.isSmall(spark))
-      val scale = run()
-      assert(!scale.queryExecution.optimizedPlan.toString
-        .contains("Repartition")) // plain global sort
-      assert(scale.collect().toSeq == smallRows) // same rows, same order
-    } finally ExecProfile.tune(spark, sf)
+      val runs = Seq(small -> false, scale -> true).flatMap { case (s, aqe) =>
+        (1 to 4).map(_ => pool.submit(() => {
+          val df = query(s)
+          val rows = df.collect().toSeq
+          (aqe, df.queryExecution.executedPlan
+            .isInstanceOf[AdaptiveSparkPlanExec], rows)
+        }))
+      }
+      runs.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS)).foreach {
+        case (aqe, adaptive, rows) =>
+          assert(adaptive == aqe)
+          assert(rows == expected)
+      }
+    } finally pool.shutdown()
+    assert(rootConf == before)
+  }
+
+  test("takeAll collects a multi-partition frame in one job without " +
+      "touching any session's conf") {
+    val key = "spark.sql.limit.initialNumPartitions"
+    val before = rootConf
+    val df = small.range(0, 1000, 1, 8).toDF("id")
+    val jobs = jobsDuring(spark) {
+      spark.sparkContext.setJobGroup("takeall-probe", "takeAll")
+      try assert(ExecProfile.takeAll(df, 2000).length == 1000)
+      finally spark.sparkContext.clearJobGroup()
+    }
+    assert(jobs.count(_._1 == "takeall-probe") == 1, jobs)
+    assert(small.conf.get(key) != Int.MaxValue.toString)
+    assert(rootConf == before)
+  }
+
+  /** Entries in the shared CacheManager. */
+  private def cacheEntries: Int = {
+    val cm = spark.sharedState.cacheManager
+    val f = cm.getClass.getDeclaredField("cachedData")
+    f.setAccessible(true)
+    f.get(cm).asInstanceOf[scala.collection.Seq[_]].size
+  }
+
+  test("fill statements leave no cache entry behind on either profile") {
+    val ev = Tables.table(spark, sf, "events")
+    val cat = Map("events" -> InfluxQL.Measurement(ev,
+      tags = Seq("event_type")))
+    // an RDD-backed frame has no size estimate, so it plans at scale
+    val scaled = spark.createDataFrame(ev.rdd, ev.schema)
+    assert(ExecProfile.planBytes(scaled) >= ExecProfile.smallInputBytes)
+    val scaleCat = Map("events" -> InfluxQL.Measurement(scaled,
+      tags = Seq("event_type")))
+    val n0 = cacheEntries
+    (1 to 20).foreach { i =>
+      val q = s"SELECT mean(value) FROM events GROUP BY time(${i}h), " +
+        "event_type fill(0)"
+      InfluxQL.execute(cat, q).collect()
+    }
+    assert(cacheEntries == n0)
+    (1 to 3).foreach { i =>
+      val df = InfluxQL.execute(scaleCat,
+        s"SELECT count(value) FROM events GROUP BY time(${i}d) fill(null)")
+      assert(!ExecProfile.isSmall(df.sparkSession))
+      df.collect()
+      operators.Fill.release(df)
+    }
+    assert(cacheEntries == n0)
+  }
+
+  /** (job group, job id) of the jobs `body` started on `s`'s context,
+    * read after a marker job has passed through the listener bus behind
+    * them. */
+  private def jobsDuring(s: SparkSession)(body: => Unit): Seq[(String, Int)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        seen.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("") -> j.jobId)
+    }
+    val sc = s.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      val marker = s"marker-${System.nanoTime()}"
+      sc.setJobGroup(marker, marker)
+      try s.range(1).count() finally sc.clearJobGroup()
+      import scala.jdk.CollectionConverters._
+      // the status store listens on its own queue: wait for both
+      def arrived = seen.asScala.exists(_._1 == marker) &&
+        sc.statusTracker.getJobIdsForGroup(marker).nonEmpty
+      val deadline = System.nanoTime() + 30000000000L
+      while (!arrived && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(arrived)
+      seen.asScala.toSeq.filterNot(_._1 == marker)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("gateway: a GROUP BY time, tag /query and a query_range each " +
+      "schedule exactly one job under their job group") {
+    val ev = Tables.table(spark, sf, "events")
+    val gw = new HttpGateway(spark,
+      Map("events" -> InfluxQL.Measurement(ev, tags = Seq("event_type"))),
+      Map("events" -> PromQL.Metric(ev, labels = Seq("event_type"),
+        time = "ts", value = "value", tie = Seq("event_id"))))
+    gw.start()
+    try {
+      val http = HttpClient.newHttpClient()
+      def get(path: String): String = {
+        val r = http.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${gw.boundPort}$path")).GET().build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 200, r.body())
+        r.body()
+      }
+      def enc(s: String) = URLEncoder.encode(s, UTF_8)
+      val b = ev.agg(min(unix_seconds(col("ts"))),
+        max(unix_seconds(col("ts")))).head()
+      val (lo, hi) = (b.getLong(0), b.getLong(1))
+      def iso(sec: Long) = java.time.Instant.ofEpochSecond(sec).toString
+      val influx = s"SELECT mean(value) FROM events WHERE time >= " +
+        s"'${iso(lo)}' AND time <= '${iso(hi)}' GROUP BY time(1h), event_type"
+      val prom = s"/api/v1/query_range?query=${enc("sum by (event_type) (events)")}" +
+        s"&start=$lo&end=$hi&step=3600s"
+      Seq(s"/query?q=${enc(influx)}&epoch=ms", prom).foreach { path =>
+        var reply = ""
+        val jobs = jobsDuring(spark) { reply = get(path) }
+          .filter(_._1.startsWith("query-"))
+        assert(reply.contains("\"values\""), reply.take(300))
+        assert(jobs.size == 1, s"$path: $jobs")
+        // earlier gateways on this context may have used the same group
+        // name: count only the jobs from this request on
+        val (group, id) = jobs.head
+        assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group)
+          .filter(_ >= id).toSeq == Seq(id))
+      }
+    } finally gw.stop()
   }
 }
