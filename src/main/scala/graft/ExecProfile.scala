@@ -14,24 +14,33 @@ import org.apache.spark.sql.functions.broadcast
   * reference executes every query as one pipeline regardless of size, so
   * its per-query floor is flat.
   *
-  * Each root session gets three clones, built on first use and kept for
-  * the root's life, each with its profile's confs laid over at
-  * construction — `small` (AQE off, a fixed small shuffle fan-out, no
-  * planner broadcasts, fine scan splits: the whole DAG of a query over
-  * less than [[smallInputBytes]] is ONE job), `scale` (AQE, fan-out =
-  * default parallelism, planner broadcasts, 128 MB splits) and
-  * `interpreted` (small, minus generated code and with one shuffle task,
-  * for ad-hoc statements below [[interpretedInputBytes]]). No shared
-  * session's conf changes afterwards, so concurrent queries on different
-  * profiles never see each other's confs. All share the root's
+  * Each root session gets three derived sessions, each with its
+  * profile's confs laid over at construction: `small` (AQE off, a fixed small shuffle
+  * fan-out, no planner broadcasts, fine scan splits: the whole DAG of a
+  * query over less than [[smallInputBytes]] is ONE job), `scale` (AQE,
+  * fan-out = default parallelism, planner broadcasts, 128 MB splits) and
+  * `interpreted` (small, minus generated code and with one shuffle task).
+  * The read entry points pick the profile by their input's bytes against
+  * the one gate — `SparkEntry.queries` by its source dir's files
+  * ([[session]]: small or scale), `InfluxQL.executeStatement`/
+  * `executeShapedOrd` and `PromQL.evaluate` over a root's frames by the
+  * referenced frames' plan size ([[statementSession]]: interpreted or
+  * scale) — and
+  * build the query on it; operators read the profile from their frame's
+  * own session. No profile session's conf is changed after it is built,
+  * so concurrent queries on different profiles never see each other's
+  * confs, and the root's conf is never touched. All share the root's
   * SparkContext, CacheManager (and so the hot tier) and job groups. The
-  * read entry points pick the profile by their input's bytes —
-  * `SparkEntry.queries` by its source dir's files ([[session]]),
-  * `InfluxQL.executeStatement`/`executeShapedOrd` and `PromQL.evaluate`
-  * by the referenced catalog frames' plan size ([[statementSession]]) —
-  * and build the query on it; operators read the profile from their
-  * frame's own session. The gate is input-driven, so the ×10/×100 scale
-  * dirs and any real deployment keep AQE.
+  * gate is input-driven, so the ×10/×100 scale dirs and any real
+  * deployment keep AQE.
+  *
+  * A profile session copies the root's runtime conf, functions and
+  * experimental optimizer hooks, not its temp views, when it is built
+  * (`SessionShim.derive`). A root's profile sessions are rebuilt when its
+  * runtime conf or experimental hooks change, so a `spark.conf.set` on
+  * the root reaches the next statement (the profile's own keys still
+  * win); a function registered on the root after its first query does
+  * not reach them. They are held weakly by root.
   */
 object ExecProfile {
 
@@ -88,38 +97,46 @@ object ExecProfile {
       "spark.sql.files.minPartitionNum" -> cores)
   }
 
-  /** An ad-hoc statement reading less than this runs the small profile
-    * without generated code and with one task per shuffle. Its request
-    * literals (time bounds, steps) are inlined into generated Java, so
-    * its code never repeats and every request paid a Janino compile per
-    * stage; at this size a shuffle's data fits one task. (Measured at
-    * local[4]: 100k resident rows ~2× the statements/s of generated code
-    * with 8 partitions; at 2M rows interpretation was 1-15% slower.) */
-  val interpretedInputBytes: Long = 64L << 20
+  /** One root's profile sessions and the root state they copied. */
+  private final class Profiles(val state: AnyRef, val small: SparkSession,
+                               val scale: SparkSession,
+                               val interpreted: SparkSession)
 
-  private final class Profiles(root: SparkSession) {
-    private def derive(c: Map[String, String]) = {
-      val s = SessionShim.derive(root, c)
-      rootOf.put(s, root)
-      s
+  // root -> its profiles; profile session -> its root. Weak both ways, so
+  // neither keeps a dropped root (or its clones' listener buses) alive.
+  private val profiles = new java.util.WeakHashMap[SparkSession, Profiles]()
+  private val rootOf = new java.util.WeakHashMap[SparkSession,
+    java.lang.ref.WeakReference[SparkSession]]()
+
+  /** The root state profile sessions copy and follow. */
+  private def stateOf(root: SparkSession): AnyRef =
+    (root.conf.getAll, root.experimental.extraOptimizations,
+      root.experimental.extraStrategies)
+
+  private def profilesOf(spark: SparkSession): Profiles = synchronized {
+    val root = Option(rootOf.get(spark)).flatMap(r => Option(r.get))
+      .getOrElse(spark)
+    val state = stateOf(root)
+    val held = profiles.get(root)
+    if (held != null && held.state == state) held
+    else {
+      def derive(c: Map[String, String]) = {
+        val s = SessionShim.derive(root, c)
+        rootOf.put(s, new java.lang.ref.WeakReference(root))
+        s
+      }
+      val small = confs(root, small = true)
+      // factoryMode is internal to Spark; without it, expression
+      // projections and predicates still compile with wholeStage off
+      val p = new Profiles(state, derive(small), derive(confs(root, small = false)),
+        derive(small ++ Map(
+          "spark.sql.shuffle.partitions" -> "1",
+          "spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")))
+      profiles.put(root, p)
+      p
     }
-    lazy val small: SparkSession = derive(confs(root, small = true))
-    lazy val scale: SparkSession = derive(confs(root, small = false))
-    // factoryMode is internal to Spark; without it, expression
-    // projections and predicates still compile with wholeStage off
-    lazy val interpreted: SparkSession = derive(confs(root, small = true) ++ Map(
-      "spark.sql.shuffle.partitions" -> "1",
-      "spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
   }
-  private val profiles =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, Profiles]()
-  // profile session -> the root it was derived from
-  private val rootOf =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-
-  private def profilesOf(spark: SparkSession): Profiles =
-    profiles.computeIfAbsent(rootOf.getOrDefault(spark, spark), new Profiles(_))
 
   /** The profile session for a prepared query reading `inputBytes` from
     * frames of `spark` (a root session, or one of its profile sessions). */
@@ -132,19 +149,27 @@ object ExecProfile {
   def planBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
 
-  /** The profile session for an ad-hoc statement (the InfluxQL and
-    * PromQL frontends) reading `inputs`, by their summed [[planBytes]]:
-    * [[session]]'s choice, interpreted below [[interpretedInputBytes]].
-    * None when the statement reads no frame. */
+  /** The profile session for a statement of the InfluxQL and PromQL
+    * frontends reading `inputs`. A statement over a profile session's
+    * frames — one a prepared query builds — keeps that profile: its plan
+    * is built once and reused. An ad-hoc statement over a root's frames
+    * runs at scale from [[smallInputBytes]] of summed [[planBytes]] on,
+    * interpreted below: its request literals (time bounds, steps) are
+    * inlined into generated Java, so its code never repeats and every
+    * request paid a Janino compile per stage. (Measured at local[4]: 100k
+    * resident rows ~2× the statements/s of generated code with 8
+    * partitions; at 2M rows interpretation was 1-15% slower.) None when
+    * the statement reads no frame. */
   def statementSession(inputs: Seq[DataFrame]): Option[SparkSession] =
     inputs.headOption.map { d =>
-      val bytes = inputs.distinct.map(planBytes).sum
-      if (bytes < interpretedInputBytes) profilesOf(d.sparkSession).interpreted
-      else session(d.sparkSession, bytes)
+      val s = d.sparkSession
+      if (synchronized(rootOf.containsKey(s))) s
+      else if (inputs.distinct.map(planBytes).sum < smallInputBytes)
+        profilesOf(s).interpreted
+      else profilesOf(s).scale
     }
 
-  /** Is `spark` the interpreted profile of ad-hoc statements over tiny
-    * inputs (see [[interpretedInputBytes]])? */
+  /** Is `spark` the interpreted profile of ad-hoc statements? */
   def isInterpreted(spark: SparkSession): Boolean =
     spark.conf.get("spark.sql.codegen.wholeStage") == "false"
 
@@ -166,27 +191,17 @@ object ExecProfile {
       df.repartition(1).sortWithinPartitions(cols: _*)
     else df.orderBy(cols: _*)
 
-  // session -> its clone with every partition scanned in the first take
-  private val takeAllSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-
   /** Collect a LIMIT-bounded probe in ONE scheduled job.
     * `Dataset.limit(n).collect()` runs executeTake, whose incremental
     * partition scan (1 → 4 → 16 …) schedules a separate job per
     * iteration — right for a genuine early-stop LIMIT over a huge scan,
     * pure job floor for a probe expected to return (nearly) all of its
     * rows (q104's two resident collects paid 3 jobs each this way; a
-    * gateway `query_range` collect paid 3 where 1 does). The collect
-    * runs on a clone of `ds`'s session with
-    * `spark.sql.limit.initialNumPartitions` pinned to every partition;
-    * no shared session changes, so concurrent LIMIT queries keep Spark's
-    * incremental scan. */
-  def takeAll[T](ds: org.apache.spark.sql.Dataset[T], n: Int): Array[T] = {
-    val s = takeAllSessions.computeIfAbsent(ds.sparkSession, p =>
-      SessionShim.derive(p,
-        Map("spark.sql.limit.initialNumPartitions" -> Int.MaxValue.toString)))
-    SessionShim.rebind(ds.limit(n), s).collect()
-  }
+    * gateway `query_range` collect paid 3 where 1 does). Here every
+    * partition keeps its first `n` rows in one job and the driver keeps
+    * the first `n` of those, on the frame's own session. */
+  def takeAll[T](ds: org.apache.spark.sql.Dataset[T], n: Int): Array[T] =
+    ds.mapPartitions(_.take(n))(ds.encoder).collect().take(n)
 
   /** Broadcast `df` under its session's profile: the hint at scale, a
     * plain (shuffle) join under the small profile, where a broadcast build

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -26,33 +25,43 @@ object Fill {
     * scan, a pushed filter breaks exchange canonical-equality), so
     * exchange reuse does NOT deduplicate them; the persisted frame
     * (≈ n_series × n_buckets rows — the query's own output magnitude,
-    * NOT the raw input) lives until [[release]] frees it with its
-    * statement, or as long as a prepared query's plan does. An ad-hoc
-    * statement on the interpreted profile uses the frame as is: its input
-    * is tiny and re-reading it costs less than building the cache. */
-  private def shared(agg: DataFrame): DataFrame = {
-    if (!graft.ExecProfile.isInterpreted(agg.sparkSession) &&
-        agg.storageLevel == StorageLevel.NONE)
-      persisted.add(agg.persist(StorageLevel.MEMORY_AND_DISK)
-        .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
-    agg
-  }
-  private val persisted = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[org.apache.spark.sql.classic.Dataset[_]]()
+    * NOT the raw input) lives until its statement's [[owning]] release
+    * frees it, or as long as a prepared query's plan does. An ad-hoc
+    * statement on the interpreted profile uses the frame as is: it plans
+    * as one job, and re-reading its input costs less than building the
+    * cache. */
+  private def shared(agg: DataFrame): DataFrame =
+    if (graft.ExecProfile.isInterpreted(agg.sparkSession)) agg
+    else Option(statement.get) match {
+      case Some(owned) =>
+        // a statement-unique literal makes the cache entry this
+        // statement's own: an identical statement running beside it
+        // builds and frees its own
+        val tagged = agg.withColumn("_fill_stmt", lit(stmtSeq.incrementAndGet()))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        owned += tagged
+        tagged.drop("_fill_stmt")
+      case None =>
+        if (agg.storageLevel == StorageLevel.NONE)
+          agg.persist(StorageLevel.MEMORY_AND_DISK)
+        agg
+    }
+  // the frames persisted for the statement being built on this thread
+  private val statement =
+    new ThreadLocal[scala.collection.mutable.Buffer[DataFrame]]
+  private val stmtSeq = new java.util.concurrent.atomic.AtomicLong
 
-  /** Unpersist the bucketed frames [[shared]] persisted for `df`'s plan.
-    * Call after `df`'s last action. */
-  def release(df: DataFrame): Unit = {
-    val cm = df.sparkSession.sharedState.cacheManager
-    val builders = df.queryExecution.withCachedData.collect {
-      case r: InMemoryRelation => r.cacheBuilder
-    }
-    persisted.removeIf { p =>
-      val mine = cm.lookupCachedData(p)
-        .forall(c => builders.exists(_ eq c.cachedRepresentation.cacheBuilder))
-      if (mine) p.unpersist(blocking = false)
-      mine
-    }
+  /** Build one statement's plan: the frames its fill steps persist belong
+    * to it alone, and the returned release unpersists them — call it
+    * after the plan's last action. */
+  def owning[T](build: => T): (T, () => Unit) = {
+    val outer = statement.get
+    val owned = scala.collection.mutable.Buffer.empty[DataFrame]
+    def release(): Unit = owned.foreach(_.unpersist(blocking = false))
+    statement.set(owned)
+    try (build, () => release())
+    catch { case e: Throwable => release(); throw e }
+    finally statement.set(outer)
   }
 
   /** Left-join the dense spine with the bucketed frame NULL-SAFELY: a

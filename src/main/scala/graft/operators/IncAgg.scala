@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SessionShim}
 import org.apache.spark.sql.functions._
 
 /** Incremental aggregation — the reference's "inc query" feature
@@ -218,29 +218,21 @@ object IncAgg {
   private def swapIn(df: DataFrame, dir: String): Unit = {
     val tmp = dir.stripSuffix("/") + ".inc_tmp"
     val old = dir.stripSuffix("/") + ".inc_old"
-    // State maintenance is single-writer by contract (the atomic swap
-    // already assumes it), so pin two session confs for the write:
-    // ONE reduce partition — state cardinality is tags×buckets, so a
-    // 32-task reduce stage pays ~32 task launches to produce ~150 rows
-    // (measured 0.12 s/write at sf0.1); and TIMESTAMP_MICROS output —
+    // Three confs are pinned for the write, on a clone of the frame's
+    // session (a shared profile session's conf never changes): ONE reduce
+    // partition — state cardinality is tags×buckets, so a 32-task reduce
+    // stage pays ~32 task launches to produce ~150 rows (measured
+    // 0.12 s/write at sf0.1); AQE off — it schedules the shuffle map stage
+    // as its own job before the write job (2 scheduled jobs per iteration
+    // on local[32], each paying a scheduling floor) to re-plan a reduce
+    // that is already pinned to 1 partition; and TIMESTAMP_MICROS output —
     // INT96 carries no usable footer min/max, and run()'s zero-job
     // watermark reads the wstart stats.
-    val spark = df.sparkSession
-    // AQE off for the write: it schedules the shuffle map stage as its
-    // own job before the write job (2 scheduled jobs per iteration on
-    // local[32], each paying a scheduling floor) to re-plan a reduce
-    // that is already pinned to 1 partition — nothing to adapt.
-    val pinned = Seq(
+    val w = SessionShim.derive(df.sparkSession, Map(
       "spark.sql.shuffle.partitions" -> "1",
       "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
-    val saved = pinned.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pinned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
+    SessionShim.rebind(df.coalesce(1), w).write.mode("overwrite").parquet(tmp)
     val p = Paths.get(dir); val t = Paths.get(tmp); val o = Paths.get(old)
     if (Files.exists(p)) {
       Files.move(p, o, StandardCopyOption.ATOMIC_MOVE)

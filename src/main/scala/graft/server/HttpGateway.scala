@@ -2802,86 +2802,62 @@ final class HttpGateway(spark: SparkSession,
           val cat =
             if (stmt.trim.toLowerCase.startsWith("show")) reqCat(showDb(stmt))
             else reqCat()
-          val (name, tags, df0, desc) =
-            InfluxQL.executeShapedOrd(cat, stmt)
-          // the engine's `time` output is epoch ms (LONG) — or the exact
-          // epoch-ns `__tns` axis for raw rows off an LP-ingested frame;
-          // epoch=/RFC3339 rendering happens at the HTTP edge
-          val timeNs = df0.columns.contains("__tns")
-          val df =
-            if (timeNs)
-              df0.withColumn("time",
-                org.apache.spark.sql.functions.col("__tns")).drop("__tns")
-            else df0.schema.find(_.name == "time").map(_.dataType) match {
-              case Some(org.apache.spark.sql.types.LongType) |
-                   Some(org.apache.spark.sql.types.IntegerType) =>
-                df0.withColumn("time",
-                  org.apache.spark.sql.functions.timestamp_millis(
-                    org.apache.spark.sql.functions.col("time")))
-              case _ => df0
-            }
-          // `__series_name` names each row's series (per-measurement
-          // SHOW output)
-          val nameCol =
-            if (df.columns.contains("__series_name")) Some("__series_name")
-            else None
-          // a group tag the statement explicitly projects (or a grouped
-          // field dimension under a star) renders as a COLUMN too
-          val alsoCols = InfluxQL.alsoColumnTags(cat, stmt)
-            .filter(df.columns.contains).toSet
-          val valueCols = HttpGateway.shapedValueCols(
-            df.columns.toIndexedSeq.filterNot(nameCol.contains),
-            tags.filterNot(alsoCols.contains))
-          // non-chunked responses are bounded by http.max-row-limit
-          // (config.go:37) — over-limit series are truncated and marked
-          // partial; use chunked=true to stream past the limit
-          try ResultShaper.toResultObj(df, name, tags, valueCols, epoch, id,
-            maxRowLimit, timeNs = timeNs, seriesDesc = desc,
-            nameCol = nameCol,
-            pruneNullCols = "(?is).*/\\*\\+\\s*filter_null_column\\s*\\*/.*"
-              .r.matches(stmt))
-          finally graft.operators.Fill.release(df)
+          val ((name, tags, df0, desc), release) =
+            graft.operators.Fill.owning(InfluxQL.executeShapedOrd(cat, stmt))
+          try {
+            val (df, timeNs) = HttpGateway.edgeTime(df0)
+            // `__series_name` names each row's series (per-measurement
+            // SHOW output)
+            val nameCol =
+              if (df.columns.contains("__series_name")) Some("__series_name")
+              else None
+            // a group tag the statement explicitly projects (or a grouped
+            // field dimension under a star) renders as a COLUMN too
+            val alsoCols = InfluxQL.alsoColumnTags(cat, stmt)
+              .filter(df.columns.contains).toSet
+            val valueCols = HttpGateway.shapedValueCols(
+              df.columns.toIndexedSeq.filterNot(nameCol.contains),
+              tags.filterNot(alsoCols.contains))
+            // non-chunked responses are bounded by http.max-row-limit
+            // (config.go:37) — over-limit series are truncated and marked
+            // partial; use chunked=true to stream past the limit
+            ResultShaper.toResultObj(df, name, tags, valueCols, epoch, id,
+              maxRowLimit, timeNs = timeNs, seriesDesc = desc,
+              nameCol = nameCol,
+              pruneNullCols = "(?is).*/\\*\\+\\s*filter_null_column\\s*\\*/.*"
+                .r.matches(stmt))
+          } finally release()
         }
 
       if (p.get("chunked").contains("true")) {
         // chunked emission is per-series-batch within ONE statement
         require(statements.size == 1,
           "chunked=true supports a single statement")
-        val (name, tags, df0, desc) =
-          InfluxQL.executeShapedOrd(reqCat(), statements.head)
-        val timeNs = df0.columns.contains("__tns")
-        val df =
-          if (timeNs)
-            df0.withColumn("time",
-              org.apache.spark.sql.functions.col("__tns")).drop("__tns")
-          else df0.schema.find(_.name == "time").map(_.dataType) match {
-            case Some(org.apache.spark.sql.types.LongType) |
-                 Some(org.apache.spark.sql.types.IntegerType) =>
-              df0.withColumn("time",
-                org.apache.spark.sql.functions.timestamp_millis(
-                  org.apache.spark.sql.functions.col("time")))
-            case _ => df0
-          }
-        val alsoCols = InfluxQL.alsoColumnTags(reqCat(), statements.head)
-          .filter(df.columns.contains).toSet
-        val valueCols = HttpGateway.shapedValueCols(
-          df.columns.toIndexedSeq, tags.filterNot(alsoCols.contains))
-        val n = p.get("chunk_size").map(_.toInt).getOrElse(10000)
-        // stream chunk documents as they come off toLocalIterator —
-        // driver heap stays bounded by one partition + one chunk no
-        // matter how many rows the statement returns (the reference's
-        // httpsender streams the same way); chunked responses are
-        // exempt from max-row-limit like the reference's
-        val lines = ResultShaper.streamSeriesJsonChunked(
-          df, name, tags, valueCols, n, epoch, timeNs = timeNs,
-          seriesDesc = desc)
-        if (rq.status == "killed")
-          sys.error(s"query ${rq.qid} was killed")
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(200, 0)
-        val os = ex.getResponseBody
-        try lines.foreach { l => os.write(l.getBytes(UTF_8)); os.write('\n') }
-        finally { os.close(); ex.close(); graft.operators.Fill.release(df) }
+        val ((name, tags, df0, desc), release) = graft.operators.Fill
+          .owning(InfluxQL.executeShapedOrd(reqCat(), statements.head))
+        try {
+          val (df, timeNs) = HttpGateway.edgeTime(df0)
+          val alsoCols = InfluxQL.alsoColumnTags(reqCat(), statements.head)
+            .filter(df.columns.contains).toSet
+          val valueCols = HttpGateway.shapedValueCols(
+            df.columns.toIndexedSeq, tags.filterNot(alsoCols.contains))
+          val n = p.get("chunk_size").map(_.toInt).getOrElse(10000)
+          // stream chunk documents as they come off toLocalIterator —
+          // driver heap stays bounded by one partition + one chunk no
+          // matter how many rows the statement returns (the reference's
+          // httpsender streams the same way); chunked responses are
+          // exempt from max-row-limit like the reference's
+          val lines = ResultShaper.streamSeriesJsonChunked(
+            df, name, tags, valueCols, n, epoch, timeNs = timeNs,
+            seriesDesc = desc)
+          if (rq.status == "killed")
+            sys.error(s"query ${rq.qid} was killed")
+          ex.getResponseHeaders.set("Content-Type", "application/json")
+          ex.sendResponseHeaders(200, 0)
+          val os = ex.getResponseBody
+          try lines.foreach { l => os.write(l.getBytes(UTF_8)); os.write('\n') }
+          finally { os.close(); ex.close() }
+        } finally release()
       } else {
         val objs = statements.zipWithIndex
           .map { case (s, i) =>
@@ -4355,6 +4331,22 @@ final class HttpGateway(spark: SparkSession,
 }
 
 object HttpGateway {
+  /** A statement's frame with its `time` column as the HTTP edge renders
+    * it (epoch=/RFC3339), and whether that axis is epoch ns. The engine's
+    * `time` output is epoch ms (LONG) — or the exact epoch-ns `__tns`
+    * axis for raw rows off an LP-ingested frame. */
+  def edgeTime(df: DataFrame): (DataFrame, Boolean) = {
+    import org.apache.spark.sql.functions.{col, timestamp_millis}
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    if (df.columns.contains("__tns"))
+      (df.withColumn("time", col("__tns")).drop("__tns"), true)
+    else df.schema.find(_.name == "time").map(_.dataType) match {
+      case Some(LongType | IntegerType) =>
+        (df.withColumn("time", timestamp_millis(col("time"))), false)
+      case _ => (df, false)
+    }
+  }
+
   /** Series value-column order: `time` first, then non-tag columns in
     * plan order — the reference's models.Rows column contract. */
   def shapedValueCols(cols: Seq[String], tags: Seq[String]): Seq[String] =

@@ -10,22 +10,33 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object SessionShim {
   private def classicOf(s: SparkSession) = s.asInstanceOf[classic.SparkSession]
 
-  /** A clone of `parent` — the same SparkContext and SharedState (cache
-    * manager, hot tier, job groups) plus a copy of its conf, functions
-    * and temp views — with `confs` laid over the copied conf when it is
-    * built; nothing changes `parent`. The clone's queries are reported
-    * to the QueryExecutionListeners of `parent`, including listeners
-    * registered after the clone was made. */
+  /** A session of `parent`'s SparkContext and SharedState (cache
+    * manager, hot tier, job groups) with a copy of its runtime conf,
+    * functions and experimental optimizer hooks — not its temp views —
+    * and `confs` laid over the copied conf; nothing changes `parent`,
+    * and the session holds no reference to it that keeps it alive. Its
+    * queries are reported to the QueryExecutionListeners of `parent`,
+    * including listeners registered after it was made. */
   def derive(parent: SparkSession, confs: Map[String, String]): SparkSession = {
     val p = classicOf(parent)
-    val c = p.cloneSession()
-    confs.foreach { case (k, v) => c.sessionState.conf.setConfString(k, v) }
+    val c = p.newSession()
+    (p.sessionState.conf.getAllConfs ++ confs).foreach { case (k, v) =>
+      c.sessionState.conf.setConfString(k, v) }
+    val (from, to) =
+      (p.sessionState.functionRegistry, c.sessionState.functionRegistry)
+    from.listFunction().foreach(f => to.registerFunction(f,
+      from.lookupFunction(f).get, from.lookupFunctionBuilder(f).get))
+    c.experimental.extraOptimizations = p.experimental.extraOptimizations
+    c.experimental.extraStrategies = p.experimental.extraStrategies
+    val weak = new java.lang.ref.WeakReference(p)
+    def toParent(f: QueryExecutionListener => Unit): Unit =
+      Option(weak.get).foreach(_.listenerManager.listListeners().foreach(f))
     c.listenerManager.clear()
     c.listenerManager.register(new QueryExecutionListener {
       override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
-        p.listenerManager.listListeners().foreach(_.onSuccess(fn, qe, ns))
+        toParent(_.onSuccess(fn, qe, ns))
       override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
-        p.listenerManager.listListeners().foreach(_.onFailure(fn, qe, e))
+        toParent(_.onFailure(fn, qe, e))
     })
     c
   }

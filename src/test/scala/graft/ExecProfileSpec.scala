@@ -59,8 +59,11 @@ class ExecProfileSpec extends SparkSpec {
     val hinted = ExecProfile.maybeBroadcast(b.range(3).toDF())
     assert(hinted.queryExecution.logical.toString.contains("broadcast"))
 
-    // an ad-hoc statement over a small input also drops generated code
-    val i = ExecProfile.statementSession(Seq(s.range(3).toDF())).get
+    // an ad-hoc statement over a small input runs without generated code;
+    // one inside a prepared query keeps the query's profile
+    val i = ExecProfile.statementSession(Seq(spark.range(3).toDF())).get
+    assert(ExecProfile.isInterpreted(i) && !ExecProfile.isInterpreted(s))
+    assert(ExecProfile.statementSession(Seq(s.range(3).toDF())).get eq s)
     assert(ExecProfile.isSmall(i))
     assert(i.conf.get("spark.sql.codegen.wholeStage") == "false")
     assert(ExecProfile.statementSession(Seq(spark.createDataFrame(
@@ -117,9 +120,7 @@ class ExecProfileSpec extends SparkSpec {
     assert(rootConf == before)
   }
 
-  test("takeAll collects a multi-partition frame in one job without " +
-      "touching any session's conf") {
-    val key = "spark.sql.limit.initialNumPartitions"
+  test("takeAll collects a multi-partition frame in one job") {
     val before = rootConf
     val df = small.range(0, 1000, 1, 8).toDF("id")
     val jobs = jobsDuring(spark) {
@@ -128,8 +129,63 @@ class ExecProfileSpec extends SparkSpec {
       finally spark.sparkContext.clearJobGroup()
     }
     assert(jobs.count(_._1 == "takeall-probe") == 1, jobs)
-    assert(small.conf.get(key) != Int.MaxValue.toString)
+    // the first n of an ordered frame, as limit(n) keeps them
+    assert(ExecProfile.takeAll(df.orderBy(col("id").desc), 3).toSeq
+      .map(_.getLong(0)) == Seq(999L, 998L, 997L))
     assert(rootConf == before)
+  }
+
+  test("a root conf set after the first statement reaches the next one; " +
+      "the profile's own keys still win") {
+    val cat = Map("events" -> InfluxQL.Measurement(
+      Tables.table(spark, sf, "events"), tags = Seq("event_type")))
+    def session(): SparkSession = InfluxQL.execute(cat,
+      "SELECT count(value) FROM events GROUP BY event_type").sparkSession
+    val first = session()
+    assert(session() eq first) // an unchanged root keeps its profiles
+    val key = "spark.sql.caseSensitive"
+    assert(!first.conf.get(key).toBoolean)
+    spark.conf.set(key, "true")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try {
+      val next = session()
+      assert(next ne first)
+      assert(next.conf.get(key) == "true")
+      assert(ExecProfile.isInterpreted(next))
+      assert(next.conf.get("spark.sql.shuffle.partitions") == "1")
+      assert(!first.conf.get(key).toBoolean) // built sessions never change
+    } finally {
+      spark.conf.unset(key)
+      spark.conf.set("spark.sql.shuffle.partitions", "4")
+    }
+    assert(!session().conf.get(key).toBoolean)
+  }
+
+  test("the IncAgg state write changes no profile session's conf") {
+    val state = java.nio.file.Files.createTempDirectory("graft_incprof")
+      .toString + "/state"
+    val ev = org.apache.spark.sql.SessionShim.rebind(
+      Tables.table(spark, sf, "events"), small)
+    val before = small.conf.getAll
+    val out = operators.IncAgg.run(ev, "ts", "1 day", Seq("event_type"),
+      "value", state)
+    assert(out.count() > 0)
+    assert(small.conf.getAll == before)
+    // still written as TIMESTAMP_MICROS: INT96 has no footer extent
+    assert(graft.sources.ParquetStats
+      .timeExtentMsOf(spark.read.parquet(state), "wstart").isDefined)
+  }
+
+  test("profiles do not keep a dropped root alive") {
+    var root = spark.newSession()
+    ExecProfile.session(root, 0L).range(3).count()
+    val ref = new java.lang.ref.WeakReference(root)
+    root = null
+    val deadline = System.nanoTime() + 20000000000L
+    while (ref.get != null && System.nanoTime() < deadline) {
+      System.gc(); Thread.sleep(50)
+    }
+    assert(ref.get == null)
   }
 
   /** Entries in the shared CacheManager. */
@@ -156,13 +212,29 @@ class ExecProfileSpec extends SparkSpec {
       InfluxQL.execute(cat, q).collect()
     }
     assert(cacheEntries == n0)
-    (1 to 3).foreach { i =>
-      val df = InfluxQL.execute(scaleCat,
-        s"SELECT count(value) FROM events GROUP BY time(${i}d) fill(null)")
+    def statement(q: String) = operators.Fill.owning {
+      val df = InfluxQL.execute(scaleCat, q)
       assert(!ExecProfile.isSmall(df.sparkSession))
-      df.collect()
-      operators.Fill.release(df)
+      df
     }
+    (1 to 3).foreach { i =>
+      val (df, release) = statement(
+        s"SELECT count(value) FROM events GROUP BY time(${i}d) fill(null)")
+      df.collect()
+      release()
+    }
+    assert(cacheEntries == n0)
+    // two identical statements at once: each frees only its own entry
+    val q = "SELECT sum(value) FROM events GROUP BY time(2d), event_type " +
+      "fill(0)"
+    val (a, releaseA) = statement(q)
+    val (b, releaseB) = statement(q)
+    val rowsA = a.collect().toSeq
+    assert(cacheEntries == n0 + 2)
+    releaseA()
+    assert(cacheEntries == n0 + 1)
+    assert(b.collect().toSeq == rowsA)
+    releaseB()
     assert(cacheEntries == n0)
   }
 
