@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.Similarity
 
@@ -40,18 +40,10 @@ import graft.pipeline.Similarity
 object AnnSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sfmut2/sf100")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     graft.expressions.VectorExpressions.register(spark)
+    // corpus and index tables are written under java.io.tmpdir
+    val tmpDir = System.getProperty("java.io.tmpdir")
 
     val k = 10
     val uniform = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -91,7 +83,7 @@ object AnnSweep {
               queryPred: org.apache.spark.sql.Column): Unit = {
       // materialize the corpus as a table (the clustered one is otherwise
       // recomputed inside every probe, which would time the generator)
-      val dir = s"/tmp/annsweep_$name"
+      val dir = s"$tmpDir/annsweep_$name"
       corpusIn.write.mode("overwrite").parquet(s"$dir/corpus")
       val corpus = spark.read.parquet(s"$dir/corpus")
       val queries = corpus.filter(queryPred)
@@ -147,7 +139,7 @@ object AnnSweep {
     // probe grid (BASELINE.md).
     if (sys.env.get("SPARK_GRAFT_ANN_MODE").contains("buildrate")) {
       def rate(name: String, corpusIn: DataFrame): Unit = {
-        val dir = s"/tmp/annrate_$name"
+        val dir = s"$tmpDir/annrate_$name"
         corpusIn.write.mode("overwrite").parquet(s"$dir/corpus")
         val corpus = spark.read.parquet(s"$dir/corpus")
         val n = corpus.count()

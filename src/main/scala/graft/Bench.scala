@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main. Prints ONE compact JSON line (the driver captures a
@@ -24,30 +23,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // ObjectHashAggregate (TypedImperativeAggregate partials: top-k,
-      // sketches) falls back to sort-based at 128 distinct groups by
-      // default — a map-side sort of the whole input. The buffers are
-      // k-bounded heaps / fixed sketches (~100 B), so 1M groups is
-      // ~100 MB per task — cheap against a 60 M-row map-side sort (the
-      // ×100 sweep hit the 128k ceiling on per-user limits).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1048576")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: the driver captures a bounded tail of the COMBINED
-    // stdout+stderr stream, and r08's tail was entirely per-query WARN
-    // lines (function-registry replacement spam) — the compact JSON line
-    // fell off the end and parsed as null. Registration is idempotent now
-    // too; ERROR keeps any remaining chatty warnings out of the tail.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
+    val cpus = spark.sparkContext.defaultParallelism
 
     // Fixed per-query session floor: schedule an empty 32-partition job.
     // Samples are taken at the start AND interleaved through the query
@@ -62,7 +39,7 @@ object Bench {
     // samples — every "unstable" flag on an otherwise idle machine traced
     // to this (start-window medians 0.10-0.11 s vs 0.06-0.08 after).
     try Thread.sleep(8000) catch { case _: InterruptedException => }
-    (1 to 3).foreach(_ => spark.range(0, cpus.toInt, 1, cpus.toInt).count())
+    (1 to 3).foreach(_ => spark.range(0, cpus, 1, cpus).count())
     // Samples carry a group id (start / each interleave point / end) so
     // the artifact can report FLOOR DRIFT — a judged number must carry
     // its own validity evidence: when ambient load moves the floor >20%
@@ -75,7 +52,7 @@ object Bench {
     def sampleFloor(n: Int): Unit = {
       (1 to n).foreach { _ =>
         val t0 = System.nanoTime()
-        spark.range(0, cpus.toInt, 1, cpus.toInt).count()
+        spark.range(0, cpus, 1, cpus).count()
         floorSamples += ((floorGroup, (System.nanoTime() - t0) / 1e9))
       }
       floorGroup += 1
@@ -89,16 +66,7 @@ object Bench {
     // Optional comma-separated filter for local iteration on a subset
     // (SPARK_GRAFT_BENCH_ONLY=q95_graph_hops,q74_promql_binop).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // A misspelled name in the filter silently changes what a run means
-    // (a scale sweep once re-included the deliberately-quadratic q53
-    // because its EXCLUSION list was built from a misremembered name and
-    // nothing complained). Unknown names are fatal, not ignored.
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.mkString(", ")}")
-    }
+      .map(SparkEntry.queryList(_, "SPARK_GRAFT_BENCH_ONLY").toSet)
     // Each timed query runs under its own job group so the number of
     // Spark jobs it schedules is measurable (statusTracker) — BASELINE.md
     // argues a k-job query pays ~k scheduling floors on local[32]; the

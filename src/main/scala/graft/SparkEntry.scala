@@ -146,6 +146,20 @@ object SparkEntry extends EntryQueriesA with EntryQueriesB
       })
     }
 
+  /** The names in a comma-separated query list, in list order. A name
+    * that is not in [[queries]] is fatal, not ignored: a misspelled name
+    * silently changes what a run means (a scale sweep once re-included
+    * the deliberately-quadratic q53 because its EXCLUSION list was built
+    * from a misremembered name and nothing complained). `source` names
+    * the list in the error. */
+  def queryList(list: String, source: String): Seq[String] = {
+    val names = list.split(',').map(_.trim).filter(_.nonEmpty).toSeq.distinct
+    val unknown = names.filterNot(rawQueries.contains)
+    require(unknown.isEmpty,
+      s"$source names unknown queries: ${unknown.mkString(", ")}")
+    names
+  }
+
   private def rawQueries: Map[String, (SparkSession, String) => DataFrame] =
     rawQueriesA ++ rawQueriesB
 

@@ -1,8 +1,9 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SessionShim}
 import org.apache.spark.sql.functions._
+import graft.sources.AtomicFiles
 
 /** Incremental aggregation — the reference's "inc query" feature
   * (`engine/executor/inc_agg_transform.go:356` keyed agg state cached per
@@ -202,12 +203,8 @@ object IncAgg {
     if (Files.exists(fpFile(dir))) Some(Files.readString(fpFile(dir)))
     else None
 
-  private def writeFp(dir: String, fp: String): Unit = {
-    val tmp = Paths.get(dir.stripSuffix("/") + ".fp_tmp")
-    Files.writeString(tmp, fp)
-    Files.move(tmp, fpFile(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeFp(dir: String, fp: String): Unit =
+    AtomicFiles.commit(fpFile(dir), fp)
 
   /** Write `df` to `dir` via temp + atomic move (readers never observe a
     * half-written state). State cardinality is (#tag-combinations ×
@@ -216,8 +213,6 @@ object IncAgg {
     * iteration pays; a deployment with millions of series would shard
     * the state dir by tag hash instead. */
   private def swapIn(df: DataFrame, dir: String): Unit = {
-    val tmp = dir.stripSuffix("/") + ".inc_tmp"
-    val old = dir.stripSuffix("/") + ".inc_old"
     // Three confs are pinned for the write, on a clone of the frame's
     // session (a shared profile session's conf never changes): ONE reduce
     // partition — state cardinality is tags×buckets, so a 32-task reduce
@@ -232,19 +227,8 @@ object IncAgg {
       "spark.sql.shuffle.partitions" -> "1",
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
-    SessionShim.rebind(df.coalesce(1), w).write.mode("overwrite").parquet(tmp)
-    val p = Paths.get(dir); val t = Paths.get(tmp); val o = Paths.get(old)
-    if (Files.exists(p)) {
-      Files.move(p, o, StandardCopyOption.ATOMIC_MOVE)
-      Files.move(t, p, StandardCopyOption.ATOMIC_MOVE)
-      deleteRecursively(o)
-    } else Files.move(t, p, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    val s = Files.walk(p)
-    try s.sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(f => Files.delete(f))
-    finally s.close()
+    AtomicFiles.swapDir(dir, "inc") { tmp =>
+      SessionShim.rebind(df.coalesce(1), w).write.mode("overwrite").parquet(tmp)
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.server
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import graft.sources.AtomicFiles
 
 /** Filesystem backup service — the reference's `lib/backup/backup.go`
   * driven by the `/backup/{run,status,abort}` routes
@@ -101,9 +102,8 @@ object Backup {
           val from = src.resolve(rel)
           val to = dst.resolve(rel)
           Files.createDirectories(to.getParent)
-          val tmp = to.resolveSibling(to.getFileName.toString + ".tmp")
-          Files.copy(from, tmp, StandardCopyOption.REPLACE_EXISTING)
-          Files.move(tmp, to, StandardCopyOption.ATOMIC_MOVE)
+          AtomicFiles.commit(to)(
+            Files.copy(from, _, StandardCopyOption.REPLACE_EXISTING))
           job.files.incrementAndGet()
           job.bytes.addAndGet(Files.size(to))
           copied += rel -> stamp

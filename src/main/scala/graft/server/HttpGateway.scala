@@ -5,7 +5,7 @@ import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import graft.query.{InfluxQL, LogPipe, PromQL}
-import graft.sources.{LineProtocol, OtlpLogs, OtlpMetrics, OtlpTraces, PromRemoteRead, PromRemoteWrite, ResultShaper}
+import graft.sources.{AtomicFiles, LineProtocol, OtlpLogs, OtlpMetrics, OtlpTraces, PromRemoteRead, PromRemoteWrite, ResultShaper}
 
 /** Minimal HTTP serving surface over the library, mirroring the
   * reference's httpd routes (`lib/util/lifted/influx/httpd/handler.go:264`
@@ -74,9 +74,8 @@ final class HttpGateway(spark: SparkSession,
   private def fencesFile =
     persistDir.map(d => java.nio.file.Paths.get(d, "_fences.txt"))
   private def persistFences(): Unit = fencesFile.foreach { f =>
-    java.nio.file.Files.write(f, fences.values.toSeq.sortBy(_.id)
-      .map(c => s"${enc(c.id)}\t${enc(c.geometryText)}")
-      .mkString("\n").getBytes(UTF_8))
+    AtomicFiles.commit(f, fences.values.toSeq.sortBy(_.id)
+      .map(c => s"${enc(c.id)}\t${enc(c.geometryText)}").mkString("\n"))
   }
 
   /** Store-scoped PromQL catalog: `get(name)` synthesizes the metric
@@ -405,21 +404,25 @@ final class HttpGateway(spark: SparkSession,
       }
     }
     var n = 0
-    def coldDirOf(name: String): Option[String] = persistPath(name)
-      .map { d =>
+    def coldDirOf(name: String): Option[java.nio.file.Path] =
+      persistPath(name).map { d =>
         val p = java.nio.file.Paths.get(d)
         p.getParent.resolve("_cold").resolve(p.getFileName.toString)
-          .toString
       }
     (beforeCat.keySet -- dirCat.keySet).foreach { name =>
-      persistPath(name).foreach { d => deleteDirTree(d); n += 1 }
-      coldDirOf(name).foreach(deleteDirTree)
+      persistPath(name).foreach { d =>
+        AtomicFiles.deleteTree(java.nio.file.Paths.get(d)); n += 1 }
+      coldDirOf(name).foreach(AtomicFiles.deleteTree)
     }
     dirCat.foreach { case (name, m) =>
       if (!beforeCat.get(name).exists(_.df eq m.df)) {
         persistPath(name).foreach { d =>
-          rewriteDir(d, m.df)
-          coldDirOf(name).foreach(deleteDirTree)
+          // day-partitioned rewrite, reading lazily from the old files
+          // while writing the new
+          AtomicFiles.swapDir(d, "fold") { tmp =>
+            m.df.write.mode("overwrite").partitionBy("day").parquet(tmp)
+          }
+          coldDirOf(name).foreach(AtomicFiles.deleteTree)
           // the LIVE catalog entry still references the swapped-out
           // files (its df was built from the old listing at startup) —
           // rebuild exactly like a restart: init ∪ hot ∪ cold tier.
@@ -548,36 +551,6 @@ final class HttpGateway(spark: SparkSession,
     moved
   }
 
-  /** Atomic day-partitioned rewrite of a measurement dir (the
-    * write-tmp/copy-sidecars/swap sequence Compaction.compactDays
-    * uses), reading lazily from the old files while writing the new. */
-  private def rewriteDir(path: String, df: DataFrame): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = path.stripSuffix("/") + ".fold_tmp"
-    df.write.mode("overwrite").partitionBy("day").parquet(tmp)
-    val p = Paths.get(path); val t = Paths.get(tmp)
-    val side = Files.list(p)
-    try side.filter(f => Files.isRegularFile(f) &&
-        f.getFileName.toString.startsWith("_"))
-      .forEach(f => Files.copy(f, t.resolve(f.getFileName),
-        StandardCopyOption.REPLACE_EXISTING))
-    finally side.close()
-    val old = Paths.get(path.stripSuffix("/") + ".fold_old")
-    Files.move(p, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(t, p, StandardCopyOption.ATOMIC_MOVE)
-    deleteDirTree(old.toString)
-  }
-
-  private def deleteDirTree(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(java.nio.file.Files.delete(_))
-      finally s.close()
-    }
-  }
-
   private def renderSub(s: graft.streaming.StreamDDL.Subscription): String =
     s"CREATE SUBSCRIPTION ${s.name} ON ${s.db}.${s.rp} DESTINATIONS " +
       s"${s.mode} " + s.destinations.map(u => s"'$u'").mkString(", ")
@@ -620,11 +593,7 @@ final class HttpGateway(spark: SparkSession,
         s"ds\t${enc(db)}\t-\t${enc(renderDs(rp, p))}" } ++
       mstSchemas.toSeq.sortBy(_._1).map { case ((db, _), sc) =>
         s"mst\t${enc(db)}\t-\t${enc(renderMst(sc))}" }
-    val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
-    java.nio.file.Files.write(tmp, lines.mkString("\n").getBytes(UTF_8))
-    java.nio.file.Files.move(tmp, f,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    AtomicFiles.commit(f, lines.mkString("\n"))
   }
 
   // ---- registration (shared by the /query dispatch and DDL restore)
@@ -1039,20 +1008,14 @@ final class HttpGateway(spark: SparkSession,
   // window (the reference's users live in its durable meta store)
   private def usersFile =
     persistDir.map(d => java.nio.file.Paths.get(d, "_users.tsv"))
-  /** Temp + ATOMIC_MOVE so a crash mid-write can never leave a
+  /** Committed atomically so a crash mid-write can never leave a
     * truncated catalog (an empty `_users.tsv` restores to ZERO users,
     * which with requireAuth silently reopens the unauthenticated
     * bootstrap window — the exact hole persistence exists to close).
     * Callers serialize the mutate+persist pair on the auth monitor, so
     * the snapshot on disk is never an out-of-order older state. */
   private def persistUsers(): Unit =
-    usersFile.foreach { f =>
-      val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
-      java.nio.file.Files.write(tmp, auth.snapshotTsv.getBytes(UTF_8))
-      java.nio.file.Files.move(tmp, f,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    usersFile.foreach(AtomicFiles.commit(_, auth.snapshotTsv))
 
   // reload persisted measurements under the in-memory/init catalog
   usersFile.filter(java.nio.file.Files.exists(_)).foreach { f =>
@@ -1073,18 +1036,10 @@ final class HttpGateway(spark: SparkSession,
   private def logStoresFile =
     persistDir.map(d => java.nio.file.Paths.get(d, "_logstreams.txt"))
   private def persistLogStores(): Unit =
-    logStoresFile.foreach { f =>
-      val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
-      java.nio.file.Files.write(tmp, logStores.toSeq.sorted
-        .map(java.net.URLEncoder.encode(_, "UTF-8") + "\n")
-        .mkString.getBytes(UTF_8))
-      java.nio.file.Files.move(tmp, f,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    logStoresFile.foreach(AtomicFiles.commit(_, logStores.toSeq.sorted
+      .map(java.net.URLEncoder.encode(_, "UTF-8") + "\n").mkString))
   private def persistDatabases(): Unit =
     dbFile.foreach { f =>
-      val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
       val body = databases.toSeq.sorted.map { d =>
         val rps = retention.getOrElse(d, Retention.autogen).toSeq
           .sortBy(_._1).map { case (n, rp) =>
@@ -1094,10 +1049,7 @@ final class HttpGateway(spark: SparkSession,
           }.mkString(";")
         s"${java.net.URLEncoder.encode(d, "UTF-8")}\t$rps"
       }.mkString("\n")
-      java.nio.file.Files.write(tmp, body.getBytes(UTF_8))
-      java.nio.file.Files.move(tmp, f,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      AtomicFiles.commit(f, body)
     }
   dbFile.filter(java.nio.file.Files.exists(_)).foreach { f =>
     // defaultDb always survives a reload: the constructor-injected

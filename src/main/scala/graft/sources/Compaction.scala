@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -26,24 +26,11 @@ object Compaction {
     // columns; sampling one footer would silently drop them on rewrite
     val df = spark.read.option("mergeSchema", "true").parquet(path)
     val rows = df.count()
-    val tmp = path.stripSuffix("/") + ".compact_tmp"
-    df.repartition(filesPerDay, col("day"))
-      .write.mode("overwrite").partitionBy("day").parquet(tmp)
-    // atomic-ish swap: move old out of the way, promote tmp, drop old
-    val p = Paths.get(path); val t = Paths.get(tmp)
-    // carry over sidecar metadata files (the gateway's _tags.txt/_prom
-    // markers live beside the parquet and must survive compaction)
-    val side = Files.list(p)
-    try side
-      .filter(f => Files.isRegularFile(f) &&
-        f.getFileName.toString.startsWith("_"))
-      .forEach(f => Files.copy(f, t.resolve(f.getFileName),
-        StandardCopyOption.REPLACE_EXISTING))
-    finally side.close()
-    val old = Paths.get(path.stripSuffix("/") + ".compact_old")
-    Files.move(p, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(t, p, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(old)
+    // the gateway's _tags.txt/_prom sidecar markers carry over
+    AtomicFiles.swapDir(path, "compact") { tmp =>
+      df.repartition(filesPerDay, col("day"))
+        .write.mode("overwrite").partitionBy("day").parquet(tmp)
+    }
     Stats(before, countParquetFiles(path), rows)
   }
 
@@ -55,12 +42,5 @@ object Compaction {
       try s.filter(f => f.toString.endsWith(".parquet")).count()
       finally s.close()
     }
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    val s = Files.walk(p)
-    try s.sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(f => Files.delete(f))
-    finally s.close()
   }
 }

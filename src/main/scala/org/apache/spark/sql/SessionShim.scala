@@ -6,7 +6,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
 /** The package-private session surface the execution profiles need
   * (`graft.ExecProfile`): deriving a session from another with some
   * confs laid over, and binding an existing plan to another session of
-  * the same SparkContext (`Dataset.apply`, the typed `Dataset.ofRows`). */
+  * the same SparkContext (`Dataset.apply`, the typed `Dataset.ofRows`);
+  * and, for `graft.Dev`, waiting for the listener bus. */
 object SessionShim {
   private def classicOf(s: SparkSession) = s.asInstanceOf[classic.SparkSession]
 
@@ -55,4 +56,9 @@ object SessionShim {
     * `s`. */
   def withActive[T](s: SparkSession)(body: => T): T =
     classicOf(s).withActive(body)
+
+  /** Block until every SparkListener has seen the events posted so far
+    * (the status tracker is one of them). */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }
