@@ -53,7 +53,9 @@ object Tables {
     * consults it on every chunk read). The Spark-first analogue is an
     * in-memory columnar `persist` of the small catalog tables: first
     * access decodes parquet once and populates compressed columnar
-    * batches; every later query over the table scans memory. The tier is
+    * batches; every later query over the table scans memory. A table
+    * with a `ts` TIMESTAMP (`events`) is cached clustered by time, so a
+    * time-windowed read skips the batches outside its window. The tier is
     * size-gated twice — [[hotTierDirMaxBytes]] over the whole sf
     * directory (tighter than the small-query profile's gate, so the
     * ×10/×100 scale harness dirs always measure the pushed-down parquet
@@ -136,14 +138,29 @@ object Tables {
             // un-repartitioned persist would serialize every downstream
             // map-side stage into one task — q19's orders aggregation
             // measured 187 ms in a single task vs ~20 ms spread. One
-            // round-robin shuffle at cache-fill time, amortized over
-            // every later query; ~64 KB compressed (~0.3 MB decoded)
-            // per cached partition, capped at 8 (measured: a 32-way
-            // spread taxed every small scan stage ~70 ms of per-task
-            // deserialization — BASELINE.md round 12).
+            // shuffle at cache-fill time, amortized over every later
+            // query; ~64 KB compressed (~0.3 MB decoded) per cached
+            // partition, capped at 8 (measured: a 32-way spread taxed
+            // every small scan stage ~70 ms of per-task deserialization
+            // — BASELINE.md round 12).
             val parts = math.max(1, math.min(8,
               ((bytes + (64L << 10) - 1) / (64L << 10)).toInt))
-            val spread = if (parts > 1) df0.repartition(parts) else df0
+            val spread =
+              if (parts <= 1) df0
+              else if (df0.schema.fields.exists(f => f.name == "ts" &&
+                  f.dataType == org.apache.spark.sql.types.TimestampType))
+                // A table with the engine's time contract (`ts`
+                // TIMESTAMP) spreads BY TIME: each cached partition,
+                // and each columnar batch in it, then holds one
+                // contiguous time slice, so a windowed read's
+                // attribute-vs-literal `ts` bounds skip every batch
+                // outside the window by its min/max stats — the
+                // reference's SeekTime/StopTime chunk skipping. A
+                // round-robin spread puts every day in every batch, and
+                // no batch can be skipped.
+                df0.repartitionByRange(parts, col("ts"))
+                  .sortWithinPartitions("ts")
+              else df0.repartition(parts)
             spread.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
           } else df0
         memo.put(key, Entry(df, fp, resident))

@@ -1411,6 +1411,43 @@ object InfluxQL {
     } else sys.error(s"not a management statement: $sql")
   }
 
+  /** `time <op> literal` on the µs time axis, shared by the SELECT and
+    * the management (DELETE/DROP SERIES/SHOW … WHERE) condition
+    * compilers: (lhs, rhs) to compare. A literal naming an instant — an
+    * RFC3339 string, an epoch-ns integer, a duration, `now() ± d` — is
+    * converted to epoch µs and, on a TIMESTAMP time column, compared as
+    * `time <op> timestamp_micros(µs)`: Catalyst folds the call to a
+    * literal, so the predicate is attribute-vs-literal and prunes cached
+    * in-memory batches by their min/max stats and parquet row groups by
+    * theirs (the reference lifts these bounds into the scan's
+    * SeekTime/StopTime, `query/select.go:482`). It selects the rows
+    * `unix_micros(time) <op> µs` selects, as `unix_micros` is
+    * order-preserving and one-to-one on µs timestamps. A float literal
+    * (fractional µs) or another type of time column keeps the comparison
+    * on `unix_micros(time)`. */
+  private def timeOperands(df: DataFrame, timeCol: String, v: CondV,
+                           nowMs: Long): (Column, Column) = {
+    val time = col(timeCol)
+    val timestampCol = df.schema.fields.exists(f => f.name == timeCol &&
+      f.dataType == org.apache.spark.sql.types.TimestampType)
+    val us: Option[Long] = v match {
+      case CStr(s) => Some(parseTimeUtc(s))
+      case CInt(l) => Some(Math.floorDiv(l, 1000L)) // epoch ns -> µs
+      case CDur(ns) => Some(ns / 1000L)
+      case CNow(d) => Some(nowMs * 1000L + d / 1000L)
+      case _ => None
+    }
+    us match {
+      case Some(u) if timestampCol => (time, timestamp_micros(lit(u)))
+      case Some(u) => (unix_micros(time), lit(u))
+      case None => (unix_micros(time), v match {
+        case CNum(x) => lit(x / 1000.0) // epoch ns -> fractional µs
+        case CBool(b) => lit(b)
+        case _ => lit(null)
+      })
+    }
+  }
+
   /** Time/tag condition compiler for DELETE/DROP SERIES — same literal
     * conventions as the SELECT path (time in epoch µs, durations as
     * ns→µs, RFC3339 strings, now()±d). */
@@ -1434,20 +1471,17 @@ object InfluxQL {
         case _ => false
       })
       if (numMismatch) return lit(false)
-      val lhs = if (isTime) unix_micros(col(m.time)) else col(c.field)
-      val rhs: Column = c.v match {
-        case CStr(sv) if isTime => lit(parseTimeUtc(sv))
-        case CStr(sv) => lit(sv)
-        case CInt(l) if isTime => lit(Math.floorDiv(l, 1000L)) // ns -> us
-        case CInt(l) => lit(l)
-        case CNum(v) if isTime => lit(v / 1000.0) // ns -> us
-        case CNum(v) => lit(v)
-        case CDur(ns) => lit(ns / 1000)
-        case CNow(d) =>
-          lit(nowMs * 1000L + d / 1000)
-        case CBool(b) => lit(b)
-        case CRegex(_) => lit(null)
-      }
+      val (lhs, rhs) =
+        if (isTime) timeOperands(m.df, m.time, c.v, nowMs)
+        else (col(c.field), c.v match {
+          case CStr(sv) => lit(sv)
+          case CInt(l) => lit(l)
+          case CNum(v) => lit(v)
+          case CDur(ns) => lit(ns / 1000)
+          case CNow(d) => lit(nowMs * 1000L + d / 1000)
+          case CBool(b) => lit(b)
+          case CRegex(_) => lit(null)
+        })
       (c.op, c.v) match {
         case ("=~", CRegex(r)) => lhs.rlike(r)
         case ("!~", CRegex(r)) => !lhs.rlike(r)
@@ -2414,9 +2448,10 @@ object InfluxQL {
     * in buildCompareTimeDimension comes free). Arms full-outer-join on
     * (time, tags) — a bucket with no history row keeps the current value
     * and null history, like the reference's merged sources. Scale note:
-    * the shifted-axis filter compares `unix_micros(ts + INTERVAL k)` and
-    * so does not reach parquet row-group stats; a deployment would push
-    * the equivalent [min−k, max−k] bounds instead — each arm is otherwise
+    * the shifted-axis filter compares `ts + INTERVAL k`, a function of
+    * the column, and so does not reach parquet row-group stats; a
+    * deployment would push the equivalent [min−k, max−k] bounds
+    * instead — each arm is otherwise
     * the same single scan+agg as the un-compared query. */
   private def compileCompare(catalog: Map[String, Measurement], q: Query,
                              c: PCall): DataFrame = {
@@ -3346,9 +3381,8 @@ object InfluxQL {
 
     def condToCol(c: Cond): Column = {
       val isTime = c.field.equalsIgnoreCase("time")
-      val lhs =
-        if (isTime && nsTime) col("time")
-        else if (isTime) unix_micros(col(m.time))
+      val lhs0 =
+        if (isTime) col("time") // ns axis; the µs axis is timeOperands'
         // schema-on-read: an unknown WHERE field compares as null →
         // matches nothing (TagArray::2 "where f2=3" → bare statement)
         else if (!df.columns.contains(c.field) &&
@@ -3366,28 +3400,21 @@ object InfluxQL {
         case "!=" | "<>" => lit(true)
         case _ => lit(false)
       }
-      val rhs: Column = c.v match {
-        case CInt(l) =>
-          if (isTime && nsTime) lit(l)
-          else if (isTime)
-            lit(Math.floorDiv(l, 1000L)) // epoch ns literal -> us axis
-          else lit(l)
-        case CNum(v) =>
-          if (isTime && nsTime) lit(v)
-          else if (isTime) lit(v / 1000.0)
-          else lit(v)
-        case CStr(s) =>
-          if (isTime && nsTime) lit(parseTimeUtcNs(s))
-          else if (isTime) lit(parseTimeUtc(s))
-          else lit(s)
-        case CDur(ns) => if (nsTime) lit(ns) else lit(ns / 1000L)
-        case CNow(deltaNs) =>
-          if (nsTime)
-            lit(System.currentTimeMillis() * 1000000L + deltaNs)
-          else lit(System.currentTimeMillis() * 1000L + deltaNs / 1000L)
-        case CBool(b) => lit(b)
-        case CRegex(_) => lit(null)
-      }
+      val (lhs, rhs) =
+        if (isTime && !nsTime)
+          timeOperands(df, m.time, c.v, System.currentTimeMillis())
+        else (lhs0, c.v match {
+          case CInt(l) => lit(l)
+          case CNum(v) => lit(v)
+          case CStr(s) => if (isTime) lit(parseTimeUtcNs(s)) else lit(s)
+          case CDur(ns) => if (nsTime) lit(ns) else lit(ns / 1000L)
+          case CNow(deltaNs) =>
+            if (nsTime)
+              lit(System.currentTimeMillis() * 1000000L + deltaNs)
+            else lit(System.currentTimeMillis() * 1000L + deltaNs / 1000L)
+          case CBool(b) => lit(b)
+          case CRegex(_) => lit(null)
+        })
       (c.op, c.v) match {
         case ("=~", CRegex(r)) => lhs.rlike(r)
         case ("!~", CRegex(r)) => !lhs.rlike(r)

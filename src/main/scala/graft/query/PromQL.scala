@@ -453,9 +453,12 @@ object PromQL {
 
   /** `boundsMs`: explicit query-range [start, end] in epoch ms — the
     * batch stand-in for Prometheus's query_range(start, end). When given,
-    * eval grids (absent(), `@` replication, standalone vector()/time())
-    * derive from it with NO data pass; when absent they fall back to a
-    * min/max-of-time scan of the metric. */
+    * the result holds only the eval steps in [start, end]; eval grids
+    * (absent(), `@` replication, standalone vector()/time()) derive from
+    * it with NO data pass, and every selector without an `@` pin reads
+    * only the samples those steps can see (see `Eval.metricOf`). When
+    * absent, the grids fall back to a min/max-of-time scan of the metric
+    * and every step of the metric's history is evaluated. */
   def evaluate(catalog: Map[String, Metric], query: String,
                step: String, lookback: String = "5 minutes",
                boundsMs: Option[(Long, Long)] = None): DataFrame = {
@@ -468,16 +471,20 @@ object PromQL {
     val cat = profile.fold(catalog)(s => used.map { case (n, m) =>
       n -> m.copy(df = SessionShim.rebind(m.df, s)) }.toMap)
     val ev = new Eval(cat, PromRange.durationSeconds(step),
-      PromRange.durationSeconds(lookback), boundsMs)
-    def run(): DataFrame = ev.evalVec(ast) match {
-      case Left(v) =>
-        v.df.select((v.labels.sorted.map(col) :+ col("eval_ms") :+
-          col("value")): _*)
-      case Right(SSteps(df)) =>
-        df.select(col("eval_ms"), col("_sv").as("value"))
-      case Right(s) => sys.error(
-        s"PromQL query is a grid-free scalar ($s): pass boundsMs and wrap" +
-          " in vector() to materialize it")
+      PromRange.durationSeconds(lookback), boundsMs, boundsMs)
+    def run(): DataFrame = {
+      val out = ev.evalVec(ast) match {
+        case Left(v) =>
+          v.df.select((v.labels.sorted.map(col) :+ col("eval_ms") :+
+            col("value")): _*)
+        case Right(SSteps(df)) =>
+          df.select(col("eval_ms"), col("_sv").as("value"))
+        case Right(s) => sys.error(
+          s"PromQL query is a grid-free scalar ($s): pass boundsMs and " +
+            "wrap in vector() to materialize it")
+      }
+      boundsMs.fold(out) { case (lo, hi) =>
+        out.filter(col("eval_ms").between(lo, hi)) }
     }
     profile.fold(run())(SessionShim.withActive(_)(run()))
   }
@@ -487,13 +494,18 @@ object PromQL {
     * to its value, without a SparkSession or catalog. Data-dependent
     * expressions error. */
   def evaluateConst(query: String): Double =
-    new Eval(Map.empty, 1L, 300L, None).evalVec(parse(query)) match {
+    new Eval(Map.empty, 1L, 300L, None, None).evalVec(parse(query)) match {
       case Right(SConst(v)) => v
       case other => sys.error(s"not a constant scalar: $other")
     }
 
+  /** `boundsMs`: the [lo, hi] epoch-ms range of eval steps this
+    * evaluator must get right — the query range at the top level, the
+    * widened inner range in a subquery. `queryMs`: the top-level query
+    * range, which `@ start()`/`@ end()` name at every depth. */
   private class Eval(catalog: Map[String, Metric], stepS: Long,
-                     lookbackS: Long, boundsMs: Option[(Long, Long)]) {
+                     lookbackS: Long, boundsMs: Option[(Long, Long)],
+                     queryMs: Option[(Long, Long)]) {
     private val stepStr = s"$stepS seconds"
 
     def evalVec(e: Expr): Either[Vec, Scal] = e match {
@@ -511,9 +523,27 @@ object PromQL {
     }
 
     // -- selectors ---------------------------------------------------------
+    /** The selector's metric and its matcher-filtered, offset-shifted
+      * samples. Under `boundsMs` [lo, hi] an unpinned selector keeps only
+      * the samples an eval step in [lo, hi] can see: a step T reads
+      * (T − w, T] of the shifted axis, w = lookback (+1 ms, inclusive
+      * start) or the range, so the raw times [lo − offset − w − 1 s,
+      * hi − offset] — Prometheus's own [start − lookback, end] selection.
+      * The bound compares the RAW time column, so cached batches and
+      * parquet row groups outside it are skipped by their min/max stats.
+      * An `@`-pinned selector reads around its pin instead (its callers
+      * filter the pinned window). */
     private def metricOf(s: Sel): (Metric, DataFrame) = {
       val m = catalog.getOrElse(s.name, sys.error(s"unknown metric ${s.name}"))
       var df = m.df
+      if (s.at.isEmpty) boundsMs.foreach { case (lo, hi) =>
+        val reachMs = math.max(lookbackS, s.rangeS.getOrElse(0L)) * 1000L +
+          1000L
+        val fromMs = lo - s.offsetS * 1000L - reachMs
+        val toMs = hi - s.offsetS * 1000L
+        df = df.filter(col(m.time) >= timestamp_micros(lit(fromMs * 1000L)) &&
+          col(m.time) <= timestamp_micros(lit(toMs * 1000L)))
+      }
       s.matchers.foreach { case (label, op, v) =>
         val c = if (df.columns.contains(label)) col(label) else lit("")
         val cond = op match {
@@ -534,9 +564,9 @@ object PromQL {
       * bounds — there is no "query range" to anchor them to otherwise). */
     private def resolveAt(a: At): Long = a match {
       case AtMs(ms) => ms
-      case AtStart => boundsMs.map(_._1)
+      case AtStart => queryMs.map(_._1)
         .getOrElse(sys.error("@ start() needs explicit boundsMs"))
-      case AtEnd => boundsMs.map(_._2)
+      case AtEnd => queryMs.map(_._2)
         .getOrElse(sys.error("@ end() needs explicit boundsMs"))
     }
 
@@ -714,9 +744,8 @@ object PromQL {
     private def rangeSource(fn: String, arg: Expr): (DataFrame, Metric,
         Long, Option[Long]) = arg match {
       case s: Sel if s.rangeS.isDefined =>
-        // `m[5m] @ T`: strip the pin here; rangeFn applies it to the
-        // window evaluation (previously the pin was silently dropped)
-        val (m, df0) = metricOf(s.copy(at = None))
+        // `m[5m] @ T`: rangeFn applies the pin to the window evaluation
+        val (m, df0) = metricOf(s)
         // range vectors never contain staleness markers — they are
         // dropped from the window, not treated as samples
         val df = m.stale.map(c =>
@@ -730,8 +759,15 @@ object PromQL {
           case s: Sel if s.at.isDefined => (s.copy(at = None), s.at.map(resolveAt))
           case e => (e, None)
         }
+        // bounded: the inner steps the outer (T − range, T] windows
+        // read — around the pin, else the outer bounds widened by the
+        // range. Unbounded stays unbounded: the outer grid of a pinned
+        // subquery is the inner result's own extent.
+        val rangeMs = sq.rangeS * 1000L
+        val innerBounds = boundsMs.map { case (lo, hi) =>
+          atMs.fold((lo - rangeMs, hi))(a => (a - rangeMs, a)) }
         val inner = new Eval(catalog, sq.stepS.getOrElse(stepS), lookbackS,
-          boundsMs)
+          innerBounds, queryMs)
         val v = inner.evalVec(innerExpr) match {
           case Left(x) => x
           case Right(d) => sys.error(s"scalar subquery: $d")

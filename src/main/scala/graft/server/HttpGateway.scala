@@ -4174,7 +4174,8 @@ final class HttpGateway(spark: SparkSession,
   private case class Sample(labels: Seq[(String, String)], evalMs: Long,
                             value: Double)
 
-  /** Evaluate `query` over `[loMs, hiMs]` and collect samples. */
+  /** Evaluate `query` over `[loMs, hiMs]` and collect its samples —
+    * `evaluate` returns only the steps in that range. */
   private def collectSamples(cat: Map[String, PromQL.Metric],
                              query: String, step: String,
                              loMs: Long, hiMs: Long): Seq[Sample] = {
@@ -4193,7 +4194,6 @@ final class HttpGateway(spark: SparkSession,
     rows.toSeq
       .map(r => Sample(labelCols.map(c => c -> r.getAs[String](c)),
         r.getAs[Long]("eval_ms"), r.getAs[Double]("value")))
-      .filter(s => s.evalMs >= loMs && s.evalMs <= hiMs)
   }
 
   private def handleProm(ex: HttpExchange, range: Boolean,

@@ -66,4 +66,33 @@ class HotTierSpec extends SparkSpec {
     assert(plan.contains("PushedFilters: [IsNotNull(n_regionkey), GreaterThan(n_regionkey,1)]"),
       s"expected parquet pushdown, got:\n$plan")
   }
+
+  test("resident events are clustered by time: ascending, disjoint ts " +
+      "ranges per cached partition, same rows") {
+    val base = freshDir()
+    // sf0.01's events span several 64 KB spread units, so the tier
+    // splits it into more than one partition
+    val src = "/root/testdata/sf0.01/events.parquet"
+    Files.copy(Paths.get(src), Paths.get(s"$base/events.parquet"))
+    val s2 = spark.newSession()
+    s2.conf.set(Tables.hotTierConfKey, Tables.hotTierDefaultMaxBytes.toString)
+    val ev = Tables.table(s2, base, "events")
+    assert(ev.storageLevel.useMemory)
+    assert(ev.count() == s2.read.parquet(src).count())
+    val ranges = ev.select(org.apache.spark.sql.functions.unix_micros(
+        org.apache.spark.sql.functions.col("ts"))).rdd
+      .mapPartitions { it =>
+        val ts = it.map(_.getLong(0)).toVector
+        Iterator((ts, ts.nonEmpty && ts == ts.sorted))
+      }.collect()
+    assert(ranges.length > 1, "expected a multi-partition spread")
+    assert(ranges.forall(_._2), "a partition is not sorted by ts")
+    val spans = ranges.map(_._1).filter(_.nonEmpty).map(t => (t.head, t.last))
+    spans.sliding(2).foreach {
+      case Array((_, hi0), (lo1, _)) =>
+        assert(hi0 < lo1, s"overlapping partitions: ${spans.toSeq}")
+      case _ => ()
+    }
+    ev.unpersist(blocking = true)
+  }
 }

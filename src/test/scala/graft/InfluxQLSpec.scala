@@ -1015,4 +1015,103 @@ class InfluxQLSpec extends SparkSpec {
       run("SELECT histogram(value, 10) FROM cpu").collect())
     assert(e.getMessage.contains("no execution routine"))
   }
+
+  // --------------------------------------------------- time-bound compile
+  private val timeOps = Seq("=", "!=", "<", "<=", ">", ">=")
+
+  /** Points at b−1µs, b, b+1µs and ±1 h/±1 d around each boundary `b`;
+    * `value` is the point's index. */
+  private def boundaryFrame(bounds: Seq[Long]) = {
+    import org.apache.spark.sql.functions.timestamp_micros
+    bounds.flatMap(b => Seq(b - 1, b, b + 1, b - 3600000000L,
+        b + 3600000000L, b - 86400000000L, b + 86400000000L))
+      .distinct.zipWithIndex.map { case (us, i) => (us, i.toDouble) }
+      .toDF("us", "value").withColumn("ts", timestamp_micros($"us"))
+      .drop("us")
+  }
+
+  /** The rows the pre-change `unix_micros(time) <op> µs` form selects. */
+  private def oldForm(df: org.apache.spark.sql.DataFrame, op: String,
+                      us: Long): Set[Double] = {
+    import org.apache.spark.sql.functions.{lit, unix_micros}
+    val l = unix_micros($"ts"); val r = lit(us)
+    val c = op match {
+      case "=" => l === r; case "!=" => l =!= r; case "<" => l < r
+      case "<=" => l <= r; case ">" => l > r; case ">=" => l >= r
+    }
+    df.filter(c).select("value").as[Double].collect().toSet
+  }
+
+  test("time bounds on a TIMESTAMP column select the unix_micros rows, " +
+      "in SELECT and in DELETE") {
+    val b = InfluxQL.parseTimeUtc("2024-01-01T00:00:00.000001Z")
+    val nowMs = 1704067200123L
+    val nowB = nowMs * 1000L - 3600000000L // now() - 1h in µs
+    val df = boundaryFrame(Seq(b, nowB))
+    val m = Measurement(df, tags = Nil)
+    // each literal kind and the µs instant it names: an RFC3339 string
+    // with a sub-µs fraction, an epoch-ns integer with a sub-µs part
+    val kinds = Seq("'2024-01-01T00:00:00.000001500Z'" -> b,
+      s"${b * 1000L + 500L}" -> b)
+    for ((lit, us) <- kinds; op <- timeOps) {
+      val got = InfluxQL.execute(Map("m" -> m),
+          s"SELECT value FROM m WHERE time $op $lit")
+        .select("value").as[Double].collect().toSet
+      assert(got == oldForm(df, op, us), s"SELECT time $op $lit")
+    }
+    // DELETE keeps the complement; now() is pinned, so `now() - 1h`
+    // lands exactly on the boundary rows
+    for ((lit, us) <- kinds :+ ("now() - 1h" -> nowB); op <- timeOps) {
+      val kept = InfluxQL.executeManage(Map("m" -> m),
+          s"DELETE FROM m WHERE time $op $lit", nowMs)("m").df
+        .select("value").as[Double].collect().toSet
+      val all = df.select("value").as[Double].collect().toSet
+      assert(kept == all -- oldForm(df, op, us), s"DELETE time $op $lit")
+    }
+    // SELECT's now() is the wall clock: rows an hour or more off the
+    // boundary are unambiguous
+    val nowNear = System.currentTimeMillis() * 1000L - 3600000000L
+    val live = boundaryFrame(Seq(nowNear)).filter(
+      org.apache.spark.sql.functions.abs(
+        org.apache.spark.sql.functions.unix_micros($"ts") - nowNear) >
+        60000000L)
+    for (op <- timeOps) {
+      val got = InfluxQL.execute(Map("m" -> Measurement(live, Nil)),
+          s"SELECT value FROM m WHERE time $op now() - 1h")
+        .select("value").as[Double].collect().toSet
+      assert(got == oldForm(live, op, nowNear), s"SELECT time $op now() - 1h")
+    }
+  }
+
+  test("time bounds reach the scan: parquet PushedFilters and the " +
+      "resident InMemoryTableScan's ts predicates") {
+    val q = "SELECT count(value) FROM events WHERE " +
+      "time >= '2024-01-10T00:00:00Z' AND time < '2024-01-11T00:00:00Z'"
+    def plan(s: org.apache.spark.sql.SparkSession, dir: String): String = {
+      val ev = Measurement(Tables.table(s, dir, "events"),
+        tags = Seq("event_type"))
+      val out = InfluxQL.execute(Map("events" -> ev), q)
+      out.collect()
+      out.queryExecution.executedPlan.toString
+    }
+    // parquet-backed (the suite session keeps the hot tier off)
+    val pq = plan(spark, sf)
+    assert("""PushedFilters: \[[^\]]*GreaterThanOrEqual\(ts,""".r
+        .findFirstIn(pq).isDefined &&
+      """PushedFilters: \[[^\]]*LessThan\(ts,""".r.findFirstIn(pq).isDefined,
+      s"time bounds not pushed to parquet:\n$pq")
+    // resident: a fresh copy of the table in a session with the tier on
+    val base = java.nio.file.Files.createTempDirectory("graft_tb").toString
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
+      java.nio.file.Paths.get(s"$base/events.parquet"))
+    val s2 = spark.newSession()
+    s2.conf.set(Tables.hotTierConfKey, Tables.hotTierDefaultMaxBytes.toString)
+    val mem = plan(s2, base)
+    val scan = mem.linesIterator.find(_.contains("InMemoryTableScan"))
+      .getOrElse(fail(s"no resident scan:\n$mem"))
+    assert("""\(ts#\d+ >= """.r.findFirstIn(scan).isDefined &&
+      """\(ts#\d+ < """.r.findFirstIn(scan).isDefined,
+      s"ts bounds not on the InMemoryTableScan:\n$mem")
+    Tables.table(s2, base, "events").unpersist(blocking = true)
+  }
 }

@@ -566,4 +566,64 @@ class PromQLSpec extends SparkSpec {
         s"${out3.length} vs ${out.length}")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  // ---------------------------------------------------- bounded evaluation
+  /** Three jobs sampled every ~37 s (jittered) for 6 h from t=0, with a
+    * 40-minute hole in job "b" so absent() has steps to report. */
+  private lazy val jittered: Map[String, Metric] = {
+    val rnd = new scala.util.Random(11)
+    val rows = for {
+      job <- Seq("a", "b", "c")
+      k <- 0 until 580
+      t = k * 37000L + rnd.nextInt(5000)
+      if !(job == "b" && t > 7200000L && t < 9600000L)
+    } yield (job, new Timestamp(t), (k * 3 + rnd.nextInt(7)).toDouble)
+    val df = rows.zipWithIndex.map { case ((j, t, v), i) =>
+      (j, t, v, i.toLong) }.toDF("job", "ts", "value", "id")
+    Map("m" -> Metric(df, Seq("job"), tie = Seq("id")))
+  }
+
+  private def rowSet(df: DataFrame): Set[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSet
+
+  test("bounded evaluate equals unbounded evaluate clipped to [lo, hi]") {
+    import org.apache.spark.sql.functions.col
+    val queries = Seq("m", "rate(m[5m])", "m offset 10m",
+      "rate(m[5m] @ 9000)", "m @ 7000", "max_over_time(m[10m:1m])",
+      "max_over_time(m[10m:1m] @ 9000)",
+      "avg_over_time(sum(m)[15m:2m])", """absent(m{job="b"})""",
+      "rate(m[5m]) * 2 + on(job) m", "sum(m) - count(m offset 10m)")
+    val rnd = new scala.util.Random(5)
+    // windows inside the data's extent (outside it the unbounded grid of
+    // absent()/`@` has no steps to compare), not aligned to the step
+    // (the first one spans job b's hole)
+    val windows = (6500001L, 9900001L) +: Seq.fill(3) {
+      val lo = 1800000L + rnd.nextInt(14000000)
+      (lo, lo + 600000L + rnd.nextInt(3000000))
+    }
+    for (q <- queries) {
+      val sizes = windows.map { case (lo, hi) =>
+        val full = PromQL.evaluate(jittered, q, "120 seconds")
+          .filter(col("eval_ms").between(lo, hi))
+        val bounded = PromQL.evaluate(jittered, q, "120 seconds",
+          boundsMs = Some((lo, hi)))
+        val (f, b) = (rowSet(full), rowSet(bounded))
+        assert(b == f, s"$q over [$lo, $hi]: bounded-only " +
+          s"${(b -- f).take(3)}, missing ${(f -- b).take(3)}")
+        f.size
+      }
+      assert(sizes.head > 0, s"$q: empty reference")
+    }
+  }
+
+  test("a subquery's inner grid is not clipped to the query range") {
+    // every (T − 10m, T] window holds 10 one-minute inner steps — also at
+    // the first steps of the range
+    val (lo, hi) = (3600000L, 7200000L)
+    val out = PromQL.evaluate(jittered, "count_over_time(vector(1)[10m:1m])",
+        "60 seconds", boundsMs = Some((lo, hi)))
+      .select("eval_ms", "value").as[(Long, Double)].collect().toMap
+    assert(out.keySet == (lo to hi by 60000L).toSet)
+    assert(out.values.forall(_ == 10.0), out.toSeq.sorted.take(5))
+  }
 }

@@ -279,7 +279,8 @@ class ServerSpec extends SparkSpec {
       "materializing unbounded rows on the driver") {
     // the collectSamples collect is limit-capped like every other
     // gateway collect (http.max-row-limit) — a hostile step/range
-    // combination gets Prometheus's too-many-samples refusal
+    // combination gets Prometheus's too-many-samples refusal. The window
+    // is the data's first day: only its samples count toward the cap.
     val prom = Map("events" -> PromQL.Metric(
       events.withColumn("user", col("user_id").cast("string")),
       labels = Seq("event_type", "user"), time = "ts", value = "value",
@@ -290,7 +291,7 @@ class ServerSpec extends SparkSpec {
       def rangeReq(step: String) = http.send(HttpRequest.newBuilder(
         URI.create(s"http://127.0.0.1:${tiny.boundPort}" +
           s"/api/v1/query_range?query=${enc("events")}" +
-          s"&start=1262304000&end=1262390400&step=$step")).GET().build(),
+          s"&start=1704067200&end=1704153600&step=$step")).GET().build(),
         HttpResponse.BodyHandlers.ofString())
       val r = rangeReq("15s")
       assert(r.statusCode() == 400, r.body().take(200))
