@@ -121,7 +121,7 @@ object ExecProfile {
     if (held != null && held.state == state) held
     else {
       def derive(c: Map[String, String]) = {
-        val s = SessionShim.derive(root, c)
+        val s = SessionShim.derive(root, c, Seq(graft.plans.TimeSlices))
         rootOf.put(s, new java.lang.ref.WeakReference(root))
         s
       }

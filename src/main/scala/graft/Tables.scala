@@ -54,8 +54,15 @@ object Tables {
     * in-memory columnar `persist` of the small catalog tables: first
     * access decodes parquet once and populates compressed columnar
     * batches; every later query over the table scans memory. A table
-    * with a `ts` TIMESTAMP (`events`) is cached clustered by time, so a
-    * time-windowed read skips the batches outside its window. The tier is
+    * with a `ts` TIMESTAMP (`events`) is cached clustered by time, and
+    * filled at lookup by one job that also records each cached
+    * partition's `[min, max]` `ts` (`plans.TimeSlices.fill`): a
+    * time-windowed read then schedules only the partitions its window
+    * overlaps — the reference maps a statement's range to the shard
+    * groups it overlaps before reading any (`coordinator/
+    * shard_mapper.go`) — and skips the batches outside the window inside
+    * them by their stats. The ranges belong to the cache entry, so a
+    * replaced or cleared entry plans the unpruned scan. The tier is
     * size-gated twice — [[hotTierDirMaxBytes]] over the whole sf
     * directory (tighter than the small-query profile's gate, so the
     * ×10/×100 scale harness dirs always measure the pushed-down parquet
@@ -65,7 +72,8 @@ object Tables {
     * memory pressure is Spark's own (MEMORY_ONLY recomputes from the
     * file). */
   private final case class Entry(df: DataFrame, fingerprint: String,
-                                 resident: Boolean)
+                                 resident: Boolean,
+                                 slices: Option[org.apache.spark.rdd.RDD[_]])
   private val memo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Entry]()
 
@@ -124,15 +132,19 @@ object Tables {
       else {
         // stale entry: drop its cached batches globally so no session's
         // CacheManager substitution can serve the old data
-        if (cur2 != null && cur2.resident) cur2.df.unpersist(blocking = false)
+        if (cur2 != null && cur2.resident) {
+          cur2.df.unpersist(blocking = false)
+          cur2.slices.foreach(graft.plans.TimeSlices.forget)
+        }
         val raw = spark.read.parquet(path)
         val df0 = if (name == "events") normalizeEventsTime(raw) else raw
         val maxBytes = spark.conf
           .get(hotTierConfKey, hotTierDefaultMaxBytes.toString).toLong
         val resident = bytes > 0 && bytes <= maxBytes &&
           ExecProfile.dirBytes(sfDir) <= hotTierDirMaxBytes
-        val df =
-          if (resident) {
+        val (df, slices) =
+          if (!resident) (df0, None)
+          else {
             // Spread the decoded cache across cores: a 1-11 MB parquet
             // file is a single scan split (row-group granularity), so an
             // un-repartitioned persist would serialize every downstream
@@ -145,25 +157,28 @@ object Tables {
             // — BASELINE.md round 12).
             val parts = math.max(1, math.min(8,
               ((bytes + (64L << 10) - 1) / (64L << 10)).toInt))
-            val spread =
-              if (parts <= 1) df0
-              else if (df0.schema.fields.exists(f => f.name == "ts" &&
-                  f.dataType == org.apache.spark.sql.types.TimestampType))
-                // A table with the engine's time contract (`ts`
-                // TIMESTAMP) spreads BY TIME: each cached partition,
-                // and each columnar batch in it, then holds one
-                // contiguous time slice, so a windowed read's
-                // attribute-vs-literal `ts` bounds skip every batch
-                // outside the window by its min/max stats — the
-                // reference's SeekTime/StopTime chunk skipping. A
-                // round-robin spread puts every day in every batch, and
-                // no batch can be skipped.
-                df0.repartitionByRange(parts, col("ts"))
-                  .sortWithinPartitions("ts")
-              else df0.repartition(parts)
-            spread.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-          } else df0
-        memo.put(key, Entry(df, fp, resident))
+            val memory = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
+            if (parts <= 1) (df0.persist(memory), None)
+            else if (df0.schema.fields.exists(f => f.name == "ts" &&
+                f.dataType == org.apache.spark.sql.types.TimestampType)) {
+              // A table with the engine's time contract (`ts`
+              // TIMESTAMP) spreads BY TIME: each cached partition, and
+              // each columnar batch in it, then holds one contiguous
+              // time slice, so a windowed read's attribute-vs-literal
+              // `ts` bounds skip every batch outside the window by its
+              // min/max stats — the reference's SeekTime/StopTime chunk
+              // skipping. A round-robin spread puts every day in every
+              // batch, and no batch can be skipped. The fill runs here,
+              // in the job that also records each partition's `ts`
+              // range, so that a windowed read schedules only the
+              // partitions it overlaps (`plans.TimeSlices`) — the
+              // reference's shard-group mapping — from its first read on.
+              val cached = df0.repartitionByRange(parts, col("ts"))
+                .sortWithinPartitions("ts").persist(memory)
+              (cached, graft.plans.TimeSlices.fill(cached, "ts"))
+            } else (df0.repartition(parts).persist(memory), None)
+          }
+        memo.put(key, Entry(df, fp, resident, slices))
         df
       }
     }

@@ -14,11 +14,13 @@ object SessionShim {
   /** A session of `parent`'s SparkContext and SharedState (cache
     * manager, hot tier, job groups) with a copy of its runtime conf,
     * functions and experimental optimizer hooks — not its temp views —
-    * and `confs` laid over the copied conf; nothing changes `parent`,
+    * with `confs` laid over the copied conf and `strategies` planned
+    * after the copied ones; nothing changes `parent`,
     * and the session holds no reference to it that keeps it alive. Its
     * queries are reported to the QueryExecutionListeners of `parent`,
     * including listeners registered after it was made. */
-  def derive(parent: SparkSession, confs: Map[String, String]): SparkSession = {
+  def derive(parent: SparkSession, confs: Map[String, String],
+             strategies: Seq[execution.SparkStrategy] = Nil): SparkSession = {
     val p = classicOf(parent)
     val c = p.newSession()
     (p.sessionState.conf.getAllConfs ++ confs).foreach { case (k, v) =>
@@ -28,7 +30,7 @@ object SessionShim {
     from.listFunction().foreach(f => to.registerFunction(f,
       from.lookupFunction(f).get, from.lookupFunctionBuilder(f).get))
     c.experimental.extraOptimizations = p.experimental.extraOptimizations
-    c.experimental.extraStrategies = p.experimental.extraStrategies
+    c.experimental.extraStrategies = p.experimental.extraStrategies ++ strategies
     val weak = new java.lang.ref.WeakReference(p)
     def toParent(f: QueryExecutionListener => Unit): Unit =
       Option(weak.get).foreach(_.listenerManager.listListeners().foreach(f))

@@ -1114,4 +1114,34 @@ class InfluxQLSpec extends SparkSpec {
       s"ts bounds not on the InMemoryTableScan:\n$mem")
     Tables.table(s2, base, "events").unpersist(blocking = true)
   }
+
+  test("EXPLAIN and EXPLAIN ANALYZE of a windowed read over resident " +
+      "events show the TimeSlices node; an unbounded read has none") {
+    // sf0.01's events fill 4 cached time slices; a day-long window
+    // overlaps one or two of them
+    val base = java.nio.file.Files.createTempDirectory("graft_ts").toString
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sf01/events.parquet"),
+      java.nio.file.Paths.get(s"$base/events.parquet"))
+    val s2 = spark.newSession()
+    s2.conf.set(Tables.hotTierConfKey, Tables.hotTierDefaultMaxBytes.toString)
+    val ev = Tables.table(s2, base, "events")
+    val cat = Map("events" -> Measurement(ev, tags = Seq("event_type")))
+    def text(q: String): String =
+      InfluxQL.execute(cat, q).as[String].collect().mkString("\n")
+    val window = "SELECT count(value) FROM events WHERE " +
+      "time >= '2024-01-10T00:00:00Z' AND time < '2024-01-11T00:00:00Z'"
+    // kept/total partitions and the inclusive bound
+    val slices = """[12]/4 \[2024-01-10T00:00:00Z, 2024-01-10T23:59:59\.999999Z\]"""
+    val explained = text(s"EXPLAIN $window")
+    assert(explained.contains("TimeSlices") &&
+      s"Arguments: $slices".r.findFirstIn(explained).isDefined, explained)
+    val analyzed = text(s"EXPLAIN ANALYZE $window")
+    assert(s"TimeSlices $slices".r.findFirstIn(analyzed).isDefined, analyzed)
+    assert(analyzed.contains("rows emitted: 1"), analyzed)
+    val unbounded = "SELECT count(value) FROM events"
+    Seq(text(s"EXPLAIN $unbounded"), text(s"EXPLAIN ANALYZE $unbounded"))
+      .foreach(t => assert(!t.contains("TimeSlices"), t))
+    ev.unpersist(blocking = true)
+  }
 }

@@ -7,6 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+  /** The next scale of the same test data: its `events` is large enough
+    * for a multi-partition resident spread. */
+  lazy val sf01: String = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
 }
 
 object SparkSpec {
