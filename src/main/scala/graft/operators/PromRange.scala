@@ -181,15 +181,15 @@ object PromRange {
       col(value).cast("double").as("v"))))
     withRangeWindow(df, time, range, step, inclusiveEnd)
       .groupBy(groups: _*)
-      .agg(sorted.as("_pts"))
-      .filter(size(col("_pts")) >= 2)
+      .agg(sorted.as("_samples"))
+      .filter(size(col("_samples")) >= 2)
       .withColumn("holt_winters", {
-        val x0 = col("_pts").getItem(0).getField("v")
-        val x1 = col("_pts").getItem(1).getField("v")
+        val x0 = col("_samples").getItem(0).getField("v")
+        val x1 = col("_samples").getItem(1).getField("v")
         // seed with the first sample, then fold the rest
         val init = struct(x0.as("s"), (x1 - x0).as("b"))
         val folded = aggregate(
-          slice(col("_pts"), lit(2), size(col("_pts"))),
+          slice(col("_samples"), lit(2), size(col("_samples"))),
           init,
           (acc, p) => {
             val x = p.getField("v")
@@ -203,7 +203,7 @@ object PromRange {
         folded.getField("s")
       })
       .withColumn("eval_ms", unix_millis(col("window.end")))
-      .drop("window", "_pts")
+      .drop("window", "_samples")
   }
 
   /** changes() and resets() — need the in-window time order, computed as a
@@ -216,21 +216,21 @@ object PromRange {
     val sorted = sort_array(collect_list(struct(tus.as("t"),
       col(value).as("v"))))
     withRangeWindow(df, time, range, step, inclusiveEnd).groupBy(groups: _*)
-      .agg(sorted.as("_pts"))
-      .withColumn("changes", aggregate(col("_pts"),
+      .agg(sorted.as("_samples"))
+      .withColumn("changes", aggregate(col("_samples"),
         struct(lit(null).cast("double").as("prev"), lit(0L).as("c")),
         (acc, x) => struct(x.getField("v").as("prev"),
           (acc.getField("c") + when(acc.getField("prev").isNotNull &&
             x.getField("v") =!= acc.getField("prev"), 1L).otherwise(0L)).as("c")),
         acc => acc.getField("c")))
-      .withColumn("resets", aggregate(col("_pts"),
+      .withColumn("resets", aggregate(col("_samples"),
         struct(lit(null).cast("double").as("prev"), lit(0L).as("c")),
         (acc, x) => struct(x.getField("v").as("prev"),
           (acc.getField("c") + when(acc.getField("prev").isNotNull &&
             x.getField("v") < acc.getField("prev"), 1L).otherwise(0L)).as("c")),
         acc => acc.getField("c")))
       .withColumn("eval_ms", unix_millis(col("window.end")))
-      .drop("window", "_pts")
+      .drop("window", "_samples")
   }
 
   /** deriv() / predict_linear() — simple least-squares over the range

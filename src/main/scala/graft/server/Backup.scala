@@ -7,10 +7,10 @@ import graft.sources.AtomicFiles
 /** Filesystem backup service — the reference's `lib/backup/backup.go`
   * driven by the `/backup/{run,status,abort}` routes
   * (`httpd/handler.go:466-474`, syscontrol Backup/AbortBackup/
-  * BackupStatus). The gateway's persisted store (day-partitioned
-  * parquet measurement dirs, `_tags.txt`/`_prom` sidecars, the
-  * `_ddl.txt`/`_dml.txt` journals and `_databases.txt`/`_users.tsv`
-  * meta files) copies into `backupPath/data_backup`, with a
+  * BackupStatus). The gateway's persist dir (the measurement dirs and
+  * their sidecars, whose layout [[Store]] owns, the `_ddl.txt`/
+  * `_dml.txt` journals and `_databases.txt`/`_users.tsv` meta files)
+  * copies file by file into `backupPath/data_backup`, with a
   * `full_backup_log.json` manifest (relative path → mtime:size) the
   * reference also writes; `isInc=true` copies only files new or
   * changed against the accumulated manifests into the same tree and

@@ -1,11 +1,11 @@
 package graft.server
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import java.net.{InetSocketAddress, URLDecoder}
+import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import graft.query.{InfluxQL, LogPipe, PromQL}
-import graft.sources.{AtomicFiles, LineProtocol, OtlpLogs, OtlpMetrics, OtlpTraces, PromRemoteRead, PromRemoteWrite, ResultShaper}
+import graft.sources.{LineProtocol, OtlpLogs, OtlpMetrics, OtlpTraces, PromRemoteRead, PromRemoteWrite, ResultShaper}
 
 /** Minimal HTTP serving surface over the library, mirroring the
   * reference's httpd routes (`lib/util/lifted/influx/httpd/handler.go:264`
@@ -57,6 +57,18 @@ final class HttpGateway(spark: SparkSession,
     * whether requests must authenticate (`http-auth-enabled`). */
   val auth = new Auth
 
+  // With `persistDir` set, every ingested batch (line protocol, prom
+  // remote write, OTLP, Arrow, stream flushes) ALSO appends to the
+  // [[Store]] there — the reference's WAL → TSSP durability, expressed
+  // as Spark's storage format — and the meta files (database and user
+  // catalogs, journals) live beside it. A fresh gateway over the same
+  // dir restores everything previously written.
+  private val store = persistDir.map(new Store(spark, _))
+  private def metaLines(name: String): Seq[String] =
+    store.toSeq.flatMap(_.metaLines(name))
+  private def commitMeta(name: String, text: String): Unit =
+    store.foreach(_.commitMeta(name, text))
+
   @volatile private var catalog = init
   @volatile private var promCat = prom
   // prom metric STORES (`/prometheus/{metric_store}/api/v1/*`,
@@ -71,12 +83,9 @@ final class HttpGateway(spark: SparkSession,
   // geo fences (services/fence): id → circle; registered by writes to
   // the `fence` measurement, persisted to _fences.txt
   @volatile private var fences = Map.empty[String, Fence.Circle]
-  private def fencesFile =
-    persistDir.map(d => java.nio.file.Paths.get(d, "_fences.txt"))
-  private def persistFences(): Unit = fencesFile.foreach { f =>
-    AtomicFiles.commit(f, fences.values.toSeq.sortBy(_.id)
+  private def persistFences(): Unit =
+    commitMeta("_fences.txt", fences.values.toSeq.sortBy(_.id)
       .map(c => s"${enc(c.id)}\t${enc(c.geometryText)}").mkString("\n"))
-  }
 
   /** Store-scoped PromQL catalog: `get(name)` synthesizes the metric
     * view lazily (`__name__ = name` filter over the store frame), so
@@ -242,10 +251,8 @@ final class HttpGateway(spark: SparkSession,
   // restarts); downsample marks are pure optimization (rollTier inputs
   // filter on __ds_tier, so re-sweeping is idempotent) and CQ lastRun
   // re-derives from EVERY (recompute-merge is idempotent).
-  private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-  private def ddlFile =
-    persistDir.map(d => java.nio.file.Paths.get(d, "_ddl.txt"))
+  private def enc(s: String) = java.net.URLEncoder.encode(s, UTF_8)
+  private def dec(s: String) = java.net.URLDecoder.decode(s, UTF_8)
 
   // ---- DML durability: destructive statements (DELETE, DROP SERIES,
   // DROP MEASUREMENT, DROP SHARD) mutate the in-memory catalog only —
@@ -256,14 +263,54 @@ final class HttpGateway(spark: SparkSession,
   // replayed after data + DDL load. Tombstone-style on purpose: no
   // parquet is rewritten at delete time (the only viable delete at
   // scale); folding tombstones into files is Compaction's territory.
-  private def dmlFile =
-    persistDir.map(d => java.nio.file.Paths.get(d, "_dml.txt"))
   private def journalDml(db: String, text: String, nowMs: Long): Unit =
-    dmlFile.foreach { f =>
-      java.nio.file.Files.write(f,
-        s"${enc(db)}\t$nowMs\t${enc(text)}\n".getBytes(UTF_8),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
+    store.foreach(_.appendMeta("_dml.txt", s"${enc(db)}\t$nowMs\t${enc(text)}"))
+
+  /** Run `f` on each journal line with its database, issue-time now()
+    * and statement. The parse sits INSIDE the try, so a line truncated
+    * by a crash mid-append is logged and skipped, not a boot abort; so
+    * is a statement naming a measurement that is not there (in a fold:
+    * an unpersisted one, whose live effect is already in memory). */
+  private def eachDml(lines: Seq[String], what: String)(
+      f: (String, String, Long, String) => Unit): Unit =
+    lines.foreach { line =>
+      try {
+        val Array(dbE, nowE, textE) = line.split("\t", 3)
+        f(line, dec(dbE), nowE.toLong, dec(textE))
+      } catch { case e: Exception =>
+        System.err.println(
+          s"[gateway] DML $what skipped: $line (${e.getMessage})")
+      }
+    }
+
+  private val DropShardRe = "(?is)^\\s*drop\\s+shard\\s+\\d+\\s*$".r
+
+  /** `cat` after one journaled statement over its `db` slice (a DROP
+    * SHARD naming no group leaves it as it is). */
+  private def applyDml(cat: Map[String, InfluxQL.Measurement], db: String,
+                       text: String, nowMs: Long)
+      : Map[String, InfluxQL.Measurement] = {
+    val before = sliceOf(cat, db)
+    val after =
+      if (DropShardRe.matches(text))
+        dropShardSlice(db, text.trim.split("\\s+")(2).toLong, before)
+          .getOrElse(before)
+      else Map.empty ++ InfluxQL.executeManage(before, text, nowMs)
+    (cat -- (before.keySet -- after.keySet).map(dbKey(db, _))) ++
+      after.map { case (k, m) => dbKey(db, k) -> m }
+  }
+
+  /** Replay journaled DML lines onto the LIVE catalog (restart, and
+    * after a hierarchical sweep rebuilds entries from parquet). */
+  private def replayDmlJournal(onlyDb: Option[String] = None): Unit =
+    eachDml(metaLines("_dml.txt"), "replay") { (_, db, nowMs, text) =>
+      if (onlyDb.forall(_ == db)) {
+        val before = sliceOf(catalog, db)
+        catalog = applyDml(catalog, db, text, nowMs)
+        // replay propagates like live DML: the prom twins were
+        // restored from the pre-tombstone parquet above
+        propagateDml(db, before, sliceOf(catalog, db))
+      }
     }
 
   /** Fold the DML journal into the persisted parquet — the
@@ -278,75 +325,16 @@ final class HttpGateway(spark: SparkSession,
     * growing with delete history. Returns the number of dirs rewritten
     * or removed. Idempotent: a crash between rewrite and truncate just
     * re-filters already-filtered rows on the next fold. */
-  /** Replay journaled DML lines onto the LIVE catalog (restart, and
-    * after a hierarchical sweep rebuilds entries from parquet). The
-    * line parse sits INSIDE the try so a truncated line from a crash
-    * mid-append is logged and skipped, not a boot abort. */
-  private def replayDmlJournal(onlyDb: Option[String] = None): Unit =
-    dmlFile.filter(java.nio.file.Files.exists(_)).foreach { f =>
-      new String(java.nio.file.Files.readAllBytes(f), UTF_8)
-        .split("\n").filter(_.nonEmpty).foreach { line =>
-          try {
-            val Array(dbE, nowE, textE) = line.split("\t", 3)
-            val db = dec(dbE); val text = dec(textE)
-            if (onlyDb.forall(_ == db)) {
-              if ("(?is)^\\s*drop\\s+shard\\s+\\d+\\s*$".r.matches(text)) {
-                val before = sliceOf(catalog, db)
-                dropShardData(db, text.trim.split("\\s+")(2).toLong)
-                propagateDml(db, before, sliceOf(catalog, db))
-              } else {
-                val before = sliceOf(catalog, db)
-                val after = Map.empty ++
-                  InfluxQL.executeManage(before, text, nowE.toLong)
-                applySlice(db, before, after)
-                // replay propagates like live DML: the prom twins were
-                // restored from the pre-tombstone parquet above
-                propagateDml(db, before, after)
-              }
-            }
-          } catch { case e: Exception =>
-            System.err.println(
-              s"[gateway] DML replay skipped: $line (${e.getMessage})")
-          }
-        }
-    }
-
   def foldDmlJournal(): Int = synchronized {
-    val fOpt = dmlFile.filter(java.nio.file.Files.exists(_))
-    if (fOpt.isEmpty || persistDir.isEmpty) return 0
-    val f = fOpt.get
-    val lines = new String(java.nio.file.Files.readAllBytes(f), UTF_8)
-      .split("\n").filter(_.nonEmpty)
-    if (lines.isEmpty) return 0
-    // dir-only catalog; `day` kept so the rewrite stays day-partitioned
-    var dirCat = Map.empty[String, InfluxQL.Measurement]
-    val base = java.nio.file.Paths.get(persistDir.get)
-    val ls = java.nio.file.Files.list(base)
-    try ls.filter(p => java.nio.file.Files.isDirectory(p) &&
-        !p.getFileName.toString.startsWith("_")).forEach { p =>
-      val name = java.net.URLDecoder.decode(p.getFileName.toString, "UTF-8")
-      val meta = p.resolve("_tags.txt")
-      val tags =
-        if (java.nio.file.Files.exists(meta))
-          new String(java.nio.file.Files.readAllBytes(meta), UTF_8)
-            .split("\n").filter(_.nonEmpty).toSeq
-        else Nil
-      // hot ∪ cold tier: the journal may hold tombstones over rows the
-      // hierarchical sweep already moved cold — folding only the hot
-      // tier then truncating would LOSE them. The fold reads both,
-      // rewrites the hot dir with the full filtered frame, and drops
-      // the cold dir; the next sweep re-tiers old partitions.
-      val coldP = p.getParent.resolve("_cold").resolve(
-        p.getFileName.toString)
-      val hotDf = spark.read.option("mergeSchema", "true")
-        .parquet(p.toString)
-      val full =
-        if (java.nio.file.Files.isDirectory(coldP))
-          hotDf.unionByName(spark.read.option("mergeSchema", "true")
-            .parquet(coldP.toString), allowMissingColumns = true)
-        else hotDf
-      dirCat = dirCat + (name -> InfluxQL.Measurement(full, tags, "ts"))
-    } finally ls.close()
+    val lines = metaLines("_dml.txt")
+    if (lines.isEmpty || store.isEmpty) return 0
+    // dir-only catalog, hot ∪ cold tier: the journal may hold
+    // tombstones over rows the hierarchical sweep already moved cold —
+    // folding only the hot tier then truncating would LOSE them. `day`
+    // is kept so the rewrite stays day-partitioned; the rewrite drops
+    // the cold dir and the next sweep re-tiers old partitions.
+    var dirCat = store.get.keys.flatMap(k => store.get.read(k).map(s =>
+      k -> InfluxQL.Measurement(s.df, s.tags, "ts"))).toMap
     val beforeCat = dirCat
     // Lines whose statement touches an init (in-memory) measurement
     // cannot fully fold: tombstones over init rows live only in the
@@ -354,10 +342,6 @@ final class HttpGateway(spark: SparkSession,
     // filtering them. Everything else (parquet-backed targets) folds
     // into the rewrite below and is dropped, so the journal truncates
     // instead of growing without bound with delete history.
-    // compiled once — the fold walks every journal line (which this
-    // change exists to keep bounded, but the pre-truncation backlog
-    // can be long)
-    val dropShardRe = "(?is)^\\s*drop\\s+shard\\s+\\d+\\s*$".r
     // the name may be double-quoted, single-quoted (ident() accepts
     // TStr) or bare — compare UNQUOTED against the init slice
     val dmlTargetRe = ("(?is)^\\s*(?:delete\\s+from|drop\\s+series\\s+" +
@@ -368,7 +352,7 @@ final class HttpGateway(spark: SparkSession,
       if (initSlice.isEmpty) false
       // DROP SHARD prunes time ranges across every measurement — any
       // init measurement in the db may carry affected rows
-      else if (dropShardRe.matches(text)) true
+      else if (DropShardRe.matches(text)) true
       else dmlTargetRe.findFirstMatchIn(text) match {
         case Some(g) =>
           val name = Option(g.group(1)).orElse(Option(g.group(2)))
@@ -378,106 +362,37 @@ final class HttpGateway(spark: SparkSession,
       }
     }
     val retained = Seq.newBuilder[String]
-    lines.foreach { line =>
-      try {
-        val Array(dbE, nowE, textE) = line.split("\t", 3)
-        val db = dec(dbE); val text = dec(textE)
-        if (touchesInit(db, text)) retained += line
-        if (dropShardRe.matches(text)) {
-          val sid = text.trim.split("\\s+")(2).toLong
-          dropShardSlice(db, sid, sliceOf(dirCat, db)).foreach { upd =>
-            dirCat = dirCat ++ upd.map { case (k, m) => dbKey(db, k) -> m }
-          }
-        } else {
-          val before = sliceOf(dirCat, db)
-          val after = Map.empty[String, InfluxQL.Measurement] ++
-            InfluxQL.executeManage(before, text, nowE.toLong)
-          dirCat = (dirCat --
-            (before.keySet -- after.keySet).map(dbKey(db, _))) ++
-            after.map { case (k, m) => dbKey(db, k) -> m }
-        }
-      } catch { case e: Exception =>
-        // a statement naming an unpersisted measurement has nothing to
-        // fold — its live effect is already in the in-memory catalog
-        System.err.println(
-          s"[gateway] DML fold skipped: $line (${e.getMessage})")
-      }
+    eachDml(lines, "fold") { (line, db, nowMs, text) =>
+      if (touchesInit(db, text)) retained += line
+      dirCat = applyDml(dirCat, db, text, nowMs)
     }
     var n = 0
-    def coldDirOf(name: String): Option[java.nio.file.Path] =
-      persistPath(name).map { d =>
-        val p = java.nio.file.Paths.get(d)
-        p.getParent.resolve("_cold").resolve(p.getFileName.toString)
-      }
     (beforeCat.keySet -- dirCat.keySet).foreach { name =>
-      persistPath(name).foreach { d =>
-        AtomicFiles.deleteTree(java.nio.file.Paths.get(d)); n += 1 }
-      coldDirOf(name).foreach(AtomicFiles.deleteTree)
+      if (store.get.delete(name)) n += 1
     }
     dirCat.foreach { case (name, m) =>
       if (!beforeCat.get(name).exists(_.df eq m.df)) {
-        persistPath(name).foreach { d =>
-          // day-partitioned rewrite, reading lazily from the old files
-          // while writing the new
-          AtomicFiles.swapDir(d, "fold") { tmp =>
-            m.df.write.mode("overwrite").partitionBy("day").parquet(tmp)
-          }
-          coldDirOf(name).foreach(AtomicFiles.deleteTree)
-          // the LIVE catalog entry still references the swapped-out
-          // files (its df was built from the old listing at startup) —
-          // rebuild exactly like a restart: init ∪ hot ∪ cold tier.
-          // Caveats, documented: tombstones over init-catalog rows and
-          // over already-cold partitions live in memory/journal only —
-          // the fold rewrites the HOT tier it scanned.
-          reloadPersisted(name, m.tags)
-          n += 1
-        }
+        store.get.rewrite(name, m.df)
+        // the LIVE catalog entry still references the swapped-out
+        // files (its df was built from the old listing at startup) —
+        // rebuild exactly like a restart: init ∪ hot ∪ cold tier.
+        // Caveats, documented: tombstones over init-catalog rows and
+        // over already-cold partitions live in memory/journal only —
+        // the fold rewrites the HOT tier it scanned.
+        restoreEntry(name)
+        n += 1
       }
     }
-    val keep = retained.result()
-    java.nio.file.Files.write(f,
-      keep.map(_ + "\n").mkString.getBytes(UTF_8))
+    commitMeta("_dml.txt", retained.result().map(_ + "\n").mkString)
     n
   }
-
-  /** Rebuild a catalog entry exactly like a restart composes it:
-    * init frame ∪ hot dir ∪ `_cold` tier dir. */
-  private def reloadPersisted(name: String, tags: Seq[String]): Unit =
-    persistPath(name).foreach { d =>
-      val p = java.nio.file.Paths.get(d)
-      def readIf(path: java.nio.file.Path): Option[DataFrame] =
-        try Some(spark.read.option("mergeSchema", "true")
-          .parquet(path.toString).drop("day"))
-        catch { case _: Exception => None } // emptied tier: no parquet
-      val coldP = java.nio.file.Paths.get(
-        persistDir.get, "_cold", p.getFileName.toString)
-      val parts = (readIf(p) ++ readIf(coldP)).toSeq
-      if (parts.nonEmpty) {
-        val raw = parts.reduce(
-          _.unionByName(_, allowMissingColumns = true))
-        val fresh =
-          if (java.nio.file.Files.exists(p.resolve("_pts")) &&
-              !logStores.contains(name))
-            HttpGateway.dedupPersisted(raw, tags)
-          else raw.drop("__wseq")
-        val ext = try graft.sources.ParquetStats.timeExtentMsOf(raw, "ts")
-                  catch { case _: Exception => None }
-        catalog = catalog + (name -> (init.get(name) match {
-          case Some(prev) => InfluxQL.Measurement(
-            prev.df.unionByName(fresh, allowMissingColumns = true),
-            (prev.tags ++ tags).distinct, prev.time)
-          case None => InfluxQL.Measurement(fresh, tags, "ts",
-            extentMs = ext)
-        }))
-      }
-    }
 
   /** One hierarchical-storage sweep at `nowMs`
     * (`services/hierarchical/service.go` handle → the engine's
     * FetchShardsNeedChangeStore / hierarchical cold move): for every
     * database whose default RP sets WARM DURATION, day partitions
     * entirely older than now−warm MOVE from the persisted measurement
-    * dirs into the `_cold/<name>/` tier — a separate storage root
+    * dirs into the [[Store]]'s cold tier — a separate storage root
     * standing in for the reference's OBS cold store. hot→warm alone is
     * a tier RELABEL (SHOW SHARDS' tier column derives from the
     * durations); warm→cold is the storage move, exactly the
@@ -485,9 +400,9 @@ final class HttpGateway(spark: SparkSession,
     * catalog entries rebuild as init ∪ hot ∪ cold. Returns the number
     * of partition dirs moved. */
   def runHierarchical(nowMs: Long): Int = synchronized {
-    if (persistDir.isEmpty) return 0
+    if (store.isEmpty) return 0
     // Fold pending tombstones into the parquet FIRST: the sweep's
-    // reloadPersisted rebuilds live entries straight from the files,
+    // restoreEntry rebuilds live entries straight from the files,
     // so an unfolded DELETE/DROP SHARD issued before the sweep would
     // silently resurrect its rows in the live session.
     foldDmlJournal()
@@ -501,46 +416,11 @@ final class HttpGateway(spark: SparkSession,
           .ofEpochMilli(nowMs - rp.warmS * 1000L).toString.substring(0, 10)
         sliceOf(catalog, db).keys.toSeq.foreach { mst =>
           val key = dbKey(db, mst)
-          persistPath(key).foreach { d =>
-            val p = java.nio.file.Paths.get(d)
-            if (java.nio.file.Files.isDirectory(p)) {
-              val ls = java.nio.file.Files.list(p)
-              val days =
-                try {
-                  val b = Seq.newBuilder[java.nio.file.Path]
-                  val it = ls.iterator()
-                  while (it.hasNext) {
-                    val e = it.next()
-                    val n = e.getFileName.toString
-                    // `day=YYYY-MM-DD` strictly before the cutoff day
-                    if (java.nio.file.Files.isDirectory(e) &&
-                        n.startsWith("day=") &&
-                        n.substring(4) < cutoffDay) b += e
-                  }
-                  b.result()
-                } finally ls.close()
-              if (days.nonEmpty) {
-                val coldBase = java.nio.file.Paths.get(
-                  persistDir.get, "_cold", p.getFileName.toString)
-                java.nio.file.Files.createDirectories(coldBase)
-                days.foreach { dp =>
-                  val target = coldBase.resolve(dp.getFileName)
-                  if (java.nio.file.Files.exists(target)) {
-                    // same-day remainder from an earlier sweep: merge
-                    // file-level (names are globally-unique part files)
-                    val fs = java.nio.file.Files.list(dp)
-                    try fs.forEach(f => java.nio.file.Files.move(
-                      f, target.resolve(f.getFileName)))
-                    finally fs.close()
-                    java.nio.file.Files.delete(dp)
-                  } else java.nio.file.Files.move(dp, target)
-                }
-                moved += days.size
-                val tags = catalog.get(key).map(_.tags).getOrElse(Nil)
-                reloadPersisted(key, tags)
-                touched += db
-              }
-            }
+          val n = store.get.moveCold(key, cutoffDay)
+          if (n > 0) {
+            moved += n
+            restoreEntry(key)
+            touched += db
           }
         }
       }
@@ -581,7 +461,7 @@ final class HttpGateway(spark: SparkSession,
     s"CREATE MEASUREMENT ${sc.name}$colPart WITH $opts"
   }
 
-  private def persistDdl(): Unit = ddlFile.foreach { f =>
+  private def persistDdl(): Unit = {
     val lines =
       cqRegistry.toSeq.sortBy(_._1).map { case ((db, _), e) =>
         s"cq\t${enc(db)}\t-\t${enc(e.text)}" } ++
@@ -593,7 +473,7 @@ final class HttpGateway(spark: SparkSession,
         s"ds\t${enc(db)}\t-\t${enc(renderDs(rp, p))}" } ++
       mstSchemas.toSeq.sortBy(_._1).map { case ((db, _), sc) =>
         s"mst\t${enc(db)}\t-\t${enc(renderMst(sc))}" }
-    AtomicFiles.commit(f, lines.mkString("\n"))
+    commitMeta("_ddl.txt", lines.mkString("\n"))
   }
 
   // ---- registration (shared by the /query dispatch and DDL restore)
@@ -766,17 +646,9 @@ final class HttpGateway(spark: SparkSession,
         val res = InfluxQL.execute(cat, sql)
           .withColumn("__ts", timestamp_millis(col("time")))
         if (!res.isEmpty) {
-          val merged = cat.get(st.target) match {
-            case Some(old) => InfluxQL.Measurement(
-              old.df.unionByName(res, allowMissingColumns = true),
-              st.tags, old.time)
-            case None => InfluxQL.Measurement(res, st.tags, "__ts")
-          }
-          catalog = catalog + (dbKey(db, st.target) -> merged)
           // flushed windows are durable like any write: the mark below
           // journals flushed-once, so losing the rows would be data loss
-          persistBatch(dbKey(db, st.target),
-            res.withColumnRenamed("__ts", "ts"), st.tags)
+          append(dbKey(db, st.target), res, st.tags, time = "__ts")
           ran += 1
         }
         streamRegistry = streamRegistry +
@@ -899,7 +771,6 @@ final class HttpGateway(spark: SparkSession,
     })
   }
 
-  /** Write a mutated single-database slice back through the prefix. */
   /** Columns a log route renders into one JSON object: when the
     * measurement's TIMESTAMP column renders under the "time" key, the
     * raw ingest-time ns `time` long is internal — emitting it too
@@ -912,6 +783,7 @@ final class HttpGateway(spark: SparkSession,
       cols.filterNot(_ == "time")
     else cols
 
+  /** Write a mutated single-database slice back through the prefix. */
   private def applySlice(db: String,
                          before: Map[String, InfluxQL.Measurement],
                          after: Map[String, InfluxQL.Measurement]): Unit = {
@@ -952,62 +824,47 @@ final class HttpGateway(spark: SparkSession,
   }
 
   // ------------------------------------------------- write durability
-  // With `persistDir` set, every ingested batch (line protocol, prom
-  // remote write, OTLP) ALSO appends to `$persistDir/<measurement>/`
-  // as parquet, with the tag list in a sidecar — the reference's WAL →
-  // TSSP durability, expressed as Spark's storage format. A fresh
-  // gateway over the same dir reloads everything previously written
-  // (mergeSchema absorbs later-arriving tag/field columns). Day
-  // compaction of these dirs is [[graft.sources.Compaction]]'s job.
-  private def persistPath(name: String) =
-    persistDir.map(d => s"$d/${java.net.URLEncoder.encode(name, "UTF-8")}")
-
-  // per-batch write-order stamp for restart read-time dedup: monotone
-  // across batches AND restarts (floored at wall-clock millis)
-  private val wseqGen =
-    new java.util.concurrent.atomic.AtomicLong(System.currentTimeMillis())
-  private def persistBatch(name: String, df: DataFrame,
-                           tagKeys: Seq[String],
-                           prom: Boolean = false,
-                           merged: Boolean = false): Unit =
-    persistPath(name).foreach { p =>
-      val stamped =
-        if (merged)
-          df.withColumn("__wseq", org.apache.spark.sql.functions.lit(
-            wseqGen.updateAndGet(v =>
-              Math.max(v + 1, System.currentTimeMillis()))))
-        else df
-      // day-partitioned like the reference's shard groups — prunable by
-      // Catalyst and compactable by [[graft.sources.Compaction]]
-      stamped.withColumn("day", org.apache.spark.sql.functions.date_format(
-          org.apache.spark.sql.functions.col("ts"), "yyyy-MM-dd"))
-        .write.mode("append").partitionBy("day").parquet(p)
-      // marker: this dir holds point-merged TS batches — a restart
-      // dedups on read by __wseq (see dedupPersisted)
-      if (merged) {
-        val mk = java.nio.file.Paths.get(p, "_pts")
-        if (!java.nio.file.Files.exists(mk))
-          java.nio.file.Files.write(mk, Array.empty[Byte])
-      }
-      val meta = java.nio.file.Paths.get(p, "_tags.txt")
-      val existing =
-        if (java.nio.file.Files.exists(meta))
-          new String(java.nio.file.Files.readAllBytes(meta), UTF_8)
-            .split("\n").filter(_.nonEmpty).toSeq
-        else Nil
-      java.nio.file.Files.write(meta,
-        (existing ++ tagKeys).distinct.sorted.mkString("\n").getBytes(UTF_8))
-      // marker: this measurement is also a prom metric (remote write)
-      if (prom)
-        java.nio.file.Files.write(java.nio.file.Paths.get(p, "_prom"),
-          Array.empty[Byte])
+  /** Register a persisted measurement the way a restart does: the init
+    * frame ∪ its stored tiers, and its prom metric / metric store twin
+    * when its dir is marked so (at boot, and after a fold or a
+    * hierarchical sweep swapped the files under the live entry). */
+  private def restoreEntry(key: String): Unit =
+    store.flatMap(_.restore(key, logStores.contains(key))).foreach { s =>
+      catalog = catalog + (key -> (init.get(key) match {
+        case Some(prev) => InfluxQL.Measurement(
+          prev.df.unionByName(s.df, allowMissingColumns = true),
+          (prev.tags ++ s.tags).distinct, prev.time)
+        case None => InfluxQL.Measurement(s.df, s.tags, "ts",
+          extentMs = s.extentMs)
+      }))
+      // promCat is a single namespace: a (rare) namespaced prom
+      // measurement re-registers under its bare metric name
+      val promName = key.substring(key.indexOf('\u0000') + 1)
+      if (s.kinds(Store.Prom))
+        promCat = promCat + (promName -> (prom.get(promName) match {
+          case Some(prev) => prev.copy(
+            df = prev.df.unionByName(s.df, allowMissingColumns = true),
+            labels = (prev.labels ++ s.tags).distinct, extentMs = None)
+          case None => PromQL.Metric(s.df, s.tags, "ts", "value")
+        }))
+      if (s.kinds(Store.PromStore))
+        promStores = promStores +
+          (promName -> PromQL.Metric(s.df, s.tags, "ts", "value"))
     }
+
+  /** The database a catalog key belongs to. */
+  private def dbOf(key: String): String =
+    if (key.contains('\u0000')) key.substring(0, key.indexOf('\u0000'))
+    else defaultDb
+
+  /** Delete every persisted measurement of a dropped database, so a
+    * restart cannot bring the database or its data back. */
+  private def dropPersistedDb(db: String): Unit =
+    store.foreach(st => st.keys.filter(dbOf(_) == db).foreach(st.delete))
 
   // the user catalog persists beside the data — a restarted gateway
   // with auth enabled must NOT reopen the unauthenticated bootstrap
   // window (the reference's users live in its durable meta store)
-  private def usersFile =
-    persistDir.map(d => java.nio.file.Paths.get(d, "_users.tsv"))
   /** Committed atomically so a crash mid-write can never leave a
     * truncated catalog (an empty `_users.tsv` restores to ZERO users,
     * which with requireAuth silently reopens the unauthenticated
@@ -1015,11 +872,11 @@ final class HttpGateway(spark: SparkSession,
     * Callers serialize the mutate+persist pair on the auth monitor, so
     * the snapshot on disk is never an out-of-order older state. */
   private def persistUsers(): Unit =
-    usersFile.foreach(AtomicFiles.commit(_, auth.snapshotTsv))
+    commitMeta("_users.tsv", auth.snapshotTsv)
 
   // reload persisted measurements under the in-memory/init catalog
-  usersFile.filter(java.nio.file.Files.exists(_)).foreach { f =>
-    auth.restoreTsv(new String(java.nio.file.Files.readAllBytes(f), UTF_8))
+  store.flatMap(_.metaText("_users.tsv")).foreach { tsv =>
+    auth.restoreTsv(tsv)
     // a present-but-adminless catalog with auth on means the file was
     // damaged (or bootstrap never finished): the gateway would serve
     // UNAUTHENTICATED until someone recreates the admin — say so loudly
@@ -1029,50 +886,38 @@ final class HttpGateway(spark: SparkSession,
         "requireAuth is on but the unauthenticated bootstrap window is " +
         "OPEN until an admin is created")
   }
-  // the database set persists beside the data (meta store durability)
-  private def dbFile =
-    persistDir.map(d => java.nio.file.Paths.get(d, "_databases.txt"))
-  // the logstream (log-store measurement) registry persists the same way
-  private def logStoresFile =
-    persistDir.map(d => java.nio.file.Paths.get(d, "_logstreams.txt"))
+  // the database set and the logstream (log-store measurement)
+  // registry persist beside the data (meta store durability)
   private def persistLogStores(): Unit =
-    logStoresFile.foreach(AtomicFiles.commit(_, logStores.toSeq.sorted
-      .map(java.net.URLEncoder.encode(_, "UTF-8") + "\n").mkString))
+    commitMeta("_logstreams.txt",
+      logStores.toSeq.sorted.map(enc(_) + "\n").mkString)
   private def persistDatabases(): Unit =
-    dbFile.foreach { f =>
-      val body = databases.toSeq.sorted.map { d =>
-        val rps = retention.getOrElse(d, Retention.autogen).toSeq
-          .sortBy(_._1).map { case (n, rp) =>
-            s"${java.net.URLEncoder.encode(n, "UTF-8")}=" +
-              s"${rp.durationS},${rp.shardGroupS},${rp.replicaN}," +
-              s"${rp.default},${rp.hotS},${rp.warmS}"
-          }.mkString(";")
-        s"${java.net.URLEncoder.encode(d, "UTF-8")}\t$rps"
-      }.mkString("\n")
-      AtomicFiles.commit(f, body)
-    }
-  dbFile.filter(java.nio.file.Files.exists(_)).foreach { f =>
-    // defaultDb always survives a reload: the constructor-injected
-    // catalog lives there
-    val lines = new String(java.nio.file.Files.readAllBytes(f), UTF_8)
-      .split("\n").filter(_.nonEmpty).toSeq
-    val parsed = lines.map { line =>
+    commitMeta("_databases.txt", databases.toSeq.sorted.map { d =>
+      val rps = retention.getOrElse(d, Retention.autogen).toSeq
+        .sortBy(_._1).map { case (n, rp) =>
+          s"${enc(n)}=${rp.durationS},${rp.shardGroupS},${rp.replicaN}," +
+            s"${rp.default},${rp.hotS},${rp.warmS}"
+        }.mkString(";")
+      s"${enc(d)}\t$rps"
+    }.mkString("\n"))
+  locally {
+    val parsed = metaLines("_databases.txt").map { line =>
       val parts = line.split("\t", 2)
-      val db = java.net.URLDecoder.decode(parts(0), "UTF-8")
       val rps =
         if (parts.length < 2 || parts(1).isEmpty) Retention.autogen
         else parts(1).split(";").filter(_.nonEmpty).map { kv =>
           val Array(n, v) = kv.split("=", 2)
           val fs = v.split(",")
           // hot/warm fields are round-10 additions — older files lack them
-          java.net.URLDecoder.decode(n, "UTF-8") ->
-            Retention.Rp(fs(0).toLong, fs(1).toLong, fs(2).toLong,
-              fs(3).toBoolean,
-              if (fs.length > 4) fs(4).toLong else 0L,
-              if (fs.length > 5) fs(5).toLong else 0L)
+          dec(n) -> Retention.Rp(fs(0).toLong, fs(1).toLong, fs(2).toLong,
+            fs(3).toBoolean,
+            if (fs.length > 4) fs(4).toLong else 0L,
+            if (fs.length > 5) fs(5).toLong else 0L)
         }.toMap
-      db -> rps
+      dec(parts(0)) -> rps
     }
+    // defaultDb always survives a reload: the constructor-injected
+    // catalog lives there
     databases = parsed.map(_._1).toSet + defaultDb
     if (parsed.exists(_._1 == defaultDb)) defaultDbTouched = true
     retention = parsed.toMap
@@ -1081,110 +926,45 @@ final class HttpGateway(spark: SparkSession,
   }
   // logstream registry loads BEFORE the measurement scan: the scan's
   // read-time point-dedup decision needs to know which dirs are logs
-  logStoresFile.filter(java.nio.file.Files.exists(_)).foreach { f =>
-    logStores = new String(java.nio.file.Files.readAllBytes(f), UTF_8)
-      .split("\n").filter(_.nonEmpty)
-      .map(java.net.URLDecoder.decode(_, "UTF-8")).toSet
-  }
-  persistDir.foreach { d =>
-    val base = java.nio.file.Paths.get(d)
-    if (java.nio.file.Files.isDirectory(base)) {
-      val s = java.nio.file.Files.list(base)
-      try s.filter(p => java.nio.file.Files.isDirectory(p) &&
-          !p.getFileName.toString.startsWith("_")).forEach { p =>
-        val name = java.net.URLDecoder.decode(p.getFileName.toString, "UTF-8")
-        // namespaced keys re-register their database even if the
-        // database file predates multi-db support
-        if (name.contains('\u0000'))
-          databases = databases + name.substring(0, name.indexOf('\u0000'))
-        val meta = p.resolve("_tags.txt")
-        val tags =
-          if (java.nio.file.Files.exists(meta))
-            new String(java.nio.file.Files.readAllBytes(meta), UTF_8)
-              .split("\n").filter(_.nonEmpty).toSeq
-          else Nil
-        // cold-tier partitions (hierarchical storage sweep) union in
-        val coldP = p.getParent.resolve("_cold").resolve(
-          p.getFileName.toString)
-        val hotDf = spark.read.option("mergeSchema", "true")
-          .parquet(p.toString).drop("day")
-        val raw =
-          if (java.nio.file.Files.isDirectory(coldP))
-            hotDf.unionByName(spark.read.option("mergeSchema", "true")
-              .parquet(coldP.toString).drop("day"),
-              allowMissingColumns = true)
-          else hotDf
-        // `_pts` dirs hold point-merged TS batches: restore point
-        // identity across batches by read-time dedup (never for logs)
-        val df =
-          if (java.nio.file.Files.exists(p.resolve("_pts")) &&
-              !logStores.contains(name))
-            HttpGateway.dedupPersisted(raw, tags)
-          else raw.drop("__wseq")
-        // footer extent (driver metadata read): seeds the write path's
-        // append-vs-merge decision and the fill-spine bounds
-        val ext = try graft.sources.ParquetStats.timeExtentMsOf(raw, "ts")
-                  catch { case _: Exception => None }
-        catalog = catalog + (name -> (catalog.get(name) match {
-          case Some(prev) => InfluxQL.Measurement(
-            prev.df.unionByName(df, allowMissingColumns = true),
-            (prev.tags ++ tags).distinct, prev.time)
-          case None => InfluxQL.Measurement(df, tags, "ts", extentMs = ext)
-        }))
-        // promCat is a single namespace: a (rare) namespaced prom
-        // measurement re-registers under its bare metric name
-        val promName = name.substring(name.indexOf('\u0000') + 1)
-        if (java.nio.file.Files.exists(p.resolve("_prom")))
-          promCat = promCat + (promName -> (promCat.get(promName) match {
-            case Some(prev) => prev.copy(
-              df = prev.df.unionByName(df, allowMissingColumns = true),
-              labels = (prev.labels ++ tags).distinct, extentMs = None)
-            case None => PromQL.Metric(df, tags, "ts", "value")
-          }))
-        if (java.nio.file.Files.exists(p.resolve("_promstore")))
-          promStores = promStores +
-            (promName -> PromQL.Metric(df, tags, "ts", "value"))
-      } finally s.close()
-    } else java.nio.file.Files.createDirectories(base)
-  }
+  logStores = metaLines("_logstreams.txt").map(dec).toSet
+  store.foreach(_.keys.foreach { key =>
+    // namespaced keys re-register their database even if the
+    // database file predates multi-db support
+    databases = databases + dbOf(key)
+    restoreEntry(key)
+  })
   // Replay the DDL journal AFTER databases/RPs and measurement data
   // loaded: validation sees restored state, and a declared measurement
   // that also has persisted data keeps its data frame (registerMst only
   // installs the empty typed frame when no data exists).
-  ddlFile.filter(java.nio.file.Files.exists(_)).foreach { f =>
-    new String(java.nio.file.Files.readAllBytes(f), UTF_8)
-      .split("\n").filter(_.nonEmpty).foreach { line =>
-        val Array(kind, dbE, extra, textE) = line.split("\t", 4)
-        val db = dec(dbE); val text = dec(textE)
-        try kind match {
-          case "cq" => registerCq(db, text)
-          case "stream" => registerStream(db, text, extra.toLong)
-          case "sub" => registerSub(db, text)
-          case "ds" => registerDs(db, text)
-          case "mst" => registerMst(db, text)
-          case _ =>
-        } catch { case e: Exception =>
-          // one corrupt line must not block startup — skip loudly
-          System.err.println(
-            s"[gateway] DDL restore skipped: $line (${e.getMessage})")
-        }
-      }
+  metaLines("_ddl.txt").foreach { line =>
+    val Array(kind, dbE, extra, textE) = line.split("\t", 4)
+    val db = dec(dbE); val text = dec(textE)
+    try kind match {
+      case "cq" => registerCq(db, text)
+      case "stream" => registerStream(db, text, extra.toLong)
+      case "sub" => registerSub(db, text)
+      case "ds" => registerDs(db, text)
+      case "mst" => registerMst(db, text)
+      case _ =>
+    } catch { case e: Exception =>
+      // one corrupt line must not block startup — skip loudly
+      System.err.println(
+        s"[gateway] DDL restore skipped: $line (${e.getMessage})")
+    }
   }
   // Replay the DML journal LAST: tombstones filter the fully-restored
   // catalog in issue order, with each statement's original now() pinned
   // so time-relative deletes remove the same rows they removed live.
   replayDmlJournal()
-  fencesFile.filter(java.nio.file.Files.exists(_)).foreach { f =>
-    new String(java.nio.file.Files.readAllBytes(f), UTF_8)
-      .split("\n").filter(_.nonEmpty).foreach { line =>
-        try {
-          val Array(idE, geoE) = line.split("\t", 2)
-          fences = fences + (dec(idE) -> Fence.parse(dec(idE), dec(geoE)))
-        } catch { case e: Exception =>
-          System.err.println(
-            s"[gateway] fence restore skipped: $line (${e.getMessage})")
-        }
-      }
+  metaLines("_fences.txt").foreach { line =>
+    try {
+      val Array(idE, geoE) = line.split("\t", 2)
+      fences = fences + (dec(idE) -> Fence.parse(dec(idE), dec(geoE)))
+    } catch { case e: Exception =>
+      System.err.println(
+        s"[gateway] fence restore skipped: $line (${e.getMessage})")
+    }
   }
 
   // Each write path grows its measurement by one unionByName per
@@ -1202,6 +982,44 @@ final class HttpGateway(spark: SparkSession,
       unionDepth(key) = 0
       df.localCheckpoint(true)
     } else { unionDepth(key) = d; df }
+  }
+
+  /** The one write path: persist `batch` (time column `time`) under
+    * `key`, then grow the live entry — a point-merge when `pointMerge`
+    * (the batch overlaps the known extent), else a union — and, for the
+    * prom kinds, the metric or metric-store twin. Callers hold
+    * `synchronized`. */
+  private def append(key: String, batch: DataFrame, tagKeys: Seq[String],
+                     kind: Store.Kind = Store.Plain,
+                     pointMerge: Boolean = false,
+                     time: String = "ts"): Unit = {
+    store.foreach(_.append(key,
+      if (time == "ts") batch else batch.withColumnRenamed(time, "ts"),
+      tagKeys, kind))
+    catalog = catalog + (key -> (catalog.get(key) match {
+      case Some(prev) =>
+        val tags = (prev.tags ++ tagKeys).distinct
+        InfluxQL.Measurement(maybeCompact(key,
+          if (pointMerge) HttpGateway.mergePoints(prev.df, batch, tags)
+          else prev.df.unionByName(batch, allowMissingColumns = true)),
+          tags, prev.time)
+      case None => InfluxQL.Measurement(batch, tagKeys, time)
+    }))
+    // prom writes land in the default database only, so `key` is the
+    // bare metric / store name
+    def grow(twins: Map[String, PromQL.Metric], lineage: String) =
+      twins + (key -> (twins.get(key) match {
+        case Some(prev) => prev.copy(
+          df = maybeCompact(lineage,
+            prev.df.unionByName(batch, allowMissingColumns = true)),
+          labels = (prev.labels ++ tagKeys).distinct, extentMs = None)
+        case None => PromQL.Metric(batch, tagKeys, "ts", "value")
+      }))
+    kind match {
+      case Store.Prom => promCat = grow(promCat, s"prom:$key")
+      case Store.PromStore => promStores = grow(promStores, s"promstore:$key")
+      case _ =>
+    }
   }
   // extent-splitting PromQL range results cache (results_cache.go);
   // invalidated whenever the prom catalog changes (remote write)
@@ -1587,7 +1405,7 @@ final class HttpGateway(spark: SparkSession,
   // store) — accepted and ignored. Registers an empty store frame so
   // the scoped query routes answer empty-success immediately.
   server.createContext("/api/v1/tsdb/", (ex: HttpExchange) => {
-    val name = decode(ex.getRequestURI.getPath.stripPrefix("/api/v1/tsdb/"))
+    val name = dec(ex.getRequestURI.getPath.stripPrefix("/api/v1/tsdb/"))
     if (guardDb(ex, params(ex, readBody = false), Auth.WritePrivilege,
         "write", name).isEmpty) ()
     else if (ex.getRequestMethod != "POST")
@@ -1713,19 +1531,31 @@ final class HttpGateway(spark: SparkSession,
   // compiled by [[graft.query.LogPipe]] onto the measurement frame.
   server.createContext("/repo",
     (ex: HttpExchange) => handleLogQueryRoutes(ex))
-  // OTLP metrics remote write (handler.go:316, handler_otlp.go:109)
   server.createContext("/api/v1/arrow/doput",
     (ex: HttpExchange) => handleArrowDoPut(ex))
   server.createContext("/api/v1/arrow/doget",
     (ex: HttpExchange) => handleArrowDoGet(ex))
-  server.createContext("/api/v1/otlp/metrics",
-    (ex: HttpExchange) => handleOtlpWrite(ex))
+  // OTLP metrics remote write (handler.go:316, handler_otlp.go:109)
+  server.createContext("/api/v1/otlp/metrics", (ex: HttpExchange) =>
+    handleOtlp(ex) { body =>
+      val samples = OtlpMetrics.decode(body)
+      if (samples.isEmpty) sys.error("no metric data points in request")
+      OtlpMetrics.toMeasurements(spark, samples)
+    })
   // OTLP logs remote write (handler.go:320 -> the `logs` measurement)
-  server.createContext("/api/v1/otlp/logs",
-    (ex: HttpExchange) => handleOtlpLogs(ex))
+  server.createContext("/api/v1/otlp/logs", (ex: HttpExchange) =>
+    handleOtlp(ex) { body =>
+      val samples = OtlpLogs.decode(body)
+      if (samples.isEmpty) sys.error("no log records in request")
+      Map(OtlpLogs.Measurement -> OtlpLogs.toMeasurement(spark, samples))
+    })
   // OTLP traces remote write (handler.go:312 -> the `spans` measurement)
-  server.createContext("/api/v1/otlp/traces",
-    (ex: HttpExchange) => handleOtlpTraces(ex))
+  server.createContext("/api/v1/otlp/traces", (ex: HttpExchange) =>
+    handleOtlp(ex) { body =>
+      val samples = OtlpTraces.decode(body)
+      if (samples.isEmpty) sys.error("no spans in request")
+      Map(OtlpTraces.Measurement -> OtlpTraces.toMeasurement(spark, samples))
+    })
   // Prom metric metadata (handler.go:385 servePromQueryMetaData):
   // every known metric reported untyped with empty help/unit — the
   // engine's catalog carries no HELP/TYPE declarations
@@ -1822,7 +1652,6 @@ final class HttpGateway(spark: SparkSession,
     ex.close()
   }
 
-  private def decode(s: String): String = URLDecoder.decode(s, UTF_8)
 
   /** URI query params, plus form-encoded POST body params for /query
     * (the reference accepts `q` in either place). */
@@ -1836,8 +1665,8 @@ final class HttpGateway(spark: SparkSession,
     (Option(ex.getRequestURI.getRawQuery).getOrElse("") + "&" + fromBody)
       .split('&').filter(_.nonEmpty).map { kv =>
         kv.split("=", 2) match {
-          case Array(k, v) => decode(k) -> decode(v)
-          case Array(k) => decode(k) -> ""
+          case Array(k, v) => dec(k) -> dec(v)
+          case Array(k) => dec(k) -> ""
         }
       }.toMap
   }
@@ -2311,6 +2140,9 @@ final class HttpGateway(spark: SparkSession,
               catalog = catalog.filterNot(_._1.startsWith(pre))
               if (name == defaultDb)
                 catalog = catalog.filter(_._1.contains('\u0000'))
+              logStores = logStores.filterNot(dbOf(_) == name)
+              dropPersistedDb(name)
+              persistLogStores()
             }
             persistDatabases()
           }
@@ -2549,8 +2381,7 @@ final class HttpGateway(spark: SparkSession,
           }
           ResultShaper.toResultObj(gatewayRowsDf(cols, rows),
             "shard groups", Nil, cols, epoch, id)
-        } else if ("(?is)^\\s*drop\\s+shard\\s+\\d+\\s*$".r
-            .matches(stmt.trim)) {
+        } else if (DropShardRe.matches(stmt.trim)) {
           // data.go:2271 DropShard(id) — scoped here to the request
           // database (ids are per-db group indexes, not a global counter)
           val sid = stmt.trim.split("\\s+")(2).toLong
@@ -2962,7 +2793,6 @@ final class HttpGateway(spark: SparkSession,
           // (ordered by the per-batch __wseq stamp) reproduces exactly
           // the live catalog's point semantics
           val mtbl = HttpGateway.mergeBatch(tbl, tagKeys)
-          persistBatch(key, mtbl, tagKeys, merged = true)
           val lo = ps.iterator.map(_.time).min
           val hi = ps.iterator.map(_.time).max
           // A batch that cannot collide with any existing point (its ns
@@ -2978,17 +2808,6 @@ final class HttpGateway(spark: SparkSession,
               case (a, b) => (a * 1000000L, (b + 1) * 1000000L) })
           val overlaps = known.forall { case (sLo, sHi) =>
             lo <= sHi && hi >= sLo }
-          val merged = catalog.get(key) match {
-            case Some(prev) if overlaps => InfluxQL.Measurement(
-              maybeCompact(key, HttpGateway.mergePoints(
-                prev.df, mtbl, (prev.tags ++ tagKeys).distinct)),
-              (prev.tags ++ tagKeys).distinct, prev.time)
-            case Some(prev) => InfluxQL.Measurement(
-              maybeCompact(key,
-                prev.df.unionByName(mtbl, allowMissingColumns = true)),
-              (prev.tags ++ tagKeys).distinct, prev.time)
-            case None => InfluxQL.Measurement(mtbl, tagKeys, "ts")
-          }
           known match {
             case Some((sLo, sHi)) =>
               extentSeenNs(key) = (math.min(sLo, lo), math.max(sHi, hi))
@@ -3000,18 +2819,8 @@ final class HttpGateway(spark: SparkSession,
               // unknown — every write keeps merging (safe direction);
               // a too-small "known" extent would skip a needed merge
           }
-          catalog = catalog + (key -> merged)
-        } else {
-          persistBatch(key, tbl, tagKeys)
-          val merged = catalog.get(key) match {
-            case Some(prev) => InfluxQL.Measurement(
-              maybeCompact(key,
-                prev.df.unionByName(tbl, allowMissingColumns = true)),
-              (prev.tags ++ tagKeys).distinct, prev.time)
-            case None => InfluxQL.Measurement(tbl, tagKeys, "ts")
-          }
-          catalog = catalog + (key -> merged)
-        }
+          append(key, mtbl, tagKeys, Store.Points, pointMerge = overlaps)
+        } else append(key, tbl, tagKeys)
       }
     }
     stats.pointsWrittenOK.addAndGet(pts.size)
@@ -3047,17 +2856,7 @@ final class HttpGateway(spark: SparkSession,
       val mst = p.getOrElse("mst", sys.error("missing measurement (mst)"))
       val (df, tagKeys) = graft.sources.ArrowIngest.decode(
         spark, ex.getRequestBody.readAllBytes())
-      synchronized {
-        val key = dbKey(wdb, mst)
-        persistBatch(key, df, tagKeys)
-        catalog = catalog + (key -> (catalog.get(key) match {
-          case Some(prev) => InfluxQL.Measurement(
-            maybeCompact(key,
-              prev.df.unionByName(df, allowMissingColumns = true)),
-            (prev.tags ++ tagKeys).distinct, prev.time)
-          case None => InfluxQL.Measurement(df, tagKeys, "ts")
-        }))
-      }
+      synchronized { append(dbKey(wdb, mst), df, tagKeys) }
       respond(ex, 200, s"""{"rows":${df.count()}}""")
     } catch {
       case e: Throwable =>
@@ -3121,27 +2920,7 @@ final class HttpGateway(spark: SparkSession,
       val (df, tagKeys) =
         PromRemoteWrite.toStoreMeasurement(spark, series, store)
       synchronized {
-        val key = dbKey(defaultDb, store)
-        persistBatch(key, df, tagKeys)
-        // marker: a restart rebuilds the store registry from this dir
-        persistPath(key).foreach { d =>
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(d, "_promstore"), Array.empty[Byte])
-        }
-        catalog = catalog + (key -> (catalog.get(key) match {
-          case Some(prev) => InfluxQL.Measurement(
-            maybeCompact(key,
-              prev.df.unionByName(df, allowMissingColumns = true)),
-            (prev.tags ++ tagKeys).distinct, prev.time)
-          case None => InfluxQL.Measurement(df, tagKeys, "ts")
-        }))
-        promStores = promStores + (store -> (promStores.get(store) match {
-          case Some(prev) => prev.copy(
-            df = maybeCompact(s"promstore:$store",
-              prev.df.unionByName(df, allowMissingColumns = true)),
-            labels = (prev.labels ++ tagKeys).distinct, extentMs = None)
-          case None => PromQL.Metric(df, tagKeys, "ts", "value")
-        }))
+        append(dbKey(defaultDb, store), df, tagKeys, Store.PromStore)
       }
       resultsCache.invalidateAll()
       partialErr match {
@@ -3177,26 +2956,10 @@ final class HttpGateway(spark: SparkSession,
       synchronized {
         PromRemoteWrite.toMeasurements(spark, series).foreach {
           case (metric, (df, tagKeys)) =>
-            val key = dbKey(wdb, metric)
             // the prom query surface is one namespace = the default
             // database; other dbs' series stay InfluxQL-queryable only
-            persistBatch(key, df, tagKeys, prom = wdb == defaultDb)
-            catalog = catalog + (key -> (catalog.get(key) match {
-              case Some(prev) => InfluxQL.Measurement(
-                maybeCompact(key,
-                  prev.df.unionByName(df, allowMissingColumns = true)),
-                (prev.tags ++ tagKeys).distinct, prev.time)
-              case None => InfluxQL.Measurement(df, tagKeys, "ts")
-            }))
-            if (wdb == defaultDb)
-              promCat = promCat + (metric -> (promCat.get(metric) match {
-                case Some(prev) => prev.copy(
-                  df = maybeCompact(s"prom:$metric",
-                    prev.df.unionByName(df, allowMissingColumns = true)),
-                  labels = (prev.labels ++ tagKeys).distinct,
-                  extentMs = None)
-                case None => PromQL.Metric(df, tagKeys, "ts", "value")
-              }))
+            append(dbKey(wdb, metric), df, tagKeys,
+              if (wdb == defaultDb) Store.Prom else Store.Plain)
         }
       }
       resultsCache.invalidateAll()
@@ -3210,87 +2973,24 @@ final class HttpGateway(spark: SparkSession,
         respond(ex, 400, s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
     }
 
-  /** OTLP metrics write (`handler_otlp.go:109`): gauge/sum data points
-    * land as measurements named after the instrumentation scope, one
-    * field per metric, attributes as tags (otlp_metrics_writer.go
-    * schema). Success is an empty ExportMetricsServiceResponse. */
-  private def handleOtlpWrite(ex: HttpExchange): Unit =
+  /** OTLP writes (`handler_otlp.go:104-114`): `batches` decodes the
+    * body into frames (with tag keys) per measurement. Metric data
+    * points land in measurements named after their instrumentation
+    * scope, one field per metric, attributes as tags
+    * (otlp_metrics_writer.go schema); spans in `spans` (trace_id/
+    * span_id tags, duration_nano and friends as fields); log records
+    * in `logs` (severity/body fields, attrs as tags). Success is an
+    * empty Export*ServiceResponse. */
+  private def handleOtlp(ex: HttpExchange)(
+      batches: Array[Byte] => Map[String, (DataFrame, Seq[String])]): Unit =
     try {
       val p = params(ex, readBody = false)
       if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
       val wdb = writeDb(ex, p).getOrElse(return)
-      val samples = OtlpMetrics.decode(ex.getRequestBody.readAllBytes())
-      if (samples.isEmpty) sys.error("no metric data points in request")
+      val bs = batches(ex.getRequestBody.readAllBytes())
       synchronized {
-        OtlpMetrics.toMeasurements(spark, samples).foreach {
-          case (scope, (df, tagKeys)) =>
-            val key = dbKey(wdb, scope)
-            persistBatch(key, df, tagKeys)
-            catalog = catalog + (key -> (catalog.get(key) match {
-              case Some(prev) => InfluxQL.Measurement(
-                maybeCompact(key,
-                  prev.df.unionByName(df, allowMissingColumns = true)),
-                (prev.tags ++ tagKeys).distinct, prev.time)
-              case None => InfluxQL.Measurement(df, tagKeys, "ts")
-            }))
-        }
-      }
-      ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
-      ex.sendResponseHeaders(200, -1); ex.close()
-    } catch {
-      case e: Throwable =>
-        respond(ex, 400, s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
-    }
-
-  /** OTLP traces write (`handler_otlp.go:104` serveOtlpTracesWrite):
-    * spans land in the `spans` measurement — trace_id/span_id tags,
-    * duration_nano and friends as fields. */
-  private def handleOtlpTraces(ex: HttpExchange): Unit =
-    try {
-      val p = params(ex, readBody = false)
-      if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-      val wdb = writeDb(ex, p).getOrElse(return)
-      val samples = OtlpTraces.decode(ex.getRequestBody.readAllBytes())
-      if (samples.isEmpty) sys.error("no spans in request")
-      synchronized {
-        val (df, tagKeys) = OtlpTraces.toMeasurement(spark, samples)
-        val name = dbKey(wdb, OtlpTraces.Measurement)
-        persistBatch(name, df, tagKeys)
-        catalog = catalog + (name -> (catalog.get(name) match {
-          case Some(prev) => InfluxQL.Measurement(
-            maybeCompact(name,
-              prev.df.unionByName(df, allowMissingColumns = true)),
-            (prev.tags ++ tagKeys).distinct, prev.time)
-          case None => InfluxQL.Measurement(df, tagKeys, "ts")
-        }))
-      }
-      ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
-      ex.sendResponseHeaders(200, -1); ex.close()
-    } catch {
-      case e: Throwable =>
-        respond(ex, 400, s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
-    }
-
-  /** OTLP logs write (`handler_otlp.go:114`): records land in the
-    * `logs` measurement — severity/body fields, attrs as tags. */
-  private def handleOtlpLogs(ex: HttpExchange): Unit =
-    try {
-      val p = params(ex, readBody = false)
-      if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-      val wdb = writeDb(ex, p).getOrElse(return)
-      val samples = OtlpLogs.decode(ex.getRequestBody.readAllBytes())
-      if (samples.isEmpty) sys.error("no log records in request")
-      synchronized {
-        val (df, tagKeys) = OtlpLogs.toMeasurement(spark, samples)
-        val name = dbKey(wdb, OtlpLogs.Measurement)
-        persistBatch(name, df, tagKeys)
-        catalog = catalog + (name -> (catalog.get(name) match {
-          case Some(prev) => InfluxQL.Measurement(
-            maybeCompact(name,
-              prev.df.unionByName(df, allowMissingColumns = true)),
-            (prev.tags ++ tagKeys).distinct, prev.time)
-          case None => InfluxQL.Measurement(df, tagKeys, "ts")
-        }))
+        bs.foreach { case (m, (df, tagKeys)) =>
+          append(dbKey(wdb, m), df, tagKeys) }
       }
       ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
       ex.sendResponseHeaders(200, -1); ex.close()
@@ -3424,7 +3124,7 @@ final class HttpGateway(spark: SparkSession,
             databases.toSeq.sorted.map(jsonStr).mkString("[", ",", "]"))
         case ("POST", Some(r)) =>
           if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-          require(!r.startsWith("_") && !r.contains(' '),
+          require(!r.startsWith("_") && !r.contains('\u0000'),
             s"invalid repository name: $r")
           synchronized {
             if (databases.contains(r)) sys.error("repository already exists")
@@ -3440,9 +3140,10 @@ final class HttpGateway(spark: SparkSession,
             if (!databases.contains(r)) sys.error("repository not found")
             databases = databases - r
             retention = retention - r
-            val pre = r + " "
+            val pre = r + "\u0000"
             catalog = catalog.filterNot(_._1.startsWith(pre))
             logStores = logStores.filterNot(_.startsWith(pre))
+            dropPersistedDb(r)
             persistDatabases(); persistLogStores()
           }
           respond(ex, 200, "{}")
@@ -3494,6 +3195,7 @@ final class HttpGateway(spark: SparkSession,
               sys.error("logstream not found")
             catalog = catalog - dbKey(repo, stream)
             logStores = logStores - dbKey(repo, stream)
+            store.foreach(_.delete(dbKey(repo, stream)))
             persistLogStores()
           }
           respond(ex, 200, "{}")
@@ -4112,7 +3814,7 @@ final class HttpGateway(spark: SparkSession,
       val path = ex.getRequestURI.getPath
       val m = "^/api/v1/label/([^/]+)/values$".r.findFirstMatchIn(path)
         .getOrElse(sys.error(s"bad label values path: $path"))
-      val label = decode(m.group(1))
+      val label = dec(m.group(1))
       val values =
         if (label == "__name__") promCat.keys.toSeq.sorted
         else promCat.values.toSeq.filter(_.labels.contains(label))
@@ -4334,25 +4036,6 @@ object HttpGateway {
     dedupPoints(all, tagKeys, fieldUnion = false)
   }
 
-  /** Read-time point dedup for restart-restored frames: batches persist
-    * ALREADY intra-batch-merged with a per-batch `__wseq` write-order
-    * stamp, so across batches the newest stamped row wins per field —
-    * the same LWW a live gateway applied at write time (the reference
-    * dedups on read the same way, `tsreader/iterator.go` newest-wins).
-    * Legacy rows without the stamp sort oldest. */
-  private[server] def dedupPersisted(df: org.apache.spark.sql.DataFrame,
-                                     tagKeys: Seq[String])
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val seqd =
-      if (df.columns.contains("__wseq"))
-        df.withColumn("__ds_seq", coalesce(col("__wseq"), lit(0L)))
-          .drop("__wseq")
-      else df.withColumn("__ds_seq", lit(0L))
-    dedupPoints(seqd, tagKeys.filter(df.columns.contains),
-      fieldUnion = false)
-  }
-
   /** [[mergePoints]] for a single batch (line order = write order). */
   private[server] def mergeBatch(tbl: org.apache.spark.sql.DataFrame,
                                  tagKeys: Seq[String])
@@ -4367,7 +4050,7 @@ object HttpGateway {
     * `false` is the cross-batch rule — the newest ROW replaces the
     * point wholly, absent fields read null (the reference's read-time
     * dedup takes the newest row, `tsreader/iterator.go`). */
-  private def dedupPoints(all: org.apache.spark.sql.DataFrame,
+  private[server] def dedupPoints(all: org.apache.spark.sql.DataFrame,
                           tagKeys: Seq[String],
                           fieldUnion: Boolean)
       : org.apache.spark.sql.DataFrame = {

@@ -22,7 +22,7 @@ object AtomicFiles {
 
   /** Replace directory `dir` with what `write` puts at the temp directory
     * path it is given (`<dir>.<tag>_tmp`). Regular files whose names start
-    * with `_` (sidecar metadata such as the gateway's `_tags.txt`) carry
+    * with `_` (sidecar metadata such as the gateway Store's tag list) carry
     * over from the old directory, over any that `write` produced. The old
     * directory is renamed aside to `<dir>.<tag>_old` before the new one
     * is renamed in, so between the two renames `dir` is absent. */

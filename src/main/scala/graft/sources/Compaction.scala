@@ -26,7 +26,7 @@ object Compaction {
     // columns; sampling one footer would silently drop them on rewrite
     val df = spark.read.option("mergeSchema", "true").parquet(path)
     val rows = df.count()
-    // the gateway's _tags.txt/_prom sidecar markers carry over
+    // the gateway Store's sidecar files (names starting `_`) carry over
     AtomicFiles.swapDir(path, "compact") { tmp =>
       df.repartition(filesPerDay, col("day"))
         .write.mode("overwrite").partitionBy("day").parquet(tmp)

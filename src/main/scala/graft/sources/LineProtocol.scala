@@ -244,11 +244,4 @@ object LineProtocol {
       .agg(sort_array(collect_set(col("ftype"))).as("types"))
       .filter(size(col("types")) > 1)
   }
-
-  /** Append parsed points to a partitioned measurement table — time
-    * partitioning by day ≈ the reference's shard-group slicing
-    * (`meta/shardinfo.go:33`), pruned by Catalyst on read. */
-  def writeMeasurement(table: DataFrame, path: String): Unit =
-    table.withColumn("day", to_date(col("ts")))
-      .write.mode("append").partitionBy("day").parquet(path)
 }

@@ -75,7 +75,7 @@ class ScaleSpec extends SparkSpec {
     }.toDS()
     val cpu = LineProtocol.toMeasurementTable(LineProtocol.parse(lines), "cpu",
       tagKeys = Seq("host"), floatKeys = Seq("value"))
-    LineProtocol.writeMeasurement(cpu, dir)
+    graft.server.Store.appendDays(cpu, dir)
     val read = spark.read.parquet(dir)
       .filter($"day" === "2024-01-02")
     assert(read.count() == 24)

@@ -2349,6 +2349,275 @@ class ServerSpec extends SparkSpec {
     } finally g2.stop()
   }
 
+  // ------------------------------------------ persisted store (Store)
+  private def persisted(dir: String): HttpGateway = {
+    val g = new HttpGateway(spark, Map.empty, Map.empty,
+      persistDir = Some(dir))
+    g.start(); g
+  }
+  private def call(g: HttpGateway, method: String, path: String,
+                   body: Array[Byte] = Array.emptyByteArray)
+      : HttpResponse[String] = {
+    val b = HttpRequest.newBuilder(
+      URI.create(s"http://127.0.0.1:${g.boundPort}$path"))
+    http.send((method match {
+      case "GET" => b.GET()
+      case "DELETE" => b.DELETE()
+      case _ => b.POST(HttpRequest.BodyPublishers.ofByteArray(body))
+    }).build(), HttpResponse.BodyHandlers.ofString())
+  }
+  private def lp(g: HttpGateway, db: String, lines: String): Unit = {
+    val r = call(g, "POST", s"/write?db=$db&precision=ms",
+      lines.getBytes(UTF_8))
+    assert(r.statusCode() == 204, r.body())
+  }
+  private def iql(g: HttpGateway, q: String, db: String = "graft") =
+    call(g, "GET", s"/query?db=$db&q=${enc(q)}&epoch=ms")
+
+  test("a measurement the hierarchical sweep moved wholly cold restarts " +
+      "and folds") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cold").toString
+    val now = System.currentTimeMillis()
+    val old3d = now - 3L * 86400000L
+    def countSum(g: HttpGateway) =
+      iql(g, "SELECT count(v), sum(v) FROM ac").body()
+    val g1 = persisted(dir)
+    try {
+      assert(iql(g1, "ALTER RETENTION POLICY autogen ON graft " +
+        "HOT DURATION 1h WARM DURATION 24h").statusCode() == 200)
+      // every row older than WARM DURATION, over two days
+      lp(g1, "graft", s"ac,h=a v=1 $old3d\nac,h=b v=2 ${old3d + 1000}\n" +
+        s"ac,h=c v=4 ${old3d - 86400000L}")
+      assert(g1.runHierarchical(now) == 2)
+      // only the sidecars stay in the hot dir
+      val hot = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "ac"))
+        .toArray.map(_.toString)
+      assert(!hot.exists(_.contains("day=")), hot.mkString(","))
+      assert(countSum(g1).contains(",3,7"), countSum(g1))
+    } finally g1.stop()
+    // (a) a restart reads the cold tier alone
+    val g2 = persisted(dir)
+    try {
+      assert(countSum(g2).contains(",3,7"), countSum(g2))
+      // (b) and so does a DML fold
+      assert(iql(g2, "DELETE FROM ac WHERE h = 'b'").statusCode() == 200)
+      assert(g2.foldDmlJournal() == 1)
+      assert(countSum(g2).contains(",2,5"), countSum(g2))
+    } finally g2.stop()
+    val g3 = persisted(dir)
+    try assert(countSum(g3).contains(",2,5"), countSum(g3))
+    finally g3.stop()
+  }
+
+  test("a DML fold re-points the prom metric at the rewritten files") {
+    import graft.sources.PromRemoteWrite
+    val dir = java.nio.file.Files.createTempDirectory("graft_pfold").toString
+    val g1 = persisted(dir)
+    try {
+      val w = call(g1, "POST", "/api/v1/write", PromRemoteWrite.encode(Seq(
+        PromRemoteWrite.Series(Map("__name__" -> "pfold", "host" -> "a"),
+          Seq((1704067200000L, 5.0))),
+        PromRemoteWrite.Series(Map("__name__" -> "pfold", "host" -> "b"),
+          Seq((1704067200000L, 7.0))))))
+      assert(w.statusCode() == 204, w.body())
+    } finally g1.stop()
+    // restored, the metric reads the measurement's files
+    val g2 = persisted(dir)
+    try {
+      assert(iql(g2, "DELETE FROM pfold WHERE host = 'b'").statusCode() == 200)
+      // the fold swaps those files out from under the live prom metric,
+      // which must follow them
+      assert(g2.foldDmlJournal() == 1)
+      val r = call(g2, "GET", "/api/v1/query?query=" + enc("sum(pfold)") +
+        "&time=1704067200")
+      assert(r.statusCode() == 200 && r.body().contains("\"5\""), r.body())
+    } finally g2.stop()
+  }
+
+  test("DROP DATABASE deletes its persisted data: a restart does not " +
+      "bring the database back") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dropdb").toString
+    val g1 = persisted(dir)
+    try {
+      assert(iql(g1, "CREATE DATABASE gone").statusCode() == 200)
+      lp(g1, "gone", "gm,h=a v=1 1000")
+      assert(iql(g1, "DROP DATABASE gone").statusCode() == 200)
+    } finally g1.stop()
+    val g2 = persisted(dir)
+    try {
+      val dbs = iql(g2, "SHOW DATABASES").body()
+      assert(!dbs.contains("\"gone\""), dbs)
+      // re-created, the database starts empty
+      assert(iql(g2, "CREATE DATABASE gone").statusCode() == 200)
+      val q = iql(g2, "SELECT count(v) FROM gm", db = "gone").body()
+      assert(!q.contains("\"values\""), q)
+    } finally g2.stop()
+  }
+
+  test("a deleted repository does not come back after a restart") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_droprepo")
+      .toString
+    val g1 = persisted(dir)
+    try {
+      assert(call(g1, "POST", "/api/v1/repository/rgone").statusCode() == 200)
+      assert(call(g1, "POST", "/api/v1/logstream/rgone/s1")
+        .statusCode() == 200)
+      lp(g1, "rgone", "s1,level=info msg=\"x\" 1000")
+      assert(call(g1, "DELETE", "/api/v1/repository/rgone")
+        .statusCode() == 200)
+    } finally g1.stop()
+    val g2 = persisted(dir)
+    try {
+      val repos = call(g2, "GET", "/api/v1/repository").body()
+      assert(!repos.contains("rgone"), repos)
+      assert(!iql(g2, "SHOW DATABASES").body().contains("rgone"))
+    } finally g2.stop()
+  }
+
+  test("a deleted logstream does not come back after a restart") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dropls")
+      .toString
+    val g1 = persisted(dir)
+    try {
+      assert(call(g1, "POST", "/api/v1/repository/rk").statusCode() == 200)
+      assert(call(g1, "POST", "/api/v1/logstream/rk/ls1")
+        .statusCode() == 200)
+      lp(g1, "rk", "ls1,level=info msg=\"x\" 1000")
+      assert(call(g1, "DELETE", "/api/v1/logstream/rk/ls1")
+        .statusCode() == 200)
+    } finally g1.stop()
+    val g2 = persisted(dir)
+    try {
+      assert(call(g2, "GET", "/api/v1/logstream/rk").body() == "[]")
+      val q = iql(g2, "SELECT count(msg) FROM ls1", db = "rk").body()
+      assert(!q.contains("\"values\""), q)
+    } finally g2.stop()
+  }
+
+  test("every write route's batches survive a restart: the same " +
+      "per-measurement count(*) and prom labels as the live gateway") {
+    import graft.sources.{OtlpLogs, OtlpMetrics, OtlpTraces, PromRemoteWrite}
+    val dir = java.nio.file.Files.createTempDirectory("graft_routes")
+      .toString
+    def ok(r: HttpResponse[String], code: Int) =
+      assert(r.statusCode() == code, r.body())
+    def arrowIpc(): Array[Byte] = {
+      import org.apache.arrow.memory.RootAllocator
+      import org.apache.arrow.vector._
+      import org.apache.arrow.vector.ipc.ArrowStreamWriter
+      import org.apache.arrow.vector.types.FloatingPointPrecision
+      import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
+      import scala.jdk.CollectionConverters._
+      val alloc = new RootAllocator()
+      val root = VectorSchemaRoot.create(new Schema(Seq(
+        new Field("time",
+          FieldType.nullable(new ArrowType.Int(64, true)), null),
+        new Field("host", FieldType.nullable(ArrowType.Utf8.INSTANCE), null),
+        new Field("v", FieldType.nullable(new ArrowType.FloatingPoint(
+          FloatingPointPrecision.DOUBLE)), null)).asJava), alloc)
+      val out = new java.io.ByteArrayOutputStream()
+      val writer = new ArrowStreamWriter(root, null, out)
+      writer.start()
+      root.allocateNew()
+      for (i <- 0 until 3) {
+        root.getVector("time").asInstanceOf[BigIntVector]
+          .setSafe(i, (i + 1) * 1000000000L)
+        root.getVector("host").asInstanceOf[VarCharVector]
+          .setSafe(i, s"h$i".getBytes(UTF_8))
+        root.getVector("v").asInstanceOf[Float8Vector].setSafe(i, i * 1.5)
+      }
+      root.setRowCount(3)
+      writer.writeBatch()
+      writer.end()
+      root.close(); alloc.close()
+      out.toByteArray
+    }
+    val series = (m: String, host: String, pts: Seq[(Long, Double)]) =>
+      PromRemoteWrite.Series(Map("__name__" -> m, "host" -> host), pts)
+    // (database, measurement, the route's write)
+    val routes: Seq[(String, String, HttpGateway => Unit)] = Seq(
+      ("graft", "lpm", g => {
+        lp(g, "graft", "lpm,h=a v=1 1000\nlpm,h=a w=2 1000\nlpm,h=b v=3 2000")
+        // overlaps the known extent: point-merged into the live frame
+        lp(g, "graft", "lpm,h=a v=5 1000\nlpm,h=c v=6 3000")
+      }),
+      ("lr", "lg", g => {
+        ok(call(g, "POST", "/api/v1/repository/lr"), 200)
+        ok(call(g, "POST", "/api/v1/logstream/lr/lg"), 200)
+        // a log store keeps same-ns rows apart
+        lp(g, "lr", "lg,h=a msg=\"x\" 1000\nlg,h=a msg=\"y\" 1000")
+      }),
+      ("graft", "arw", g =>
+        ok(call(g, "POST", "/api/v1/arrow/doput?mst=arw", arrowIpc()), 200)),
+      ("graft", "pw_metric", g =>
+        ok(call(g, "POST", "/api/v1/write", PromRemoteWrite.encode(Seq(
+          series("pw_metric", "a", Seq((1000L, 1.0), (2000L, 2.0))),
+          series("pw_metric", "b", Seq((1000L, 3.0)))))), 204)),
+      ("graft", "pstore", g =>
+        ok(call(g, "POST", "/prometheus/pstore/api/v1/write",
+          PromRemoteWrite.encode(Seq(
+            series("cpu_use", "a", Seq((1000L, 5.0))),
+            series("mem_use", "b", Seq((1000L, 7.0), (2000L, 8.0)))))),
+          204)),
+      ("graft", "app.runtime", g =>
+        ok(call(g, "POST", "/api/v1/otlp/metrics",
+          OtlpMetrics.encode("app.runtime", Map("service.name" -> "s"), Seq(
+            OtlpMetrics.OtelSample("app.runtime", "heap_bytes",
+              Map("host" -> "a"), 1000000000L, 512.0),
+            OtlpMetrics.OtelSample("app.runtime", "gc_count",
+              Map("host" -> "b"), 1000000000L, 3.0)))), 200)),
+      ("graft", "spans", g =>
+        ok(call(g, "POST", "/api/v1/otlp/traces",
+          OtlpTraces.encode(Map("service.name" -> "s"), Seq(
+            OtlpTraces.SpanSample(Map("trace_id" -> "0af76519",
+                "span_id" -> "b7ad6b71"),
+              time_ns = 1500000000L, parent_span_id = "", name = "GET",
+              kind = 2, duration_nano = 250000000L,
+              end_time_unix_nano = 1750000000L, status_code = 0,
+              status_message = "", attrs = Map.empty)))), 200)),
+      ("graft", "logs", g =>
+        ok(call(g, "POST", "/api/v1/otlp/logs",
+          OtlpLogs.encode(Map("service.name" -> "s"), Seq(
+            OtlpLogs.LogSample(Map("pod" -> "p1"), 1500000000L, 9L, "INFO",
+              "up"),
+            OtlpLogs.LogSample(Map("pod" -> "p2"), 2500000000L, 17L,
+              "ERROR", "down")))), 200)),
+      ("graft", "starget", g => {
+        ok(iql(g, "CREATE STREAM 'sx' INTO starget ON SELECT sum(v) " +
+          "FROM ssrc GROUP BY time(10s), h DELAY 1s"), 200)
+        lp(g, "graft", "ssrc,h=a v=2 2000\nssrc,h=b v=4 4000")
+        assert(g.runStreams(12000) == 1)
+      }))
+    // count(*) per measurement as column → value, `time` aside
+    def counts(g: HttpGateway): Seq[Map[String, String]] =
+      routes.map { case (db, m, _) =>
+        val body = iql(g, s"SELECT count(*) FROM \"$m\"", db).body()
+        val s0 = ((JsonMethods.parse(body) \ "results")(0) \ "series")(0)
+        val JArray(cols) = (s0 \ "columns").asInstanceOf[JArray]
+        val JArray(row) = ((s0 \ "values")(0)).asInstanceOf[JArray]
+        val got = cols.map(_.values.toString).zip(row.map(_.values.toString))
+          .filterNot(_._1 == "time").toMap
+        assert(got.values.exists(_ != "0"), s"$m: $body")
+        got
+      }
+    def labels(g: HttpGateway): Seq[String] =
+      Seq("/api/v1/labels", "/prometheus/pstore/api/v1/labels")
+        .map(call(g, "GET", _).body())
+    val g1 = persisted(dir)
+    val (live, liveLabels) =
+      try {
+        routes.foreach(_._3(g1))
+        (counts(g1), labels(g1))
+      } finally g1.stop()
+    assert(liveLabels.head.contains("host"), liveLabels.head)
+    assert(liveLabels(1).contains("__name__"), liveLabels(1))
+    val g2 = persisted(dir)
+    try {
+      assert(counts(g2) == live)
+      assert(labels(g2) == liveLabels)
+    } finally g2.stop()
+  }
+
   test("prom results cache never serves a range computed before a write") {
     import graft.sources.PromRemoteWrite
     val g = new HttpGateway(spark, Map.empty, Map.empty)

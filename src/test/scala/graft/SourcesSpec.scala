@@ -140,7 +140,7 @@ class SourcesSpec extends SparkSpec {
       }.toDS()
       val tbl = LineProtocol.toMeasurementTable(LineProtocol.parse(lines),
         "cpu", tagKeys = Seq("host"), floatKeys = Seq("value"))
-      LineProtocol.writeMeasurement(tbl, dir)
+      graft.server.Store.appendDays(tbl, dir)
     }
     val sumBefore = spark.read.parquet(dir).agg(sum($"value"))
       .as[Double].collect().head
