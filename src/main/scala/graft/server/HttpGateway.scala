@@ -296,8 +296,7 @@ final class HttpGateway(spark: SparkSession,
         dropShardSlice(db, text.trim.split("\\s+")(2).toLong, before)
           .getOrElse(before)
       else Map.empty ++ InfluxQL.executeManage(before, text, nowMs)
-    (cat -- (before.keySet -- after.keySet).map(dbKey(db, _))) ++
-      after.map { case (k, m) => dbKey(db, k) -> m }
+    withSlice(cat, db, before, after)
   }
 
   /** Replay journaled DML lines onto the LIVE catalog (restart, and
@@ -643,12 +642,16 @@ final class HttpGateway(spark: SparkSession,
           else s"time >= ${e.flushedUpToMs}000000 AND "
         val sql = s"SELECT $callsSql FROM ${st.from} " +
           s"WHERE ${lower}time < ${bound}000000 GROUP BY $groupBy"
+        // the time axis of a line-protocol frame (epoch-ns `time` LONG
+        // beside the `ts` timestamp), so the live target and its copy
+        // restored from disk read the same times
         val res = InfluxQL.execute(cat, sql)
-          .withColumn("__ts", timestamp_millis(col("time")))
+          .withColumn("ts", timestamp_millis(col("time")))
+          .withColumn("time", col("time") * 1000000L)
         if (!res.isEmpty) {
           // flushed windows are durable like any write: the mark below
           // journals flushed-once, so losing the rows would be data loss
-          append(dbKey(db, st.target), res, st.tags, time = "__ts")
+          append(dbKey(db, st.target), res, st.tags)
           ran += 1
         }
         streamRegistry = streamRegistry +
@@ -783,14 +786,14 @@ final class HttpGateway(spark: SparkSession,
       cols.filterNot(_ == "time")
     else cols
 
-  /** Write a mutated single-database slice back through the prefix. */
-  private def applySlice(db: String,
-                         before: Map[String, InfluxQL.Measurement],
-                         after: Map[String, InfluxQL.Measurement]): Unit = {
-    val removed = (before.keySet -- after.keySet).map(dbKey(db, _))
-    catalog = (catalog -- removed) ++
+  /** `cat` with the single-database slice `before` of `db` mutated to
+    * `after`, written back through the prefix. */
+  private def withSlice(cat: Map[String, InfluxQL.Measurement], db: String,
+                        before: Map[String, InfluxQL.Measurement],
+                        after: Map[String, InfluxQL.Measurement])
+      : Map[String, InfluxQL.Measurement] =
+    (cat -- (before.keySet -- after.keySet).map(dbKey(db, _))) ++
       after.map { case (k, m) => dbKey(db, k) -> m }
-  }
 
   /** DML (DELETE / DROP SERIES / DROP MEASUREMENT / DROP SHARD) changed
     * some measurement frames — propagate to every cache layer that
@@ -857,10 +860,22 @@ final class HttpGateway(spark: SparkSession,
     if (key.contains('\u0000')) key.substring(0, key.indexOf('\u0000'))
     else defaultDb
 
-  /** Delete every persisted measurement of a dropped database, so a
-    * restart cannot bring the database or its data back. */
-  private def dropPersistedDb(db: String): Unit =
+  /** Drop database `db` (DROP DATABASE, and the repository route): the
+    * database, its policies, and its measurements' catalog entries,
+    * log-store registrations, prom twins and persisted dirs, all picked
+    * by [[dbOf]], so neither the running gateway nor a restart serves
+    * any of them. Callers hold `synchronized` and commit
+    * `_databases.txt` after. */
+  private def dropDb(db: String): Unit = {
+    databases = databases - db
+    retention = retention - db
+    val before = sliceOf(catalog, db)
+    catalog = catalog.filterNot(e => dbOf(e._1) == db)
+    logStores = logStores.filterNot(dbOf(_) == db)
+    propagateDml(db, before, Map.empty)
     store.foreach(st => st.keys.filter(dbOf(_) == db).foreach(st.delete))
+    persistLogStores()
+  }
 
   // the user catalog persists beside the data — a restarted gateway
   // with auth enabled must NOT reopen the unauthenticated bootstrap
@@ -984,18 +999,15 @@ final class HttpGateway(spark: SparkSession,
     } else { unionDepth(key) = d; df }
   }
 
-  /** The one write path: persist `batch` (time column `time`) under
+  /** The one write path: persist `batch` (time column `ts`) under
     * `key`, then grow the live entry — a point-merge when `pointMerge`
     * (the batch overlaps the known extent), else a union — and, for the
     * prom kinds, the metric or metric-store twin. Callers hold
     * `synchronized`. */
   private def append(key: String, batch: DataFrame, tagKeys: Seq[String],
                      kind: Store.Kind = Store.Plain,
-                     pointMerge: Boolean = false,
-                     time: String = "ts"): Unit = {
-    store.foreach(_.append(key,
-      if (time == "ts") batch else batch.withColumnRenamed(time, "ts"),
-      tagKeys, kind))
+                     pointMerge: Boolean = false): Unit = {
+    store.foreach(_.append(key, batch, tagKeys, kind))
     catalog = catalog + (key -> (catalog.get(key) match {
       case Some(prev) =>
         val tags = (prev.tags ++ tagKeys).distinct
@@ -1003,7 +1015,7 @@ final class HttpGateway(spark: SparkSession,
           if (pointMerge) HttpGateway.mergePoints(prev.df, batch, tags)
           else prev.df.unionByName(batch, allowMissingColumns = true)),
           tags, prev.time)
-      case None => InfluxQL.Measurement(batch, tagKeys, time)
+      case None => InfluxQL.Measurement(batch, tagKeys, "ts")
     }))
     // prom writes land in the default database only, so `key` is the
     // bare metric / store name
@@ -2133,17 +2145,7 @@ final class HttpGateway(spark: SparkSession,
                 retention = retention +
                   (name -> Map(named.getOrElse("autogen") -> rp0))
               }
-            } else {
-              databases = databases - name
-              retention = retention - name
-              val pre = name + "\u0000"
-              catalog = catalog.filterNot(_._1.startsWith(pre))
-              if (name == defaultDb)
-                catalog = catalog.filter(_._1.contains('\u0000'))
-              logStores = logStores.filterNot(dbOf(_) == name)
-              dropPersistedDb(name)
-              persistLogStores()
-            }
+            } else dropDb(name)
             persistDatabases()
           }
           s"""{"statement_id":$id}"""
@@ -2562,7 +2564,7 @@ final class HttpGateway(spark: SparkSession,
             val nowMs = System.currentTimeMillis()
             val after = Map.empty ++
               InfluxQL.executeManage(reqCat(), stmt, nowMs)
-            applySlice(reqDb, before, after)
+            catalog = withSlice(catalog, reqDb, before, after)
             // journal only statements that actually changed data — the
             // accepted-no-op meta statements (CREATE DATABASE, GRANT …)
             // return the catalog's own entries untouched
@@ -2579,7 +2581,9 @@ final class HttpGateway(spark: SparkSession,
           val before = sliceOf(catalog, reqDb)
           val (cat2, df) = InfluxQL.executeInto(reqCat(), stmt)
           val written = df.count()
-          synchronized { applySlice(reqDb, before, Map.empty ++ cat2) }
+          synchronized {
+            catalog = withSlice(catalog, reqDb, before, Map.empty ++ cat2)
+          }
           s"""{"statement_id":$id,"series":[{"name":"result","columns":["time","written"],"values":[[0,$written]]}]}"""
         } else {
           val cat =
@@ -3138,13 +3142,8 @@ final class HttpGateway(spark: SparkSession,
           if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
           synchronized {
             if (!databases.contains(r)) sys.error("repository not found")
-            databases = databases - r
-            retention = retention - r
-            val pre = r + "\u0000"
-            catalog = catalog.filterNot(_._1.startsWith(pre))
-            logStores = logStores.filterNot(_.startsWith(pre))
-            dropPersistedDb(r)
-            persistDatabases(); persistLogStores()
+            dropDb(r)
+            persistDatabases()
           }
           respond(ex, 200, "{}")
         case (m, _) => respond(ex, 405, s"""{"error":"bad $m"}""")

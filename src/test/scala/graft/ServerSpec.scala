@@ -2494,6 +2494,89 @@ class ServerSpec extends SparkSpec {
     } finally g2.stop()
   }
 
+  test("deleting the default database's repository drops its data live " +
+      "and on disk alike") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dropdef")
+      .toString
+    def count(g: HttpGateway) = iql(g, "SELECT count(v) FROM dm").body()
+    val g1 = persisted(dir)
+    val live =
+      try {
+        lp(g1, "graft", "dm,h=a v=1 1000\ndm,h=b v=2 2000")
+        assert(count(g1).contains(",2]"), count(g1))
+        assert(call(g1, "DELETE", "/api/v1/repository/graft")
+          .statusCode() == 200)
+        assert(count(g1).contains("database not found"), count(g1))
+        // re-created, the repository starts empty
+        assert(call(g1, "POST", "/api/v1/repository/graft")
+          .statusCode() == 200)
+        count(g1)
+      } finally g1.stop()
+    assert(live.contains("measurement not found"), live)
+    // and so it is after a restart (the default database always comes
+    // back, its measurements stay deleted)
+    val g2 = persisted(dir)
+    try {
+      assert(count(g2) == live)
+      val ms = iql(g2, "SHOW MEASUREMENTS").body()
+      assert(!ms.contains("\"dm\""), ms)
+    } finally g2.stop()
+  }
+
+  test("DROP DATABASE of the default database drops its restored prom " +
+      "metric: queries answer as for an unknown metric, not with a " +
+      "missing file") {
+    import graft.sources.PromRemoteWrite
+    val dir = java.nio.file.Files.createTempDirectory("graft_dropprom")
+      .toString
+    val g1 = persisted(dir)
+    try {
+      val w = call(g1, "POST", "/api/v1/write", PromRemoteWrite.encode(Seq(
+        PromRemoteWrite.Series(Map("__name__" -> "pdrop", "host" -> "a"),
+          Seq((1704067200000L, 5.0))))))
+      assert(w.statusCode() == 204, w.body())
+    } finally g1.stop()
+    def query(g: HttpGateway) = call(g, "GET", "/api/v1/query?query=" +
+      enc("sum(pdrop)") + "&time=1704067200")
+    val g2 = persisted(dir)
+    try {
+      assert(query(g2).body().contains("\"5\""), query(g2).body())
+      assert(iql(g2, "DROP DATABASE graft").statusCode() == 200)
+      // answered like a metric never written, live and after a restart
+      assert(query(g2).body().contains("unknown metric pdrop"),
+        query(g2).body())
+    } finally g2.stop()
+    val g3 = persisted(dir)
+    try assert(query(g3).body().contains("unknown metric pdrop"),
+      query(g3).body())
+    finally g3.stop()
+  }
+
+  test("a stream target reads the same times live and after a restart, " +
+      "and later flushes grow the restored target") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+      .toString
+    def sums(g: HttpGateway) = iql(g, "SELECT sum FROM st").body()
+    val g1 = persisted(dir)
+    val live =
+      try {
+        assert(iql(g1, "CREATE STREAM 'sx' INTO st ON SELECT sum(v) " +
+          "FROM src GROUP BY time(10s) DELAY 1s").statusCode() == 200)
+        lp(g1, "graft", "src v=2 12000\nsrc v=4 14000")
+        assert(g1.runStreams(22000) == 1)
+        sums(g1)
+      } finally g1.stop()
+    assert(live.contains("[10000,6"), live)
+    val g2 = persisted(dir)
+    try {
+      assert(sums(g2) == live)
+      lp(g2, "graft", "src v=8 25000")
+      assert(g2.runStreams(32000) == 1)
+      val both = sums(g2)
+      assert(both.contains("[10000,6") && both.contains("[20000,8"), both)
+    } finally g2.stop()
+  }
+
   test("every write route's batches survive a restart: the same " +
       "per-measurement count(*) and prom labels as the live gateway") {
     import graft.sources.{OtlpLogs, OtlpMetrics, OtlpTraces, PromRemoteWrite}
