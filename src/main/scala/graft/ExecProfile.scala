@@ -102,11 +102,14 @@ object ExecProfile {
                                val scale: SparkSession,
                                val interpreted: SparkSession)
 
-  // root -> its profiles; profile session -> its root. Weak both ways, so
-  // neither keeps a dropped root (or its clones' listener buses) alive.
+  /** What a profile session is: its root, and which profile. */
+  private final class Derived(
+      val root: java.lang.ref.WeakReference[SparkSession], val profile: String)
+
+  // root -> its profiles; profile session -> what it is. Weak both ways,
+  // so neither keeps a dropped root (or its clones' listener buses) alive.
   private val profiles = new java.util.WeakHashMap[SparkSession, Profiles]()
-  private val rootOf = new java.util.WeakHashMap[SparkSession,
-    java.lang.ref.WeakReference[SparkSession]]()
+  private val rootOf = new java.util.WeakHashMap[SparkSession, Derived]()
 
   /** The root state profile sessions copy and follow. */
   private def stateOf(root: SparkSession): AnyRef =
@@ -114,25 +117,26 @@ object ExecProfile {
       root.experimental.extraStrategies)
 
   private def profilesOf(spark: SparkSession): Profiles = synchronized {
-    val root = Option(rootOf.get(spark)).flatMap(r => Option(r.get))
+    val root = Option(rootOf.get(spark)).flatMap(d => Option(d.root.get))
       .getOrElse(spark)
     val state = stateOf(root)
     val held = profiles.get(root)
     if (held != null && held.state == state) held
     else {
-      def derive(c: Map[String, String]) = {
+      def derive(c: Map[String, String], profile: String) = {
         val s = SessionShim.derive(root, c, Seq(graft.plans.TimeSlices))
-        rootOf.put(s, new java.lang.ref.WeakReference(root))
+        rootOf.put(s, new Derived(new java.lang.ref.WeakReference(root), profile))
         s
       }
       val small = confs(root, small = true)
       // factoryMode is internal to Spark; without it, expression
       // projections and predicates still compile with wholeStage off
-      val p = new Profiles(state, derive(small), derive(confs(root, small = false)),
+      val p = new Profiles(state, derive(small, "small"),
+        derive(confs(root, small = false), "scale"),
         derive(small ++ Map(
           "spark.sql.shuffle.partitions" -> "1",
           "spark.sql.codegen.wholeStage" -> "false",
-          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")))
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"), "interpreted"))
       profiles.put(root, p)
       p
     }
@@ -169,13 +173,17 @@ object ExecProfile {
       else profilesOf(s).scale
     }
 
-  /** Is `spark` the interpreted profile of ad-hoc statements? */
-  def isInterpreted(spark: SparkSession): Boolean =
-    spark.conf.get("spark.sql.codegen.wholeStage") == "false"
+  /** Is `spark` one of the small-input profile sessions (small or
+    * interpreted)? A root, or any session not built here, is not,
+    * whatever its confs say. */
+  def isSmall(spark: SparkSession): Boolean = profileOf(spark).exists(_ != "scale")
 
-  /** Is `spark` on the small-input profile (AQE off ⇔ small path)? */
-  def isSmall(spark: SparkSession): Boolean =
-    spark.conf.get("spark.sql.adaptive.enabled") == "false"
+  /** Is `spark` the small profile of prepared queries (`session` below
+    * the gate)? Ad-hoc statements never run on it. */
+  def isPrepared(spark: SparkSession): Boolean = profileOf(spark).contains("small")
+
+  private def profileOf(spark: SparkSession): Option[String] =
+    synchronized(Option(rootOf.get(spark)).map(_.profile))
 
   /** Profile-following total order for a DATA-GROWING result (per-point /
     * per-doc outputs, high-cardinality tag lists): under the small-input
@@ -210,7 +218,5 @@ object ExecProfile {
     * nation⋈region, q20's part). An unconditional `broadcast()` stays only
     * where it was measured to win on both profiles. */
   def maybeBroadcast(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1")
-      df
-    else broadcast(df)
+    if (isSmall(df.sparkSession)) df else broadcast(df)
 }

@@ -77,6 +77,28 @@ object Tables {
   private val memo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Entry]()
 
+  /** The parquet schema of each (path, parquet confs set), with the
+    * listing fingerprint it was read at: the schema read is a Spark job,
+    * and the (session, path) memo above misses for every new session. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[(String,
+    Seq[(String, String)]), (String, org.apache.spark.sql.types.StructType)]()
+
+  /** `path` read as parquet, its schema inferred only when no session
+    * read this listing under the same parquet confs (`nanosAsLong` …)
+    * before. */
+  private def readParquet(spark: SparkSession, path: String,
+                          fp: String): DataFrame = {
+    val key =
+      (path, spark.conf.getAll.toSeq.filter(_._1.contains(".parquet.")).sorted)
+    val known = schemas.get(key)
+    if (known != null && known._1 == fp) spark.read.schema(known._2).parquet(path)
+    else {
+      val df = spark.read.parquet(path)
+      schemas.put(key, (fp, df.schema))
+      df
+    }
+  }
+
   val hotTierConfKey = "graft.storage.hotTierMaxBytes"
   val hotTierDefaultMaxBytes: Long = 256L << 20
   /** Residency only for genuinely small catalogs (dimension-table class);
@@ -136,7 +158,7 @@ object Tables {
           cur2.df.unpersist(blocking = false)
           cur2.slices.foreach(graft.plans.TimeSlices.forget)
         }
-        val raw = spark.read.parquet(path)
+        val raw = readParquet(spark, path, fp)
         val df0 = if (name == "events") normalizeEventsTime(raw) else raw
         val maxBytes = spark.conf
           .get(hotTierConfKey, hotTierDefaultMaxBytes.toString).toLong

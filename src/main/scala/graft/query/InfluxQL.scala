@@ -1802,9 +1802,9 @@ object InfluxQL {
       }
       ready.foreach { case (name, sub, subArms) =>
         val base0 =
-          if (sub.from.startsWith(" graph ")) {
+          if (sub.from.startsWith("\u0000graph\u0000")) {
             // GRAPH CTE: the topology sub-graph frame
-            val parts = sub.from.split(' ')
+            val parts = sub.from.split('\u0000')
             val spark = (cat.values ++ catalog.values).headOption
               .map(_.df.sparkSession)
               .getOrElse(org.apache.spark.sql.SparkSession.active)
@@ -4463,8 +4463,8 @@ object InfluxQL {
                 // measurement's extentMs, same as PromQL.evalGrid — so
                 // no extra scan-stage job is scheduled. Otherwise the
                 // bounds fold INTO the plan (Fill.*Auto: the bucketed
-                // frame's min/max wstart_ms broadcast under the spine
-                // explode) — no driver min/max action, and no
+                // frame's min/max wstart_ms over its per-series rows,
+                // under the spine explode) — no driver min/max action, no
                 // monotonicity assumption about the tz()-shifted axis
                 // (DST fall-back makes wall time non-monotone in UTC,
                 // so shifting footer extents would be wrong in general).

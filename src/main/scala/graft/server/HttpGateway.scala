@@ -861,11 +861,13 @@ final class HttpGateway(spark: SparkSession,
     else defaultDb
 
   /** Drop database `db` (DROP DATABASE, and the repository route): the
-    * database, its policies, and its measurements' catalog entries,
+    * database, its policies, its measurements' catalog entries,
     * log-store registrations, prom twins and persisted dirs, all picked
-    * by [[dbOf]], so neither the running gateway nor a restart serves
-    * any of them. Callers hold `synchronized` and commit
-    * `_databases.txt` after. */
+    * by [[dbOf]], its CQs, streams, subscriptions, downsample policies
+    * and measurement schemas, and its DML journal lines, so neither the
+    * running gateway nor a restart serves any of them, and a database
+    * re-created under the same name starts empty. Callers hold
+    * `synchronized` and commit `_databases.txt` after. */
   private def dropDb(db: String): Unit = {
     databases = databases - db
     retention = retention - db
@@ -875,6 +877,16 @@ final class HttpGateway(spark: SparkSession,
     propagateDml(db, before, Map.empty)
     store.foreach(st => st.keys.filter(dbOf(_) == db).foreach(st.delete))
     persistLogStores()
+    cqRegistry = cqRegistry.filterNot(_._1._1 == db)
+    streamRegistry = streamRegistry.filterNot(_._1._1 == db)
+    subRegistry = subRegistry.filterNot(_._1._1 == db)
+    dsRegistry = dsRegistry.filterNot(_._1._1 == db)
+    dsMarks = dsMarks.filterNot(_._1._1 == db)
+    mstSchemas = mstSchemas.filterNot(_._1._1 == db)
+    persistDdl()
+    commitMeta("_dml.txt", metaLines("_dml.txt").filterNot(l =>
+      scala.util.Try(dec(l.takeWhile(_ != '\t'))).toOption.contains(db))
+      .map(_ + "\n").mkString)
   }
 
   // the user catalog persists beside the data — a restarted gateway
@@ -2589,62 +2601,57 @@ final class HttpGateway(spark: SparkSession,
           val cat =
             if (stmt.trim.toLowerCase.startsWith("show")) reqCat(showDb(stmt))
             else reqCat()
-          val ((name, tags, df0, desc), release) =
-            graft.operators.Fill.owning(InfluxQL.executeShapedOrd(cat, stmt))
-          try {
-            val (df, timeNs) = HttpGateway.edgeTime(df0)
-            // `__series_name` names each row's series (per-measurement
-            // SHOW output)
-            val nameCol =
-              if (df.columns.contains("__series_name")) Some("__series_name")
-              else None
-            // a group tag the statement explicitly projects (or a grouped
-            // field dimension under a star) renders as a COLUMN too
-            val alsoCols = InfluxQL.alsoColumnTags(cat, stmt)
-              .filter(df.columns.contains).toSet
-            val valueCols = HttpGateway.shapedValueCols(
-              df.columns.toIndexedSeq.filterNot(nameCol.contains),
-              tags.filterNot(alsoCols.contains))
-            // non-chunked responses are bounded by http.max-row-limit
-            // (config.go:37) — over-limit series are truncated and marked
-            // partial; use chunked=true to stream past the limit
-            ResultShaper.toResultObj(df, name, tags, valueCols, epoch, id,
-              maxRowLimit, timeNs = timeNs, seriesDesc = desc,
-              nameCol = nameCol,
-              pruneNullCols = "(?is).*/\\*\\+\\s*filter_null_column\\s*\\*/.*"
-                .r.matches(stmt))
-          } finally release()
+          val (name, tags, df0, desc) = InfluxQL.executeShapedOrd(cat, stmt)
+          val (df, timeNs) = HttpGateway.edgeTime(df0)
+          // `__series_name` names each row's series (per-measurement
+          // SHOW output)
+          val nameCol =
+            if (df.columns.contains("__series_name")) Some("__series_name")
+            else None
+          // a group tag the statement explicitly projects (or a grouped
+          // field dimension under a star) renders as a COLUMN too
+          val alsoCols = InfluxQL.alsoColumnTags(cat, stmt)
+            .filter(df.columns.contains).toSet
+          val valueCols = HttpGateway.shapedValueCols(
+            df.columns.toIndexedSeq.filterNot(nameCol.contains),
+            tags.filterNot(alsoCols.contains))
+          // non-chunked responses are bounded by http.max-row-limit
+          // (config.go:37) — over-limit series are truncated and marked
+          // partial; use chunked=true to stream past the limit
+          ResultShaper.toResultObj(df, name, tags, valueCols, epoch, id,
+            maxRowLimit, timeNs = timeNs, seriesDesc = desc,
+            nameCol = nameCol,
+            pruneNullCols = "(?is).*/\\*\\+\\s*filter_null_column\\s*\\*/.*"
+              .r.matches(stmt))
         }
 
       if (p.get("chunked").contains("true")) {
         // chunked emission is per-series-batch within ONE statement
         require(statements.size == 1,
           "chunked=true supports a single statement")
-        val ((name, tags, df0, desc), release) = graft.operators.Fill
-          .owning(InfluxQL.executeShapedOrd(reqCat(), statements.head))
-        try {
-          val (df, timeNs) = HttpGateway.edgeTime(df0)
-          val alsoCols = InfluxQL.alsoColumnTags(reqCat(), statements.head)
-            .filter(df.columns.contains).toSet
-          val valueCols = HttpGateway.shapedValueCols(
-            df.columns.toIndexedSeq, tags.filterNot(alsoCols.contains))
-          val n = p.get("chunk_size").map(_.toInt).getOrElse(10000)
-          // stream chunk documents as they come off toLocalIterator —
-          // driver heap stays bounded by one partition + one chunk no
-          // matter how many rows the statement returns (the reference's
-          // httpsender streams the same way); chunked responses are
-          // exempt from max-row-limit like the reference's
-          val lines = ResultShaper.streamSeriesJsonChunked(
-            df, name, tags, valueCols, n, epoch, timeNs = timeNs,
-            seriesDesc = desc)
-          if (rq.status == "killed")
-            sys.error(s"query ${rq.qid} was killed")
-          ex.getResponseHeaders.set("Content-Type", "application/json")
-          ex.sendResponseHeaders(200, 0)
-          val os = ex.getResponseBody
-          try lines.foreach { l => os.write(l.getBytes(UTF_8)); os.write('\n') }
-          finally { os.close(); ex.close() }
-        } finally release()
+        val (name, tags, df0, desc) =
+          InfluxQL.executeShapedOrd(reqCat(), statements.head)
+        val (df, timeNs) = HttpGateway.edgeTime(df0)
+        val alsoCols = InfluxQL.alsoColumnTags(reqCat(), statements.head)
+          .filter(df.columns.contains).toSet
+        val valueCols = HttpGateway.shapedValueCols(
+          df.columns.toIndexedSeq, tags.filterNot(alsoCols.contains))
+        val n = p.get("chunk_size").map(_.toInt).getOrElse(10000)
+        // stream chunk documents as they come off toLocalIterator —
+        // driver heap stays bounded by one partition + one chunk no
+        // matter how many rows the statement returns (the reference's
+        // httpsender streams the same way); chunked responses are
+        // exempt from max-row-limit like the reference's
+        val lines = ResultShaper.streamSeriesJsonChunked(
+          df, name, tags, valueCols, n, epoch, timeNs = timeNs,
+          seriesDesc = desc)
+        if (rq.status == "killed")
+          sys.error(s"query ${rq.qid} was killed")
+        ex.getResponseHeaders.set("Content-Type", "application/json")
+        ex.sendResponseHeaders(200, 0)
+        val os = ex.getResponseBody
+        try lines.foreach { l => os.write(l.getBytes(UTF_8)); os.write('\n') }
+        finally { os.close(); ex.close() }
       } else {
         val objs = statements.zipWithIndex
           .map { case (s, i) =>

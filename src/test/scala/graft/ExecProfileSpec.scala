@@ -62,9 +62,12 @@ class ExecProfileSpec extends SparkSpec {
     // an ad-hoc statement over a small input runs without generated code;
     // one inside a prepared query keeps the query's profile
     val i = ExecProfile.statementSession(Seq(spark.range(3).toDF())).get
-    assert(ExecProfile.isInterpreted(i) && !ExecProfile.isInterpreted(s))
+    assert(s.conf.get("spark.sql.codegen.wholeStage") == "true")
     assert(ExecProfile.statementSession(Seq(s.range(3).toDF())).get eq s)
     assert(ExecProfile.isSmall(i))
+    // only the small profile is the prepared-query one
+    assert(ExecProfile.isPrepared(s) && !ExecProfile.isPrepared(i) &&
+      !ExecProfile.isPrepared(b) && !ExecProfile.isPrepared(spark))
     assert(i.conf.get("spark.sql.codegen.wholeStage") == "false")
     assert(ExecProfile.statementSession(Seq(spark.createDataFrame(
       spark.range(3).toDF().rdd, spark.range(3).toDF().schema))).get eq b)
@@ -151,7 +154,7 @@ class ExecProfileSpec extends SparkSpec {
       val next = session()
       assert(next ne first)
       assert(next.conf.get(key) == "true")
-      assert(ExecProfile.isInterpreted(next))
+      assert(next.conf.get("spark.sql.codegen.wholeStage") == "false")
       assert(next.conf.get("spark.sql.shuffle.partitions") == "1")
       assert(!first.conf.get(key).toBoolean) // built sessions never change
     } finally {
@@ -212,30 +215,45 @@ class ExecProfileSpec extends SparkSpec {
       InfluxQL.execute(cat, q).collect()
     }
     assert(cacheEntries == n0)
-    def statement(q: String) = operators.Fill.owning {
+    def statement(q: String) = {
       val df = InfluxQL.execute(scaleCat, q)
       assert(!ExecProfile.isSmall(df.sparkSession))
       df
     }
     (1 to 3).foreach { i =>
-      val (df, release) = statement(
+      statement(
         s"SELECT count(value) FROM events GROUP BY time(${i}d) fill(null)")
-      df.collect()
-      release()
+        .collect()
+      assert(cacheEntries == n0)
     }
-    assert(cacheEntries == n0)
-    // two identical statements at once: each frees only its own entry
+    // two identical statements at once
     val q = "SELECT sum(value) FROM events GROUP BY time(2d), event_type " +
       "fill(0)"
-    val (a, releaseA) = statement(q)
-    val (b, releaseB) = statement(q)
+    val a = statement(q)
+    val b = statement(q)
     val rowsA = a.collect().toSeq
-    assert(cacheEntries == n0 + 2)
-    releaseA()
-    assert(cacheEntries == n0 + 1)
-    assert(b.collect().toSeq == rowsA)
-    releaseB()
     assert(cacheEntries == n0)
+    assert(b.collect().toSeq == rowsA)
+    assert(cacheEntries == n0)
+  }
+
+  test("a root with AQE off is not taken for the small profile") {
+    val root = spark.newSession()
+    root.conf.set("spark.sql.adaptive.enabled", "false")
+    root.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    assert(!ExecProfile.isSmall(root))
+    val df = root.range(0, 997).toDF("id")
+    assert(!ExecProfile.boundedSort(df, col("id")).queryExecution
+      .optimizedPlan.toString.contains("Repartition"))
+    assert(ExecProfile.maybeBroadcast(df).queryExecution.logical.toString
+      .contains("broadcast"))
+    // its profile sessions are looked up, not guessed
+    val s = ExecProfile.session(root, 0L)
+    assert(ExecProfile.isSmall(s))
+    assert(!ExecProfile.isSmall(ExecProfile.session(root,
+      ExecProfile.smallInputBytes)))
+    assert(ExecProfile.isSmall(
+      ExecProfile.statementSession(Seq(root.range(3).toDF())).get))
   }
 
   /** (job group, job id) of the jobs `body` started on `s`'s context,

@@ -2454,6 +2454,37 @@ class ServerSpec extends SparkSpec {
     } finally g2.stop()
   }
 
+  test("a database re-created under a dropped one's name replays none of " +
+      "the old one's DML journal lines or DDL registrations") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_redb").toString
+    def count(g: HttpGateway) =
+      iql(g, "SELECT count(v) FROM m", db = "d").body()
+    def cqs(g: HttpGateway) =
+      iql(g, "SHOW CONTINUOUS QUERIES", db = "d").body()
+    val g1 = persisted(dir)
+    val live = try {
+      assert(iql(g1, "CREATE DATABASE d").statusCode() == 200)
+      lp(g1, "d", "m,h=a v=1 1000")
+      assert(iql(g1, "CREATE CONTINUOUS QUERY dcq ON d BEGIN " +
+        "SELECT mean(v) INTO t FROM m GROUP BY time(10s) END")
+        .statusCode() == 200)
+      assert(cqs(g1).contains("dcq"), cqs(g1))
+      assert(iql(g1, "DELETE FROM m WHERE time < 5s", db = "d")
+        .statusCode() == 200)
+      assert(iql(g1, "DROP DATABASE d").statusCode() == 200)
+      assert(iql(g1, "CREATE DATABASE d").statusCode() == 200)
+      lp(g1, "d", "m,h=a v=2 2000")
+      assert(!cqs(g1).contains("dcq"), cqs(g1))
+      count(g1)
+    } finally g1.stop()
+    assert(live.contains("[0,1]"), live)
+    val g2 = persisted(dir)
+    try {
+      assert(count(g2) == live)
+      assert(!cqs(g2).contains("dcq"), cqs(g2))
+    } finally g2.stop()
+  }
+
   test("a deleted repository does not come back after a restart") {
     val dir = java.nio.file.Files.createTempDirectory("graft_droprepo")
       .toString

@@ -74,4 +74,34 @@ class TablesSchemaSpec extends SparkSpec {
     assert(mismatches === 0L)
     assert(ev.count() > 0L)
   }
+
+  test("a second session's lookup of an unchanged table schedules one job " +
+      "fewer than the first: the schema read is shared") {
+    val dir = Files.createTempDirectory("schema-memo-").toFile
+    dir.deleteOnExit()
+    spark.range(0, 100).toDF("id").write.parquet(s"$dir/t.parquet")
+    val sc = spark.sparkContext
+    def lookup(): (Int, Seq[Long]) = {
+      val s = spark.newSession()
+      s.conf.set(Tables.hotTierConfKey, "0")
+      val group = s"schema-memo-${System.nanoTime()}"
+      sc.setJobGroup(group, group)
+      val df = try Tables.table(s, dir.toString, "t")
+        finally sc.clearJobGroup()
+      // the status store sees jobs in order: once a later marker job is
+      // in, every job of the lookup is
+      val marker = s"$group-marker"
+      sc.setJobGroup(marker, marker)
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      (sc.statusTracker.getJobIdsForGroup(group).length,
+        df.as[Long].collect().toSeq.sorted)
+    }
+    val (first, rows1) = lookup()
+    val (second, rows2) = lookup()
+    assert(first >= 1 && second == first - 1, (first, second))
+    assert(rows1 == (0L until 100L) && rows2 == rows1)
+  }
 }
