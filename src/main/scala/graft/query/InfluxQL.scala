@@ -1287,7 +1287,7 @@ object InfluxQL {
     * will fail properly downstream). */
   def alsoColumnTags(catalog: Map[String, Measurement],
                      sql0: String): Seq[String] = try {
-    val s = stripComments(sql0, plusOnly = false).trim
+    val s = stripComments(sql0, keepHints = false).trim
     val lower = s.toLowerCase
     if (!(lower.startsWith("select") || lower.startsWith("with"))) Nil
     else {
@@ -1906,10 +1906,11 @@ object InfluxQL {
   /** Strip `&#47;*…*&#47;` comment spans QUOTE-AWARE: spans inside
     * single- or double-quoted literals are content, not comments (a
     * blind replaceAll corrupted `WHERE msg = 'a &#47;*+ x *&#47; b'`).
-    * `plusOnly` restricts to optimizer hints (`&#47;*+ … *&#47;`,
-    * parser.go hint grammar). Backslash escapes inside quotes are
-    * honored; an unterminated comment strips to end-of-string. */
-  def stripComments(s: String, plusOnly: Boolean): String = {
+    * `keepHints` keeps optimizer hints (`&#47;*+ … *&#47;`, parser.go
+    * hint grammar) and strips only plain comments. Backslash escapes
+    * inside quotes are honored; an unterminated comment strips to
+    * end-of-string. */
+  def stripComments(s: String, keepHints: Boolean): String = {
     val out = new StringBuilder
     var i = 0
     var quote: Char = 0
@@ -1924,8 +1925,7 @@ object InfluxQL {
       } else if (c == '\'' || c == '"') {
         quote = c; out.append(c); i += 1
       } else if (c == '/' && i + 1 < s.length && s.charAt(i + 1) == '*' &&
-                 (!plusOnly ||
-                   (i + 2 < s.length && s.charAt(i + 2) == '+'))) {
+                 !(keepHints && i + 2 < s.length && s.charAt(i + 2) == '+')) {
         val end = s.indexOf("*/", i + 2)
         out.append(' ')
         i = if (end < 0) s.length else end + 2
@@ -1941,7 +1941,7 @@ object InfluxQL {
                           sql0: String): DataFrame = {
     // strip optimizer-hint comments (`SHOW /*+ exact_statistic_query */
     // TAG VALUES …` — parser.go hint grammar, routing-only here)
-    val sql = stripComments(sql0, plusOnly = false)
+    val sql = stripComments(sql0, keepHints = false)
     val spark = catalog.values.headOption.map(_.df.sparkSession)
       .getOrElse(org.apache.spark.sql.SparkSession.active)
     import spark.implicits._
@@ -2679,15 +2679,22 @@ object InfluxQL {
     override def initialValue: Integer = 0
   }
 
+  /** `qIn` compiled; `sorted = false` skips its emission sort (an
+    * inner whose consumer reads it as a set). */
   private def compileQuery(catalog: Map[String, Measurement],
-                           qIn: Query): DataFrame = {
+                           qIn: Query, sorted: Boolean = true): DataFrame = {
     emitDepth.set(emitDepth.get + 1)
-    try compileQueryInner(catalog, qIn)
+    try compileQueryInner(catalog, qIn, sorted)
     finally emitDepth.set(emitDepth.get - 1)
   }
 
+  /** Aggregates whose result does not depend on their input's row
+    * order (selectors pick by value, then time). */
+  private val OrderFreeAggs =
+    Set("count", "sum", "mean", "min", "max", "spread", "stddev", "median")
+
   private def compileQueryInner(catalog: Map[String, Measurement],
-                                qIn: Query): DataFrame = {
+                                qIn: Query, sorted: Boolean): DataFrame = {
     // a FROM-subquery alias qualifies refs to the inner's bare columns
     // (`SELECT count(t2.additional) FROM (…) AS t2`,
     // Push_Down_Rule_Incondition) — strip the qualifier up front; joins
@@ -2822,17 +2829,24 @@ object InfluxQL {
     }
     val outerWanted: Seq[String] =
       q.groupTags ++ (q.join.toSeq ++ q.joinMore).flatMap(_.onTags)
+    // an outer that only aggregates, with functions that do not read
+    // input order, consumes its subqueries as a set: their emission sort
+    // (and the range sampler's job it costs) would buy nothing
+    val subsAsSet = q.projs.nonEmpty && q.join.isEmpty && q.projs.forall {
+      case c: PCall => OrderFreeAggs(c.fn) && c.argExpr.isEmpty
+      case _ => false
+    }
     val m =
       if (q.fromSub.isDefined) {
         val subs = (q.fromSub.get +: q.fromSubMore)
           .map(s0 => carryTags(pushTime(s0), outerWanted))
         val parts = subs.map { sub =>
-          val inner0 = compileQuery(catalog, sub)
+          val inner0 = compileQuery(catalog, sub, sorted = !subsAsSet)
           // pin the single inner's emission order for same-ns ties
           // (multi-sub appends keep the value-ascending interleave —
           // Constant_Column exp)
           val inner =
-            if (q.fromSubMore.isEmpty)
+            if (q.fromSubMore.isEmpty && !subsAsSet)
               inner0.withColumn("__sord", monotonically_increasing_id())
             else inner0
           // the subquery's output keeps a source tag AS a tag when it
@@ -4889,7 +4903,8 @@ object InfluxQL {
       if (aggregated && emitDepth.get == 1)
         graft.ExecProfile.boundedSort(df, ord: _*)
       else df.orderBy(ord: _*)
-    (if (joinOrdered)
+    (if (!sorted) out
+     else if (joinOrdered)
        emit(out, groupTags.map(col) ++ ordHint)
      else emit(out, (((groupTags ++ subSeriesTags).map(col) :+
        timeOrd) ++ nsHint ++ ordHint ++ sordHint ++ tieHint)))

@@ -69,7 +69,6 @@ final class HttpGateway(spark: SparkSession,
   private def commitMeta(name: String, text: String): Unit =
     store.foreach(_.commitMeta(name, text))
 
-  @volatile private var catalog = init
   @volatile private var promCat = prom
   // prom metric STORES (`/prometheus/{metric_store}/api/v1/*`,
   // handler.go:397-433): one measurement holds every series of the
@@ -107,89 +106,75 @@ final class HttpGateway(spark: SparkSession,
   }
 
   // ------------------------------------------------ database catalog
-  /** The database set (`meta/database.go:21` DatabaseInfo, minus RPs —
-    * every database has the implicit `autogen` policy). Measurements of
-    * the DEFAULT database live under their bare names in `catalog`;
-    * other databases' measurements are namespace-prefixed
-    * `db\u0000name` — ONE registry, per-request sliced by
-    * [[catalogFor]]. CREATE/DROP DATABASE are real here; the PromQL
-    * catalog stays a single namespace (documented divergence — the
-    * prom API carries no database axis in this gateway). */
-  val defaultDb = "graft"
-  @volatile private var databases: Set[String] = Set(defaultDb)
+  /** A CQ (`services/continuousquery/service.go` scheduler state): the
+    * parsed statement, its text (SHOW CONTINUOUS QUERIES echoes it) and
+    * the last-run instant; [[runContinuousQueries]] runs it. */
+  private case class CqEntry(stmt: graft.streaming.StreamDDL.StreamStatement,
+                             text: String, lastRunMs: Long)
+
+  /** A STREAM task (`app/ts-store/stream/` window caches): unlike a CQ,
+    * [[runStreams]] flushes each closed window once, APPENDING to the
+    * target; the DELAY is its entire late-data budget. */
+  private case class StreamEntry(stmt: graft.streaming.StreamDDL.StreamStatement,
+                                 text: String, flushedUpToMs: Long)
+
+  /** Everything one database owns, like the reference's DatabaseInfo
+    * (`meta/database.go:21`): retention policies (born with `autogen`;
+    * qualified `db.rp.m` refs validate against them), measurements by
+    * bare name, the LOG-store measurements (logkeeper logstreams: rows
+    * at one (series, ns) are DISTINCT records, per the consume cursor
+    * contract, so the point merge never applies), CQs and streams by
+    * name, subscriptions by (rp, name) (`services/subscriber`),
+    * downsample policies by rp with rolled-up-to marks per
+    * (measurement, tier) ([[DownSample]]), declared schemas
+    * ([[MeasurementDDL]]), and the write path's bookkeeping:
+    * `extents` is each measurement's known ns extent from write batches
+    * (seeded from footer stats after a restart), which lets a batch that
+    * cannot collide with an existing point SKIP the merge — an unknown
+    * extent always merges — and `depths` counts unions per write lineage
+    * since the last [[maybeCompact]]. */
+  private case class Db(
+      rps: Map[String, Retention.Rp] = Retention.autogen,
+      msts: Map[String, InfluxQL.Measurement] = Map.empty,
+      logStores: Set[String] = Set.empty,
+      cqs: Map[String, CqEntry] = Map.empty,
+      streams: Map[String, StreamEntry] = Map.empty,
+      subs: Map[(String, String), graft.streaming.StreamDDL.Subscription] =
+        Map.empty,
+      downsamples: Map[String, DownSample.Policy] = Map.empty,
+      dsMarks: Map[(String, Int), Long] = Map.empty,
+      schemas: Map[String, MeasurementDDL.Schema] = Map.empty,
+      extents: Map[String, (Long, Long)] = Map.empty,
+      depths: Map[String, Int] = Map.empty) {
+    /** The default retention policy (the first one when none is). */
+    def defaultRp: (String, Retention.Rp) =
+      rps.find(_._2.default).getOrElse(rps.head)
+  }
+
+  /** The databases by name; the constructor's measurements belong to
+    * the default one. The PromQL catalog stays a single namespace (the
+    * prom API carries no database axis here). A request reads one
+    * snapshot; updates run under the gateway's monitor. */
+  val defaultDb = HttpGateway.DefaultDb
+  @volatile private var dbs: Map[String, Db] = Map(defaultDb -> Db(msts = init))
   /** Whether the implicit default database is REAL to a user: it lists
     * in SHOW DATABASES once it holds data (constructor catalog, a
     * write, a measurement) or was CREATEd explicitly. */
   @volatile private var defaultDbTouched: Boolean =
     init.nonEmpty || prom.nonEmpty
   // GRANT/REVOKE validate names against this catalog (data.go:2919)
-  auth.databaseExists = db => databases.contains(db)
-  /** Per-database retention policies (`meta/retentionpolicy.go:33`);
-    * every database is born with `autogen`. Qualified `db.rp.m` refs
-    * validate `rp` against this registry. */
-  @volatile private var retention: Map[String, Map[String, Retention.Rp]] =
-    Map(defaultDb -> Retention.autogen)
-  /** Measurements that are LOG stores (logkeeper logstreams, created via
-    * the logstream CRUD): rows at the same (series, ns) are DISTINCT
-    * records — the consume cursor contract is literally (timestamp,
-    * rows-at-timestamp) (`handler_logstore_consume.go`) — so the
-    * TS-store point-identity merge never applies to them, on any write
-    * route. Keyed by [[dbKey]]; persisted in `_logstreams.txt`. */
-  @volatile private var logStores: Set[String] = Set.empty
-  /** Known ns time extent per measurement (dbKey → [min,max]), tracked
-    * from write batches (exact for gateway-born measurements; seeded
-    * from parquet footer stats after a restart via Measurement.extentMs).
-    * Lets the write path SKIP the point-merge for batches that cannot
-    * collide with any existing point — the dominant append-ingest shape
-    * stays O(batch) per write. An unknown extent always merges (too-small
-    * would silently skip a needed merge; too-large only costs an extra
-    * merge). Mutated only under the ingest `synchronized`. */
-  private val extentSeenNs =
-    scala.collection.mutable.Map.empty[String, (Long, Long)]
+  auth.databaseExists = db => dbs.contains(db)
 
-  // ------------------------------------------- continuous queries
-  /** CQ registry keyed (db, name) -- the reference's
-    * `services/continuousquery/service.go` scheduler state: parsed
-    * statement, original text (SHOW CONTINUOUS QUERIES echoes it), and
-    * the last-run instant. Runs are driven by [[runContinuousQueries]]
-    * with an explicit `now` -- a deployment ticks it from a scheduler
-    * thread; tests advance time deterministically. */
-  private case class CqEntry(stmt: graft.streaming.StreamDDL.StreamStatement,
-                             text: String, lastRunMs: Long)
-  @volatile private var cqRegistry: Map[(String, String), CqEntry] = Map.empty
-
-  /** DOWNSAMPLE policies per (db, rp) + per-(db, measurement, tier)
-    * rolled-up-to marks — see [[DownSample]] for semantics/citations. */
-  @volatile private var dsRegistry: Map[(String, String), DownSample.Policy] =
-    Map.empty
-  @volatile private var dsMarks: Map[(String, String, Int), Long] = Map.empty
-
-  /** STREAM tasks per (db, name): the reference's stream service
-    * aggregates arriving points into per-window state and flushes a
-    * window once `window + DELAY` has passed (`app/ts-store/stream/` —
-    * time_task/tag_task window caches). The batch-gateway equivalent:
-    * [[runStreams]] flushes every closed window of landed writes once,
-    * APPENDING to the target — unlike a CQ, a stream never recomputes
-    * flushed windows (the DELAY is its entire late-data budget). */
-  private case class StreamEntry(stmt: graft.streaming.StreamDDL.StreamStatement,
-                                 text: String, flushedUpToMs: Long)
-  @volatile private var streamRegistry: Map[(String, String), StreamEntry] =
-    Map.empty
-
-  /** Declared measurement schemas per (db, name) — CREATE MEASUREMENT /
-    * ALTER … WITH SHARDKEY / SHOW SHARDKEY|ENGINETYPE|… introspection
-    * (see [[MeasurementDDL]]). */
-  @volatile private var mstSchemas
-    : Map[(String, String), MeasurementDDL.Schema] = Map.empty
-
-  /** SUBSCRIPTION catalog per (db, rp, name) — the reference forwards
-    * every write of db.rp to the registered destinations
-    * (`services/subscriber`); the gateway keeps the catalog live
-    * (CREATE/DROP/SHOW round-trip) and the forwarding path is
-    * `Streams.subscriptionSink` wired to a write stream. */
-  @volatile private var subRegistry
-    : Map[(String, String, String), graft.streaming.StreamDDL.Subscription] =
-    Map.empty
+  /** Replace database `db` by `f` of it; a database that is not there
+    * (dropped meanwhile) stays absent. Callers hold the monitor. */
+  private def updDb(db: String)(f: Db => Db): Unit =
+    dbs.get(db).foreach(d => dbs = dbs.updated(db, f(d)))
+  /** Database `db`'s measurements, empty when it is not there. */
+  private def mstsOf(db: String): Map[String, InfluxQL.Measurement] =
+    dbs.get(db).fold(Map.empty[String, InfluxQL.Measurement])(_.msts)
+  private def setMsts(db: String,
+                      msts: Map[String, InfluxQL.Measurement]): Unit =
+    updDb(db)(_.copy(msts = msts))
 
   /** One scheduler sweep at time `nowMs` (`service.go:178` Run loop ->
     * ExecuteContinuousQuery): a CQ is due when `nowMs` has advanced at
@@ -202,7 +187,7 @@ final class HttpGateway(spark: SparkSession,
   def runContinuousQueries(nowMs: Long): Int = synchronized {
     import org.apache.spark.sql.functions.{col, timestamp_millis, unix_millis}
     var ran = 0
-    cqRegistry.foreach { case ((db, name), e) =>
+    for ((db, d) <- dbs; (name, e) <- d.cqs) {
       val st = e.stmt
       val bucketMs = math.max(1L, st.intervalNs / 1000000L)
       val everyMs = math.max(1L, st.every.getOrElse(st.intervalNs) / 1000000L)
@@ -211,7 +196,7 @@ final class HttpGateway(spark: SparkSession,
         val forMs = math.max(st.forNs.map(_ / 1000000L).getOrElse(0L),
           math.max(everyMs, bucketMs))
         val start = end - forMs
-        val cat = sliceOf(catalog, db)
+        val cat = mstsOf(db)
         if (end > start && cat.contains(st.from)) {
           val callsSql = st.calls
             .map { case (fn, f) => s"$fn($f)" }.mkString(", ")
@@ -232,10 +217,11 @@ final class HttpGateway(spark: SparkSession,
                 st.tags, old.time)
             case None => InfluxQL.Measurement(res, st.tags, "__ts")
           }
-          catalog = catalog + (dbKey(db, st.target) -> merged)
+          setMsts(db, cat + (st.target -> merged))
           ran += 1
         }
-        cqRegistry = cqRegistry + ((db, name) -> e.copy(lastRunMs = nowMs))
+        updDb(db)(x =>
+          x.copy(cqs = x.cqs + (name -> e.copy(lastRunMs = nowMs))))
       }
     }
     ran
@@ -285,30 +271,27 @@ final class HttpGateway(spark: SparkSession,
 
   private val DropShardRe = "(?is)^\\s*drop\\s+shard\\s+\\d+\\s*$".r
 
-  /** `cat` after one journaled statement over its `db` slice (a DROP
-    * SHARD naming no group leaves it as it is). */
-  private def applyDml(cat: Map[String, InfluxQL.Measurement], db: String,
+  /** Measurements `msts` of `db` after one journaled statement (a DROP
+    * SHARD naming no group leaves them as they are). */
+  private def applyDml(msts: Map[String, InfluxQL.Measurement], db: String,
                        text: String, nowMs: Long)
-      : Map[String, InfluxQL.Measurement] = {
-    val before = sliceOf(cat, db)
-    val after =
-      if (DropShardRe.matches(text))
-        dropShardSlice(db, text.trim.split("\\s+")(2).toLong, before)
-          .getOrElse(before)
-      else Map.empty ++ InfluxQL.executeManage(before, text, nowMs)
-    withSlice(cat, db, before, after)
-  }
+      : Map[String, InfluxQL.Measurement] =
+    if (DropShardRe.matches(text))
+      dropShardSlice(db, text.trim.split("\\s+")(2).toLong, msts)
+        .getOrElse(msts)
+    else Map.empty ++ InfluxQL.executeManage(msts, text, nowMs)
 
   /** Replay journaled DML lines onto the LIVE catalog (restart, and
     * after a hierarchical sweep rebuilds entries from parquet). */
   private def replayDmlJournal(onlyDb: Option[String] = None): Unit =
     eachDml(metaLines("_dml.txt"), "replay") { (_, db, nowMs, text) =>
-      if (onlyDb.forall(_ == db)) {
-        val before = sliceOf(catalog, db)
-        catalog = applyDml(catalog, db, text, nowMs)
+      if (onlyDb.forall(_ == db) && dbs.contains(db)) {
+        val before = mstsOf(db)
+        val after = applyDml(before, db, text, nowMs)
+        setMsts(db, after)
         // replay propagates like live DML: the prom twins were
         // restored from the pre-tombstone parquet above
-        propagateDml(db, before, sliceOf(catalog, db))
+        propagateDml(db, before, after)
       }
     }
 
@@ -332,8 +315,12 @@ final class HttpGateway(spark: SparkSession,
     // folding only the hot tier then truncating would LOSE them. `day`
     // is kept so the rewrite stays day-partitioned; the rewrite drops
     // the cold dir and the next sweep re-tiers old partitions.
-    var dirCat = store.get.keys.flatMap(k => store.get.read(k).map(s =>
-      k -> InfluxQL.Measurement(s.df, s.tags, "ts"))).toMap
+    var dirCat: Map[String, Map[String, InfluxQL.Measurement]] =
+      store.get.measurements.flatMap { case (db, name) =>
+        store.get.read(db, name).map(s =>
+          (db, name, InfluxQL.Measurement(s.df, s.tags, "ts")))
+      }.groupBy(_._1).map { case (db, ms) =>
+        db -> ms.map(m => m._2 -> m._3).toMap }
     val beforeCat = dirCat
     // Lines whose statement touches an init (in-memory) measurement
     // cannot fully fold: tombstones over init rows live only in the
@@ -347,8 +334,7 @@ final class HttpGateway(spark: SparkSession,
       "from|drop\\s+measurement)\\s+" +
       "(?:\"([^\"]+)\"|'([^']+)'|([^\\s;\"']+))").r
     def touchesInit(db: String, text: String): Boolean = {
-      val initSlice = sliceOf(init, db)
-      if (initSlice.isEmpty) false
+      if (db != defaultDb || init.isEmpty) false
       // DROP SHARD prunes time ranges across every measurement — any
       // init measurement in the db may carry affected rows
       else if (DropShardRe.matches(text)) true
@@ -356,29 +342,31 @@ final class HttpGateway(spark: SparkSession,
         case Some(g) =>
           val name = Option(g.group(1)).orElse(Option(g.group(2)))
             .getOrElse(g.group(3))
-          initSlice.contains(name)
+          init.contains(name)
         case None => true // unrecognized shape — retain, conservatively
       }
     }
     val retained = Seq.newBuilder[String]
     eachDml(lines, "fold") { (line, db, nowMs, text) =>
       if (touchesInit(db, text)) retained += line
-      dirCat = applyDml(dirCat, db, text, nowMs)
+      dirCat = dirCat.updated(db,
+        applyDml(dirCat.getOrElse(db, Map.empty), db, text, nowMs))
     }
     var n = 0
-    (beforeCat.keySet -- dirCat.keySet).foreach { name =>
-      if (store.get.delete(name)) n += 1
-    }
-    dirCat.foreach { case (name, m) =>
-      if (!beforeCat.get(name).exists(_.df eq m.df)) {
-        store.get.rewrite(name, m.df)
+    for ((db, after) <- dirCat) {
+      val before = beforeCat.getOrElse(db, Map.empty)
+      (before.keySet -- after.keySet).foreach { name =>
+        if (store.get.delete(db, name)) n += 1
+      }
+      for ((name, m) <- after if !before.get(name).exists(_.df eq m.df)) {
+        store.get.rewrite(db, name, m.df)
         // the LIVE catalog entry still references the swapped-out
         // files (its df was built from the old listing at startup) —
         // rebuild exactly like a restart: init ∪ hot ∪ cold tier.
         // Caveats, documented: tombstones over init-catalog rows and
         // over already-cold partitions live in memory/journal only —
         // the fold rewrites the HOT tier it scanned.
-        restoreEntry(name)
+        restoreEntry(db, name)
         n += 1
       }
     }
@@ -407,18 +395,16 @@ final class HttpGateway(spark: SparkSession,
     foldDmlJournal()
     var moved = 0
     val touched = Set.newBuilder[String]
-    databases.foreach { db =>
-      val rps = retention.getOrElse(db, Retention.autogen)
-      val rp = rps.find(_._2.default).map(_._2).getOrElse(rps.head._2)
+    dbs.foreach { case (db, d) =>
+      val rp = d.defaultRp._2
       if (rp.warmS > 0) {
         val cutoffDay = java.time.Instant
           .ofEpochMilli(nowMs - rp.warmS * 1000L).toString.substring(0, 10)
-        sliceOf(catalog, db).keys.toSeq.foreach { mst =>
-          val key = dbKey(db, mst)
-          val n = store.get.moveCold(key, cutoffDay)
+        d.msts.keys.foreach { mst =>
+          val n = store.get.moveCold(db, mst, cutoffDay)
           if (n > 0) {
             moved += n
-            restoreEntry(key)
+            restoreEntry(db, mst)
             touched += db
           }
         }
@@ -461,61 +447,68 @@ final class HttpGateway(spark: SparkSession,
   }
 
   private def persistDdl(): Unit = {
-    val lines =
-      cqRegistry.toSeq.sortBy(_._1).map { case ((db, _), e) =>
-        s"cq\t${enc(db)}\t-\t${enc(e.text)}" } ++
-      streamRegistry.toSeq.sortBy(_._1).map { case ((db, _), e) =>
-        s"stream\t${enc(db)}\t${e.flushedUpToMs}\t${enc(e.text)}" } ++
-      subRegistry.toSeq.sortBy(_._1).map { case (_, s) =>
-        s"sub\t${enc(s.db)}\t-\t${enc(renderSub(s))}" } ++
-      dsRegistry.toSeq.sortBy(_._1).map { case ((db, rp), p) =>
-        s"ds\t${enc(db)}\t-\t${enc(renderDs(rp, p))}" } ++
-      mstSchemas.toSeq.sortBy(_._1).map { case ((db, _), sc) =>
-        s"mst\t${enc(db)}\t-\t${enc(renderMst(sc))}" }
-    commitMeta("_ddl.txt", lines.mkString("\n"))
+    val byName = dbs.toSeq.sortBy(_._1)
+    def lines[K: Ordering, V](of: Db => Map[K, V])(
+        line: (String, K, V) => String): Seq[String] =
+      byName.flatMap { case (db, d) =>
+        of(d).toSeq.sortBy(_._1).map { case (k, v) => line(db, k, v) } }
+    commitMeta("_ddl.txt", (
+      lines(_.cqs)((db, _, e) => s"cq\t${enc(db)}\t-\t${enc(e.text)}") ++
+      lines(_.streams)((db, _, e) =>
+        s"stream\t${enc(db)}\t${e.flushedUpToMs}\t${enc(e.text)}") ++
+      lines(_.subs)((db, _, s) =>
+        s"sub\t${enc(db)}\t-\t${enc(renderSub(s))}") ++
+      lines(_.downsamples)((db, rp, p) =>
+        s"ds\t${enc(db)}\t-\t${enc(renderDs(rp, p))}") ++
+      lines(_.schemas)((db, _, sc) =>
+        s"mst\t${enc(db)}\t-\t${enc(renderMst(sc))}")).mkString("\n"))
   }
+
+  /** Database `db`, or the "database not found" error. */
+  private def dbNamed(db: String): Db =
+    dbs.getOrElse(db, sys.error(s"database not found: $db"))
 
   // ---- registration (shared by the /query dispatch and DDL restore)
   private def registerCq(db: String, text: String): Unit = {
     val cq = graft.streaming.StreamDDL.parse(text)
     val d = cq.onDb.getOrElse(db)
-    if (!databases.contains(d)) sys.error(s"database not found: $d")
-    cqRegistry = cqRegistry + ((d, cq.name) -> CqEntry(cq, text, -1L))
+    dbNamed(d)
+    updDb(d)(x => x.copy(cqs = x.cqs + (cq.name -> CqEntry(cq, text, -1L))))
   }
   private def registerStream(db: String, text: String,
                              flushed: Long): Unit = {
     val st = graft.streaming.StreamDDL.parse(text)
-    if (streamRegistry.contains((db, st.name)))
+    if (dbNamed(db).streams.contains(st.name))
       sys.error(s"stream already exists: ${st.name}")
-    streamRegistry = streamRegistry +
-      ((db, st.name) -> StreamEntry(st, text, flushed))
+    updDb(db)(x =>
+      x.copy(streams = x.streams + (st.name -> StreamEntry(st, text, flushed))))
   }
   private def registerSub(fallbackDb: String, text: String): Unit = {
     val s = graft.streaming.StreamDDL.parseSubscription(text)
-    if (!databases.contains(s.db)) sys.error(s"database not found: ${s.db}")
-    if (!retention.getOrElse(s.db, Retention.autogen).contains(s.rp))
+    val d = dbNamed(s.db)
+    if (!d.rps.contains(s.rp))
       sys.error(s"retention policy not found: ${s.rp}")
-    if (subRegistry.contains((s.db, s.rp, s.name)))
+    if (d.subs.contains((s.rp, s.name)))
       sys.error("subscription already exists")
-    subRegistry = subRegistry + ((s.db, s.rp, s.name) -> s)
+    updDb(s.db)(x => x.copy(subs = x.subs + ((s.rp, s.name) -> s)))
   }
   private def registerDs(fallbackDb: String, text: String): Unit = {
     val p0 = DownSample.parseCreate(text)
     val db = p0.db.getOrElse(fallbackDb)
-    if (!databases.contains(db)) sys.error(s"database not found: $db")
-    val rp = retention.getOrElse(db, Retention.autogen).getOrElse(p0.rp,
+    val d = dbNamed(db)
+    val rp = d.rps.getOrElse(p0.rp,
       sys.error(s"retention policy not found: ${p0.rp}"))
     val p = DownSample.validate(p0, rp.shardGroupS)
-    if (dsRegistry.contains((db, p.rp)))
+    if (d.downsamples.contains(p.rp))
       sys.error("downsample policy exists")
-    dsRegistry = dsRegistry + ((db, p.rp) -> p)
+    updDb(db)(x => x.copy(downsamples = x.downsamples + (p.rp -> p)))
   }
   private def registerMst(fallbackDb: String, text: String): Unit = {
     val sc = MeasurementDDL.parseCreate(text)
     val db = sc.db.getOrElse(fallbackDb)
-    if (!databases.contains(db)) sys.error(s"database not found: $db")
+    val d = dbNamed(db)
     if (db == defaultDb) defaultDbTouched = true
-    if (mstSchemas.contains((db, sc.name))) {
+    if (d.schemas.contains(sc.name)) {
       // a bare re-CREATE is idempotent (MeasurementCommands "retry
       // create measurement cpu" → success); one carrying options is a
       // STATEMENT-level conflict (the WITH SHARDKEY retry exp carries
@@ -526,9 +519,8 @@ final class HttpGateway(spark: SparkSession,
       if (bare) return
       throw new InfluxQL.StatementError("measurement already exists")
     }
-    mstSchemas = mstSchemas + ((db, sc.name) -> sc)
-    if (!sliceOf(catalog, db).contains(sc.name)) {
-      import org.apache.spark.sql.types._
+    import org.apache.spark.sql.types._
+    def empty = {
       val cols = Seq(StructField("time", LongType),
           StructField("ts", TimestampType)) ++
         sc.tags.map(t => StructField(t, StringType)) ++
@@ -538,12 +530,13 @@ final class HttpGateway(spark: SparkSession,
           case "bool" => BooleanType
           case _ => StringType
         }) }
-      val empty = spark.createDataFrame(
+      InfluxQL.Measurement(spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StructType(cols))
-      catalog = catalog + (dbKey(db, sc.name) ->
-        InfluxQL.Measurement(empty, sc.tags, "ts"))
+        StructType(cols)), sc.tags, "ts")
     }
+    updDb(db)(x => x.copy(schemas = x.schemas + (sc.name -> sc),
+      msts = if (x.msts.contains(sc.name)) x.msts
+             else x.msts + (sc.name -> empty)))
   }
 
   /** Derived shard-group view of a database: the day-partitioned parquet
@@ -557,14 +550,13 @@ final class HttpGateway(spark: SparkSession,
     * without a persisted counter. */
   private def shardGroupsOf(db: String)
       : Seq[(String, Long, Long, Long, Long)] =
-    shardGroupsIn(db, sliceOf(catalog, db))
+    shardGroupsIn(db, mstsOf(db))
 
   /** Tier of a shard group from the default RP's HOT/WARM bounds —
     * hot within hotS, warm past it, cold past warmS (util.Hot/Warm/
     * Cold tiers the hierarchical service moves between). */
   private def tierOf(db: String, endMs: Long, nowMs: Long): String = {
-    val rps = retention.getOrElse(db, Retention.autogen)
-    val rp = rps.find(_._2.default).map(_._2).getOrElse(rps.head._2)
+    val rp = dbs.getOrElse(db, Db()).defaultRp._2
     if (rp.warmS > 0 && endMs < nowMs - rp.warmS * 1000L) "cold"
     else if (rp.hotS > 0 && endMs < nowMs - rp.hotS * 1000L) "warm"
     else "hot"
@@ -574,8 +566,7 @@ final class HttpGateway(spark: SparkSession,
       slice: Map[String, InfluxQL.Measurement])
       : Seq[(String, Long, Long, Long, Long)] = {
     import org.apache.spark.sql.functions.{col, unix_millis}
-    val rps = retention.getOrElse(db, Retention.autogen)
-    val (rpName, rp) = rps.find(_._2.default).getOrElse(rps.head)
+    val (rpName, rp) = dbs.getOrElse(db, Db()).defaultRp
     val groupMs = math.max(1L, rp.shardGroupS * 1000L)
     val groups = slice.values.flatMap { m =>
       m.df.select((unix_millis(col(m.time)) / groupMs).cast("long").as("g"))
@@ -605,11 +596,9 @@ final class HttpGateway(spark: SparkSession,
   }
 
   private def dropShardData(db: String, sid: Long): Boolean =
-    dropShardSlice(db, sid, sliceOf(catalog, db)) match {
+    dropShardSlice(db, sid, mstsOf(db)) match {
       case None => false
-      case Some(upd) =>
-        catalog = catalog ++ upd.map { case (k, m) => dbKey(db, k) -> m }
-        true
+      case Some(upd) => setMsts(db, mstsOf(db) ++ upd); true
     }
 
   private def rfc3339(ms: Long): String =
@@ -626,12 +615,12 @@ final class HttpGateway(spark: SparkSession,
   def runStreams(nowMs: Long): Int = synchronized {
     import org.apache.spark.sql.functions.{col, timestamp_millis}
     var ran = 0
-    streamRegistry.foreach { case ((db, name), e) =>
+    for ((db, d) <- dbs; (name, e) <- d.streams) {
       val st = e.stmt
       val bucketMs = math.max(1L, st.intervalNs / 1000000L)
       val delayMs = st.delayNs / 1000000L
       val bound = Math.floorDiv(nowMs - delayMs, bucketMs) * bucketMs
-      val cat = sliceOf(catalog, db)
+      val cat = mstsOf(db)
       if (bound > e.flushedUpToMs && cat.contains(st.from)) {
         val callsSql = st.calls
           .map { case (fn, f) => s"$fn($f)" }.mkString(", ")
@@ -651,11 +640,11 @@ final class HttpGateway(spark: SparkSession,
         if (!res.isEmpty) {
           // flushed windows are durable like any write: the mark below
           // journals flushed-once, so losing the rows would be data loss
-          append(dbKey(db, st.target), res, st.tags)
+          append(db, st.target, res, st.tags)
           ran += 1
         }
-        streamRegistry = streamRegistry +
-          ((db, name) -> e.copy(flushedUpToMs = bound))
+        updDb(db)(x => x.copy(streams =
+          x.streams + (name -> e.copy(flushedUpToMs = bound))))
         // journal the advanced mark: flushed-once must hold across a
         // restart (replaying a flushed window would duplicate appends)
         persistDdl()
@@ -675,18 +664,19 @@ final class HttpGateway(spark: SparkSession,
   def runDownSamples(nowMs: Long): Int = synchronized {
     import org.apache.spark.sql.functions.{col, unix_millis}
     var ran = 0
-    dsRegistry.foreach { case ((db, _), pol) =>
-      sliceOf(catalog, db).foreach { case (mst, m) =>
+    for ((db, d) <- dbs; pol <- d.downsamples.values) {
+      mstsOf(db).foreach { case (mst, m) =>
         var df = m.df
         var changed = false
         for (i <- 1 to pol.sampleS.length) {
           val bucketMs = pol.timeS(i - 1) * 1000L
           val cutoff = Math.floorDiv(
             nowMs - pol.sampleS(i - 1) * 1000L, bucketMs) * bucketMs
-          val mark = dsMarks.getOrElse((db, mst, i), Long.MinValue)
+          val mark = dbs.get(db).flatMap(_.dsMarks.get((mst, i)))
+            .getOrElse(Long.MinValue)
           if (cutoff > mark) {
             df = DownSample.rollTier(df, m.time, m.tags, pol, i, cutoff)
-            dsMarks = dsMarks + ((db, mst, i) -> cutoff)
+            updDb(db)(x => x.copy(dsMarks = x.dsMarks + ((mst, i) -> cutoff)))
             changed = true
             ran += 1
           }
@@ -694,26 +684,14 @@ final class HttpGateway(spark: SparkSession,
         if (changed) {
           val kept = df.filter(
             unix_millis(col(m.time)) >= nowMs - pol.durationS * 1000L)
-          catalog = catalog + (dbKey(db, mst) -> m.copy(df = kept))
+          setMsts(db, mstsOf(db) + (mst -> m.copy(df = kept)))
         }
       }
     }
     ran
   }
 
-  private def dbKey(db: String, name: String): String =
-    if (db == defaultDb) name else db + "\u0000" + name
-
-  private def sliceOf(cat: Map[String, InfluxQL.Measurement],
-                      db: String): Map[String, InfluxQL.Measurement] =
-    if (db == defaultDb) cat.filter(!_._1.contains('\u0000'))
-    else {
-      val pre = db + "\u0000"
-      cat.collect { case (k, m) if k.startsWith(pre) =>
-        k.substring(pre.length) -> m }
-    }
-
-  /** A per-request single-database view over the namespaced registry:
+  /** A per-request single-database view over the database map:
     * iteration (SHOW MEASUREMENTS/SERIES/…) sees only the request
     * database's bare names, while `get` additionally resolves
     * `rp.m` / `db.rp.m` / `db..m` qualified spellings
@@ -746,14 +724,16 @@ final class HttpGateway(spark: SparkSession,
     override def size: Int = base.size
   }
 
+  /** Database `db`'s request view, read from one snapshot of [[dbs]];
+    * "database not found" when it is not there. */
   private def catalogFor(db: String, user: Option[Auth.User])
       : Map[String, InfluxQL.Measurement] = {
-    val cat = catalog
-    val base = sliceOf(cat, db)
-    def readable(d: String) = databases.contains(d) &&
+    val snap = dbs
+    val base = snap.getOrElse(db, sys.error(s"database not found: $db")).msts
+    def readable(d: String) = snap.contains(d) &&
       user.forall(_.authorizeDatabase(Auth.ReadPrivilege, d))
     def rpOk(d: String, rp: String) =
-      rp.isEmpty || retention.getOrElse(d, Map.empty).contains(rp)
+      rp.isEmpty || snap.get(d).exists(_.rps.contains(rp))
     new CatalogView(base, name => {
       // at most db.rp.<rest> — the measurement itself may carry dots
       // (`db0.rp0."SmartServer.serverkits_mem_monitor"`)
@@ -769,7 +749,7 @@ final class HttpGateway(spark: SparkSession,
         base.get(parts(1)) // rp.m within the request database
       } else if (parts.length == 3 && readable(parts(0))) {
         rpCheck(parts(0), parts(1))
-        sliceOf(cat, parts(0)).get(parts(2)) // db.rp.m / db..m
+        snap(parts(0)).msts.get(parts(2)) // db.rp.m / db..m
       } else None
     })
   }
@@ -785,15 +765,6 @@ final class HttpGateway(spark: SparkSession,
     if (timeCol != "time" && cols.contains(timeCol))
       cols.filterNot(_ == "time")
     else cols
-
-  /** `cat` with the single-database slice `before` of `db` mutated to
-    * `after`, written back through the prefix. */
-  private def withSlice(cat: Map[String, InfluxQL.Measurement], db: String,
-                        before: Map[String, InfluxQL.Measurement],
-                        after: Map[String, InfluxQL.Measurement])
-      : Map[String, InfluxQL.Measurement] =
-    (cat -- (before.keySet -- after.keySet).map(dbKey(db, _))) ++
-      after.map { case (k, m) => dbKey(db, k) -> m }
 
   /** DML (DELETE / DROP SERIES / DROP MEASUREMENT / DROP SHARD) changed
     * some measurement frames — propagate to every cache layer that
@@ -831,20 +802,21 @@ final class HttpGateway(spark: SparkSession,
     * frame ∪ its stored tiers, and its prom metric / metric store twin
     * when its dir is marked so (at boot, and after a fold or a
     * hierarchical sweep swapped the files under the live entry). */
-  private def restoreEntry(key: String): Unit =
-    store.flatMap(_.restore(key, logStores.contains(key))).foreach { s =>
-      catalog = catalog + (key -> (init.get(key) match {
+  private def restoreEntry(db: String, name: String): Unit = {
+    val isLog = dbs.get(db).exists(_.logStores(name))
+    store.flatMap(_.restore(db, name, isLog)).foreach { s =>
+      val initial = if (db == defaultDb) init.get(name) else None
+      setMsts(db, mstsOf(db) + (name -> (initial match {
         case Some(prev) => InfluxQL.Measurement(
           prev.df.unionByName(s.df, allowMissingColumns = true),
           (prev.tags ++ s.tags).distinct, prev.time)
         case None => InfluxQL.Measurement(s.df, s.tags, "ts",
           extentMs = s.extentMs)
-      }))
-      // promCat is a single namespace: a (rare) namespaced prom
-      // measurement re-registers under its bare metric name
-      val promName = key.substring(key.indexOf('\u0000') + 1)
+      })))
+      // promCat is a single namespace: a (rare) prom measurement of
+      // another database re-registers under its bare metric name
       if (s.kinds(Store.Prom))
-        promCat = promCat + (promName -> (prom.get(promName) match {
+        promCat = promCat + (name -> (prom.get(name) match {
           case Some(prev) => prev.copy(
             df = prev.df.unionByName(s.df, allowMissingColumns = true),
             labels = (prev.labels ++ s.tags).distinct, extentMs = None)
@@ -852,37 +824,24 @@ final class HttpGateway(spark: SparkSession,
         }))
       if (s.kinds(Store.PromStore))
         promStores = promStores +
-          (promName -> PromQL.Metric(s.df, s.tags, "ts", "value"))
+          (name -> PromQL.Metric(s.df, s.tags, "ts", "value"))
     }
+  }
 
-  /** The database a catalog key belongs to. */
-  private def dbOf(key: String): String =
-    if (key.contains('\u0000')) key.substring(0, key.indexOf('\u0000'))
-    else defaultDb
-
-  /** Drop database `db` (DROP DATABASE, and the repository route): the
-    * database, its policies, its measurements' catalog entries,
-    * log-store registrations, prom twins and persisted dirs, all picked
-    * by [[dbOf]], its CQs, streams, subscriptions, downsample policies
-    * and measurement schemas, and its DML journal lines, so neither the
-    * running gateway nor a restart serves any of them, and a database
-    * re-created under the same name starts empty. Callers hold
+  /** Drop database `db` (DROP DATABASE, and the repository route): its
+    * record goes — policies, measurements, log stores, CQs, streams,
+    * subscriptions, downsample policies, schemas, write extents — and
+    * with it its prom twins, persisted dirs and DML journal lines, so
+    * neither the running gateway nor a restart serves any of them, and a
+    * database re-created under the same name starts empty. Callers hold
     * `synchronized` and commit `_databases.txt` after. */
   private def dropDb(db: String): Unit = {
-    databases = databases - db
-    retention = retention - db
-    val before = sliceOf(catalog, db)
-    catalog = catalog.filterNot(e => dbOf(e._1) == db)
-    logStores = logStores.filterNot(dbOf(_) == db)
+    val before = mstsOf(db)
+    dbs = dbs - db
     propagateDml(db, before, Map.empty)
-    store.foreach(st => st.keys.filter(dbOf(_) == db).foreach(st.delete))
+    store.foreach(st => st.measurements.collect { case (`db`, n) => n }
+      .foreach(st.delete(db, _)))
     persistLogStores()
-    cqRegistry = cqRegistry.filterNot(_._1._1 == db)
-    streamRegistry = streamRegistry.filterNot(_._1._1 == db)
-    subRegistry = subRegistry.filterNot(_._1._1 == db)
-    dsRegistry = dsRegistry.filterNot(_._1._1 == db)
-    dsMarks = dsMarks.filterNot(_._1._1 == db)
-    mstSchemas = mstSchemas.filterNot(_._1._1 == db)
     persistDdl()
     commitMeta("_dml.txt", metaLines("_dml.txt").filterNot(l =>
       scala.util.Try(dec(l.takeWhile(_ != '\t'))).toOption.contains(db))
@@ -916,12 +875,11 @@ final class HttpGateway(spark: SparkSession,
   // the database set and the logstream (log-store measurement)
   // registry persist beside the data (meta store durability)
   private def persistLogStores(): Unit =
-    commitMeta("_logstreams.txt",
-      logStores.toSeq.sorted.map(enc(_) + "\n").mkString)
+    store.foreach(_.commitLogStreams(
+      for ((db, d) <- dbs; n <- d.logStores) yield (db, n)))
   private def persistDatabases(): Unit =
-    commitMeta("_databases.txt", databases.toSeq.sorted.map { d =>
-      val rps = retention.getOrElse(d, Retention.autogen).toSeq
-        .sortBy(_._1).map { case (n, rp) =>
+    commitMeta("_databases.txt", dbs.toSeq.sortBy(_._1).map { case (d, x) =>
+      val rps = x.rps.toSeq.sortBy(_._1).map { case (n, rp) =>
           s"${enc(n)}=${rp.durationS},${rp.shardGroupS},${rp.replicaN}," +
             s"${rp.default},${rp.hotS},${rp.warmS}"
         }.mkString(";")
@@ -945,21 +903,26 @@ final class HttpGateway(spark: SparkSession,
     }
     // defaultDb always survives a reload: the constructor-injected
     // catalog lives there
-    databases = parsed.map(_._1).toSet + defaultDb
     if (parsed.exists(_._1 == defaultDb)) defaultDbTouched = true
-    retention = parsed.toMap
-      .updated(defaultDb, parsed.toMap.getOrElse(defaultDb,
-        Retention.autogen))
+    dbs = dbs ++ parsed.map { case (d, rps) =>
+      d -> dbs.getOrElse(d, Db()).copy(rps = rps) }
   }
-  // logstream registry loads BEFORE the measurement scan: the scan's
-  // read-time point-dedup decision needs to know which dirs are logs
-  logStores = metaLines("_logstreams.txt").map(dec).toSet
-  store.foreach(_.keys.foreach { key =>
-    // namespaced keys re-register their database even if the
-    // database file predates multi-db support
-    databases = databases + dbOf(key)
-    restoreEntry(key)
-  })
+  store.foreach { st =>
+    // a database with a persisted measurement or log stream is back
+    // even when the database file predates multi-db support
+    def known(db: String): Unit =
+      if (!dbs.contains(db)) dbs = dbs + (db -> Db())
+    // log stores load BEFORE the measurement scan: the scan's read-time
+    // point-dedup decision needs to know which dirs are logs
+    st.logStreams.foreach { case (db, n) =>
+      known(db)
+      updDb(db)(d => d.copy(logStores = d.logStores + n))
+    }
+    st.measurements.foreach { case (db, n) => known(db); restoreEntry(db, n) }
+    // a log stream nobody wrote to has no dir: it comes back empty
+    for ((db, d) <- dbs; n <- d.logStores if !d.msts.contains(n))
+      setMsts(db, mstsOf(db) + (n -> emptyLogStream))
+  }
   // Replay the DDL journal AFTER databases/RPs and measurement data
   // loaded: validation sees restored state, and a declared measurement
   // that also has persisted data keeps its data frame (registerMst only
@@ -1002,46 +965,48 @@ final class HttpGateway(spark: SparkSession,
   // path's parquet [[graft.sources.Compaction]]. Guarded by the same
   // `synchronized` the write paths already hold.
   private val CompactEvery = 32
-  private val unionDepth = scala.collection.mutable.Map.empty[String, Int]
-  private def maybeCompact(key: String, df: DataFrame): DataFrame = {
-    val d = unionDepth.getOrElse(key, 0) + 1
-    if (d >= CompactEvery) {
-      unionDepth(key) = 0
-      df.localCheckpoint(true)
-    } else { unionDepth(key) = d; df }
+  private def maybeCompact(db: String, lineage: String,
+                           df: DataFrame): DataFrame = {
+    val d = dbs.get(db).flatMap(_.depths.get(lineage)).getOrElse(0) + 1
+    val full = d >= CompactEvery
+    updDb(db)(x =>
+      x.copy(depths = x.depths + (lineage -> (if (full) 0 else d))))
+    if (full) df.localCheckpoint(true) else df
   }
 
-  /** The one write path: persist `batch` (time column `ts`) under
-    * `key`, then grow the live entry — a point-merge when `pointMerge`
-    * (the batch overlaps the known extent), else a union — and, for the
-    * prom kinds, the metric or metric-store twin. Callers hold
-    * `synchronized`. */
-  private def append(key: String, batch: DataFrame, tagKeys: Seq[String],
-                     kind: Store.Kind = Store.Plain,
+  /** The one write path: persist `batch` (time column `ts`) as
+    * measurement `name` of database `db`, then grow the live entry — a
+    * point-merge when `pointMerge` (the batch overlaps the known
+    * extent), else a union — and, for the prom kinds, the metric or
+    * metric-store twin. Callers hold `synchronized`. */
+  private def append(db: String, name: String, batch: DataFrame,
+                     tagKeys: Seq[String], kind: Store.Kind = Store.Plain,
                      pointMerge: Boolean = false): Unit = {
-    store.foreach(_.append(key, batch, tagKeys, kind))
-    catalog = catalog + (key -> (catalog.get(key) match {
+    dbNamed(db)
+    store.foreach(_.append(db, name, batch, tagKeys, kind))
+    val grown = mstsOf(db).get(name) match {
       case Some(prev) =>
         val tags = (prev.tags ++ tagKeys).distinct
-        InfluxQL.Measurement(maybeCompact(key,
+        InfluxQL.Measurement(maybeCompact(db, name,
           if (pointMerge) HttpGateway.mergePoints(prev.df, batch, tags)
           else prev.df.unionByName(batch, allowMissingColumns = true)),
           tags, prev.time)
       case None => InfluxQL.Measurement(batch, tagKeys, "ts")
-    }))
-    // prom writes land in the default database only, so `key` is the
-    // bare metric / store name
+    }
+    setMsts(db, mstsOf(db) + (name -> grown))
+    // prom writes land in the default database only, so `name` is the
+    // metric / store name
     def grow(twins: Map[String, PromQL.Metric], lineage: String) =
-      twins + (key -> (twins.get(key) match {
+      twins + (name -> (twins.get(name) match {
         case Some(prev) => prev.copy(
-          df = maybeCompact(lineage,
+          df = maybeCompact(db, lineage,
             prev.df.unionByName(batch, allowMissingColumns = true)),
           labels = (prev.labels ++ tagKeys).distinct, extentMs = None)
         case None => PromQL.Metric(batch, tagKeys, "ts", "value")
       }))
     kind match {
-      case Store.Prom => promCat = grow(promCat, s"prom:$key")
-      case Store.PromStore => promStores = grow(promStores, s"promstore:$key")
+      case Store.Prom => promCat = grow(promCat, s"prom:$name")
+      case Store.PromStore => promStores = grow(promStores, s"promstore:$name")
       case _ =>
     }
   }
@@ -1625,7 +1590,7 @@ final class HttpGateway(spark: SparkSession,
   def startKafkaConsume(port: Int = 0): Int = {
     if (kafka != null) kafka.stop() // re-start replaces, never leaks
     kafka = new KafkaConsume(sql => {
-      val cat = sliceOf(catalog, defaultDb)
+      val cat = mstsOf(defaultDb)
       val out = InfluxQL.execute(cat, sql)
       // Tag columns come from the QUERY'S OWN measurement(s) — the
       // reference derives TagAux from the fetched measurement
@@ -1648,8 +1613,9 @@ final class HttpGateway(spark: SparkSession,
     kafka.start(port)
   }
 
-  /** Current measurement catalog (grows via /write and SELECT INTO). */
-  def measurements: Map[String, InfluxQL.Measurement] = catalog
+  /** The default database's measurements (grow via /write and SELECT
+    * INTO). */
+  def measurements: Map[String, InfluxQL.Measurement] = mstsOf(defaultDb)
 
   /** (cached samples served, gap evaluations run) — results cache. */
   def resultsCacheStats: (Long, Long) = resultsCache.stats
@@ -1946,29 +1912,7 @@ final class HttpGateway(spark: SparkSession,
       // /*+ full_series */ …`) stay — the engine reads them off the
       // statement text (Query.hints) and the lexer skips them for
       // parsing. Quote-aware (a literal "/*" is content, not a comment).
-      val bound = {
-        val noPlain = new StringBuilder
-        var i = 0; var quote: Char = 0
-        while (i < bound0.length) {
-          val c = bound0.charAt(i)
-          if (quote != 0) {
-            noPlain.append(c)
-            if (c == '\\' && i + 1 < bound0.length) {
-              noPlain.append(bound0.charAt(i + 1)); i += 1
-            } else if (c == quote) quote = 0
-            i += 1
-          } else if (c == '\'' || c == '"') {
-            quote = c; noPlain.append(c); i += 1
-          } else if (c == '/' && i + 1 < bound0.length &&
-              bound0.charAt(i + 1) == '*' &&
-              !(i + 2 < bound0.length && bound0.charAt(i + 2) == '+')) {
-            val end = bound0.indexOf("*/", i + 2)
-            noPlain.append(' ')
-            i = if (end < 0) bound0.length else end + 2
-          } else { noPlain.append(c); i += 1 }
-        }
-        noPlain.toString
-      }
+      val bound = InfluxQL.stripComments(bound0, keepHints = true)
       // no epoch param → the reference's default RFC3339 rendering
       val epoch = p.getOrElse("epoch", "rfc3339")
       val statements = splitStatements(bound)
@@ -1988,11 +1932,7 @@ final class HttpGateway(spark: SparkSession,
       // database; existence is checked per data statement, so
       // CREATE DATABASE / user statements still run against a fresh name
       val reqDb = p.get("db").filter(_.nonEmpty).getOrElse(defaultDb)
-      def reqCat(db: String = reqDb) = {
-        if (!databases.contains(db))
-          sys.error(s"database not found: $db")
-        catalogFor(db, principal)
-      }
+      def reqCat(db: String = reqDb) = catalogFor(db, principal)
       // `SHOW … ON <db>` scopes to THAT database (parser.go
       // parseShowMeasurementsStatement etc.) — the ON clause wins over
       // the request's db param, like the reference's statement rewrite
@@ -2005,7 +1945,10 @@ final class HttpGateway(spark: SparkSession,
       }
       try {
 
-      def resultObj(stmt: String, id: Int): String =
+      /** Statement `stmt`'s result object; a data statement's reply
+        * frame renders through `data`. */
+      def resultObj(stmt: String, id: Int)(data: DataReply => String)
+          : String =
         if (stmt.trim.toLowerCase.startsWith("show queries")) {
           // the live registry, not the library's empty frame
           // (statement_executor.go:2127 column set incl. host)
@@ -2044,7 +1987,7 @@ final class HttpGateway(spark: SparkSession,
           // database lists only once it holds anything or was created
           // explicitly — a fresh server shows none (DefaultDBAndRP exp
           // lists db0 alone).
-          val listed = databases.toSeq.sorted
+          val listed = dbs.keys.toSeq.sorted
             .filter(db => db != defaultDb || defaultDbTouched)
           if (stmt.trim.toLowerCase.contains("detail"))
             // SHOW DATABASES DETAIL: ReplicaN + tag-attribute columns
@@ -2142,20 +2085,18 @@ final class HttpGateway(spark: SparkSession,
                     case _ => 0L
                   }
               }
-              if (databases.contains(name) && withDurS.isDefined) {
-                val existing = retention.getOrElse(name, Retention.autogen)
-                  .values.find(_.default)
+              if (dbs.contains(name) && withDurS.isDefined) {
+                val existing = dbs(name).rps.values.find(_.default)
                 if (!existing.exists(_.durationS == withDurS.get))
                   throw new InfluxQL.StatementError(
                     "retention policy conflicts with an existing policy")
               }
-              databases = databases + name
               if (name == defaultDb) defaultDbTouched = true
-              if (!retention.contains(name)) {
+              if (!dbs.contains(name)) {
                 val rp0 = Retention.autogen.head._2
                   .copy(durationS = withDurS.getOrElse(0L))
-                retention = retention +
-                  (name -> Map(named.getOrElse("autogen") -> rp0))
+                dbs = dbs +
+                  (name -> Db(rps = Map(named.getOrElse("autogen") -> rp0)))
               }
             } else dropDb(name)
             persistDatabases()
@@ -2163,7 +2104,7 @@ final class HttpGateway(spark: SparkSession,
           s"""{"statement_id":$id}"""
         } else if (Retention.isRpStatement(stmt)) {
           val st = Retention.parse(stmt)
-          if (!databases.contains(st.db)) {
+          if (!dbs.contains(st.db)) {
             // DROP on a missing database is a silent no-op; CREATE/ALTER
             // carry the error INSIDE the result
             // (RetentionPolicyCommands goldens)
@@ -2172,7 +2113,9 @@ final class HttpGateway(spark: SparkSession,
               s"database not found: ${st.db}")
           }
           synchronized {
-            val rps = retention.getOrElse(st.db, Retention.autogen)
+            val rps = dbNamed(st.db).rps
+            def setRps(to: Map[String, Retention.Rp]): Unit =
+              updDb(st.db)(_.copy(rps = to))
             st.verb match {
               case "create" =>
                 if (st.rp == "." || st.rp == ".." || st.rp.contains("/"))
@@ -2200,7 +2143,7 @@ final class HttpGateway(spark: SparkSession,
                 }
                 val cleared = if (st.default)
                   rps.view.mapValues(_.copy(default = false)).toMap else rps
-                retention = retention + (st.db -> (cleared + (st.rp -> rp)))
+                setRps(cleared + (st.rp -> rp))
               case "alter" =>
                 val prev = rps.getOrElse(st.rp,
                   sys.error(s"retention policy not found: ${st.rp}"))
@@ -2215,27 +2158,23 @@ final class HttpGateway(spark: SparkSession,
                   warmS = st.warmS.getOrElse(prev.warmS))
                 val cleared = if (st.default)
                   rps.view.mapValues(_.copy(default = false)).toMap else rps
-                retention = retention + (st.db -> (cleared + (st.rp -> rp)))
+                setRps(cleared + (st.rp -> rp))
               case "drop" =>
                 // dropping the default policy is allowed (the reference
                 // drops it and the database keeps no default —
                 // RetentionPolicyCommands "drop rp0" golden); a missing
                 // policy is a silent no-op like a missing database
-                if (rps.contains(st.rp))
-                  retention = retention + (st.db -> (rps - st.rp))
+                if (rps.contains(st.rp)) setRps(rps - st.rp)
               case v => sys.error(s"unsupported retention verb $v")
             }
             persistDatabases()
           }
           s"""{"statement_id":$id}"""
         } else if (stmt.trim.toLowerCase.startsWith("show retention")) {
-          val db = showDb(stmt)
-          if (!databases.contains(db))
-            sys.error(s"database not found: $db")
           // full reference column set (meta/data.go:2061) — hot/warm
           // are the hierarchical tier bounds; index duration is meta
           // the engine does not organize by (0s)
-          val rows = retention.getOrElse(db, Retention.autogen).toSeq
+          val rows = dbNamed(showDb(stmt)).rps.toSeq
             .sortBy(_._1).map { case (n, rp) => Seq[Any](n,
               Retention.renderDuration(rp.durationS),
               Retention.renderDuration(rp.shardGroupS),
@@ -2263,14 +2202,13 @@ final class HttpGateway(spark: SparkSession,
           val db = if (toks.length >= 6 && toks(4).equalsIgnoreCase("on"))
             toks(5) else reqDb
           synchronized {
-            cqRegistry = cqRegistry - ((db, name)); persistDdl()
+            updDb(db)(x => x.copy(cqs = x.cqs - name)); persistDdl()
           }
           s"""{"statement_id":$id}"""
         } else if ("(?is)^\\s*show\\s+continuous\\s+queries\\s*$".r
             .matches(stmt.trim)) {
-          val rows = cqRegistry.toSeq
-            .collect { case ((db, name), e) if db == reqDb =>
-              Seq[Any](name, e.text) }
+          val rows = dbs.get(reqDb).toSeq.flatMap(_.cqs)
+            .map { case (name, e) => Seq[Any](name, e.text) }
             .sortBy(_.head.toString)
           ResultShaper.toResultObj(
             gatewayRowsDf(Seq("name", "query"), rows),
@@ -2282,21 +2220,21 @@ final class HttpGateway(spark: SparkSession,
           val (dbOpt, _, name, key, tpe) = MeasurementDDL.parseAlter(stmt)
           val db = dbOpt.getOrElse(reqDb)
           synchronized {
-            val sc = mstSchemas.getOrElse((db, name),
-              if (sliceOf(catalog, db).contains(name))
+            val sc = dbs.get(db).flatMap(_.schemas.get(name)).getOrElse(
+              if (mstsOf(db).contains(name))
                 MeasurementDDL.Schema(Some(db), None, name, Nil, Nil,
                   Nil, "hash", "tsstore", Nil, Nil, Nil)
               else sys.error(s"measurement not found: $name"))
-            mstSchemas = mstSchemas +
-              ((db, name) -> sc.copy(shardKey = key, shardType = tpe))
+            updDb(db)(x => x.copy(schemas =
+              x.schemas + (name -> sc.copy(shardKey = key, shardType = tpe))))
             persistDdl()
           }
           s"""{"statement_id":$id}"""
         } else if (MeasurementDDL.isShowKeys(stmt)) {
           val (kind, dbOpt, _, name) = MeasurementDDL.parseShowKeys(stmt)
           val db = dbOpt.getOrElse(reqDb)
-          val sc = mstSchemas.getOrElse((db, name),
-            sys.error("measurement not found"))
+          val sc = dbs.get(db).flatMap(_.schemas.get(name))
+            .getOrElse(sys.error("measurement not found"))
           val colstoreOnly = Set("primarykey", "sortkey", "property",
             "compact")
           if (colstoreOnly(kind) && sc.engineType != "columnstore")
@@ -2359,9 +2297,9 @@ final class HttpGateway(spark: SparkSession,
           val rp = pop() match { case InfluxQL.TIdent(n) => n
             case InfluxQL.TStr(n) => n; case t => sys.error(s"bad rp: $t") }
           synchronized {
-            if (!subRegistry.contains((db, rp, name)))
+            if (!dbs.get(db).exists(_.subs.contains((rp, name))))
               sys.error(s"subscription not found: $name")
-            subRegistry = subRegistry - ((db, rp, name))
+            updDb(db)(x => x.copy(subs = x.subs - ((rp, name))))
             persistDdl()
           }
           s"""{"statement_id":$id}"""
@@ -2372,7 +2310,7 @@ final class HttpGateway(spark: SparkSession,
             "shard_group", "start_time", "end_time", "expiry_time",
             "owners", "tier", "downSample_level")
           val nowTier = System.currentTimeMillis()
-          val series = databases.toSeq.sorted.flatMap { db =>
+          val series = dbs.keys.toSeq.sorted.flatMap { db =>
             val rows = shardGroupsOf(db).map { case (rp, g, s0, e0, x0) =>
               Seq[Any](g, db, rp, g, rfc3339(s0), rfc3339(e0),
                 rfc3339(x0), "0", tierOf(db, e0, nowTier), 0L) }
@@ -2389,7 +2327,7 @@ final class HttpGateway(spark: SparkSession,
           // meta/data.go:2015: one series "shard groups", all databases
           val cols = Seq("id", "database", "retention_policy",
             "start_time", "end_time", "expiry_time")
-          val rows = databases.toSeq.sorted.flatMap { db =>
+          val rows = dbs.keys.toSeq.sorted.flatMap { db =>
             shardGroupsOf(db).map { case (rp, g, s0, e0, x0) =>
               Seq[Any](g, db, rp, rfc3339(s0), rfc3339(e0), rfc3339(x0)) }
           }
@@ -2400,19 +2338,19 @@ final class HttpGateway(spark: SparkSession,
           // database (ids are per-db group indexes, not a global counter)
           val sid = stmt.trim.split("\\s+")(2).toLong
           synchronized {
-            val before = sliceOf(catalog, reqDb)
+            val before = mstsOf(reqDb)
             if (!dropShardData(reqDb, sid))
               sys.error(s"shard not found: $sid")
             journalDml(reqDb, stmt.trim, System.currentTimeMillis())
-            propagateDml(reqDb, before, sliceOf(catalog, reqDb))
+            propagateDml(reqDb, before, mstsOf(reqDb))
           }
           s"""{"statement_id":$id}"""
         } else if ("(?is)^\\s*show\\s+subscriptions\\b.*".r.matches(stmt)) {
           // one series per database (meta SHOW SUBSCRIPTIONS shape);
           // the gateway's single-db request view renders reqDb's series
           val cols = Seq("retention_policy", "name", "mode", "destinations")
-          val rows = subRegistry.toSeq
-            .collect { case ((d, rp, name), s) if d == reqDb =>
+          val rows = dbs.get(reqDb).toSeq.flatMap(_.subs)
+            .map { case ((rp, name), s) =>
               Seq[Any](rp, name, s.mode, s.destinations) }
             .sortBy(r => (r.head.toString, r(1).toString))
           ResultShaper.toResultObj(gatewayRowsDf(cols, rows),
@@ -2430,9 +2368,9 @@ final class HttpGateway(spark: SparkSession,
             case _ => sys.error("expected stream name")
           }
           synchronized {
-            if (!streamRegistry.contains((reqDb, name)))
+            if (!dbs.get(reqDb).exists(_.streams.contains(name)))
               sys.error(s"stream not found: $name")
-            streamRegistry = streamRegistry - ((reqDb, name))
+            updDb(reqDb)(x => x.copy(streams = x.streams - name))
             persistDdl()
           }
           s"""{"statement_id":$id}"""
@@ -2442,11 +2380,11 @@ final class HttpGateway(spark: SparkSession,
           val cols = Seq("database", "retention", "measurement", "Name",
             "source measurement", "dimensions", "calls", "interval",
             "delay", "condition")
-          val rows = streamRegistry.toSeq
-            .collect { case ((d, name), e) if d == db =>
+          val rows = dbs.get(db).toSeq.flatMap(_.streams)
+            .map { case (name, e) =>
               val st = e.stmt
-              Seq[Any](d, "autogen", st.target, name,
-                s"$d.autogen.${st.from}",
+              Seq[Any](db, "autogen", st.target, name,
+                s"$db.autogen.${st.from}",
                 st.tags.mkString(","),
                 st.calls.map { case (fn, f) => s"$fn($f)" }.mkString(","),
                 Retention.renderDuration(st.intervalNs / 1000000000L),
@@ -2464,15 +2402,15 @@ final class HttpGateway(spark: SparkSession,
             if (toks(1).equalsIgnoreCase("downsamples")) {
               // DROP DOWNSAMPLES [ON db]
               val db = if (toks.length >= 4) toks(3) else reqDb
-              dsRegistry = dsRegistry.filterNot(_._1._1 == db)
+              updDb(db)(_.copy(downsamples = Map.empty))
             } else {
               // DROP DOWNSAMPLE ON [db.]rp
               val (db, rp) =
                 if (toks.length >= 5) (toks(3), toks(4))
                 else (reqDb, toks(3))
-              if (!dsRegistry.contains((db, rp)))
+              if (!dbs.get(db).exists(_.downsamples.contains(rp)))
                 sys.error(s"downsample policy not found on $db.$rp")
-              dsRegistry = dsRegistry - ((db, rp))
+              updDb(db)(x => x.copy(downsamples = x.downsamples - rp))
             }
             persistDdl()
           }
@@ -2482,8 +2420,8 @@ final class HttpGateway(spark: SparkSession,
           // meta/data.go:3827 ShowDownSamplePolicies column set
           val cols = Seq("rpName", "field_operator", "duration",
             "sampleInterval", "timeInterval")
-          val rows = dsRegistry.toSeq
-            .collect { case ((d, rp), p) if d == db =>
+          val rows = dbs.get(db).toSeq.flatMap(_.downsamples)
+            .map { case (rp, p) =>
               Seq[Any](rp, p.fieldOperator,
                 Retention.renderDuration(p.durationS),
                 p.sampleS.map(Retention.renderDuration).mkString(","),
@@ -2572,11 +2510,11 @@ final class HttpGateway(spark: SparkSession,
             "grant ", "revoke ", "set ")
             .exists(stmt.trim.toLowerCase.startsWith)) {
           synchronized {
-            val before = sliceOf(catalog, reqDb)
+            val before = mstsOf(reqDb)
             val nowMs = System.currentTimeMillis()
             val after = Map.empty ++
               InfluxQL.executeManage(reqCat(), stmt, nowMs)
-            catalog = withSlice(catalog, reqDb, before, after)
+            setMsts(reqDb, after)
             // journal only statements that actually changed data — the
             // accepted-no-op meta statements (CREATE DATABASE, GRANT …)
             // return the catalog's own entries untouched
@@ -2590,11 +2528,14 @@ final class HttpGateway(spark: SparkSession,
           s"""{"statement_id":$id}"""
         } else if ("(?is).*\\bINTO\\b.*".r.matches(stmt) &&
             stmt.trim.toLowerCase.startsWith("select")) {
-          val before = sliceOf(catalog, reqDb)
-          val (cat2, df) = InfluxQL.executeInto(reqCat(), stmt)
+          val cat = reqCat()
+          val (cat2, df) = InfluxQL.executeInto(cat, stmt)
           val written = df.count()
+          // only the INTO target changed; writes that landed meanwhile
+          // in other measurements stay
           synchronized {
-            catalog = withSlice(catalog, reqDb, before, Map.empty ++ cat2)
+            setMsts(reqDb, mstsOf(reqDb) ++ cat2.filter { case (k, m) =>
+              !cat.get(k).exists(_ eq m) })
           }
           s"""{"statement_id":$id,"series":[{"name":"result","columns":["time","written"],"values":[[0,$written]]}]}"""
         } else {
@@ -2615,63 +2556,66 @@ final class HttpGateway(spark: SparkSession,
           val valueCols = HttpGateway.shapedValueCols(
             df.columns.toIndexedSeq.filterNot(nameCol.contains),
             tags.filterNot(alsoCols.contains))
-          // non-chunked responses are bounded by http.max-row-limit
-          // (config.go:37) — over-limit series are truncated and marked
-          // partial; use chunked=true to stream past the limit
-          ResultShaper.toResultObj(df, name, tags, valueCols, epoch, id,
-            maxRowLimit, timeNs = timeNs, seriesDesc = desc,
-            nameCol = nameCol,
-            pruneNullCols = "(?is).*/\\*\\+\\s*filter_null_column\\s*\\*/.*"
-              .r.matches(stmt))
+          data(DataReply(df, name, tags, valueCols, timeNs, desc, nameCol,
+            "(?is).*/\\*\\+\\s*filter_null_column\\s*\\*/.*".r.matches(stmt)))
         }
 
-      if (p.get("chunked").contains("true")) {
-        // chunked emission is per-series-batch within ONE statement
-        require(statements.size == 1,
-          "chunked=true supports a single statement")
-        val (name, tags, df0, desc) =
-          InfluxQL.executeShapedOrd(reqCat(), statements.head)
-        val (df, timeNs) = HttpGateway.edgeTime(df0)
-        val alsoCols = InfluxQL.alsoColumnTags(reqCat(), statements.head)
-          .filter(df.columns.contains).toSet
-        val valueCols = HttpGateway.shapedValueCols(
-          df.columns.toIndexedSeq, tags.filterNot(alsoCols.contains))
-        val n = p.get("chunk_size").map(_.toInt).getOrElse(10000)
-        // stream chunk documents as they come off toLocalIterator —
-        // driver heap stays bounded by one partition + one chunk no
-        // matter how many rows the statement returns (the reference's
-        // httpsender streams the same way); chunked responses are
-        // exempt from max-row-limit like the reference's
-        val lines = ResultShaper.streamSeriesJsonChunked(
-          df, name, tags, valueCols, n, epoch, timeNs = timeNs,
-          seriesDesc = desc)
-        if (rq.status == "killed")
-          sys.error(s"query ${rq.qid} was killed")
+      // statement-level errors land INSIDE the statement's result
+      // object with a 200 (the reference's compile-error contract, e.g.
+      // "mixing aggregate and non-aggregate queries" —
+      // tests/server_test.go:5401); parse and transport errors still 400
+      // at the request level below
+      def answer(stmt: String, id: Int)(data: DataReply => String): String =
+        try resultObj(stmt, id)(data)
+        catch { case e: InfluxQL.StatementError =>
+          s"""{"statement_id":$id,"error":${jsonStr(e.getMessage)}}"""
+        }
+
+      val chunked = p.get("chunked").contains("true")
+      val lines: Iterator[String] =
+        if (chunked) {
+          // chunked emission is per-series-batch within ONE statement
+          require(statements.size == 1,
+            "chunked=true supports a single statement")
+          val n = p.get("chunk_size").map(_.toInt).getOrElse(10000)
+          // a data statement streams chunk documents as they come off
+          // toLocalIterator — driver heap stays bounded by one partition
+          // + one chunk no matter how many rows the statement returns
+          // (the reference's httpsender streams the same way), exempt
+          // from max-row-limit like the reference's; a statement the
+          // gateway answers itself is one chunk
+          var streamed: Option[Iterator[String]] = None
+          val obj = answer(statements.head, 0) { r =>
+            streamed = Some(ResultShaper.streamSeriesJsonChunked(
+              r.df, r.name, r.tags, r.valueCols, n, epoch,
+              timeNs = r.timeNs, seriesDesc = r.desc, nameCol = r.nameCol))
+            ""
+          }
+          streamed.getOrElse(Iterator(s"""{"results":[$obj]}"""))
+        } else {
+          val objs = statements.zipWithIndex.map { case (s, i) =>
+            // non-chunked responses are bounded by http.max-row-limit
+            // (config.go:37) — over-limit series are truncated and marked
+            // partial; use chunked=true to stream past the limit
+            answer(s, i)(r => ResultShaper.toResultObj(r.df, r.name, r.tags,
+              r.valueCols, epoch, i, maxRowLimit, timeNs = r.timeNs,
+              seriesDesc = r.desc, nameCol = r.nameCol,
+              pruneNullCols = r.pruneNullCols))
+          }
+          Iterator(s"""{"results":[${objs.mkString(",")}]}""")
+        }
+      // a KILL that landed before this query's job was submitted cancels
+      // nothing (cancelJobGroup hits active jobs only) — the killed flag
+      // closes that window: results are discarded
+      if (rq.status == "killed")
+        sys.error(s"query ${rq.qid} was killed")
+      if (chunked) {
         ex.getResponseHeaders.set("Content-Type", "application/json")
         ex.sendResponseHeaders(200, 0)
         val os = ex.getResponseBody
         try lines.foreach { l => os.write(l.getBytes(UTF_8)); os.write('\n') }
         finally { os.close(); ex.close() }
-      } else {
-        val objs = statements.zipWithIndex
-          .map { case (s, i) =>
-            // statement-level errors land INSIDE the statement's result
-            // object with a 200 (the reference's compile-error contract,
-            // e.g. "mixing aggregate and non-aggregate queries" —
-            // tests/server_test.go:5401); parse and transport errors
-            // still 400 at the request level below
-            try resultObj(s, i)
-            catch { case e: InfluxQL.StatementError =>
-              s"""{"statement_id":$i,"error":${jsonStr(e.getMessage)}}"""
-            }
-          }
-        // a KILL that landed before this query's job was submitted
-        // cancels nothing (cancelJobGroup hits active jobs only) — the
-        // killed flag closes that window: results are discarded
-        if (rq.status == "killed")
-          sys.error(s"query ${rq.qid} was killed")
-        respond(ex, 200, s"""{"results":[${objs.mkString(",")}]}""")
-      }
+      } else respond(ex, 200, lines.next())
 
       } finally detachQuery(rq)
     } catch {
@@ -2682,6 +2626,12 @@ final class HttpGateway(spark: SparkSession,
           s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
         catch { case _: Throwable => ex.close() }
     }
+
+  /** A data statement's reply frame as the HTTP edge shapes it. */
+  private case class DataReply(df: DataFrame, name: String, tags: Seq[String],
+                               valueCols: Seq[String], timeNs: Boolean,
+                               desc: Boolean, nameCol: Option[String],
+                               pruneNullCols: Boolean)
 
   // ------------------------------------------------------------- /write
   private val TimeUnset = Long.MinValue
@@ -2793,10 +2743,10 @@ final class HttpGateway(spark: SparkSession,
           ps.flatMap(_.intFields.keys).distinct.sorted,
           ps.flatMap(_.boolFields.keys).distinct.sorted,
           ps.flatMap(_.stringFields.keys).distinct.sorted)
-        val key = dbKey(wdb, m)
+        val d = dbNamed(wdb)
         // log stores (logkeeper logstreams) append: same-ns rows are
         // distinct log records, never one point
-        val doMerge = mergeSameTime && !logStores.contains(key) &&
+        val doMerge = mergeSameTime && !d.logStores(m) &&
           !noMergeMsts.contains(m)
         if (doMerge) {
           // intra-batch LWW resolved once; the persisted batch is the
@@ -2814,24 +2764,25 @@ final class HttpGateway(spark: SparkSession,
           // LSM compaction merging only overlapping shard groups).
           // Unknown extent (e.g. an init-catalog frame) merges — the
           // safe direction.
-          val known: Option[(Long, Long)] = extentSeenNs.get(key)
-            .orElse(catalog.get(key).flatMap(_.extentMs).map {
+          val known: Option[(Long, Long)] = d.extents.get(m)
+            .orElse(d.msts.get(m).flatMap(_.extentMs).map {
               case (a, b) => (a * 1000000L, (b + 1) * 1000000L) })
           val overlaps = known.forall { case (sLo, sHi) =>
             lo <= sHi && hi >= sLo }
-          known match {
+          val seen = known match {
             case Some((sLo, sHi)) =>
-              extentSeenNs(key) = (math.min(sLo, lo), math.max(sHi, hi))
-            case None if !catalog.contains(key) =>
-              // fresh measurement: every point came from writes, so the
-              // tracked window IS the full extent
-              extentSeenNs(key) = (lo, hi)
-            case None => () // unknown-extent frame present: stay
+              Some((math.min(sLo, lo), math.max(sHi, hi)))
+            // fresh measurement: every point came from writes, so the
+            // tracked window IS the full extent
+            case None if !d.msts.contains(m) => Some((lo, hi))
+            case None => None // unknown-extent frame present: stay
               // unknown — every write keeps merging (safe direction);
               // a too-small "known" extent would skip a needed merge
           }
-          append(key, mtbl, tagKeys, Store.Points, pointMerge = overlaps)
-        } else append(key, tbl, tagKeys)
+          seen.foreach(e =>
+            updDb(wdb)(x => x.copy(extents = x.extents + (m -> e))))
+          append(wdb, m, mtbl, tagKeys, Store.Points, pointMerge = overlaps)
+        } else append(wdb, m, tbl, tagKeys)
       }
     }
     stats.pointsWrittenOK.addAndGet(pts.size)
@@ -2844,7 +2795,7 @@ final class HttpGateway(spark: SparkSession,
   private def writeDb(ex: HttpExchange,
                       p: Map[String, String]): Option[String] = {
     val wdb = p.get("db").filter(_.nonEmpty).getOrElse(defaultDb)
-    if (!databases.contains(wdb)) {
+    if (!dbs.contains(wdb)) {
       respond(ex, 404, s"""{"error":${jsonStr(
         "write error: database not found!")}}""")
       None
@@ -2867,7 +2818,7 @@ final class HttpGateway(spark: SparkSession,
       val mst = p.getOrElse("mst", sys.error("missing measurement (mst)"))
       val (df, tagKeys) = graft.sources.ArrowIngest.decode(
         spark, ex.getRequestBody.readAllBytes())
-      synchronized { append(dbKey(wdb, mst), df, tagKeys) }
+      synchronized { append(wdb, mst, df, tagKeys) }
       respond(ex, 200, s"""{"rows":${df.count()}}""")
     } catch {
       case e: Throwable =>
@@ -2894,8 +2845,6 @@ final class HttpGateway(spark: SparkSession,
           msg => respond(ex, 403, s"""{"error":${jsonStr(msg)}}"""); return
         }
       }
-      if (!databases.contains(reqDb))
-        sys.error(s"database not found: $reqDb")
       val (_, _, df) = InfluxQL.executeShaped(
         catalogFor(reqDb, principal), q)
       ex.getResponseHeaders.set("Content-Type",
@@ -2931,7 +2880,7 @@ final class HttpGateway(spark: SparkSession,
       val (df, tagKeys) =
         PromRemoteWrite.toStoreMeasurement(spark, series, store)
       synchronized {
-        append(dbKey(defaultDb, store), df, tagKeys, Store.PromStore)
+        append(defaultDb, store, df, tagKeys, Store.PromStore)
       }
       resultsCache.invalidateAll()
       partialErr match {
@@ -2969,7 +2918,7 @@ final class HttpGateway(spark: SparkSession,
           case (metric, (df, tagKeys)) =>
             // the prom query surface is one namespace = the default
             // database; other dbs' series stay InfluxQL-queryable only
-            append(dbKey(wdb, metric), df, tagKeys,
+            append(wdb, metric, df, tagKeys,
               if (wdb == defaultDb) Store.Prom else Store.Plain)
         }
       }
@@ -3001,7 +2950,7 @@ final class HttpGateway(spark: SparkSession,
       val bs = batches(ex.getRequestBody.readAllBytes())
       synchronized {
         bs.foreach { case (m, (df, tagKeys)) =>
-          append(dbKey(wdb, m), df, tagKeys) }
+          append(wdb, m, df, tagKeys) }
       }
       ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
       ex.sendResponseHeaders(200, -1); ex.close()
@@ -3056,7 +3005,7 @@ final class HttpGateway(spark: SparkSession,
               sys.error(s"remote read exceeds max-row-limit ($maxRowLimit); " +
                 "narrow the time range or matchers")
             rows.groupBy(r => mt.labels.map(l => r.getAs[String](l)))
-              .toSeq.sortBy(_._1.mkString("\u0000"))
+              .toSeq.sortBy(_._1)(Ordering.Implicits.seqOrdering)
               .map { case (lv, rs) =>
                 val labels = mt.labels.zip(lv).filter(_._2.nonEmpty).toMap +
                   (PromRemoteWrite.MetricLabel -> name)
@@ -3132,23 +3081,20 @@ final class HttpGateway(spark: SparkSession,
         case ("GET", None) =>
           if (guard(ex, p, Auth.ReadPrivilege, "read from").isEmpty) return
           respond(ex, 200,
-            databases.toSeq.sorted.map(jsonStr).mkString("[", ",", "]"))
+            dbs.keys.toSeq.sorted.map(jsonStr).mkString("[", ",", "]"))
         case ("POST", Some(r)) =>
           if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-          require(!r.startsWith("_") && !r.contains('\u0000'),
-            s"invalid repository name: $r")
+          require(Store.persistableDb(r), s"invalid repository name: $r")
           synchronized {
-            if (databases.contains(r)) sys.error("repository already exists")
-            databases = databases + r
-            if (!retention.contains(r))
-              retention = retention + (r -> Retention.autogen)
+            if (dbs.contains(r)) sys.error("repository already exists")
+            dbs = dbs + (r -> Db())
             persistDatabases()
           }
           respond(ex, 200, "{}")
         case ("DELETE", Some(r)) =>
           if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
           synchronized {
-            if (!databases.contains(r)) sys.error("repository not found")
+            if (!dbs.contains(r)) sys.error("repository not found")
             dropDb(r)
             persistDatabases()
           }
@@ -3159,6 +3105,22 @@ final class HttpGateway(spark: SparkSession,
       case e: Throwable => respond(ex, 400,
         s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
     }
+
+  private def repoNamed(repo: String): Db =
+    dbs.getOrElse(repo, sys.error("repository not found"))
+
+  /** Logstream `stream` of repository `repo`, or the route's error. */
+  private def logStream(repo: String, stream: String): InfluxQL.Measurement =
+    repoNamed(repo).msts.getOrElse(stream, sys.error("logstream not found"))
+
+  /** A logstream before its first write: the ingest time axis only. */
+  private def emptyLogStream: InfluxQL.Measurement = {
+    import org.apache.spark.sql.types._
+    InfluxQL.Measurement(spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      StructType(Seq(StructField("time", LongType),
+        StructField("ts", TimestampType)))), Nil, "ts")
+  }
 
   /** Logkeeper logstream CRUD (`handler_logstore.go:351+`): a logstream
     * IS a measurement of its repository. Ingest/query ride the normal
@@ -3174,34 +3136,25 @@ final class HttpGateway(spark: SparkSession,
       (ex.getRequestMethod.toUpperCase, two, one) match {
         case ("GET", None, Some(repo)) =>
           if (guard(ex, p, Auth.ReadPrivilege, "read from").isEmpty) return
-          if (!databases.contains(repo)) sys.error("repository not found")
-          respond(ex, 200, sliceOf(catalog, repo).keys.toSeq.sorted
+          respond(ex, 200, repoNamed(repo).msts.keys.toSeq.sorted
             .map(jsonStr).mkString("[", ",", "]"))
         case ("POST", Some((repo, stream)), _) =>
           if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-          if (!databases.contains(repo)) sys.error("repository not found")
           synchronized {
-            if (sliceOf(catalog, repo).contains(stream))
+            if (repoNamed(repo).msts.contains(stream))
               sys.error("logstream already exists")
-            import org.apache.spark.sql.types._
-            val empty = spark.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              StructType(Seq(StructField("time", LongType),
-                StructField("ts", TimestampType))))
-            catalog = catalog +
-              (dbKey(repo, stream) -> InfluxQL.Measurement(empty, Nil, "ts"))
-            logStores = logStores + dbKey(repo, stream)
+            updDb(repo)(d => d.copy(msts = d.msts + (stream -> emptyLogStream),
+              logStores = d.logStores + stream))
             persistLogStores()
           }
           respond(ex, 200, "{}")
         case ("DELETE", Some((repo, stream)), _) =>
           if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
           synchronized {
-            if (!sliceOf(catalog, repo).contains(stream))
-              sys.error("logstream not found")
-            catalog = catalog - dbKey(repo, stream)
-            logStores = logStores - dbKey(repo, stream)
-            store.foreach(_.delete(dbKey(repo, stream)))
+            logStream(repo, stream)
+            updDb(repo)(d => d.copy(msts = d.msts - stream,
+              logStores = d.logStores - stream))
+            store.foreach(_.delete(repo, stream))
             persistLogStores()
           }
           respond(ex, 200, "{}")
@@ -3252,9 +3205,7 @@ final class HttpGateway(spark: SparkSession,
       val (repo, stream, action) = (m0.group(1), m0.group(2), m0.group(3))
       val p = params(ex, readBody = true) + ("db" -> repo)
       if (guard(ex, p, Auth.ReadPrivilege, "read from").isEmpty) return
-      if (!databases.contains(repo)) sys.error("repository not found")
-      val meas = sliceOf(catalog, repo).getOrElse(stream,
-        sys.error("logstream not found"))
+      val meas = logStream(repo, stream)
       val fromMs = p.get("from").filter(_.nonEmpty).map(_.toLong)
         .getOrElse(0L)
       val toMs = p.get("to").filter(_.nonEmpty).map(_.toLong)
@@ -3421,9 +3372,7 @@ final class HttpGateway(spark: SparkSession,
     if (ex.getRequestMethod != "POST") {
       respond(ex, 405, "{\"error\":\"invalid method\"}"); return
     }
-    if (!databases.contains(repo)) sys.error("repository not found")
-    if (!sliceOf(catalog, repo).contains(stream))
-      sys.error("logstream not found")
+    logStream(repo, stream)
     if (action == "recalldata") { respond(ex, 200, ""); return }
     val rawBody = ex.getRequestBody.readAllBytes()
     val body =
@@ -3527,9 +3476,7 @@ final class HttpGateway(spark: SparkSession,
                                      taskId: Option[String]): Unit = {
     val p = params(ex, readBody = false) + ("db" -> repo)
     if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-    if (!databases.contains(repo)) sys.error("repository not found")
-    if (!sliceOf(catalog, repo).contains(stream))
-      sys.error("logstream not found")
+    logStream(repo, stream)
     (ex.getRequestMethod, taskId) match {
       case ("POST", None) =>
         val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
@@ -3561,9 +3508,9 @@ final class HttpGateway(spark: SparkSession,
           s""""repo":${jsonStr(repo)},"logStream":${jsonStr(view)}}""")
       case ("DELETE", Some(id)) =>
         synchronized {
-          if (!streamRegistry.contains((repo, id)))
+          if (!dbs.get(repo).exists(_.streams.contains(id)))
             sys.error(s"stream task not found: $id")
-          streamRegistry = streamRegistry - ((repo, id))
+          updDb(repo)(x => x.copy(streams = x.streams - id))
           persistDdl()
         }
         respond(ex, 200, "{}")
@@ -3591,9 +3538,7 @@ final class HttpGateway(spark: SparkSession,
     if (action == "logbycursor" || action.startsWith("cursor")) {
       respond(ex, 200, ""); return
     }
-    if (!databases.contains(repo)) sys.error("repository not found")
-    val meas = sliceOf(catalog, repo).getOrElse(stream,
-      sys.error("logstream not found"))
+    val meas = logStream(repo, stream)
     import org.apache.spark.sql.functions._
     def tookMs = (System.nanoTime() - t0) / 1000000L
     def jnum(l: Long) = l.toString
@@ -3991,6 +3936,9 @@ final class HttpGateway(spark: SparkSession,
 }
 
 object HttpGateway {
+  /** The database a request without `db` reads and writes. */
+  val DefaultDb = "graft"
+
   /** A statement's frame with its `time` column as the HTTP edge renders
     * it (epoch=/RFC3339), and whether that axis is epoch ns. The engine's
     * `time` output is epoch ms (LONG) — or the exact epoch-ns `__tns`

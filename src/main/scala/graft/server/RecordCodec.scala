@@ -274,7 +274,8 @@ object RecordCodec {
 
     val grouped = rows.groupBy(r =>
       tagNames.map(t => Option(r.get(idx(t))).map(_.toString).getOrElse("")))
-    grouped.toSeq.sortBy(_._1.mkString("\u0000")).map { case (tagVals, rs) =>
+    val bySeries = grouped.toSeq.sortBy(_._1)(Ordering.Implicits.seqOrdering)
+    bySeries.map { case (tagVals, rs) =>
       val tags = tagNames.zip(tagVals).map { case (k, v) => Tag(k, v) }
       val colVals = outCols.map { c =>
         val cv = new ColVal

@@ -14,35 +14,47 @@ import graft.sources.{AtomicFiles, ParquetStats}
   * one sink the same way, SIGMOD 2018):
   *
   * {{{
-  *   <root>/<urlenc(key)>/day=YYYY-MM-DD/part-….parquet  hot tier
-  *   <root>/<urlenc(key)>/_tags.txt                  tag keys, one a line
-  *   <root>/<urlenc(key)>/_pts        batches point-merged, `__wseq`-stamped
-  *   <root>/<urlenc(key)>/_prom       also a PromQL metric (remote write)
-  *   <root>/<urlenc(key)>/_promstore  a prom metric store
-  *   <root>/_cold/<urlenc(key)>/day=…                cold tier
+  *   <root>/<dir(db, m)>/day=YYYY-MM-DD/part-….parquet  hot tier
+  *   <root>/<dir(db, m)>/_tags.txt                  tag keys, one a line
+  *   <root>/<dir(db, m)>/_pts        batches point-merged, `__wseq`-stamped
+  *   <root>/<dir(db, m)>/_prom       also a PromQL metric (remote write)
+  *   <root>/<dir(db, m)>/_promstore  a prom metric store
+  *   <root>/_cold/<dir(db, m)>/day=…                cold tier
+  *   <root>/_logstreams.txt   the log-store measurements, `dir(db, m)` a line
   * }}}
   *
-  * `key` is the gateway's catalog key (`db\u0000name` outside the
-  * default database). Day partitions are the reference's shard groups:
+  * A measurement is addressed by its database and bare name. Its
+  * persisted name `dir(db, m)` is `urlenc(m)` in the default database
+  * and `urlenc(db + NUL + m)` elsewhere; only this file builds or splits
+  * that name. Day partitions are the reference's shard groups:
   * Catalyst prunes them and [[graft.sources.Compaction]] merges their
   * small files. Names starting with `_` are invisible to Spark's file
   * listing, so the sidecars and the `_cold` root never read as data;
-  * the gateway's own meta files (`_databases.txt`, `_ddl.txt`, …) sit
+  * the gateway's other meta files (`_databases.txt`, `_ddl.txt`, …) sit
   * beside the measurement dirs. */
 final class Store(spark: SparkSession, root: String) {
   import Store._
 
   private val base = Files.createDirectories(Paths.get(root))
-  private def hot(key: String): Path =
-    base.resolve(URLEncoder.encode(key, "UTF-8"))
-  private def cold(key: String): Path =
-    base.resolve(ColdDir).resolve(hot(key).getFileName)
+  private def hot(db: String, name: String): Path =
+    base.resolve(URLEncoder.encode(persistedName(db, name), "UTF-8"))
+  private def cold(db: String, name: String): Path =
+    base.resolve(ColdDir).resolve(hot(db, name).getFileName)
 
-  /** Keys of every persisted measurement (one hot dir each). */
-  def keys: Seq[String] =
+  /** (database, name) of every persisted measurement (one hot dir each). */
+  def measurements: Seq[(String, String)] =
     list(base).filter(p => Files.isDirectory(p) &&
         !p.getFileName.toString.startsWith("_"))
-      .map(p => URLDecoder.decode(p.getFileName.toString, "UTF-8"))
+      .map(p => splitName(URLDecoder.decode(p.getFileName.toString, "UTF-8")))
+
+  /** (database, name) of every log-store measurement. */
+  def logStreams: Seq[(String, String)] =
+    metaLines(LogStreamsFile).map(l => splitName(URLDecoder.decode(l, "UTF-8")))
+
+  /** Replace the log-store list with `all`, crash-safely. */
+  def commitLogStreams(all: Iterable[(String, String)]): Unit =
+    commitMeta(LogStreamsFile, all.map { case (db, n) => persistedName(db, n) }
+      .toSeq.sorted.map(URLEncoder.encode(_, "UTF-8") + "\n").mkString)
 
   /** Meta file `name` (`_ddl.txt`, `_users.tsv`, …) beside the
     * measurement dirs, when present. */
@@ -63,12 +75,12 @@ final class Store(spark: SparkSession, root: String) {
   private val wseqGen =
     new java.util.concurrent.atomic.AtomicLong(System.currentTimeMillis())
 
-  /** Append one batch (time column `ts`) to `key`'s hot tier, day-
-    * partitioned, and record its tag keys and `kind` marker. A
+  /** Append one batch (time column `ts`) to the measurement's hot tier,
+    * day-partitioned, and record its tag keys and `kind` marker. A
     * [[Points]] batch carries the `__wseq` stamp [[restore]] dedups by. */
-  def append(key: String, df: DataFrame, tagKeys: Seq[String],
+  def append(db: String, name: String, df: DataFrame, tagKeys: Seq[String],
              kind: Kind = Plain): Unit = {
-    val dir = hot(key)
+    val dir = hot(db, name)
     val stamped =
       if (kind == Points)
         df.withColumn(Wseq, lit(wseqGen.updateAndGet(v =>
@@ -89,9 +101,9 @@ final class Store(spark: SparkSession, root: String) {
     * `__wseq` kept. A tier with no parquet is skipped — a hierarchical
     * sweep can move every day cold, leaving only the sidecars hot.
     * None when neither tier holds data. */
-  def read(key: String): Option[Stored] = {
-    val dir = hot(key)
-    Seq(dir, cold(key)).filter(hasParquet)
+  def read(db: String, name: String): Option[Stored] = {
+    val dir = hot(db, name)
+    Seq(dir, cold(db, name)).filter(hasParquet)
       .map(p => spark.read.option("mergeSchema", "true").parquet(p.toString))
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
       .map(df => Stored(df, tagsIn(dir),
@@ -99,12 +111,12 @@ final class Store(spark: SparkSession, root: String) {
   }
 
   /** [[read]] as a restart registers it: `day` dropped; batches of a
-    * [[Points]] dir deduplicated by their `__wseq` stamp unless the key
-    * is a log store (same-ns log rows are distinct records), else the
-    * stamp dropped; the time extent from the parquet footers when the
+    * [[Points]] dir deduplicated by their `__wseq` stamp unless it is a
+    * log store (same-ns log rows are distinct records), else the stamp
+    * dropped; the time extent from the parquet footers when the
     * data is one tier. */
-  def restore(key: String, isLog: Boolean): Option[Stored] =
-    read(key).map { s =>
+  def restore(db: String, name: String, isLog: Boolean): Option[Stored] =
+    read(db, name).map { s =>
       val raw = s.df.drop("day")
       val df =
         if (s.kinds(Points) && !isLog) dedupPersisted(raw, s.tags)
@@ -116,29 +128,29 @@ final class Store(spark: SparkSession, root: String) {
       s.copy(df = df, extentMs = ext)
     }
 
-  /** Delete `key`'s hot and cold dirs. Whether it had a hot dir. */
-  def delete(key: String): Boolean = {
-    val had = Files.exists(hot(key))
-    AtomicFiles.deleteTree(hot(key))
-    AtomicFiles.deleteTree(cold(key))
+  /** Delete the measurement's hot and cold dirs; whether it had a hot. */
+  def delete(db: String, name: String): Boolean = {
+    val had = Files.exists(hot(db, name))
+    AtomicFiles.deleteTree(hot(db, name))
+    AtomicFiles.deleteTree(cold(db, name))
     had
   }
 
-  /** Replace `key`'s data with `df` (a [[read]] frame, `day` kept) in
-    * one directory swap; the sidecars carry over and the cold tier is
+  /** Replace the measurement's data with `df` (a [[read]] frame, `day`
+    * kept) in one directory swap; the sidecars carry over and the cold tier is
     * dropped, its rows now being in `df`. Reads lazily from the old
     * files while writing the new. */
-  def rewrite(key: String, df: DataFrame): Unit = {
-    AtomicFiles.swapDir(hot(key).toString, "fold") { tmp =>
+  def rewrite(db: String, name: String, df: DataFrame): Unit = {
+    AtomicFiles.swapDir(hot(db, name).toString, "fold") { tmp =>
       df.write.mode("overwrite").partitionBy("day").parquet(tmp)
     }
-    AtomicFiles.deleteTree(cold(key))
+    AtomicFiles.deleteTree(cold(db, name))
   }
 
-  /** Move `key`'s day partitions strictly before `cutoffDay`
+  /** Move the measurement's day partitions strictly before `cutoffDay`
     * (`YYYY-MM-DD`) from the hot to the cold tier. Returns how many. */
-  def moveCold(key: String, cutoffDay: String): Int = {
-    val dir = hot(key)
+  def moveCold(db: String, name: String, cutoffDay: String): Int = {
+    val dir = hot(db, name)
     val days =
       if (!Files.isDirectory(dir)) Nil
       else list(dir).filter { e =>
@@ -147,7 +159,7 @@ final class Store(spark: SparkSession, root: String) {
           n.substring(4) < cutoffDay
       }
     if (days.nonEmpty) {
-      val coldBase = Files.createDirectories(cold(key))
+      val coldBase = Files.createDirectories(cold(db, name))
       days.foreach { dp =>
         val target = coldBase.resolve(dp.getFileName)
         if (Files.exists(target)) {
@@ -178,7 +190,22 @@ object Store {
   final case class Stored(df: DataFrame, tags: Seq[String], kinds: Set[Kind],
                           extentMs: Option[(Long, Long)] = None)
 
+  /** Whether a database named `db` can persist: its measurements' dir
+    * names must not start with `_` (hidden from listing) and its name
+    * must split back off them. */
+  def persistableDb(db: String): Boolean =
+    db.nonEmpty && !db.startsWith("_") && !db.contains(Sep)
+
+  private val Sep = '\u0000'
+  private def persistedName(db: String, name: String): String =
+    if (db == HttpGateway.DefaultDb) name else s"$db$Sep$name"
+  private def splitName(p: String): (String, String) = p.indexOf(Sep) match {
+    case -1 => (HttpGateway.DefaultDb, p)
+    case i => (p.substring(0, i), p.substring(i + 1))
+  }
+
   private val ColdDir = "_cold"
+  private val LogStreamsFile = "_logstreams.txt"
   private val TagsFile = "_tags.txt"
   private val Wseq = "__wseq"
 

@@ -164,43 +164,46 @@ object ResultShaper {
     * measurement. Series are ordered by their stringified tag values;
     * rows within a series keep plan order (the monotonic row-id
     * tiebreaker makes the contiguity sort stable). Tag-less results
-    * skip the sort entirely — their plan order IS the emission order. */
+    * skip the sort entirely — their plan order IS the emission order.
+    * `nameCol` names each row's series like [[toResultObj]]'s. */
   def streamSeriesJsonChunked(df: DataFrame, name: String,
                               tagCols: Seq[String], valueCols: Seq[String],
                               chunkSize: Int,
                               epoch: String = "ms",
                               timeNs: Boolean = false,
-                              seriesDesc: Boolean = false)
+                              seriesDesc: Boolean = false,
+                              nameCol: Option[String] = None)
       : Iterator[String] = {
     import scala.jdk.CollectionConverters._
+    val keyCols = nameCol.toSeq ++ tagCols
     val projected =
-      if (tagCols.isEmpty) df.select(valueCols.map(qcol): _*)
+      if (keyCols.isEmpty) df.select(valueCols.map(qcol): _*)
       else {
-        val key = array(tagCols.map(c =>
+        val key = array(keyCols.map(c =>
           coalesce(col(c).cast("string"), lit(""))): _*)
         df.withColumn("__row", monotonically_increasing_id())
           .orderBy(if (seriesDesc) key.desc else key.asc, col("__row").asc)
-          .select((tagCols ++ valueCols).map(qcol): _*)
+          .select((keyCols ++ valueCols).map(qcol): _*)
       }
     val rows = projected.toLocalIterator().asScala.buffered
+    def keyOf(r: Row) = keyCols.map(r.getAs[Any])
     new Iterator[String] {
       def hasNext: Boolean = rows.hasNext
       def next(): String = {
-        val key = tagCols.map(t => rows.head.getAs[Any](t))
+        val key = keyOf(rows.head)
         val chunk = Vector.newBuilder[Row]
         var n = 0
-        while (n < chunkSize && rows.hasNext &&
-            tagCols.map(t => rows.head.getAs[Any](t)) == key) {
+        while (n < chunkSize && rows.hasNext && keyOf(rows.head) == key) {
           chunk += rows.next(); n += 1
         }
         // series-level partial iff the SAME series continues in the
         // next chunk; RESULT-level partial iff ANY chunk follows
         // (response_writer.go emits both markers —
         // Query_By_Chunked golden docs)
-        val partial = rows.hasNext &&
-          tagCols.map(t => rows.head.getAs[Any](t)) == key
-        seriesDoc(name, tagCols, key, valueCols, chunk.result(),
-          epoch, partial, timeNs, resultPartial = rows.hasNext)
+        val partial = rows.hasNext && keyOf(rows.head) == key
+        seriesDoc(nameCol.fold(name)(_ => String.valueOf(key.head)), tagCols,
+          key.drop(nameCol.size), valueCols, chunk.result(), epoch, partial,
+          timeNs, resultPartial = rows.hasNext)
       }
     }
   }

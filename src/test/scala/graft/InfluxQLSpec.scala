@@ -280,16 +280,22 @@ class InfluxQLSpec extends SparkSpec {
   }
 
   test("hint stripping is quote-aware") {
-    // a literal containing "/*+ … */" is content, not a hint
-    val s = "SELECT value FROM cpu WHERE msg = 'a /*+ x */ b'"
-    assert(InfluxQL.stripComments(s, plusOnly = true) == s)
+    // keepHints: a hint is kept, a plain comment is stripped, a quoted
+    // "/* x */" is content, an unterminated comment strips to the end
+    def keep(s: String) = InfluxQL.stripComments(s, keepHints = true)
+    assert(keep("SELECT /*+ f */ value FROM cpu") ==
+      "SELECT /*+ f */ value FROM cpu")
+    assert(keep("SHOW /* c */ MEASUREMENTS") == "SHOW   MEASUREMENTS")
+    val quoted = "SELECT value FROM cpu WHERE msg = 'a /* x */ b'"
+    assert(keep(quoted) == quoted)
+    assert(keep("SELECT value FROM cpu /* open") == "SELECT value FROM cpu  ")
+    // strip-all: hints go too (the SHOW path and the parser)
     assert(!InfluxQL.stripComments("SELECT /*+ f */ value FROM cpu",
-      plusOnly = true).contains("/*"))
-    // plusOnly leaves plain comments; the SHOW path strips both
-    assert(InfluxQL.stripComments("SHOW /* c */ MEASUREMENTS",
-      plusOnly = true).contains("/* c */"))
+      keepHints = false).contains("/*"))
     assert(!InfluxQL.stripComments("SHOW /* c */ MEASUREMENTS",
-      plusOnly = false).contains("/*"))
+      keepHints = false).contains("/*"))
+    val quotedHint = "SELECT value FROM cpu WHERE msg = 'a /*+ x */ b'"
+    assert(InfluxQL.stripComments(quotedHint, keepHints = false) == quotedHint)
   }
 
   test("scalar string functions through the text frontend") {

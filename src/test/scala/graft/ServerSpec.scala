@@ -93,6 +93,48 @@ class ServerSpec extends SparkSpec {
     r.body().split('\n').foreach(l => JsonMethods.parse(l))
   }
 
+  test("chunked /query answers through the gateway's statement dispatch: " +
+      "the same series as the non-chunked reply") {
+    val g = new HttpGateway(spark, Map("events" -> InfluxQL.Measurement(
+      events, tags = Seq("event_type"))), Map.empty)
+    g.start()
+    def ask(q: String, chunked: Boolean) = {
+      val r = call(g, "GET", s"/query?q=${enc(q)}&epoch=ms" +
+        (if (chunked) "&chunked=true&chunk_size=2" else ""))
+      assert(r.statusCode() == 200, r.body())
+      r.body()
+    }
+    // (name, tags, columns) -> values, consecutive chunks of one series
+    // merged
+    def series(body: String): Vector[(Seq[JValue], List[JValue])] =
+      body.split('\n').filter(_.nonEmpty).toVector.flatMap { doc =>
+        val JArray(res) = JsonMethods.parse(doc) \ "results"
+        res.head \ "series" match {
+          case JArray(ss) => ss.map(s =>
+            (Seq(s \ "name", s \ "tags", s \ "columns"),
+              (s \ "values").asInstanceOf[JArray].arr))
+          case _ => Nil
+        }
+      }.foldLeft(Vector.empty[(Seq[JValue], List[JValue])]) {
+        case (acc :+ ((k, vs)), (k2, vs2)) if k == k2 => acc :+ ((k, vs ++ vs2))
+        case (acc, s) => acc :+ s
+      }
+    try {
+      assert(call(g, "GET", "/query?q=" + enc("CREATE DATABASE d2"))
+        .statusCode() == 200)
+      lp(g, "d2", "m2x,h=a v=1 1000\nm2y,k=b w=2 1000")
+      Seq("SHOW DATABASES", "SHOW MEASUREMENTS ON d2", "SHOW TAG KEYS ON d2",
+        "SELECT count(value) FROM events GROUP BY time(7d), event_type")
+        .foreach { q =>
+          val whole = series(ask(q, chunked = false))
+          assert(whole.nonEmpty, q)
+          assert(series(ask(q, chunked = true)) == whole, q)
+        }
+      assert(ask("SHOW DATABASES", chunked = true).contains("\"d2\""))
+      assert(ask("SHOW MEASUREMENTS ON d2", chunked = true).contains("m2x"))
+    } finally g.stop()
+  }
+
   test("repeated /api/v1/query_range hits the results cache byte-identically") {
     val q = enc("sum(events)")
     val path = s"/api/v1/query_range?query=$q&start=1704067200" +
@@ -2454,6 +2496,34 @@ class ServerSpec extends SparkSpec {
     } finally g2.stop()
   }
 
+  test("a persist dir in the per-database key layout restores: " +
+      "measurement dirs, database list, logstream list, DDL journal") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_layout").toString
+    def enc0(s: String) = URLEncoder.encode(s, UTF_8)
+    // measurement `m` of database `d`: dir urlenc("d" NUL "m")
+    val mdir = Paths.get(dir, enc0("d\u0000m"))
+    graft.server.Store.appendDays(spark.range(2).select(
+      timestamp_millis(col("id") * 1000L + 1000L).as("ts"),
+      lit("a").as("h"), col("id").cast("double").as("v")), mdir.toString)
+    Files.write(mdir.resolve("_tags.txt"), "h".getBytes(UTF_8))
+    Files.write(Paths.get(dir, "_databases.txt"), "d".getBytes(UTF_8))
+    // logstream `s` of repository `r`, which no other file names
+    Files.write(Paths.get(dir, "_logstreams.txt"),
+      (enc0("r\u0000s") + "\n").getBytes(UTF_8))
+    Files.write(Paths.get(dir, "_ddl.txt"), ("cq\td\t-\t" + enc0(
+      "CREATE CONTINUOUS QUERY lcq ON d BEGIN SELECT mean(v) INTO t " +
+        "FROM m GROUP BY time(10s) END")).getBytes(UTF_8))
+    val g = persisted(dir)
+    try {
+      val q = iql(g, "SELECT count(v) FROM m", db = "d").body()
+      assert(q.contains(",2]"), q)
+      assert(call(g, "GET", "/api/v1/logstream/r").body() == "[\"s\"]")
+      val cqs = iql(g, "SHOW CONTINUOUS QUERIES", db = "d").body()
+      assert(cqs.contains("lcq"), cqs)
+    } finally g.stop()
+  }
+
   test("a database re-created under a dropped one's name replays none of " +
       "the old one's DML journal lines or DDL registrations") {
     val dir = java.nio.file.Files.createTempDirectory("graft_redb").toString
@@ -2461,27 +2531,51 @@ class ServerSpec extends SparkSpec {
       iql(g, "SELECT count(v) FROM m", db = "d").body()
     def cqs(g: HttpGateway) =
       iql(g, "SHOW CONTINUOUS QUERIES", db = "d").body()
+    // every per-database item the old `d` registered, read back from `g`
+    def leftovers(g: HttpGateway): Seq[(String, String)] = Seq(
+      "rpx" -> iql(g, "SHOW RETENTION POLICIES ON d").body(),
+      "dcq" -> cqs(g),
+      "dstr" -> iql(g, "SHOW STREAMS", db = "d").body(),
+      "dsub" -> iql(g, "SHOW SUBSCRIPTIONS", db = "d").body(),
+      "rpx" -> iql(g, "SHOW DOWNSAMPLES", db = "d").body(),
+      "SHARD_KEY" -> iql(g, "SHOW SHARDKEY FROM sx", db = "d").body(),
+      "ls" -> call(g, "GET", "/api/v1/logstream/d").body(),
+      "\"m2\"" -> iql(g, "SHOW MEASUREMENTS", db = "d").body()
+    ).filter { case (item, body) => body.contains(item) }
     val g1 = persisted(dir)
     val live = try {
       assert(iql(g1, "CREATE DATABASE d").statusCode() == 200)
-      lp(g1, "d", "m,h=a v=1 1000")
-      assert(iql(g1, "CREATE CONTINUOUS QUERY dcq ON d BEGIN " +
-        "SELECT mean(v) INTO t FROM m GROUP BY time(10s) END")
-        .statusCode() == 200)
-      assert(cqs(g1).contains("dcq"), cqs(g1))
+      lp(g1, "d", "m,h=a v=1 1000\nm2,h=a v=1 1000")
+      val ddl = Seq(
+        "CREATE RETENTION POLICY rpx ON d DURATION 72h REPLICATION 1",
+        "CREATE CONTINUOUS QUERY dcq ON d BEGIN " +
+          "SELECT mean(v) INTO t FROM m GROUP BY time(10s) END",
+        "CREATE STREAM 'dstr' INTO ssum ON " +
+          "SELECT sum(v) FROM m GROUP BY time(10s) DELAY 2s",
+        "CREATE SUBSCRIPTION dsub ON d.rpx DESTINATIONS ANY 'http://h:9092'",
+        "CREATE DOWNSAMPLE ON d.rpx (float(max)) WITH DURATION 72h " +
+          "SAMPLEINTERVAL(25h) TIMEINTERVAL(1m)",
+        "CREATE MEASUREMENT sx (h tag, v float64) WITH SHARDKEY h")
+      ddl.foreach { q =>
+        val r = iql(g1, q, db = "d")
+        assert(r.statusCode() == 200 && !r.body().contains("error"), r.body())
+      }
+      assert(call(g1, "POST", "/api/v1/logstream/d/ls").statusCode() == 200)
+      // every item registered: the check below sees what it looks for
+      assert(leftovers(g1).size == 8, leftovers(g1))
       assert(iql(g1, "DELETE FROM m WHERE time < 5s", db = "d")
         .statusCode() == 200)
       assert(iql(g1, "DROP DATABASE d").statusCode() == 200)
       assert(iql(g1, "CREATE DATABASE d").statusCode() == 200)
       lp(g1, "d", "m,h=a v=2 2000")
-      assert(!cqs(g1).contains("dcq"), cqs(g1))
+      assert(leftovers(g1).isEmpty, leftovers(g1))
       count(g1)
     } finally g1.stop()
     assert(live.contains("[0,1]"), live)
     val g2 = persisted(dir)
     try {
       assert(count(g2) == live)
-      assert(!cqs(g2).contains("dcq"), cqs(g2))
+      assert(leftovers(g2).isEmpty, leftovers(g2))
     } finally g2.stop()
   }
 
