@@ -163,5 +163,7 @@ object SparkEntry extends EntryQueriesA with EntryQueriesB
   private def rawQueries: Map[String, (SparkSession, String) => DataFrame] =
     rawQueriesA ++ rawQueriesB
 
-  def oracleSql: Map[String, String] = oracleSqlA ++ oracleSqlB
+  /** Oracle SQL per query, for dumps of the data dir `sfDir`. */
+  def oracleSql(sfDir: String): Map[String, String] =
+    oracleSqlA ++ oracleSqlB(sfDir)
 }

@@ -28,6 +28,13 @@ trait EntryBase {
     Tables.table(s, dir, name)
   protected def ts(lit0: String): Column = lit(lit0).cast("timestamp")
 
+  /** q132's corpus output dir for data dir `dir` — the query writes it,
+    * its oracle SQL reads it, and dumps of different data dirs keep
+    * apart. */
+  protected def q132Dir(dir: String): String =
+    "/tmp/graft_q132_corpus/" + java.nio.file.Paths.get(dir).toAbsolutePath
+      .normalize.toString.replaceAll("[^A-Za-z0-9.]+", "_")
+
   /** Total order for a BOUNDED-SMALL result without the global sort's
     * range-partition sampling job: one round-robin shuffle to a single
     * partition + in-partition sort — the q63 shape, now shared (round

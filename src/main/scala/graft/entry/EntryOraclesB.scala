@@ -10,7 +10,8 @@ import graft.pipeline.{AnomalyDetect, Dedup, Multimodal, Sampling, Similarity, T
 
 /** DuckDB oracle SQL, second half. Mechanical split of SparkEntry.scala. */
 trait EntryOraclesB extends EntryBase {
-  protected def oracleSqlB: Map[String, String] = Map(
+  /** `dir` is the data dir the queries read (q132's output path). */
+  protected def oracleSqlB(dir: String): Map[String, String] = Map(
 
     // rate() via the text frontend: q72's counter math with the -1ms
     // end-inclusive window assignment and per-(event_type,user) series.
@@ -1064,15 +1065,15 @@ trait EntryOraclesB extends EntryBase {
            max(id) AS max_id
          FROM st GROUP BY status ORDER BY status""",
 
-    "q132_corpus_manifest" ->
+    "q132_corpus_manifest" -> (
       """SELECT CAST(shard AS BIGINT) AS shard, count(*) AS n_docs,
            CAST(sum(len(regexp_split_to_array(trim(text), '\s+')))
              AS BIGINT) AS n_tokens,
            min(doc_id) AS min_id, max(doc_id) AS max_id,
            bit_xor(_h) AS checksum
-         FROM read_parquet('/tmp/graft_q132_corpus/data/*/*.parquet',
+         FROM read_parquet('""" + q132Dir(dir) + """/data/*/*.parquet',
            hive_partitioning=1)
-         GROUP BY shard ORDER BY shard"""
+         GROUP BY shard ORDER BY shard""")
   )
 
   /** Shared BM25 oracle CTE stack (mirrors Retrieval.bm25TopK's

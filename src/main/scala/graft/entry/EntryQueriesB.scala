@@ -1257,17 +1257,14 @@ trait EntryQueriesB extends EntryBase {
     // (hive-partitioned shard key; token counts re-derived from the
     // text; checksum re-folded from the shipped per-row hash column) —
     // so a wrong shard assignment, a lost row, or a corrupted manifest
-    // all hash-mismatch. Fixed output path: the oracle SQL is a static
-    // string; SaveMode.Overwrite keeps a run self-consistent.
+    // all hash-mismatch. The output path derives from the data dir
+    // (`q132Dir`), which the oracle SQL names too; SaveMode.Overwrite
+    // keeps a run self-consistent.
     "q132_corpus_manifest" -> ((s, dir) => {
       graft.pipeline.CorpusWriter.writeShards(t(s, dir, "documents"),
-        "text", "doc_id", Q132Dir, tokensPerShard = 20000L)
+        "text", "doc_id", q132Dir(dir), tokensPerShard = 20000L)
     })
   )
-
-  /** q132's corpus output dir — shared between the query and its static
-    * oracle SQL. */
-  protected val Q132Dir = "/tmp/graft_q132_corpus"
 
   /** Fixed literal keyword queries for the BM25 gate — vocabulary terms
     * of the synthetic corpus. */

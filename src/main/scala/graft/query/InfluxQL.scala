@@ -385,13 +385,80 @@ object InfluxQL {
     (ctes.map { case (n, s0, _) => (n, s0) }, q0)
   }
 
-  private class Parser(var toks: List[Tok]) {
+  /** Token cursor over [[lex]] output: the one reader of statement
+    * text. The query [[Parser]] extends it; the management, user, DDL
+    * and gateway statement parsers read through it. */
+  class Cursor(var toks: List[Tok]) {
+    def this(sql: String) = this(lex(sql))
     def peek: Tok = toks.headOption.getOrElse(TPunct("<eof>"))
+    def peek2: Tok = toks.drop(1).headOption.getOrElse(TPunct("<eof>"))
     def next(): Tok = { val t = peek; toks = toks.drop(1); t }
+    def atEnd: Boolean = toks.isEmpty
+    def end(): Unit = require(toks.isEmpty, s"trailing tokens: $toks")
+    def isKw(kw: String): Boolean = peek match {
+      case TIdent(s) => s.equalsIgnoreCase(kw)
+      case _ => false
+    }
+    /** Consume keyword `kw` when it is next. */
+    def accept(kw: String): Boolean = isKw(kw) && { next(); true }
+    def expectIdent(kw: String): Unit = next() match {
+      case TIdent(s) if s.equalsIgnoreCase(kw) =>
+      case t => sys.error(s"expected $kw, got $t")
+    }
+    /** Consume punctuation `p` when it is next. */
+    def acceptPunct(p: String): Boolean = peek == TPunct(p) && { next(); true }
+    def expect(p: String): Unit = next() match {
+      case TPunct(`p`) =>
+      case t => sys.error(s"expected '$p', got $t")
+    }
+    def op(o: String): Unit = next() match {
+      case TOp(`o`) =>
+      case t => sys.error(s"expected $o, got $t")
+    }
+    /** A bare or quoted identifier, or a string literal naming one. */
+    def ident(): String = next() match {
+      case TIdent(s) => s
+      case TStr(s) => s
+      case t => sys.error(s"expected identifier, got $t")
+    }
+    /** The next keyword, lower-cased. */
+    def word(): String = next() match {
+      case TIdent(s) => s.toLowerCase
+      case t => sys.error(s"expected keyword, got $t")
+    }
+    def str(): String = next() match {
+      case TStr(s) => s
+      case t => sys.error(s"expected string, got $t")
+    }
+    /** A duration literal in ns. */
+    def duration(): Long = next() match {
+      case TDur(ns) => ns
+      case t => sys.error(s"expected duration, got $t")
+    }
+    /** `name | rp.name | db.rp.name | db..name` → (db, rp, name). */
+    def qualified(): (Option[String], Option[String], String) = {
+      val a = ident()
+      if (!acceptPunct(".")) (None, None, a)
+      else if (acceptPunct(".")) (Some(a), None, ident())
+      else {
+        val b = ident()
+        if (acceptPunct(".")) (Some(a), Some(b), ident())
+        else (None, Some(a), b)
+      }
+    }
+    /** `a, b, …` */
+    def identList(): Seq[String] = {
+      val b = Seq.newBuilder[String]
+      b += ident()
+      while (acceptPunct(",")) b += ident()
+      b.result()
+    }
+  }
+
+  private class Parser(toks0: List[Tok]) extends Cursor(toks0) {
     // `t1.f` qualified refs collected while parsing the CURRENT query
     // (saved/restored around subquery recursion in parseQuery)
     private var qualBuf: List[(String, String)] = Nil
-    private def peek2: Tok = toks.drop(1).headOption.getOrElse(TPunct("<eof>"))
     /** Consume `.ident` after an already-consumed ident `a`, recording
       * the qualified ref; returns the dotted spelling. */
     private def qualTail(a: String): String = {
@@ -413,19 +480,6 @@ object InfluxQL {
       qualBuf ::= (a, f)
       s"$a.$f"
     }
-    def expectIdent(kw: String): Unit = next() match {
-      case TIdent(s) if s.equalsIgnoreCase(kw) =>
-      case t => sys.error(s"expected $kw, got $t")
-    }
-    def expect(p: String): Unit = next() match {
-      case TPunct(`p`) =>
-      case t => sys.error(s"expected '$p', got $t")
-    }
-    def isKw(kw: String): Boolean = peek match {
-      case TIdent(s) => s.equalsIgnoreCase(kw)
-      case _ => false
-    }
-
     /** WITH name AS (SELECT …) [, name2 AS (…)] SELECT … — reference
       * WithSelectStatement ast.go:12068 / LogicalCTE. */
     /** Trailing UNION arms; an arm may be parenthesized —
@@ -1346,22 +1400,13 @@ object InfluxQL {
                     nowMs: Long = System.currentTimeMillis())
       : Map[String, Measurement] = {
     val p = new Parser(lex(sql))
-    def ident(): String = p.next() match {
-      case TIdent(n) => n
-      case TStr(n) => n
-      case t => sys.error(s"expected identifier, got $t")
-    }
-    if (p.isKw("drop")) {
-      p.next()
-      if (p.isKw("measurement")) {
-        p.next()
-        catalog - ident()
-      } else if (p.isKw("series")) {
-        p.next(); p.expectIdent("from")
-        val name = ident()
+    if (p.accept("drop")) {
+      if (p.accept("measurement")) catalog - p.ident()
+      else if (p.accept("series")) {
+        p.expectIdent("from")
+        val name = p.ident()
         val m = catalog.getOrElse(name, sys.error(s"unknown measurement $name"))
-        if (p.isKw("where")) {
-          p.next()
+        if (p.accept("where")) {
           val w = p.parseWhereStandalone()
           val cond = manageCond(m, w, nowMs)
           // null tag never matches a predicate → its rows are kept
@@ -1376,34 +1421,29 @@ object InfluxQL {
         // fixtures with these and expect success)
         catalog
       } else sys.error("expected DROP MEASUREMENT or DROP SERIES")
-    } else if (p.isKw("create")) {
-      // CREATE DATABASE / CREATE RETENTION POLICY: accepted no-ops in
-      // the single-database model — client libraries issue them on
-      // connect and expect success
+    } else if (Seq("create", "alter", "grant", "revoke", "set")
+        .exists(p.isKw)) {
+      // CREATE DATABASE / RETENTION POLICY, ALTER RETENTION POLICY /
+      // SHARD KEY, GRANT/REVOKE [ADMIN], SET PASSWORD (ast.go Create*/
+      // Alter*/Grant*/Revoke*/SetPasswordUser): meta/auth mutations with
+      // nothing to mutate in the storage-agnostic single-database,
+      // single-user model — accepted no-ops (client libraries issue
+      // them on connect and expect success)
       catalog
-    } else if (p.isKw("alter") || p.isKw("grant") || p.isKw("revoke") ||
-        p.isKw("set")) {
-      // ALTER RETENTION POLICY / SHARD KEY, GRANT/REVOKE [ADMIN],
-      // SET PASSWORD (ast.go Alter*/Grant*/Revoke*/SetPasswordUser):
-      // meta/auth mutations with nothing to mutate in the
-      // storage-agnostic single-user model — accepted no-ops, the same
-      // contract as CREATE DATABASE above
-      catalog
-    } else if (p.isKw("kill")) {
+    } else if (p.accept("kill")) {
       // KILL QUERY <qid>: accepted no-op — there is no query registry
       // in library mode (reference: task_manager.go kills by qid)
-      p.next(); p.expectIdent("query")
+      p.expectIdent("query")
       p.next() match {
         case TNum(_, _, _) => catalog
         case t => sys.error(s"KILL QUERY expects a query id, got $t")
       }
-    } else if (p.isKw("delete")) {
-      p.next(); p.expectIdent("from")
-      val name = ident()
+    } else if (p.accept("delete")) {
+      p.expectIdent("from")
+      val name = p.ident()
       val m = catalog.getOrElse(name, sys.error(s"unknown measurement $name"))
       val kept =
-        if (p.isKw("where")) {
-          p.next()
+        if (p.accept("where")) {
           val cond = manageCond(m, p.parseWhereStandalone(), nowMs)
           m.df.filter(coalesce(!cond, lit(true)))
         } else m.df.limit(0)

@@ -6,7 +6,6 @@ import javax.crypto.SecretKeyFactory
 import javax.crypto.spec.PBEKeySpec
 import scala.collection.mutable
 import graft.query.InfluxQL
-import graft.query.InfluxQL.{TIdent, TOp, TStr, Tok}
 
 /** User catalog + per-database privilege model for the HTTP gateway —
   * the reference's meta user store and statement executors:
@@ -57,22 +56,6 @@ object Auth {
         val p = privileges.getOrElse(db, NoPrivileges)
         p == priv || p == AllPrivileges
       }
-  }
-
-  /** Statements this catalog executes (vs the measurement catalog's
-    * executeManage / executeShaped). First-two-token dispatch. */
-  def isUserStatement(sql: String): Boolean = {
-    val words = sql.trim.toLowerCase.split("\\s+")
-    words.take(2) match {
-      case Array("create", "user", _*) => true
-      case Array("drop", "user", _*) => true
-      case Array("grant", _*) => true
-      case Array("revoke", _*) => true
-      case Array("set", "password", _*) => true
-      case Array("show", "users", _*) => true
-      case Array("show", "grants", _*) => true
-      case _ => false
-    }
   }
 }
 
@@ -150,20 +133,26 @@ final class Auth {
     * SHOW forms return (series name, columns, value rows) for the
     * caller to shape. Errors throw with the reference's messages. */
   def execute(sql: String): Option[(String, Seq[String], Seq[Seq[Any]])] = {
-    val toks = InfluxQL.lex(sql)
-    val c = new Cursor(toks)
-    c.kw() match {
+    val c = new InfluxQL.Cursor(sql)
+    /** READ | WRITE | ALL [PRIVILEGES] */
+    def privilege(): Int = c.word() match {
+      case "read" => ReadPrivilege
+      case "write" => WritePrivilege
+      case "all" => c.accept("privileges"); AllPrivileges
+      case k => sys.error(s"unknown privilege $k")
+    }
+    c.word() match {
       case "create" =>
-        c.expect("user")
+        c.expectIdent("user")
         val name = c.ident()
-        c.expect("with"); c.expect("password")
+        c.expectIdent("with"); c.expectIdent("password")
         val pw = c.str()
         val admin =
           if (c.atEnd) false
           else {
             // only "WITH ALL PRIVILEGES" is legal here
             // (parser.go:2245 "create user cmd format err")
-            c.expect("with"); c.expect("all"); c.expect("privileges")
+            Seq("with", "all", "privileges").foreach(c.expectIdent)
             true
           }
         c.end()
@@ -177,7 +166,7 @@ final class Auth {
         }
         None
       case "drop" =>
-        c.expect("user")
+        c.expectIdent("user")
         val name = c.ident(); c.end()
         synchronized {
           users.get(name) match {
@@ -189,17 +178,17 @@ final class Auth {
         }
         None
       case "grant" =>
-        val priv = c.privilege()
-        if (c.peekKw("to")) {
+        val priv = privilege()
+        if (c.accept("to")) {
           // GRANT ALL [PRIVILEGES] TO user — admin grant, always
           // refused post-creation (data.go:2933 SetAdminPrivilege)
-          c.expect("to"); c.ident(); c.end()
+          c.ident(); c.end()
           sys.error("forbidden to grant or revoke privileges, because " +
             "only one admin is allowed for the database")
         }
-        c.expect("on")
+        c.expectIdent("on")
         val db = c.ident()
-        c.expect("to")
+        c.expectIdent("to")
         val name = c.ident(); c.end()
         synchronized {
           // data.go:2913 SetPrivilege: user lookup first, then the
@@ -211,15 +200,15 @@ final class Auth {
         }
         None
       case "revoke" =>
-        val priv = c.privilege()
-        if (c.peekKw("from")) {
-          c.expect("from"); c.ident(); c.end()
+        val priv = privilege()
+        if (c.accept("from")) {
+          c.ident(); c.end()
           sys.error("forbidden to grant or revoke privileges, because " +
             "only one admin is allowed for the database")
         }
-        c.expect("on")
+        c.expectIdent("on")
         val db = c.ident()
-        c.expect("from")
+        c.expectIdent("from")
         val name = c.ident(); c.end()
         synchronized {
           val u = users.getOrElse(name, sys.error("user not found"))
@@ -235,7 +224,7 @@ final class Auth {
         }
         None
       case "set" =>
-        c.expect("password"); c.expect("for")
+        c.expectIdent("password"); c.expectIdent("for")
         val name = c.ident()
         c.op("=")
         val pw = c.str(); c.end()
@@ -254,7 +243,7 @@ final class Auth {
         }
         None
       case "show" =>
-        c.kw() match {
+        c.word() match {
           case "users" =>
             c.end()
             // statement_executor.go:2120 — rwuser is a config-born
@@ -263,7 +252,7 @@ final class Auth {
               .map(u => Seq[Any](u.name, u.admin, false))
             Some(("users", Seq("user", "admin", "rwuser"), rows))
           case "grants" =>
-            c.expect("for")
+            c.expectIdent("for")
             val name = c.ident(); c.end()
             val u = synchronized(users.get(name))
               .getOrElse(sys.error("user not found"))
@@ -273,48 +262,6 @@ final class Auth {
           case k => sys.error(s"unexpected SHOW $k in user statement")
         }
       case k => sys.error(s"not a user-management statement: $k")
-    }
-  }
-
-  /** Tiny cursor over InfluxQL tokens — user statements are flat
-    * keyword sequences, no precedence needed. */
-  private final class Cursor(var toks: List[Tok]) {
-    def atEnd: Boolean = toks.isEmpty
-    def end(): Unit =
-      require(toks.isEmpty, s"trailing tokens: $toks")
-    def kw(): String = toks match {
-      case TIdent(s) :: rest => toks = rest; s.toLowerCase
-      case t => sys.error(s"expected keyword, got $t")
-    }
-    def peekKw(s: String): Boolean = toks match {
-      case TIdent(k) :: _ => k.equalsIgnoreCase(s)
-      case _ => false
-    }
-    def expect(s: String): Unit = {
-      val k = kw()
-      require(k == s, s"expected $s, got $k")
-    }
-    def ident(): String = toks match {
-      case TIdent(s) :: rest => toks = rest; s
-      case TStr(s) :: rest => toks = rest; s
-      case t => sys.error(s"expected identifier, got $t")
-    }
-    def str(): String = toks match {
-      case TStr(s) :: rest => toks = rest; s
-      case t => sys.error(s"expected string, got $t")
-    }
-    def op(s: String): Unit = toks match {
-      case TOp(o) :: rest if o == s => toks = rest
-      case t => sys.error(s"expected $s, got $t")
-    }
-    /** READ | WRITE | ALL [PRIVILEGES] */
-    def privilege(): Int = kw() match {
-      case "read" => ReadPrivilege
-      case "write" => WritePrivilege
-      case "all" =>
-        if (peekKw("privileges")) kw()
-        AllPrivileges
-      case k => sys.error(s"unknown privilege $k")
     }
   }
 }

@@ -52,7 +52,7 @@ import graft.query.InfluxQL
   * rows, strictly smaller than its input.
   */
 object DownSample {
-  import InfluxQL.{TDur, TIdent, TNum, TPunct, TStr}
+  import InfluxQL.{TDur, TNum}
 
   val supportedAggs: Set[String] =
     Set("first", "last", "min", "max", "sum", "count", "mean")
@@ -73,79 +73,52 @@ object DownSample {
       calls.find(_.tpe == tpe).map(_.ops.head)
   }
 
-  def isCreate(sql: String): Boolean =
-    "(?is)^\\s*create\\s+downsample\\b.*".r.matches(sql)
-  def isDrop(sql: String): Boolean =
-    "(?is)^\\s*drop\\s+downsamples?\\b.*".r.matches(sql)
-  def isShow(sql: String): Boolean =
-    "(?is)^\\s*show\\s+downsamples\\b.*".r.matches(sql)
-
   /** Parse CREATE DOWNSAMPLE …; validation per downsample_policy.go:239
     * happens in [[validate]] (needs the RP's shard-group duration). */
   def parseCreate(sql: String): Policy = {
-    var toks = InfluxQL.lex(sql)
-    def peek = toks.headOption.getOrElse(TPunct("<eof>"))
-    def next() = { val t = peek; toks = toks.drop(1); t }
-    def ident(): String = next() match {
-      case TIdent(s) => s
-      case TStr(s) => s
-      case t => sys.error(s"expected identifier, got $t")
-    }
-    def expectKw(kw: String): Unit = next() match {
-      case TIdent(s) if s.equalsIgnoreCase(kw) =>
-      case t => sys.error(s"expected $kw, got $t")
-    }
-    def expectP(p: String): Unit = next() match {
-      case TPunct(`p`) =>
-      case t => sys.error(s"expected '$p', got $t")
-    }
-    def durS(): Long = next() match {
+    val c = new InfluxQL.Cursor(sql)
+    def durS(): Long = c.next() match {
       case TDur(ns) => ns / 1000000000L
       case TNum(v, _, _) => v.toLong // bare number = seconds
       case t => sys.error(s"expected duration, got $t")
     }
     def durList(): Seq[Long] = {
-      expectP("(")
+      c.expect("(")
       val b = Seq.newBuilder[Long]
       b += durS()
-      while (peek == TPunct(",")) { next(); b += durS() }
-      expectP(")")
+      while (c.acceptPunct(",")) b += durS()
+      c.expect(")")
       b.result()
     }
-    expectKw("create"); expectKw("downsample")
+    c.expectIdent("create"); c.expectIdent("downsample")
     var db: Option[String] = None
     var rp: String = ""
-    if (peek match { case TIdent(s) => s.equalsIgnoreCase("on")
-                     case _ => false }) {
-      next()
-      val a = ident()
-      if (peek == TPunct(".")) { next(); db = Some(a); rp = ident() }
+    if (c.accept("on")) {
+      val a = c.ident()
+      if (c.acceptPunct(".")) { db = Some(a); rp = c.ident() }
       else rp = a
     }
-    expectP("(")
+    c.expect("(")
     val calls = Seq.newBuilder[TypeOps]
     var more = true
     while (more) {
-      val tpe = ident().toLowerCase
+      val tpe = c.ident().toLowerCase
       if (!typeNames(tpe)) sys.error(
         s"unexpected data type for downsample: $tpe")
-      expectP("(")
-      val ops = Seq.newBuilder[String]
-      ops += ident().toLowerCase
-      while (peek == TPunct(",")) { next(); ops += ident().toLowerCase }
-      expectP(")")
-      val o = ops.result()
+      c.expect("(")
+      val o = c.identList().map(_.toLowerCase)
+      c.expect(")")
       o.find(!supportedAggs(_)).foreach(op =>
         sys.error(s"unsupported downsample agg op: $op"))
       calls += TypeOps(tpe, o)
-      if (peek == TPunct(",")) { next() } else more = false
+      more = c.acceptPunct(",")
     }
-    expectP(")")
-    expectKw("with"); expectKw("duration")
+    c.expect(")")
+    c.expectIdent("with"); c.expectIdent("duration")
     val dur = durS()
-    expectKw("sampleinterval")
+    c.expectIdent("sampleinterval")
     val sample = durList()
-    expectKw("timeinterval")
+    c.expectIdent("timeinterval")
     val time = durList()
     Policy(db, rp, calls.result(), dur, sample, time)
   }

@@ -5,6 +5,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import graft.query.{InfluxQL, LogPipe, PromQL}
+import graft.streaming.StreamDDL
 import graft.sources.{LineProtocol, OtlpLogs, OtlpMetrics, OtlpTraces, PromRemoteRead, PromRemoteWrite, ResultShaper}
 
 /** Minimal HTTP serving surface over the library, mirroring the
@@ -109,13 +110,13 @@ final class HttpGateway(spark: SparkSession,
   /** A CQ (`services/continuousquery/service.go` scheduler state): the
     * parsed statement, its text (SHOW CONTINUOUS QUERIES echoes it) and
     * the last-run instant; [[runContinuousQueries]] runs it. */
-  private case class CqEntry(stmt: graft.streaming.StreamDDL.StreamStatement,
+  private case class CqEntry(stmt: StreamDDL.StreamStatement,
                              text: String, lastRunMs: Long)
 
   /** A STREAM task (`app/ts-store/stream/` window caches): unlike a CQ,
     * [[runStreams]] flushes each closed window once, APPENDING to the
     * target; the DELAY is its entire late-data budget. */
-  private case class StreamEntry(stmt: graft.streaming.StreamDDL.StreamStatement,
+  private case class StreamEntry(stmt: StreamDDL.StreamStatement,
                                  text: String, flushedUpToMs: Long)
 
   /** Everything one database owns, like the reference's DatabaseInfo
@@ -139,7 +140,7 @@ final class HttpGateway(spark: SparkSession,
       logStores: Set[String] = Set.empty,
       cqs: Map[String, CqEntry] = Map.empty,
       streams: Map[String, StreamEntry] = Map.empty,
-      subs: Map[(String, String), graft.streaming.StreamDDL.Subscription] =
+      subs: Map[(String, String), StreamDDL.Subscription] =
         Map.empty,
       downsamples: Map[String, DownSample.Policy] = Map.empty,
       dsMarks: Map[(String, Int), Long] = Map.empty,
@@ -269,17 +270,16 @@ final class HttpGateway(spark: SparkSession,
       }
     }
 
-  private val DropShardRe = "(?is)^\\s*drop\\s+shard\\s+\\d+\\s*$".r
-
   /** Measurements `msts` of `db` after one journaled statement (a DROP
     * SHARD naming no group leaves them as they are). */
   private def applyDml(msts: Map[String, InfluxQL.Measurement], db: String,
                        text: String, nowMs: Long)
       : Map[String, InfluxQL.Measurement] =
-    if (DropShardRe.matches(text))
-      dropShardSlice(db, text.trim.split("\\s+")(2).toLong, msts)
-        .getOrElse(msts)
-    else Map.empty ++ InfluxQL.executeManage(msts, text, nowMs)
+    Statement.classify(text) match {
+      case Statement.DropShard(sid) =>
+        dropShardSlice(db, sid, msts).getOrElse(msts)
+      case _ => Map.empty ++ InfluxQL.executeManage(msts, text, nowMs)
+    }
 
   /** Replay journaled DML lines onto the LIVE catalog (restart, and
     * after a hierarchical sweep rebuilds entries from parquet). */
@@ -328,24 +328,23 @@ final class HttpGateway(spark: SparkSession,
     // filtering them. Everything else (parquet-backed targets) folds
     // into the rewrite below and is dropped, so the journal truncates
     // instead of growing without bound with delete history.
-    // the name may be double-quoted, single-quoted (ident() accepts
-    // TStr) or bare — compare UNQUOTED against the init slice
-    val dmlTargetRe = ("(?is)^\\s*(?:delete\\s+from|drop\\s+series\\s+" +
-      "from|drop\\s+measurement)\\s+" +
-      "(?:\"([^\"]+)\"|'([^']+)'|([^\\s;\"']+))").r
-    def touchesInit(db: String, text: String): Boolean = {
-      if (db != defaultDb || init.isEmpty) false
-      // DROP SHARD prunes time ranges across every measurement — any
-      // init measurement in the db may carry affected rows
-      else if (DropShardRe.matches(text)) true
-      else dmlTargetRe.findFirstMatchIn(text) match {
-        case Some(g) =>
-          val name = Option(g.group(1)).orElse(Option(g.group(2)))
-            .getOrElse(g.group(3))
-          init.contains(name)
-        case None => true // unrecognized shape — retain, conservatively
-      }
-    }
+    // DROP SHARD prunes time ranges across every measurement — any init
+    // measurement in the db may carry affected rows; a statement whose
+    // target does not read is retained, conservatively
+    def touchesInit(db: String, text: String): Boolean =
+      db == defaultDb && init.nonEmpty && (Statement.classify(text) match {
+        case Statement.DropShard(_) => true
+        case _ => try {
+          val c = new InfluxQL.Cursor(text)
+          if (c.accept("delete")) c.expectIdent("from")
+          else {
+            c.expectIdent("drop")
+            if (c.accept("series")) c.expectIdent("from")
+            else c.expectIdent("measurement")
+          }
+          init.contains(c.ident())
+        } catch { case _: RuntimeException => true }
+      })
     val retained = Seq.newBuilder[String]
     eachDml(lines, "fold") { (line, db, nowMs, text) =>
       if (touchesInit(db, text)) retained += line
@@ -416,7 +415,7 @@ final class HttpGateway(spark: SparkSession,
     moved
   }
 
-  private def renderSub(s: graft.streaming.StreamDDL.Subscription): String =
+  private def renderSub(s: StreamDDL.Subscription): String =
     s"CREATE SUBSCRIPTION ${s.name} ON ${s.db}.${s.rp} DESTINATIONS " +
       s"${s.mode} " + s.destinations.map(u => s"'$u'").mkString(", ")
 
@@ -469,22 +468,20 @@ final class HttpGateway(spark: SparkSession,
     dbs.getOrElse(db, sys.error(s"database not found: $db"))
 
   // ---- registration (shared by the /query dispatch and DDL restore)
-  private def registerCq(db: String, text: String): Unit = {
-    val cq = graft.streaming.StreamDDL.parse(text)
+  private def registerCq(db: String, cq: StreamDDL.StreamStatement,
+                         text: String): Unit = {
     val d = cq.onDb.getOrElse(db)
     dbNamed(d)
     updDb(d)(x => x.copy(cqs = x.cqs + (cq.name -> CqEntry(cq, text, -1L))))
   }
-  private def registerStream(db: String, text: String,
-                             flushed: Long): Unit = {
-    val st = graft.streaming.StreamDDL.parse(text)
+  private def registerStream(db: String, st: StreamDDL.StreamStatement,
+                             text: String, flushed: Long): Unit = {
     if (dbNamed(db).streams.contains(st.name))
       sys.error(s"stream already exists: ${st.name}")
     updDb(db)(x =>
       x.copy(streams = x.streams + (st.name -> StreamEntry(st, text, flushed))))
   }
-  private def registerSub(fallbackDb: String, text: String): Unit = {
-    val s = graft.streaming.StreamDDL.parseSubscription(text)
+  private def registerSub(s: StreamDDL.Subscription): Unit = {
     val d = dbNamed(s.db)
     if (!d.rps.contains(s.rp))
       sys.error(s"retention policy not found: ${s.rp}")
@@ -492,8 +489,7 @@ final class HttpGateway(spark: SparkSession,
       sys.error("subscription already exists")
     updDb(s.db)(x => x.copy(subs = x.subs + ((s.rp, s.name) -> s)))
   }
-  private def registerDs(fallbackDb: String, text: String): Unit = {
-    val p0 = DownSample.parseCreate(text)
+  private def registerDs(fallbackDb: String, p0: DownSample.Policy): Unit = {
     val db = p0.db.getOrElse(fallbackDb)
     val d = dbNamed(db)
     val rp = d.rps.getOrElse(p0.rp,
@@ -503,8 +499,8 @@ final class HttpGateway(spark: SparkSession,
       sys.error("downsample policy exists")
     updDb(db)(x => x.copy(downsamples = x.downsamples + (p.rp -> p)))
   }
-  private def registerMst(fallbackDb: String, text: String): Unit = {
-    val sc = MeasurementDDL.parseCreate(text)
+  private def registerMst(fallbackDb: String,
+                          sc: MeasurementDDL.Schema): Unit = {
     val db = sc.db.getOrElse(fallbackDb)
     val d = dbNamed(db)
     if (db == defaultDb) defaultDbTouched = true
@@ -931,11 +927,12 @@ final class HttpGateway(spark: SparkSession,
     val Array(kind, dbE, extra, textE) = line.split("\t", 4)
     val db = dec(dbE); val text = dec(textE)
     try kind match {
-      case "cq" => registerCq(db, text)
-      case "stream" => registerStream(db, text, extra.toLong)
-      case "sub" => registerSub(db, text)
-      case "ds" => registerDs(db, text)
-      case "mst" => registerMst(db, text)
+      case "cq" => registerCq(db, StreamDDL.parse(text), text)
+      case "stream" =>
+        registerStream(db, StreamDDL.parse(text), text, extra.toLong)
+      case "sub" => registerSub(StreamDDL.parseSubscription(text))
+      case "ds" => registerDs(db, DownSample.parseCreate(text))
+      case "mst" => registerMst(db, MeasurementDDL.parseCreate(text))
       case _ =>
     } catch { case e: Exception =>
       // one corrupt line must not block startup — skip loudly
@@ -1745,44 +1742,12 @@ final class HttpGateway(spark: SparkSession,
 
   /** Whole-query pre-authorization, the reference's shape
     * (`authorizer.go:92` AuthorizeQuery loops statements before any
-    * executes): management needs admin, selects need READ on `db`,
-    * INTO adds WRITE; user-management needs admin except SET PASSWORD
-    * for oneself (the influxdb self-service carve-out). Returns the
-    * first denial message. */
+    * executes): each classified statement's privilege against `db`.
+    * Returns the first denial message. */
   private def authorizeStatements(user: Auth.User, db: String,
-                                  statements: Seq[String]): Option[String] =
-    statements.map(_.trim).flatMap { stmt =>
-      val lower = stmt.toLowerCase
-      if (Auth.isUserStatement(stmt)) {
-        if (user.admin || setPasswordTarget(stmt).contains(user.name)) None
-        else Some(s"statement '$stmt', requires admin privilege")
-      } else if (Seq("drop ", "create ", "kill ", "delete", "alter ")
-          .exists(lower.startsWith)) {
-        if (user.admin) None
-        else Some(s"statement '$stmt', requires admin privilege")
-      } else {
-        val into = lower.startsWith("select") &&
-          "(?is).*\\bINTO\\b.*".r.matches(stmt)
-        if (!user.authorizeDatabase(Auth.ReadPrivilege, db))
-          Some(s"""user "${user.name}" is not authorized to read from database "$db"""")
-        else if (into && !user.authorizeDatabase(Auth.WritePrivilege, db))
-          Some(s"""user "${user.name}" is not authorized to write to database "$db"""")
-        else None
-      }
-    }.headOption
-
-  /** `SET PASSWORD FOR <name> …` → Some(name), else None. */
-  private def setPasswordTarget(sql: String): Option[String] =
-    try InfluxQL.lex(sql) match {
-      case InfluxQL.TIdent(s) :: InfluxQL.TIdent(pw) :: InfluxQL.TIdent(f)
-          :: rest if s.equalsIgnoreCase("set") &&
-          pw.equalsIgnoreCase("password") && f.equalsIgnoreCase("for") =>
-        rest.headOption.collect {
-          case InfluxQL.TIdent(n) => n
-          case InfluxQL.TStr(n) => n
-        }
-      case _ => None
-    } catch { case _: Throwable => None }
+      statements: Seq[(String, Statement)]): Option[String] =
+    statements.iterator.flatMap { case (text, st) =>
+      st.privilege.denial(user, db, text.trim) }.nextOption()
 
   /** Gateway-state rows (SHOW USERS/GRANTS/QUERIES) → a small DataFrame
     * so the response flows through the same [[ResultShaper]] as every
@@ -1915,7 +1880,8 @@ final class HttpGateway(spark: SparkSession,
       val bound = InfluxQL.stripComments(bound0, keepHints = true)
       // no epoch param → the reference's default RFC3339 rendering
       val epoch = p.getOrElse("epoch", "rfc3339")
-      val statements = splitStatements(bound)
+      val statements =
+        splitStatements(bound).map(s => s -> Statement.classify(s))
       require(statements.nonEmpty, "empty query")
       val denial = principal.flatMap(user =>
         authorizeStatements(user, p.getOrElse("db", ""), statements))
@@ -1933,23 +1899,34 @@ final class HttpGateway(spark: SparkSession,
       // CREATE DATABASE / user statements still run against a fresh name
       val reqDb = p.get("db").filter(_.nonEmpty).getOrElse(defaultDb)
       def reqCat(db: String = reqDb) = catalogFor(db, principal)
-      // `SHOW … ON <db>` scopes to THAT database (parser.go
-      // parseShowMeasurementsStatement etc.) — the ON clause wins over
-      // the request's db param, like the reference's statement rewrite
-      def showDb(stmt: String): String = {
-        val toks = InfluxQL.lex(stmt)
-        toks.sliding(2).collectFirst {
-          case Seq(InfluxQL.TIdent(on), InfluxQL.TIdent(d))
-              if on.equalsIgnoreCase("on") => d
-        }.getOrElse(reqDb)
-      }
       try {
 
+      /** A gateway-built series as its own result object. */
+      def rowsObj(name: String, cols: Seq[String], rows: Seq[Seq[Any]],
+                  id: Int): String =
+        ResultShaper.toResultObj(gatewayRowsDf(cols, rows), name, Nil, cols,
+          epoch, id)
+      /** The `"series":[…]` members of a [[rowsObj]]. */
+      def seriesOf(name: String, cols: Seq[String], rows: Seq[Seq[Any]],
+                   id: Int): String = {
+        val o = rowsObj(name, cols, rows, id)
+        val i = o.indexOf("\"series\":[")
+        if (i < 0) "" else o.substring(i + 10, o.length - 2)
+      }
+      /** Commit a DDL registry change under the gateway monitor. */
+      def ddl(id: Int)(change: => Unit): String = {
+        synchronized { change; persistDdl() }
+        s"""{"statement_id":$id}"""
+      }
+
       /** Statement `stmt`'s result object; a data statement's reply
-        * frame renders through `data`. */
-      def resultObj(stmt: String, id: Int)(data: DataReply => String)
-          : String =
-        if (stmt.trim.toLowerCase.startsWith("show queries")) {
+        * frame renders through `data`. `SHOW … ON <db>` kinds scope to
+        * that database (the ON clause wins over the request's db param,
+        * like the reference's statement rewrite). */
+      def resultObj(stmt: String, kind: Statement, id: Int)(
+          data: DataReply => String): String = kind match {
+        case Statement.Invalid(e, _) => throw e
+        case Statement.ShowQueries =>
           // the live registry, not the library's empty frame
           // (statement_executor.go:2127 column set incl. host)
           val nowNs = System.nanoTime()
@@ -1957,17 +1934,12 @@ final class HttpGateway(spark: SparkSession,
             .map(r => Seq[Any](r.qid, r.query, r.db,
               fmtDur(nowNs - r.startNs), r.status,
               s"127.0.0.1:$boundPort"))
-          val cols = Seq("qid", "query", "database", "duration",
-            "status", "host")
-          ResultShaper.toResultObj(
-            gatewayRowsDf(cols, rows), "queries", Nil, cols, epoch, id)
-        } else if (stmt.trim.toLowerCase.startsWith("kill query")) {
-          val qid = stmt.trim.split("\\s+").lift(2)
-            .flatMap(s => scala.util.Try(s.toLong).toOption)
-            .getOrElse(sys.error("KILL QUERY expects a query id"))
+          rowsObj("queries", Seq("qid", "query", "database", "duration",
+            "status", "host"), rows, id)
+        case Statement.KillQuery(qid) =>
           killQuery(qid)
           s"""{"statement_id":$id}"""
-        } else if (Auth.isUserStatement(stmt)) {
+        case Statement.Users(_) =>
           // mutate+persist as one unit on the auth monitor: concurrent
           // user statements can't interleave a stale snapshot over a
           // newer one (lost update)
@@ -1976,12 +1948,10 @@ final class HttpGateway(spark: SparkSession,
               case None =>
                 persistUsers() // user catalog mutated — journal it
                 s"""{"statement_id":$id}"""
-              case Some((name, cols, rows)) =>
-                ResultShaper.toResultObj(
-                  gatewayRowsDf(cols, rows), name, Nil, cols, epoch, id)
+              case Some((name, cols, rows)) => rowsObj(name, cols, rows, id)
             }
           }
-        } else if (stmt.trim.toLowerCase.startsWith("show databases")) {
+        case Statement.ShowDatabases(detail) =>
           // the gateway's real database set (the library's constant is
           // its single-db standalone answer). The implicit default
           // database lists only once it holds anything or was created
@@ -1989,121 +1959,54 @@ final class HttpGateway(spark: SparkSession,
           // lists db0 alone).
           val listed = dbs.keys.toSeq.sorted
             .filter(db => db != defaultDb || defaultDbTouched)
-          if (stmt.trim.toLowerCase.contains("detail"))
+          if (detail)
             // SHOW DATABASES DETAIL: ReplicaN + tag-attribute columns
             // (statement_executor.go executeShowDatabasesDetail)
-            ResultShaper.toResultObj(
-              gatewayRowsDf(Seq("name", "ReplicaN", "Tag Attribute"),
-                listed.map(db => Seq[Any](db, 1L, "default"))),
-              "databases", Nil, Seq("name", "ReplicaN", "Tag Attribute"),
-              epoch, id)
+            rowsObj("databases", Seq("name", "ReplicaN", "Tag Attribute"),
+              listed.map(db => Seq[Any](db, 1L, "default")), id)
           else if (listed.isEmpty)
             // zero databases still render the column-only series
             // (DatabaseCommands "show database should have no results")
             s"""{"statement_id":$id,"series":[{"name":"databases","columns":["name"]}]}"""
-          else ResultShaper.toResultObj(
-            gatewayRowsDf(Seq("name"), listed.map(Seq(_))),
-            "databases", Nil, Seq("name"), epoch, id)
-        } else if (stmt.trim.toLowerCase.matches("(?s)(create|drop)\\s+database\\b.*")) {
-          // real database DDL (meta/database.go CreateDatabase/DropDatabase)
-          val toks = InfluxQL.lex(stmt)
-          val isCreateDb = stmt.trim.toLowerCase.startsWith("create")
-          // the reference's yacc parse errors, verbatim
-          // (DatabaseCommands goldens) — these 400 at the request level
-          def yaccErr(msg: String): Nothing =
-            sys.error(s"error parsing query: syntax error: $msg")
-          val name = toks.drop(2).headOption match {
-            case Some(InfluxQL.TIdent(n)) => n
-            case Some(InfluxQL.TStr(n)) => n
-            case Some(_: InfluxQL.TDur) | Some(_: InfluxQL.TNum)
-                if isCreateDb =>
-              yaccErr("unexpected DURATIONVAL, expecting IDENT")
-            case _ => sys.error("expected database name")
-          }
-          // WITH-option argument kinds (parser.go grammar)
-          if (isCreateDb) toks.zipWithIndex.foreach {
-            case (InfluxQL.TIdent(k), i)
-                if k.equalsIgnoreCase("duration") =>
-              toks.lift(i + 1) match {
-                case Some(_: InfluxQL.TDur) | Some(_: InfluxQL.TNum) => ()
-                case Some(InfluxQL.TIdent(x))
-                    if x.equalsIgnoreCase("inf") => ()
-                case _ => yaccErr("unexpected IDENT, expecting DURATIONVAL")
-              }
-            case (InfluxQL.TIdent(k), i)
-                if k.equalsIgnoreCase("replication") =>
-              toks.lift(i + 1) match {
-                case Some(_: InfluxQL.TNum) => ()
-                case _ => yaccErr("unexpected IDENT, expecting INTEGER")
-              }
-            case (InfluxQL.TIdent(k), i) if k.equalsIgnoreCase("name") =>
-              toks.lift(i + 1) match {
-                case Some(_: InfluxQL.TIdent) | Some(_: InfluxQL.TStr) => ()
-                case None => yaccErr("unexpected $end, expecting IDENT")
-                case _ => yaccErr("unexpected IDENT, expecting IDENT")
-              }
-            case _ => ()
-          }
-          // name validation (meta validation: "." names are invalid) —
+          else rowsObj("databases", Seq("name"), listed.map(Seq(_)), id)
+        case Statement.CreateDatabase(name, named, withDurS) =>
+          // real database DDL (meta/database.go CreateDatabase); name
+          // validation (meta validation: "." names are invalid) is
           // statement-level (DatabaseCommands "invalid name" goldens)
           def validName(n: String): Unit =
             if (n == "." || n == ".." || n.contains("/"))
               throw new InfluxQL.StatementError("invalid name")
           synchronized {
-            if (isCreateDb) {
-              validName(name)
-              // WITH … NAME <rp> names the born-default retention
-              // policy (parser.go parseCreateDatabaseStatement —
-              // `CREATE DATABASE db4 WITH SHARD DURATION 12h … NAME
-              // rp3`); durations present ride onto it
-              val named = toks.sliding(2).collectFirst {
-                case Seq(InfluxQL.TIdent(k), InfluxQL.TIdent(v))
-                  if k.equalsIgnoreCase("name") => v
-                case Seq(InfluxQL.TIdent(k), InfluxQL.TStr(v))
-                  if k.equalsIgnoreCase("name") => v
-              }
-              named.foreach(validName)
-              // WITH DURATION on an EXISTING database must agree with
-              // the default policy (meta CreateDatabaseWithRetention-
-              // Policy conflict — DatabaseCommands golden)
-              // the PLAIN `WITH DURATION d` option only — shard/index/
-              // hot/warm duration options don't constrain the default
-              // policy's retention (PreAgg_OutOfOrderData re-creates
-              // db3 WITH SHARD DURATION … without conflict)
-              val qualifiers =
-                Set("shard", "index", "hot", "warm")
-              val withDurS: Option[Long] = toks.zipWithIndex.collectFirst {
-                case (InfluxQL.TIdent(k), i)
-                    if k.equalsIgnoreCase("duration") && i > 0 &&
-                      (toks(i - 1) match {
-                        case InfluxQL.TIdent(p) =>
-                          !qualifiers.contains(p.toLowerCase)
-                        case _ => true
-                      }) =>
-                  toks.lift(i + 1) match {
-                    case Some(InfluxQL.TDur(ns)) => ns / 1000000000L
-                    case _ => 0L
-                  }
-              }
-              if (dbs.contains(name) && withDurS.isDefined) {
-                val existing = dbs(name).rps.values.find(_.default)
-                if (!existing.exists(_.durationS == withDurS.get))
-                  throw new InfluxQL.StatementError(
-                    "retention policy conflicts with an existing policy")
-              }
-              if (name == defaultDb) defaultDbTouched = true
-              if (!dbs.contains(name)) {
-                val rp0 = Retention.autogen.head._2
-                  .copy(durationS = withDurS.getOrElse(0L))
-                dbs = dbs +
-                  (name -> Db(rps = Map(named.getOrElse("autogen") -> rp0)))
-              }
-            } else dropDb(name)
+            validName(name)
+            // WITH … NAME <rp> names the born-default retention policy
+            // (parser.go parseCreateDatabaseStatement — `CREATE DATABASE
+            // db4 WITH SHARD DURATION 12h … NAME rp3`)
+            named.foreach(validName)
+            // WITH DURATION on an EXISTING database must agree with the
+            // default policy (meta CreateDatabaseWithRetentionPolicy
+            // conflict — DatabaseCommands golden); shard/index/hot/warm
+            // duration options don't constrain it (PreAgg_OutOfOrderData
+            // re-creates db3 WITH SHARD DURATION … without conflict)
+            if (dbs.contains(name) && withDurS.isDefined) {
+              val existing = dbs(name).rps.values.find(_.default)
+              if (!existing.exists(_.durationS == withDurS.get))
+                throw new InfluxQL.StatementError(
+                  "retention policy conflicts with an existing policy")
+            }
+            if (name == defaultDb) defaultDbTouched = true
+            if (!dbs.contains(name)) {
+              val rp0 = Retention.autogen.head._2
+                .copy(durationS = withDurS.getOrElse(0L))
+              dbs = dbs +
+                (name -> Db(rps = Map(named.getOrElse("autogen") -> rp0)))
+            }
             persistDatabases()
           }
           s"""{"statement_id":$id}"""
-        } else if (Retention.isRpStatement(stmt)) {
-          val st = Retention.parse(stmt)
+        case Statement.DropDatabase(name) =>
+          synchronized { dropDb(name); persistDatabases() }
+          s"""{"statement_id":$id}"""
+        case Statement.RetentionDdl(st) =>
           if (!dbs.contains(st.db)) {
             // DROP on a missing database is a silent no-op; CREATE/ALTER
             // carry the error INSIDE the result
@@ -2170,11 +2073,11 @@ final class HttpGateway(spark: SparkSession,
             persistDatabases()
           }
           s"""{"statement_id":$id}"""
-        } else if (stmt.trim.toLowerCase.startsWith("show retention")) {
+        case Statement.ShowRetentionPolicies(on) =>
           // full reference column set (meta/data.go:2061) — hot/warm
           // are the hierarchical tier bounds; index duration is meta
           // the engine does not organize by (0s)
-          val rows = dbNamed(showDb(stmt)).rps.toSeq
+          val rows = dbNamed(on.getOrElse(reqDb)).rps.toSeq
             .sortBy(_._1).map { case (n, rp) => Seq[Any](n,
               Retention.renderDuration(rp.durationS),
               Retention.renderDuration(rp.shardGroupS),
@@ -2184,42 +2087,23 @@ final class HttpGateway(spark: SparkSession,
               // duration (meta/data.go; DefaultDBAndRP golden)
               Retention.renderDuration(rp.shardGroupS),
               rp.replicaN, rp.default) }
-          val cols = Seq("name", "duration", "shardGroupDuration",
-            "hot duration", "warm duration", "index duration",
-            "replicaN", "default")
           // models.Row name,omitempty: SHOW RETENTION POLICIES series
           // are UNNAMED (DefaultDBAndRP golden)
-          ResultShaper.toResultObj(gatewayRowsDf(cols, rows),
-            "", Nil, cols, epoch, id)
-        } else if ("(?is)^\\s*create\\s+continuous\\s+query\\b.*".r
-            .matches(stmt)) {
-          synchronized { registerCq(reqDb, stmt.trim); persistDdl() }
-          s"""{"statement_id":$id}"""
-        } else if ("(?is)^\\s*drop\\s+continuous\\s+query\\b.*".r
-            .matches(stmt)) {
-          val toks = stmt.trim.split("\\s+")
-          val name = toks(3)
-          val db = if (toks.length >= 6 && toks(4).equalsIgnoreCase("on"))
-            toks(5) else reqDb
-          synchronized {
-            updDb(db)(x => x.copy(cqs = x.cqs - name)); persistDdl()
-          }
-          s"""{"statement_id":$id}"""
-        } else if ("(?is)^\\s*show\\s+continuous\\s+queries\\s*$".r
-            .matches(stmt.trim)) {
+          rowsObj("", Seq("name", "duration", "shardGroupDuration",
+            "hot duration", "warm duration", "index duration",
+            "replicaN", "default"), rows, id)
+        case Statement.CreateCq(cq) => ddl(id)(registerCq(reqDb, cq, stmt.trim))
+        case Statement.DropCq(name, on) =>
+          ddl(id)(updDb(on.getOrElse(reqDb))(x => x.copy(cqs = x.cqs - name)))
+        case Statement.ShowCqs =>
           val rows = dbs.get(reqDb).toSeq.flatMap(_.cqs)
             .map { case (name, e) => Seq[Any](name, e.text) }
             .sortBy(_.head.toString)
-          ResultShaper.toResultObj(
-            gatewayRowsDf(Seq("name", "query"), rows),
-            reqDb, Nil, Seq("name", "query"), epoch, id)
-        } else if (MeasurementDDL.isCreate(stmt)) {
-          synchronized { registerMst(reqDb, stmt.trim); persistDdl() }
-          s"""{"statement_id":$id}"""
-        } else if (MeasurementDDL.isAlterShardKey(stmt)) {
-          val (dbOpt, _, name, key, tpe) = MeasurementDDL.parseAlter(stmt)
+          rowsObj(reqDb, Seq("name", "query"), rows, id)
+        case Statement.CreateMeasurement(sc) => ddl(id)(registerMst(reqDb, sc))
+        case Statement.AlterShardKey(dbOpt, name, key, tpe) =>
           val db = dbOpt.getOrElse(reqDb)
-          synchronized {
+          ddl(id) {
             val sc = dbs.get(db).flatMap(_.schemas.get(name)).getOrElse(
               if (mstsOf(db).contains(name))
                 MeasurementDDL.Schema(Some(db), None, name, Nil, Nil,
@@ -2227,11 +2111,8 @@ final class HttpGateway(spark: SparkSession,
               else sys.error(s"measurement not found: $name"))
             updDb(db)(x => x.copy(schemas =
               x.schemas + (name -> sc.copy(shardKey = key, shardType = tpe))))
-            persistDdl()
           }
-          s"""{"statement_id":$id}"""
-        } else if (MeasurementDDL.isShowKeys(stmt)) {
-          val (kind, dbOpt, _, name) = MeasurementDDL.parseShowKeys(stmt)
+        case Statement.ShowMeasurementInfo(kind, dbOpt, name) =>
           val db = dbOpt.getOrElse(reqDb)
           val sc = dbs.get(db).flatMap(_.schemas.get(name))
             .getOrElse(sys.error("measurement not found"))
@@ -2240,8 +2121,8 @@ final class HttpGateway(spark: SparkSession,
           if (colstoreOnly(kind) && sc.engineType != "columnstore")
             sys.error("only support for COLUMNSTORE engine")
           // statement_executor.go:1366-1432 row shapes
-          def section(kind: String): (Seq[String], Seq[Seq[Any]]) =
-            kind match {
+          def section(kind: String): String = {
+            val (cols, rows) = kind match {
               case "shardkey" => (Seq("SHARD_KEY", "TYPE", "SHARD_GROUP"),
                 if (sc.shardKey.isEmpty) Nil
                 else Seq(Seq[Any](sc.shardKey, sc.shardType, 0L)))
@@ -2261,12 +2142,7 @@ final class HttpGateway(spark: SparkSession,
                 (Seq("COMPACTION_TYPE"), Seq(Seq[Any]("row")))
               case other => sys.error(s"$other is not support")
             }
-          def seriesOf(kind: String): String = {
-            val (cols, rows) = section(kind)
-            val o = ResultShaper.toResultObj(gatewayRowsDf(cols, rows),
-              "", Nil, cols, epoch, id)
-            val i = o.indexOf("\"series\":[")
-            o.substring(i + 10, o.length - 2)
+            seriesOf("", cols, rows, id)
           }
           val kinds =
             if (kind != "schema") Seq(kind)
@@ -2274,69 +2150,40 @@ final class HttpGateway(spark: SparkSession,
               Seq("shardkey", "enginetype", "indexes", "primarykey",
                 "sortkey", "compact")
             else Seq("shardkey", "enginetype", "indexes")
-          val series = kinds.map(seriesOf).filter(_.nonEmpty)
-            .mkString(",")
+          val series = kinds.map(section).filter(_.nonEmpty).mkString(",")
           s"""{"statement_id":$id,"series":[$series]}"""
-        } else if ("(?is)^\\s*create\\s+subscription\\b.*".r.matches(stmt)) {
-          synchronized { registerSub(reqDb, stmt.trim); persistDdl() }
-          s"""{"statement_id":$id}"""
-        } else if ("(?is)^\\s*drop\\s+subscription\\b.*".r.matches(stmt)) {
-          // DROP SUBSCRIPTION name ON db.rp (ast.go DropSubscription)
-          var toks = InfluxQL.lex(stmt).drop(2)
-          def pop(): InfluxQL.Tok = {
-            val t = toks.head; toks = toks.drop(1); t }
-          val name = pop() match {
-            case InfluxQL.TIdent(n) => n
-            case InfluxQL.TStr(n) => n
-            case t => sys.error(s"expected subscription name, got $t")
-          }
-          pop() // ON
-          val db = pop() match { case InfluxQL.TIdent(n) => n
-            case InfluxQL.TStr(n) => n; case t => sys.error(s"bad db: $t") }
-          pop() // .
-          val rp = pop() match { case InfluxQL.TIdent(n) => n
-            case InfluxQL.TStr(n) => n; case t => sys.error(s"bad rp: $t") }
-          synchronized {
+        case Statement.CreateSubscription(sub) => ddl(id)(registerSub(sub))
+        case Statement.DropSubscription(name, db, rp) =>
+          ddl(id) {
             if (!dbs.get(db).exists(_.subs.contains((rp, name))))
               sys.error(s"subscription not found: $name")
             updDb(db)(x => x.copy(subs = x.subs - ((rp, name))))
-            persistDdl()
           }
-          s"""{"statement_id":$id}"""
-        } else if ("(?is)^\\s*show\\s+shards\\s*$".r.matches(stmt.trim)) {
+        case Statement.ShowShards =>
           // meta/data.go:1974 ShowShards: one series per database,
           // 10-column set; 1 shard per group, single-node owner
           val cols = Seq("id", "database", "retention_policy",
             "shard_group", "start_time", "end_time", "expiry_time",
             "owners", "tier", "downSample_level")
           val nowTier = System.currentTimeMillis()
-          val series = dbs.keys.toSeq.sorted.flatMap { db =>
+          val series = dbs.keys.toSeq.sorted.map { db =>
             val rows = shardGroupsOf(db).map { case (rp, g, s0, e0, x0) =>
               Seq[Any](g, db, rp, g, rfc3339(s0), rfc3339(e0),
                 rfc3339(x0), "0", tierOf(db, e0, nowTier), 0L) }
-            if (rows.isEmpty) None
-            else Some(ResultShaper.toResultObj(gatewayRowsDf(cols, rows),
-              db, Nil, cols, epoch, id))
-          }.map { o =>
-            val i = o.indexOf("\"series\":[")
-            o.substring(i + 10, o.length - 2)
+            if (rows.isEmpty) "" else seriesOf(db, cols, rows, id)
           }.filter(_.nonEmpty)
           s"""{"statement_id":$id,"series":[${series.mkString(",")}]}"""
-        } else if ("(?is)^\\s*show\\s+shard\\s+groups\\s*$".r
-            .matches(stmt.trim)) {
+        case Statement.ShowShardGroups =>
           // meta/data.go:2015: one series "shard groups", all databases
-          val cols = Seq("id", "database", "retention_policy",
-            "start_time", "end_time", "expiry_time")
           val rows = dbs.keys.toSeq.sorted.flatMap { db =>
             shardGroupsOf(db).map { case (rp, g, s0, e0, x0) =>
               Seq[Any](g, db, rp, rfc3339(s0), rfc3339(e0), rfc3339(x0)) }
           }
-          ResultShaper.toResultObj(gatewayRowsDf(cols, rows),
-            "shard groups", Nil, cols, epoch, id)
-        } else if (DropShardRe.matches(stmt.trim)) {
+          rowsObj("shard groups", Seq("id", "database", "retention_policy",
+            "start_time", "end_time", "expiry_time"), rows, id)
+        case Statement.DropShard(sid) =>
           // data.go:2271 DropShard(id) — scoped here to the request
           // database (ids are per-db group indexes, not a global counter)
-          val sid = stmt.trim.split("\\s+")(2).toLong
           synchronized {
             val before = mstsOf(reqDb)
             if (!dropShardData(reqDb, sid))
@@ -2345,41 +2192,27 @@ final class HttpGateway(spark: SparkSession,
             propagateDml(reqDb, before, mstsOf(reqDb))
           }
           s"""{"statement_id":$id}"""
-        } else if ("(?is)^\\s*show\\s+subscriptions\\b.*".r.matches(stmt)) {
+        case Statement.ShowSubscriptions =>
           // one series per database (meta SHOW SUBSCRIPTIONS shape);
           // the gateway's single-db request view renders reqDb's series
-          val cols = Seq("retention_policy", "name", "mode", "destinations")
           val rows = dbs.get(reqDb).toSeq.flatMap(_.subs)
             .map { case ((rp, name), s) =>
               Seq[Any](rp, name, s.mode, s.destinations) }
             .sortBy(r => (r.head.toString, r(1).toString))
-          ResultShaper.toResultObj(gatewayRowsDf(cols, rows),
-            reqDb, Nil, cols, epoch, id)
-        } else if ("(?is)^\\s*create\\s+stream\\b.*".r.matches(stmt)) {
-          synchronized {
-            registerStream(reqDb, stmt.trim, Long.MinValue); persistDdl()
-          }
-          s"""{"statement_id":$id}"""
-        } else if ("(?is)^\\s*drop\\s+stream\\b.*".r.matches(stmt)) {
+          rowsObj(reqDb, Seq("retention_policy", "name", "mode",
+            "destinations"), rows, id)
+        case Statement.CreateStream(st) =>
+          ddl(id)(registerStream(reqDb, st, stmt.trim, Long.MinValue))
+        case Statement.DropStream(name) =>
           // DROP STREAM 'name' (sql.y DROP STREAM STRING_TYPE)
-          val name = InfluxQL.lex(stmt).drop(2).headOption match {
-            case Some(InfluxQL.TIdent(n)) => n
-            case Some(InfluxQL.TStr(n)) => n
-            case _ => sys.error("expected stream name")
-          }
-          synchronized {
+          ddl(id) {
             if (!dbs.get(reqDb).exists(_.streams.contains(name)))
               sys.error(s"stream not found: $name")
             updDb(reqDb)(x => x.copy(streams = x.streams - name))
-            persistDdl()
           }
-          s"""{"statement_id":$id}"""
-        } else if ("(?is)^\\s*show\\s+streams\\b.*".r.matches(stmt)) {
-          val db = showDb(stmt)
+        case Statement.ShowStreams(on) =>
+          val db = on.getOrElse(reqDb)
           // meta/data.go:3918 ShowStreams column set
-          val cols = Seq("database", "retention", "measurement", "Name",
-            "source measurement", "dimensions", "calls", "interval",
-            "delay", "condition")
           val rows = dbs.get(db).toSeq.flatMap(_.streams)
             .map { case (name, e) =>
               val st = e.stmt
@@ -2391,60 +2224,38 @@ final class HttpGateway(spark: SparkSession,
                 Retention.renderDuration(st.delayNs / 1000000000L),
                 "") }
             .sortBy(_(3).toString)
-          ResultShaper.toResultObj(gatewayRowsDf(cols, rows),
-            "streams", Nil, cols, epoch, id)
-        } else if (DownSample.isCreate(stmt)) {
-          synchronized { registerDs(reqDb, stmt.trim); persistDdl() }
-          s"""{"statement_id":$id}"""
-        } else if (DownSample.isDrop(stmt)) {
-          val toks = stmt.trim.split("[\\s.]+")
-          synchronized {
-            if (toks(1).equalsIgnoreCase("downsamples")) {
-              // DROP DOWNSAMPLES [ON db]
-              val db = if (toks.length >= 4) toks(3) else reqDb
-              updDb(db)(_.copy(downsamples = Map.empty))
-            } else {
-              // DROP DOWNSAMPLE ON [db.]rp
-              val (db, rp) =
-                if (toks.length >= 5) (toks(3), toks(4))
-                else (reqDb, toks(3))
-              if (!dbs.get(db).exists(_.downsamples.contains(rp)))
-                sys.error(s"downsample policy not found on $db.$rp")
-              updDb(db)(x => x.copy(downsamples = x.downsamples - rp))
-            }
-            persistDdl()
+          rowsObj("streams", Seq("database", "retention", "measurement",
+            "Name", "source measurement", "dimensions", "calls", "interval",
+            "delay", "condition"), rows, id)
+        case Statement.CreateDownsample(ds) => ddl(id)(registerDs(reqDb, ds))
+        case Statement.DropDownsample(dbOpt, None) =>
+          // DROP DOWNSAMPLES [ON db]
+          ddl(id)(
+            updDb(dbOpt.getOrElse(reqDb))(_.copy(downsamples = Map.empty)))
+        case Statement.DropDownsample(dbOpt, Some(rp)) =>
+          // DROP DOWNSAMPLE ON [db.]rp
+          val db = dbOpt.getOrElse(reqDb)
+          ddl(id) {
+            if (!dbs.get(db).exists(_.downsamples.contains(rp)))
+              sys.error(s"downsample policy not found on $db.$rp")
+            updDb(db)(x => x.copy(downsamples = x.downsamples - rp))
           }
-          s"""{"statement_id":$id}"""
-        } else if (DownSample.isShow(stmt)) {
-          val db = showDb(stmt)
+        case Statement.ShowDownsamples(on) =>
           // meta/data.go:3827 ShowDownSamplePolicies column set
-          val cols = Seq("rpName", "field_operator", "duration",
-            "sampleInterval", "timeInterval")
-          val rows = dbs.get(db).toSeq.flatMap(_.downsamples)
+          val rows = dbs.get(on.getOrElse(reqDb)).toSeq.flatMap(_.downsamples)
             .map { case (rp, p) =>
               Seq[Any](rp, p.fieldOperator,
                 Retention.renderDuration(p.durationS),
                 p.sampleS.map(Retention.renderDuration).mkString(","),
                 p.timeS.map(Retention.renderDuration).mkString(",")) }
             .sortBy(_.head.toString)
-          ResultShaper.toResultObj(gatewayRowsDf(cols, rows),
-            "downsamples", Nil, cols, epoch, id)
-        } else if ("(?is)^\\s*set\\s+config\\b.*".r.matches(stmt)) {
-          // SET CONFIG <component> <key> = <value> (sql.y:4011; key is
-          // IDENT|STRING, dots scan into bare idents — scanner.go:722).
+          rowsObj("downsamples", Seq("rpName", "field_operator", "duration",
+            "sampleInterval", "timeInterval"), rows, id)
+        case Statement.SetConfig(component, key, rawVal, isString) =>
           // The executor accepts only the sql component's logging.level
           // with a string value (statement_executor.go:2572); a non-
           // string there is "illegal type of logging level input", any
           // other component/key is "unsupported config command".
-          val m = ("(?is)^\\s*set\\s+config\\s+(\\S+)\\s+" +
-            "(?:\"([^\"]*)\"|(\\S+))\\s*=\\s*(.+?)\\s*$").r
-            .findFirstMatchIn(stmt).getOrElse(
-              throw new InfluxQL.StatementError("syntax error"))
-          val component = m.group(1)
-          val key = Option(m.group(2)).getOrElse(m.group(3))
-          val rawVal = m.group(4).trim
-          val isString = rawVal.startsWith("'") ||
-            "^[A-Za-z_][A-Za-z0-9_.-]*$".r.matches(rawVal)
           if (!(component == "sql" && key == "logging.level"))
             throw new InfluxQL.StatementError("unsupported config command")
           if (!isString)
@@ -2459,7 +2270,7 @@ final class HttpGateway(spark: SparkSession,
               s"""unrecognized level: "$rawVal"""")
           loggingLevel = lvl
           s"""{"statement_id":$id}"""
-        } else if ("(?is)^\\s*show\\s+configs\\s*$".r.matches(stmt.trim)) {
+        case Statement.ShowConfigs =>
           // the gateway's ACTUAL effective knobs in the reference's
           // 4-column shape (executeShowConfigs,
           // statement_executor.go:2560: component, instance, name,
@@ -2498,17 +2309,13 @@ final class HttpGateway(spark: SparkSession,
             s"""["sql",$inst,${jsonStr(k)},${jval(v)}]""" }.mkString(",")
           s"""{"statement_id":$id,"series":[{"columns":""" +
             s"""["component","instance","name","value"],""" +
-            s""""values":[$values]}]}"""
-        } else if (("(?is)^\\s*(prepare\\s+snapshot|end\\s+(prepare\\s+)?" +
-            "snapshot|get\\s+runtimeinfo)\\b.*").r.matches(stmt.trim)) {
+            s""""values":[$values]}]}"""        case Statement.Unsupported =>
           // parsed but rejected, the reference's exact error
           // (statement_executor.go:409-416 returns
           // meta2.ErrUnsupportCommand for PrepareSnapshot/
           // EndPrepareSnapshot/GetRuntimeInfo)
           throw new InfluxQL.StatementError("unsupported command")
-        } else if (Seq("drop ", "create ", "kill ", "delete", "alter ",
-            "grant ", "revoke ", "set ")
-            .exists(stmt.trim.toLowerCase.startsWith)) {
+        case Statement.Manage =>
           synchronized {
             val before = mstsOf(reqDb)
             val nowMs = System.currentTimeMillis()
@@ -2526,8 +2333,7 @@ final class HttpGateway(spark: SparkSession,
             }
           }
           s"""{"statement_id":$id}"""
-        } else if ("(?is).*\\bINTO\\b.*".r.matches(stmt) &&
-            stmt.trim.toLowerCase.startsWith("select")) {
+        case Statement.SelectInto =>
           val cat = reqCat()
           val (cat2, df) = InfluxQL.executeInto(cat, stmt)
           val written = df.count()
@@ -2538,10 +2344,8 @@ final class HttpGateway(spark: SparkSession,
               !cat.get(k).exists(_ eq m) })
           }
           s"""{"statement_id":$id,"series":[{"name":"result","columns":["time","written"],"values":[[0,$written]]}]}"""
-        } else {
-          val cat =
-            if (stmt.trim.toLowerCase.startsWith("show")) reqCat(showDb(stmt))
-            else reqCat()
+        case Statement.Data(on, pruneNullCols) =>
+          val cat = reqCat(on.getOrElse(reqDb))
           val (name, tags, df0, desc) = InfluxQL.executeShapedOrd(cat, stmt)
           val (df, timeNs) = HttpGateway.edgeTime(df0)
           // `__series_name` names each row's series (per-measurement
@@ -2557,16 +2361,17 @@ final class HttpGateway(spark: SparkSession,
             df.columns.toIndexedSeq.filterNot(nameCol.contains),
             tags.filterNot(alsoCols.contains))
           data(DataReply(df, name, tags, valueCols, timeNs, desc, nameCol,
-            "(?is).*/\\*\\+\\s*filter_null_column\\s*\\*/.*".r.matches(stmt)))
-        }
+            pruneNullCols))
+      }
 
       // statement-level errors land INSIDE the statement's result
       // object with a 200 (the reference's compile-error contract, e.g.
       // "mixing aggregate and non-aggregate queries" —
       // tests/server_test.go:5401); parse and transport errors still 400
       // at the request level below
-      def answer(stmt: String, id: Int)(data: DataReply => String): String =
-        try resultObj(stmt, id)(data)
+      def answer(stmt: (String, Statement), id: Int)(
+          data: DataReply => String): String =
+        try resultObj(stmt._1, stmt._2, id)(data)
         catch { case e: InfluxQL.StatementError =>
           s"""{"statement_id":$id,"error":${jsonStr(e.getMessage)}}"""
         }
@@ -2577,7 +2382,10 @@ final class HttpGateway(spark: SparkSession,
           // chunked emission is per-series-batch within ONE statement
           require(statements.size == 1,
             "chunked=true supports a single statement")
-          val n = p.get("chunk_size").map(_.toInt).getOrElse(10000)
+          // a non-positive chunk_size takes the default, like the
+          // reference's handler
+          val n = p.get("chunk_size").map(_.toInt).filter(_ > 0)
+            .getOrElse(10000)
           // a data statement streams chunk documents as they come off
           // toLocalIterator — driver heap stays bounded by one partition
           // + one chunk no matter how many rows the statement returns
@@ -2841,7 +2649,8 @@ final class HttpGateway(spark: SparkSession,
       val q = p.getOrElse("q", sys.error("missing required parameter \"q\""))
       val reqDb = p.get("db").filter(_.nonEmpty).getOrElse(defaultDb)
       principal.foreach { user =>
-        authorizeStatements(user, p.getOrElse("db", ""), Seq(q)).foreach {
+        authorizeStatements(user, p.getOrElse("db", ""),
+            Seq(q -> Statement.classify(q))).foreach {
           msg => respond(ex, 403, s"""{"error":${jsonStr(msg)}}"""); return
         }
       }
@@ -3221,52 +3030,16 @@ final class HttpGateway(spark: SparkSession,
       val timeBound = meas.df.filter(
         unix_millis(col(meas.time)) >= fromMs &&
         unix_millis(col(meas.time)) < toMs)
-      // __log___ resolves to the stream's content column (the logkeeper
-      // write schema's log field), else its first string field
-      val fullText =
-        if (timeBound.columns.contains("content")) "content"
-        else timeBound.schema.fields
-          .find(_.dataType == org.apache.spark.sql.types.StringType)
-          .map(_.name).getOrElse("content")
-      val (ppl, sqlTail) = LogPipe.splitPplSql(query)
-      val stmt =
-        if (ppl.trim.nonEmpty) LogPipe.parse(ppl)
-        else LogPipe.Statement(None, None)
-      val frame = LogPipe.compile(timeBound, stmt, fullText)
-
-      def msOf(v: Any): Any = v match {
-        case ts: java.sql.Timestamp => ts.getTime
-        case x => x
-      }
-      def cell(v: Any): String = msOf(v) match {
-        case null => "null"
-        case s: String => jsonStr(s)
-        case b: Boolean => b.toString
-        case n => n.toString
-      }
+      val (frame, sqlTail) = logPipeFrame(timeBound, query)
       def tookMs = (System.nanoTime() - t0) / 1000000L
 
       action match {
         case "logs" =>
           val ordered = frame.orderBy(
             if (reverse) col(meas.time).desc else col(meas.time).asc)
-          val rows = ordered.limit(limit).collect()
-          val cols = logRenderCols(frame.columns.toSeq, meas.time)
-          val logs = rows.map { r =>
-            cols.map { c =>
-              val i = r.fieldIndex(c)
-              val v = if (c == meas.time) msOf(r.get(i)) else r.get(i)
-              s"${jsonStr(if (c == meas.time) "time" else c)}:${cell(v)}"
-            }.mkString("{", ",", "}")
-          }.mkString("[", ",", "]")
-          val keys = cols.map(c => if (c == meas.time) "time" else c)
-          respond(ex, 200,
-            s"""{"success":true,"code":"200","message":"",""" +
-            s""""request_id":${jsonStr(java.util.UUID.randomUUID.toString)},""" +
-            s""""count":${rows.length},"progress":"Complete",""" +
-            s""""logs":$logs,"keys":${keys.map(jsonStr).mkString("[", ",", "]")},""" +
-            s""""took_ms":$tookMs,"cursor_time":${if (reverse) toMs else fromMs},""" +
-            s""""complete_progress":1.0,"scroll_id":""}""")
+          logsReply(ex, ordered.limit(limit).collect(),
+            logRenderCols(frame.columns.toSeq, meas.time), meas.time, tookMs,
+            if (reverse) toMs else fromMs)
         case "histogram" =>
           // serveAggLogQuery: the pipe query + `select count(time)` per
           // adaptive bucket, zero-filled across [from, to) and edge
@@ -3285,20 +3058,16 @@ final class HttpGateway(spark: SparkSession,
               s"""{"from":$from,"to":$to,"count":${counts.getOrElse(b, 0L)}}"""
             }.mkString("[", ",", "]")
           val total = counts.valuesIterator.sum
-          respond(ex, 200,
-            s"""{"success":true,"code":"200","message":"",""" +
-            s""""request_id":${jsonStr(java.util.UUID.randomUUID.toString)},""" +
+          logkeeperOk(ex,
             s""""count":$total,"progress":"1.000000","histograms":$hist,""" +
-            s""""took_ms":$tookMs,"scroll_id":""}""")
+            s""""took_ms":$tookMs,"scroll_id":""""")
         case "analytics" =>
           // serveAnalytics: no SELECT tail → the nil-request empty body
           sqlTail match {
             case None =>
-              respond(ex, 200,
-                s"""{"success":true,"code":"200","message":"",""" +
-                s""""request_id":${jsonStr(java.util.UUID.randomUUID.toString)},""" +
+              logkeeperOk(ex,
                 s""""total_size":0,"progress":"Complete","took_ms":$tookMs,""" +
-                s""""scroll_id":""}""")
+                s""""scroll_id":""""")
             case Some(sql) =>
               // rewriteStatementForLogStore pins the statement's source
               // to the logstream regardless of any FROM in the text —
@@ -3313,8 +3082,9 @@ final class HttpGateway(spark: SparkSession,
               val header = dataCols.map(jsonStr).mkString("[", ",", "]")
               val body = rows.take(maxRowLimit).map { r =>
                 dataCols.map { c =>
-                  msOf(r.get(r.fieldIndex(c))) match {
+                  r.get(r.fieldIndex(c)) match {
                     case null => "\"\""
+                    case ts: java.sql.Timestamp => jsonStr(ts.getTime.toString)
                     case d: Double => jsonStr(
                       if (d == d.floor && !d.isInfinite) d.toLong.toString
                       else d.toString)
@@ -3322,12 +3092,10 @@ final class HttpGateway(spark: SparkSession,
                   }
                 }.mkString("[", ",", "]")
               }
-              respond(ex, 200,
-                s"""{"success":true,"code":"200","message":"",""" +
-                s""""request_id":${jsonStr(java.util.UUID.randomUUID.toString)},""" +
+              logkeeperOk(ex,
                 s""""total_size":${math.min(rows.length, maxRowLimit)},""" +
                 s""""progress":"Complete","took_ms":$tookMs,"scroll_id":"",""" +
-                s""""groupInfo":[],"dataset":${(header +: body).mkString("[", ",", "]")}}""")
+                s""""groupInfo":[],"dataset":${(header +: body).mkString("[", ",", "]")}""")
           }
       }
     } catch {
@@ -3335,6 +3103,55 @@ final class HttpGateway(spark: SparkSession,
         s"""{"success":false,"code":"400","message":${
           jsonStr(String.valueOf(e.getMessage))}}""")
     }
+
+  /** A logkeeper query's PPL stage over `df`, and the SQL tail after
+    * the pipe. `__log___` resolves to the stream's content column (the
+    * logkeeper write schema's log field), else its first string field. */
+  private def logPipeFrame(df: DataFrame, query: String)
+      : (DataFrame, Option[String]) = {
+    val fullText =
+      if (df.columns.contains("content")) "content"
+      else df.schema.fields
+        .find(_.dataType == org.apache.spark.sql.types.StringType)
+        .map(_.name).getOrElse("content")
+    val (ppl, sqlTail) = LogPipe.splitPplSql(query)
+    val stmt =
+      if (ppl.trim.nonEmpty) LogPipe.parse(ppl)
+      else LogPipe.Statement(None, None)
+    (LogPipe.compile(df, stmt, fullText), sqlTail)
+  }
+
+  /** One logkeeper JSON cell; timestamps render as epoch ms. */
+  private def logCell(v: Any): String = v match {
+    case null => "null"
+    case s: String => jsonStr(s)
+    case b: Boolean => b.toString
+    case ts: java.sql.Timestamp => ts.getTime.toString
+    case n => n.toString
+  }
+
+  /** A logkeeper success reply: the reference's envelope around
+    * `fields`. */
+  private def logkeeperOk(ex: HttpExchange, fields: String): Unit =
+    respond(ex, 200, s"""{"success":true,"code":"200","message":"",""" +
+      s""""request_id":${jsonStr(java.util.UUID.randomUUID.toString)},""" +
+      fields + "}")
+
+  /** The `logs` and `context` reply: `rows` rendered over `cols`, the
+    * time column keyed `time`. */
+  private def logsReply(ex: HttpExchange,
+                        rows: Array[org.apache.spark.sql.Row],
+                        cols: Seq[String], time: String, tookMs: Long,
+                        cursorMs: Long): Unit = {
+    def key(c: String) = jsonStr(if (c == time) "time" else c)
+    val logs = rows.map(r => cols.map(c =>
+      s"${key(c)}:${logCell(r.get(r.fieldIndex(c)))}").mkString("{", ",", "}"))
+    logkeeperOk(ex, s""""count":${rows.length},"progress":"Complete",""" +
+      s""""logs":${logs.mkString("[", ",", "]")},""" +
+      s""""keys":${cols.map(key).mkString("[", ",", "]")},""" +
+      s""""took_ms":$tookMs,"cursor_time":$cursorMs,""" +
+      s""""complete_progress":1.0,"scroll_id":""""")
+  }
 
   /** Pre-compiled logkeeper route patterns (per-request compile is
     * avoidable hot-path work). */
@@ -3496,13 +3313,13 @@ final class HttpGateway(spark: SparkSession,
         val ddl = s"CREATE STREAM '$id' INTO '$view' ON " +
           withFrom(sql.trim, stream)
         // StreamCheck: only min/max/sum/count stream-aggregate
-        val st = graft.streaming.StreamDDL.parse(ddl)
+        val st = StreamDDL.parse(ddl)
         val bad = st.calls.map(_._1)
           .filterNot(Set("min", "max", "sum", "count"))
         require(bad.isEmpty,
           s"unsupported call in stream task: ${bad.mkString(",")}")
         require(st.from == stream, "stream task must read its logstream")
-        synchronized { registerStream(repo, ddl, Long.MinValue)
+        synchronized { registerStream(repo, st, ddl, Long.MinValue)
           persistDdl() }
         respond(ex, 200, s"""{"query":${jsonStr(ddl)},""" +
           s""""repo":${jsonStr(repo)},"logStream":${jsonStr(view)}}""")
@@ -3625,18 +3442,11 @@ final class HttpGateway(spark: SparkSession,
         val skipped = skip - toSkip
         val batch = afterSkip.take(count)
         val isComplete = afterSkip.length <= count
-        def cell(v: Any): String = v match {
-          case null => "null"
-          case s: String => jsonStr(s)
-          case b: Boolean => b.toString
-          case ts: java.sql.Timestamp => ts.getTime.toString
-          case n => n.toString
-        }
         val logs = batch.map { r =>
           srcCols.map { c =>
             if (c == meas.time)
               s""""time":${r.getLong(nsIdx)}"""
-            else s"${jsonStr(c)}:${cell(r.get(r.fieldIndex(c)))}"
+            else s"${jsonStr(c)}:${logCell(r.get(r.fieldIndex(c)))}"
           }.mkString("{", ",", "}")
         }.mkString("[", ",", "]")
         val newCur = batch.lastOption.map { last =>
@@ -3684,15 +3494,6 @@ final class HttpGateway(spark: SparkSession,
         val limit = math.min(p.get("limit").filter(_.nonEmpty)
           .map(_.toInt).getOrElse(10), 1000)
         val query = p.getOrElse("query", "")
-        val (ppl, _) = LogPipe.splitPplSql(query)
-        val stmt =
-          if (ppl.trim.nonEmpty) LogPipe.parse(ppl)
-          else LogPipe.Statement(None, None)
-        val fullText =
-          if (meas.df.columns.contains("content")) "content"
-          else meas.df.schema.fields
-            .find(_.dataType == org.apache.spark.sql.types.StringType)
-            .map(_.name).getOrElse("content")
         val base = meas.df
           .withColumn("_ns", nsEpochExpr(meas))
         val bounded =
@@ -3702,32 +3503,11 @@ final class HttpGateway(spark: SparkSession,
           else
             base.filter(col("_ns") >= math.max(fromMs * 1000000L, pivotNs)
               && col("_ns") < toMs * 1000000L)
-        val frame = LogPipe.compile(bounded, stmt, fullText)
+        val frame = logPipeFrame(bounded, query)._1
           .orderBy(if (reverse) col(meas.time).desc else col(meas.time).asc)
-        val rows = frame.limit(limit).collect()
-        def cellc(v: Any): String = v match {
-          case null => "null"
-          case s: String => jsonStr(s)
-          case b: Boolean => b.toString
-          case ts: java.sql.Timestamp => ts.getTime.toString
-          case n => n.toString
-        }
-        val cols = logRenderCols(
-          frame.columns.toSeq.filterNot(_ == "_ns"), meas.time)
-        val logs = rows.map { r =>
-          cols.map { c =>
-            val v = r.get(r.fieldIndex(c))
-            s"${jsonStr(if (c == meas.time) "time" else c)}:${cellc(v)}"
-          }.mkString("{", ",", "}")
-        }.mkString("[", ",", "]")
-        val keys = cols.map(c => if (c == meas.time) "time" else c)
-        respond(ex, 200,
-          s"""{"success":true,"code":"200","message":"",""" +
-          s""""request_id":${jsonStr(java.util.UUID.randomUUID.toString)},""" +
-          s""""count":${rows.length},"progress":"Complete",""" +
-          s""""logs":$logs,"keys":${keys.map(jsonStr).mkString("[", ",", "]")},""" +
-          s""""took_ms":$tookMs,"cursor_time":${pivotNs / 1000000L},""" +
-          s""""complete_progress":1.0,"scroll_id":""}""")
+        logsReply(ex, frame.limit(limit).collect(), logRenderCols(
+          frame.columns.toSeq.filterNot(_ == "_ns"), meas.time), meas.time,
+          tookMs, pivotNs / 1000000L)
     }
   }
 

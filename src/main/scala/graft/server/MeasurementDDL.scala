@@ -1,7 +1,6 @@
 package graft.server
 
 import graft.query.InfluxQL
-import graft.query.InfluxQL.{TDur, TIdent, TNum, TPunct, TStr, Tok}
 
 /** Schema'd measurements: `CREATE MEASUREMENT`, `ALTER MEASUREMENT …
   * WITH SHARDKEY`, and the `SHOW <info> FROM mst` introspection family.
@@ -38,63 +37,13 @@ object MeasurementDDL {
   val infoKinds: Set[String] = Set("primarykey", "sortkey", "property",
     "compact", "shardkey", "enginetype", "indexes", "schema")
 
-  def isCreate(sql: String): Boolean =
-    "(?is)^\\s*create\\s+measurement\\b.*".r.matches(sql)
-  def isAlterShardKey(sql: String): Boolean =
-    "(?is)^\\s*alter\\s+measurement\\b.*".r.matches(sql)
-  def isShowKeys(sql: String): Boolean =
-    infoKinds.exists(k =>
-      s"(?is)^\\s*show\\s+$k\\s+from\\b.*".r.matches(sql))
-
-  private class Lex(sql: String) {
-    private var toks: List[Tok] = InfluxQL.lex(sql)
-    def peek: Tok = toks.headOption.getOrElse(TPunct("<eof>"))
-    def next(): Tok = { val t = peek; toks = toks.drop(1); t }
-    def eof: Boolean = toks.isEmpty
-    def ident(): String = next() match {
-      case TIdent(s) => s
-      case TStr(s) => s
-      case t => sys.error(s"expected identifier, got $t")
-    }
-    def kw(s: String): Unit = {
-      val t = ident()
-      require(t.equalsIgnoreCase(s), s"expected $s, got $t")
-    }
-    def isKw(s: String): Boolean = peek match {
-      case TIdent(i) => i.equalsIgnoreCase(s)
-      case _ => false
-    }
-    def punct(p: String): Boolean =
-      if (peek == TPunct(p)) { next(); true } else false
-    /** `=` lexes as an operator token, not punctuation. */
-    def eq(): Boolean =
-      if (peek == InfluxQL.TOp("=")) { next(); true } else false
-    /** name | db.rp.name | db..name */
-    def qualified(): (Option[String], Option[String], String) = {
-      val a = ident()
-      if (!punct(".")) (None, None, a)
-      else if (punct(".")) (Some(a), None, ident())
-      else {
-        val b = ident()
-        if (punct(".")) (Some(a), Some(b), ident())
-        else (None, Some(a), b) // rp.name
-      }
-    }
-    def identList(): Seq[String] = {
-      val b = Seq.newBuilder[String]
-      b += ident()
-      while (peek == TPunct(",")) { next(); b += ident() }
-      b.result()
-    }
-  }
-
   def parseCreate(sql: String): Schema = {
-    val p = new Lex(sql)
-    p.kw("create"); p.kw("measurement")
+    val p = new InfluxQL.Cursor(sql)
+    p.expectIdent("create"); p.expectIdent("measurement")
     val (db, rp, name) = p.qualified()
     var tags = Seq.empty[String]
     var fields = Seq.empty[(String, String)]
-    if (p.punct("(")) {
+    if (p.acceptPunct("(")) {
       var more = true
       while (more) {
         val col = p.ident()
@@ -106,8 +55,7 @@ object MeasurementDDL {
           case other => sys.error(
             s"expect FLOAT64, INT64, BOOL, STRING for column data type: $other")
         }
-        if (p.punct(",")) more = true
-        else { require(p.punct(")"), "expected ')'"); more = false }
+        if (!p.acceptPunct(",")) { p.expect(")"); more = false }
       }
     }
     var shardKey = Seq.empty[String]
@@ -116,13 +64,12 @@ object MeasurementDDL {
     var indexes = Seq.empty[(String, Seq[String])]
     var primaryKey = Seq.empty[String]
     var sortKey = Seq.empty[String]
-    if (p.isKw("with")) {
-      p.next()
-      while (!p.eof) {
+    if (p.accept("with")) {
+      while (!p.atEnd) {
         val opt = p.ident().toLowerCase
         opt match {
           case "enginetype" =>
-            p.eq()
+            if (p.peek == InfluxQL.TOp("=")) p.next()
             engine = p.ident().toLowerCase
             require(engine == "tsstore" || engine == "columnstore",
               s"unknown engine type: $engine")
@@ -136,8 +83,7 @@ object MeasurementDDL {
           case "indextype" =>
             val it = p.ident().toLowerCase
             val cols =
-              if (p.isKw("indexlist")) { p.next(); p.identList() }
-              else Nil
+              if (p.accept("indexlist")) p.identList() else Nil
             indexes :+= ((it, cols))
           case "ttl" => p.next() // recorded by the RP layer, accepted here
           case "numofshards" => p.next()
@@ -145,7 +91,7 @@ object MeasurementDDL {
         }
       }
     }
-    require(p.eof, s"trailing tokens after CREATE MEASUREMENT")
+    require(p.atEnd, s"trailing tokens after CREATE MEASUREMENT")
     Schema(db, rp, name, tags, fields, shardKey, shardType, engine,
       indexes, primaryKey, sortKey)
   }
@@ -154,15 +100,15 @@ object MeasurementDDL {
     * sortedShardKey, shardType). */
   def parseAlter(sql: String)
       : (Option[String], Option[String], String, Seq[String], String) = {
-    val p = new Lex(sql)
-    p.kw("alter"); p.kw("measurement")
+    val p = new InfluxQL.Cursor(sql)
+    p.expectIdent("alter"); p.expectIdent("measurement")
     val (db, rp, name) = p.qualified()
     var key = Seq.empty[String]
     var tpe = "hash"
-    if (p.isKw("with")) {
-      p.next(); p.kw("shardkey")
+    if (p.accept("with")) {
+      p.expectIdent("shardkey")
       key = p.identList()
-      if (p.isKw("type")) { p.next(); tpe = p.ident().toLowerCase }
+      if (p.accept("type")) tpe = p.ident().toLowerCase
     }
     (db, rp, name, key.sorted, tpe) // sql.y:3692 sort.Strings
   }
@@ -170,11 +116,11 @@ object MeasurementDDL {
   /** SHOW <info> FROM [db.rp.]mst → (infoKind, db, rp, name). */
   def parseShowKeys(sql: String)
       : (String, Option[String], Option[String], String) = {
-    val p = new Lex(sql)
-    p.kw("show")
+    val p = new InfluxQL.Cursor(sql)
+    p.expectIdent("show")
     val kind = p.ident().toLowerCase
     require(infoKinds(kind), s"$kind is not support for this command")
-    p.kw("from")
+    p.expectIdent("from")
     val (db, rp, name) = p.qualified()
     (kind, db, rp, name)
   }

@@ -71,35 +71,17 @@ object Retention {
                          hotS: Option[Long] = None,
                          warmS: Option[Long] = None)
 
-  def isRpStatement(sql: String): Boolean = {
-    val w = sql.trim.toLowerCase.split("\\s+")
-    w.length >= 3 && Set("create", "alter", "drop").contains(w(0)) &&
-      w(1) == "retention" && w(2) == "policy"
-  }
-
   /** `CREATE|ALTER RETENTION POLICY <rp> ON <db> [DURATION d]
     * [REPLICATION n] [SHARD DURATION d] [DEFAULT]` /
     * `DROP RETENTION POLICY <rp> ON <db>` (parser.go
     * parseCreateRetentionPolicyStatement shape). */
   def parse(sql: String): RpStatement = {
-    val toks = InfluxQL.lex(sql)
-    var i = 0
-    def peek = if (i < toks.length) Some(toks(i)) else None
-    def next() = { val t = toks(i); i += 1; t }
-    def ident(): String = next() match {
-      case TIdent(n) => n
-      case TStr(n) => n
-      case t => sys.error(s"expected identifier, got $t")
-    }
-    def kw(k: String): Unit = next() match {
-      case TIdent(n) if n.equalsIgnoreCase(k) => ()
-      case t => sys.error(s"expected $k, got $t")
-    }
-    val verb = ident().toLowerCase
-    kw("retention"); kw("policy")
-    val rp = ident()
-    kw("on")
-    val db = ident()
+    val c = new InfluxQL.Cursor(sql)
+    val verb = c.ident().toLowerCase
+    c.expectIdent("retention"); c.expectIdent("policy")
+    val rp = c.ident()
+    c.expectIdent("on")
+    val db = c.ident()
     var dur: Option[Long] = None
     var repl: Option[Long] = None
     var shard: Option[Long] = None
@@ -109,35 +91,28 @@ object Retention {
     // the lexer emits compound durations (1h30m) as consecutive TDur
     // tokens — absorb the whole run
     def duration(): Long = {
-      var total = parseDuration(durTok(next()))
-      while (peek.exists(_.isInstanceOf[InfluxQL.TDur]))
-        total += parseDuration(durTok(next()))
+      var total = parseDuration(durTok(c.next()))
+      while (c.peek.isInstanceOf[InfluxQL.TDur])
+        total += parseDuration(durTok(c.next()))
       total
     }
-    while (peek.isDefined) peek.get match {
-      case TIdent(k) if k.equalsIgnoreCase("duration") =>
-        next(); dur = Some(duration())
-      case TIdent(k) if k.equalsIgnoreCase("replication") =>
-        next()
-        repl = Some(next() match {
+    def durationAfter(): Long = { c.expectIdent("duration"); duration() }
+    while (!c.atEnd) c.word() match {
+      case "duration" => dur = Some(duration())
+      case "replication" =>
+        repl = Some(c.next() match {
           case TNum(v, _, _) => v.toLong
           case t => sys.error(s"expected replication factor, got $t")
         })
-      case TIdent(k) if k.equalsIgnoreCase("shard") =>
-        next(); kw("duration"); shard = Some(duration())
+      case "shard" => shard = Some(durationAfter())
       // HOT/WARM DURATION are the hierarchical tier bounds
       // (sql.y:2253-2261); INDEX/INDEXCOLD/SHARDMERGE DURATION parse
       // and discard — index organization is Catalyst territory here
-      case TIdent(k) if k.equalsIgnoreCase("hot") =>
-        next(); kw("duration"); hot = Some(duration())
-      case TIdent(k) if k.equalsIgnoreCase("warm") =>
-        next(); kw("duration"); warm = Some(duration())
-      case TIdent(k) if Set("index", "indexcold", "shardmerge")
-          .contains(k.toLowerCase) =>
-        next(); kw("duration"); duration()
-      case TIdent(k) if k.equalsIgnoreCase("default") =>
-        next(); default = true
-      case t => sys.error(s"unexpected token in retention statement: $t")
+      case "hot" => hot = Some(durationAfter())
+      case "warm" => warm = Some(durationAfter())
+      case "index" | "indexcold" | "shardmerge" => durationAfter()
+      case "default" => default = true
+      case k => sys.error(s"unexpected token in retention statement: $k")
     }
     RpStatement(verb, rp, db, dur, repl, shard, default, hot, warm)
   }

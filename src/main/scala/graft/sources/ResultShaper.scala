@@ -175,6 +175,8 @@ object ResultShaper {
                               nameCol: Option[String] = None)
       : Iterator[String] = {
     import scala.jdk.CollectionConverters._
+    // a chunk must take at least one row, or the stream never ends
+    require(chunkSize > 0, s"chunk size must be positive: $chunkSize")
     val keyCols = nameCol.toSeq ++ tagCols
     val projected =
       if (keyCols.isEmpty) df.select(valueCols.map(qcol): _*)

@@ -26,89 +26,60 @@ object StreamDDL {
                              onDb: Option[String] = None) // CQ ON <db>
 
   def parse(ddl: String): StreamStatement = {
-    var toks = InfluxQL.lex(ddl)
-    def peek: Tok = toks.headOption.getOrElse(TPunct("<eof>"))
-    def next(): Tok = { val t = peek; toks = toks.drop(1); t }
-    def ident(): String = next() match {
-      case TIdent(s) => s
-      // the reference's stream grammar names the stream with a STRING
-      // literal (sql.y CREATE STREAM STRING_TYPE INTO …)
-      case TStr(s) => s
-      case t => sys.error(s"expected identifier, got $t")
-    }
-    def kw(s: String): Unit = {
-      val t = ident()
-      require(t.equalsIgnoreCase(s), s"expected $s, got $t")
-    }
-    def isKw(s: String): Boolean = peek match {
-      case TIdent(i) => i.equalsIgnoreCase(s)
-      case _ => false
-    }
-    def punct(p: String): Unit = next() match {
-      case TPunct(`p`) =>
-      case t => sys.error(s"expected '$p', got $t")
-    }
-    def dur(): Long = next() match {
-      case TDur(ns) => ns
-      case t => sys.error(s"expected duration, got $t")
-    }
-
-    kw("create")
-    val isCQ = peek match {
-      case TIdent(s) if s.equalsIgnoreCase("continuous") =>
-        next(); kw("query"); true
-      case _ => kw("stream"); false
-    }
+    // the reference's stream grammar names the stream with a STRING
+    // literal (sql.y CREATE STREAM STRING_TYPE INTO …): `ident` takes both
+    val c = new InfluxQL.Cursor(ddl)
+    import c.{accept, expect, expectIdent, ident}
+    expectIdent("create")
+    val isCQ = accept("continuous") && { expectIdent("query"); true }
+    if (!isCQ) expectIdent("stream")
     val name = ident()
     // reference grammar (ast.go:5352): CREATE CONTINUOUS QUERY n ON db
-    var onDb: Option[String] = None
-    if (isCQ && isKw("on")) { next(); onDb = Some(ident()) }
+    val onDb = if (isCQ && accept("on")) Some(ident()) else None
     var every: Option[Long] = None
     var forNs: Option[Long] = None
-    if (isCQ && isKw("resample")) { // RESAMPLE [EVERY <dur>] [FOR <dur>]
-      next()
-      if (isKw("every")) { next(); every = Some(dur()) }
-      if (isKw("for")) { next(); forNs = Some(dur()) }
+    if (isCQ && accept("resample")) { // RESAMPLE [EVERY <dur>] [FOR <dur>]
+      if (accept("every")) every = Some(c.duration())
+      if (accept("for")) forNs = Some(c.duration())
       require(every.isDefined || forNs.isDefined,
         "RESAMPLE requires EVERY and/or FOR")
     }
-    if (isKw("begin")) next() // CQ body marker
+    accept("begin") // CQ body marker
     // two body orders: the reference's `SELECT … INTO t FROM …` and the
     // stream form `INTO t SELECT … FROM …`
     var target: String = null
-    if (isKw("into")) {
-      next(); target = ident()
+    if (accept("into")) {
+      target = ident()
       // qualified db.rp.mst target (sql.y TABLE_NAME_WITH_OPTION): keep
       // the measurement name, the serving layer resolves the namespace
-      while (peek == TPunct(".")) { next(); target = ident() }
+      while (c.acceptPunct(".")) target = ident()
     }
     // reference stream form separates target and body with ON
     // (sql.y: CREATE STREAM STRING_TYPE INTO target ON SELECT …)
-    if (isKw("on")) next()
-    kw("select")
+    accept("on")
+    expectIdent("select")
     var calls = Seq.empty[(String, String)]
     var more = true
     while (more) {
-      val fn = ident(); punct("(")
-      val field = next() match {
+      val fn = ident(); expect("(")
+      val field = c.next() match {
         case TIdent(f) => f
         case TPunct("*") => "*"
         case t => sys.error(s"bad field: $t")
       }
-      punct(")")
+      expect(")")
       calls :+= ((fn.toLowerCase, field))
-      if (peek == TPunct(",") ) { next(); more = true } else more = false
+      more = c.acceptPunct(",")
     }
-    if (target == null) { kw("into"); target = ident() }
-    kw("from")
+    if (target == null) { expectIdent("into"); target = ident() }
+    expectIdent("from")
     val from = ident()
-    kw("group"); kw("by")
-    kw("time"); punct("("); val interval = dur(); punct(")")
+    expectIdent("group"); expectIdent("by")
+    expectIdent("time"); expect("("); val interval = c.duration(); expect(")")
     var tags = Seq.empty[String]
-    while (peek == TPunct(",")) { next(); tags :+= ident() }
-    var delay = 0L
-    if (isKw("delay")) { next(); delay = dur() }
-    if (isKw("end")) next()
+    while (c.acceptPunct(",")) tags :+= ident()
+    val delay = if (accept("delay")) c.duration() else 0L
+    accept("end")
     StreamStatement(name, target, calls, from, interval, tags, delay,
       every, forNs, onDb)
   }
@@ -130,36 +101,22 @@ object StreamDDL {
                           mode: String, destinations: Seq[String])
 
   def parseSubscription(ddl: String): Subscription = {
-    var toks = InfluxQL.lex(ddl)
-    def peek: Tok = toks.headOption.getOrElse(TPunct("<eof>"))
-    def next(): Tok = { val t = peek; toks = toks.drop(1); t }
-    def ident(): String = next() match {
-      case TIdent(s) => s
-      case TStr(s) => s
-      case t => sys.error(s"expected identifier, got $t")
-    }
-    def kw(s: String): Unit = {
-      val t = ident()
-      require(t.equalsIgnoreCase(s), s"expected $s, got $t")
-    }
-    kw("create"); kw("subscription")
-    val name = ident()
-    kw("on")
-    val db = ident()
-    require(next() == TPunct("."), "expected db.rp")
-    val rp = ident()
-    kw("destinations")
-    val mode = ident().toUpperCase
+    val c = new InfluxQL.Cursor(ddl)
+    c.expectIdent("create"); c.expectIdent("subscription")
+    val name = c.ident()
+    c.expectIdent("on")
+    val db = c.ident()
+    require(c.acceptPunct("."), "expected db.rp")
+    val rp = c.ident()
+    c.expectIdent("destinations")
+    val mode = c.ident().toUpperCase
     require(mode == "ALL" || mode == "ANY",
       s"unknown subscription mode $mode")
     var dests = Seq.empty[String]
     var more = true
     while (more) {
-      next() match {
-        case TStr(u) => dests :+= u
-        case t => sys.error(s"expected destination string, got $t")
-      }
-      if (peek == TPunct(",")) next() else more = false
+      dests :+= c.str()
+      more = c.acceptPunct(",")
     }
     Subscription(name, db, rp, mode, dests)
   }

@@ -7,6 +7,7 @@ import java.util.Base64
 import org.apache.spark.sql.functions._
 import graft.query.{InfluxQL, PromQL}
 import graft.server.{Auth, HttpGateway}
+import graft.sources.ResultShaper
 
 /** Gateway authentication/authorization e2e — the reference's
   * `httpd/handler.go:1913` authenticate middleware + `meta/authorizer
@@ -335,6 +336,119 @@ class AuthSpec extends SparkSpec {
     assert(post("/api/v1/tsdb/authstore", "", adm).statusCode() == 200)
     assert(get("/prometheus/authstore/api/v1/labels", adm)
       .statusCode() == 200)
+  }
+
+  test("a READ-only user's SELECT with a quoted 'into' reads: the " +
+      "library's series, no INTO write") {
+    val adm = "&u=admin&p=secret"
+    assert(query("CREATE USER rita WITH PASSWORD 'rpw'", extra = adm)
+      .statusCode() == 200)
+    assert(query("GRANT READ ON graft TO rita", extra = adm)
+      .statusCode() == 200)
+    val q = "SELECT count(value) FROM events WHERE event_type != 'into' " +
+      "GROUP BY event_type"
+    val r = query(q, extra = "&db=graft", headers = Seq(basic("rita", "rpw")))
+    assert(r.statusCode() == 200, r.body())
+    val cat = Map("events" -> InfluxQL.Measurement(
+      events, tags = Seq("event_type")))
+    val (name, tags, df0, desc) = InfluxQL.executeShapedOrd(cat, q)
+    val (df, timeNs) = HttpGateway.edgeTime(df0)
+    val obj = ResultShaper.toResultObj(df, name, tags,
+      HttpGateway.shapedValueCols(df.columns.toIndexedSeq, tags), "ms", 0,
+      timeNs = timeNs, seriesDesc = desc)
+    assert(r.body() == s"""{"results":[$obj]}""")
+    assert(r.body().contains("\"count\"") && !r.body().contains("written"))
+  }
+
+  test("privilege table: one statement of each kind against admin, a " +
+      "READ-only and a READ+WRITE user") {
+    val g = new HttpGateway(spark, Map.empty, Map.empty, requireAuth = true)
+    g.start()
+    def ask(q: String, user: (String, String)) =
+      http.send(HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:${g.boundPort}/query?db=d&q=${enc(q)}&epoch=ms"))
+        .header(basic(user._1, user._2)._1, basic(user._1, user._2)._2)
+        .GET().build(), HttpResponse.BodyHandlers.ofString())
+    val admin = ("root", "rpw")
+    val reader = ("reader", "pw")
+    val writer = ("writer", "pw")
+    try {
+      assert(ask("CREATE USER root WITH PASSWORD 'rpw' WITH ALL PRIVILEGES",
+        admin).statusCode() == 200)
+      Seq("CREATE DATABASE d", "CREATE USER reader WITH PASSWORD 'pw'",
+          "CREATE USER writer WITH PASSWORD 'pw'", "GRANT READ ON d TO reader",
+          "GRANT ALL ON d TO writer").foreach { q =>
+        assert(ask(q, admin).statusCode() == 200, q)
+      }
+      val w = http.send(HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:${g.boundPort}/write?db=d&precision=ms"))
+        .header(basic("root", "rpw")._1, basic("root", "rpw")._2)
+        .POST(HttpRequest.BodyPublishers.ofString(
+          "m,host=a v=1 1000\nm,host=b v=2 2000\nds,h=a v=1 2592000000"))
+        .build(), HttpResponse.BodyHandlers.ofString())
+      assert(w.statusCode() == 204, w.body())
+      val (ok, no) = (200, 403)
+      // statement -> expected (reader, writer, admin); rows run in order
+      // and each row's allowed runs must succeed at that point
+      val table: Seq[(String, (Int, Int, Int))] = Seq(
+        "SELECT count(v) FROM m" -> ((ok, ok, ok)),
+        "SELECT count(v) FROM m WHERE host = 'into'" -> ((ok, ok, ok)),
+        "SELECT count(v) INTO m2 FROM m" -> ((no, ok, ok)),
+        "EXPLAIN SELECT count(v) FROM m" -> ((ok, ok, ok)),
+        "SHOW MEASUREMENTS" -> ((ok, ok, ok)),
+        "SHOW QUERIES" -> ((ok, ok, ok)),
+        "SHOW DATABASES" -> ((ok, ok, ok)),
+        "SHOW RETENTION POLICIES ON d" -> ((ok, ok, ok)),
+        "SHOW CONTINUOUS QUERIES" -> ((ok, ok, ok)),
+        "SHOW SUBSCRIPTIONS" -> ((ok, ok, ok)),
+        "SHOW SHARDS" -> ((ok, ok, ok)),
+        "SHOW SHARD GROUPS" -> ((ok, ok, ok)),
+        "SHOW STREAMS" -> ((ok, ok, ok)),
+        "SHOW DOWNSAMPLES" -> ((ok, ok, ok)),
+        "SHOW CONFIGS" -> ((ok, ok, ok)),
+        "CREATE DATABASE d2" -> ((no, no, ok)),
+        "DROP DATABASE d2" -> ((no, no, ok)),
+        "CREATE RETENTION POLICY rp1 ON d DURATION 72h REPLICATION 1" ->
+          ((no, no, ok)),
+        "CREATE CONTINUOUS QUERY cq1 ON d BEGIN SELECT mean(v) INTO t " +
+          "FROM m GROUP BY time(10s) END" -> ((no, no, ok)),
+        "DROP CONTINUOUS QUERY cq1 ON d" -> ((no, no, ok)),
+        "CREATE MEASUREMENT sx (h tag, v float64) WITH SHARDKEY h" ->
+          ((no, no, ok)),
+        "ALTER MEASUREMENT sx WITH SHARDKEY h" -> ((no, no, ok)),
+        "SHOW SHARDKEY FROM sx" -> ((ok, ok, ok)),
+        "CREATE SUBSCRIPTION s1 ON d.rp1 DESTINATIONS ANY 'http://h:9092'" ->
+          ((no, no, ok)),
+        "DROP SUBSCRIPTION s1 ON d.rp1" -> ((no, no, ok)),
+        "CREATE STREAM 'st1' INTO ssum ON SELECT sum(v) FROM m " +
+          "GROUP BY time(10s) DELAY 2s" -> ((no, no, ok)),
+        "DROP STREAM 'st1'" -> ((no, no, ok)),
+        "CREATE DOWNSAMPLE ON d.rp1 (float(max)) WITH DURATION 72h " +
+          "SAMPLEINTERVAL(25h) TIMEINTERVAL(1m)" -> ((no, no, ok)),
+        "DROP DOWNSAMPLE ON d.rp1" -> ((no, no, ok)),
+        // 7d shard groups: ds's point at day 30 is group 4
+        "DROP SHARD 4" -> ((no, no, ok)),
+        "DELETE FROM m2" -> ((no, no, ok)),
+        "DROP MEASUREMENT m2" -> ((no, no, ok)),
+        // authorized, then answered "no such query id"
+        "KILL QUERY 999" -> ((no, no, 400)),
+        "SET CONFIG sql logging.level = info" -> ((no, no, ok)),
+        "PREPARE SNAPSHOT" -> ((no, no, ok)),
+        "CREATE USER u9 WITH PASSWORD 'x'" -> ((no, no, ok)),
+        "SHOW USERS" -> ((no, no, ok)),
+        // SET PASSWORD: an admin for anyone, a user for themself (the
+        // admin, authorized, is then refused the unchanged password)
+        "SET PASSWORD FOR u9 = 'y'" -> ((no, no, ok)),
+        "SET PASSWORD FOR writer = 'pw2'" -> ((no, ok, 400)))
+      table.foreach { case (q, (r, wr, a)) =>
+        Seq(reader -> r, writer -> wr, admin -> a).foreach {
+          case (user, want) =>
+            val got = ask(q, user)
+            assert(got.statusCode() == want,
+              s"${user._1}: $q -> ${got.statusCode()} ${got.body()}")
+        }
+      }
+    } finally g.stop()
   }
 
   test("Auth unit: SET PASSWORD re-salts (old snapshot can't precompute)") {

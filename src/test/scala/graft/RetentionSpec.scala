@@ -45,8 +45,6 @@ class RetentionSpec extends AnyFunSuite {
     val d = Retention.parse("DROP RETENTION POLICY hot ON db1")
     assert(d == Retention.RpStatement("drop", "hot", "db1",
       None, None, None, default = false))
-    assert(Retention.isRpStatement("create retention policy x on y"))
-    assert(!Retention.isRpStatement("create database x"))
     intercept[RuntimeException](
       Retention.parse("CREATE RETENTION POLICY hot ON db1 BANANAS"))
   }

@@ -93,6 +93,29 @@ class ServerSpec extends SparkSpec {
     r.body().split('\n').foreach(l => JsonMethods.parse(l))
   }
 
+  test("chunked /query with a non-positive chunk_size takes the default " +
+      "of 10000 and ends") {
+    val q = "SELECT count(value) FROM events GROUP BY event_type"
+    val r = http.send(HttpRequest.newBuilder(url(
+      s"/query?q=${enc(q)}&chunked=true&chunk_size=0&epoch=ms"))
+      .timeout(java.time.Duration.ofSeconds(120)).GET().build(),
+      HttpResponse.BodyHandlers.ofInputStream())
+    assert(r.statusCode() == 200)
+    // read a bounded number of lines: an endless stream fails, not hangs
+    val in = new java.io.BufferedReader(
+      new java.io.InputStreamReader(r.body(), UTF_8))
+    val lines = try Iterator.continually(in.readLine())
+      .takeWhile(_ != null).take(1000).toVector
+    finally in.close()
+    val cat = Map("events" -> InfluxQL.Measurement(
+      events, tags = Seq("event_type")))
+    val (name, tags, df) = InfluxQL.executeShaped(cat, q)
+    val valueCols = HttpGateway.shapedValueCols(df.columns.toIndexedSeq, tags)
+    val expected = ResultShaper.toSeriesJsonChunked(
+      df, name, tags, valueCols, 10000, "ms")
+    assert(lines == expected.toVector)
+  }
+
   test("chunked /query answers through the gateway's statement dispatch: " +
       "the same series as the non-chunked reply") {
     val g = new HttpGateway(spark, Map("events" -> InfluxQL.Measurement(
@@ -1719,6 +1742,13 @@ class ServerSpec extends SparkSpec {
         "CREATE MEASUREMENT mrow WITH SHARDKEY host")).statusCode() == 200)
       assert(gget("/query?q=" + enc("SHOW PRIMARYKEY FROM mrow"))
         .statusCode() == 400)
+      // no shard key: SHOW SCHEMA leaves the SHARD_KEY section out and
+      // stays one JSON document
+      assert(gget("/query?q=" + enc(
+        "CREATE MEASUREMENT mbare (h tag, v float64)")).statusCode() == 200)
+      val bare = gget("/query?q=" + enc("SHOW SCHEMA FROM mbare")).body()
+      JsonMethods.parse(bare)
+      assert(bare.contains("ENGINETYPE") && !bare.contains("SHARD_KEY"), bare)
       // writes land on the declared (empty, typed) measurement
       assert(gpost("/write?precision=ms",
         "mcpu,region=r1,az=a1 v1=5i,v2=1.5 1000").statusCode() == 204)
@@ -2522,6 +2552,31 @@ class ServerSpec extends SparkSpec {
       val cqs = iql(g, "SHOW CONTINUOUS QUERIES", db = "d").body()
       assert(cqs.contains("lcq"), cqs)
     } finally g.stop()
+  }
+
+  test("DROP CONTINUOUS QUERY with quoted names drops the CQ, live and " +
+      "after a restart") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dropcq").toString
+    def shown(g: HttpGateway) =
+      iql(g, "SHOW CONTINUOUS QUERIES", db = "d").body().contains("\"cq\"")
+    val g1 = persisted(dir)
+    try {
+      assert(iql(g1, "CREATE DATABASE d").statusCode() == 200)
+      lp(g1, "d", "m,h=a v=1 1000")
+      assert(iql(g1, "CREATE CONTINUOUS QUERY cq ON d BEGIN SELECT mean(v) " +
+        "INTO t FROM m GROUP BY time(10s) END", db = "d").statusCode() == 200)
+      assert(shown(g1))
+      // ON names the database, whatever the request's db param
+      val r = iql(g1, "DROP CONTINUOUS QUERY \"cq\" ON \"d\"")
+      assert(r.statusCode() == 200 && !r.body().contains("error"), r.body())
+      assert(!shown(g1))
+      assert(g1.runContinuousQueries(60000) == 0)
+    } finally g1.stop()
+    val g2 = persisted(dir)
+    try {
+      assert(!shown(g2))
+      assert(g2.runContinuousQueries(60000) == 0)
+    } finally g2.stop()
   }
 
   test("a database re-created under a dropped one's name replays none of " +
