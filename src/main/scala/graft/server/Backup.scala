@@ -3,6 +3,7 @@ package graft.server
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 import graft.sources.AtomicFiles
+import graft.sources.ResultShaper.jsonStr
 
 /** Filesystem backup service — the reference's `lib/backup/backup.go`
   * driven by the `/backup/{run,status,abort}` routes
@@ -32,8 +33,7 @@ object Backup {
     val bytes = new AtomicLong(0)
     val abort = new AtomicBoolean(false)
     def renderJson: String = {
-      val err = error.map(e => s""","error":"${e.replace("\"", "'")}"""")
-        .getOrElse("")
+      val err = error.map(e => s""","error":${jsonStr(e)}""").getOrElse("")
       s"""{"status":"$status","isInc":$isInc,"files":${files.get},""" +
         s""""bytes":${bytes.get}$err}"""
     }

@@ -1,12 +1,14 @@
 package graft.server
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpServer
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import graft.query.{InfluxQL, LogPipe, PromQL}
 import graft.streaming.StreamDDL
 import graft.sources.{LineProtocol, OtlpLogs, OtlpMetrics, OtlpTraces, PromRemoteRead, PromRemoteWrite, ResultShaper}
+import graft.sources.ResultShaper.jsonStr
+import Routes.{Admin, Authed, Logkeeper, Meter, Open, Priv, Prom, Request, Router, route}
 
 /** Minimal HTTP serving surface over the library, mirroring the
   * reference's httpd routes (`lib/util/lifted/influx/httpd/handler.go:264`
@@ -76,6 +78,16 @@ final class HttpGateway(spark: SparkSession,
   // store, `__name__` as an ordinary label — queries against a store
   // resolve each metric selector onto that frame filtered by __name__
   @volatile private var promStores = Map.empty[String, PromQL.Metric]
+  /** A metric store before its first write (`/api/v1/tsdb/{tsdb}`), and
+    * what a query of a store nobody created reads. */
+  private val emptyStore = {
+    import org.apache.spark.sql.types._
+    PromQL.Metric(spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType(Seq(StructField("__name__", StringType),
+        StructField("value", DoubleType), StructField("ts", TimestampType)))),
+      Seq("__name__"), "ts", "value")
+  }
   // the one runtime knob SET CONFIG can change (statement_executor.go:
   // 2572 executeSetConfig — sql/logging.level only, everything else is
   // "unsupported config command"); rendered back by SHOW CONFIGS
@@ -1062,44 +1074,30 @@ final class HttpGateway(spark: SparkSession,
   private val failpoints =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Serving statistics, the reference's `handler` expvar module
-    * (lib/statisticsPusher/statistics/handler_statistics.go — field
-    * names match its `name:` tags) rendered by /debug/vars. */
-  object stats {
-    import java.util.concurrent.atomic.AtomicLong
-    val req = new AtomicLong(0)
-    val queryReq = new AtomicLong(0)
-    val writeReq = new AtomicLong(0)
-    val pointsWrittenOK = new AtomicLong(0)
-    val write400ErrReq = new AtomicLong(0)
-    val pingReq = new AtomicLong(0)
-    val statusReq = new AtomicLong(0)
-    val authFail = new AtomicLong(0)
-    val clientError = new AtomicLong(0)
-    val serverError = new AtomicLong(0)
-    val queryReqDurationNs = new AtomicLong(0)
-    val writeReqDurationNs = new AtomicLong(0)
-    def renderJson: String = {
-      val rt = Runtime.getRuntime
-      val (hits, evals) = resultsCache.stats
-      "{\"handler\":{" +
-        "\"req\":" + req.get + ",\"queryReq\":" + queryReq.get +
-        ",\"writeReq\":" + writeReq.get +
-        ",\"pointsWrittenOK\":" + pointsWrittenOK.get +
-        ",\"write400ErrReq\":" + write400ErrReq.get +
-        ",\"pingReq\":" + pingReq.get +
-        ",\"statusReq\":" + statusReq.get +
-        ",\"authFail\":" + authFail.get +
-        ",\"clientError\":" + clientError.get +
-        ",\"serverError\":" + serverError.get +
-        ",\"queryReqDurationNs\":" + queryReqDurationNs.get +
-        ",\"writeReqDurationNs\":" + writeReqDurationNs.get +
-        "},\"resultsCache\":{\"hits\":" + hits +
-        ",\"evals\":" + evals +
-        "},\"runtime\":{\"totalMemory\":" + rt.totalMemory +
-        ",\"freeMemory\":" + rt.freeMemory +
-        ",\"availableProcessors\":" + rt.availableProcessors + "}}"
-    }
+  private val stats = new Routes.Stats
+
+  /** `/debug/vars` (handler.go:1806 serveExpvar): the handler module,
+    * the results cache and the runtime. */
+  private def statsJson: String = {
+    val rt = Runtime.getRuntime
+    val (hits, evals) = resultsCache.stats
+    "{\"handler\":{" +
+      "\"req\":" + stats.req.get + ",\"queryReq\":" + stats.queryReq.get +
+      ",\"writeReq\":" + stats.writeReq.get +
+      ",\"pointsWrittenOK\":" + stats.pointsWrittenOK.get +
+      ",\"write400ErrReq\":" + stats.write400ErrReq.get +
+      ",\"pingReq\":" + stats.pingReq.get +
+      ",\"statusReq\":" + stats.statusReq.get +
+      ",\"authFail\":" + stats.authFail.get +
+      ",\"clientError\":" + stats.clientError.get +
+      ",\"serverError\":" + stats.serverError.get +
+      ",\"queryReqDurationNs\":" + stats.queryReqDurationNs.get +
+      ",\"writeReqDurationNs\":" + stats.writeReqDurationNs.get +
+      "},\"resultsCache\":{\"hits\":" + hits +
+      ",\"evals\":" + evals +
+      "},\"runtime\":{\"totalMemory\":" + rt.totalMemory +
+      ",\"freeMemory\":" + rt.freeMemory +
+      ",\"availableProcessors\":" + rt.availableProcessors + "}}"
   }
   private val running =
     scala.collection.mutable.LinkedHashMap.empty[Long, RunningQuery]
@@ -1133,95 +1131,220 @@ final class HttpGateway(spark: SparkSession,
     else if (ns >= 1000000L) s"${ns / 1000000L}ms"
     else s"${ns / 1000L}µs"
 
-  server.createContext("/ping", (ex: HttpExchange) => {
-    stats.pingReq.incrementAndGet(); stats.req.incrementAndGet()
-    ex.getResponseHeaders.set("X-Gemini-Compat", "graft")
-    ex.sendResponseHeaders(204, -1); ex.close()
-  })
-  // deprecated alias for /ping (handler.go:1711 serveStatus)
-  server.createContext("/status", (ex: HttpExchange) => {
-    stats.statusReq.incrementAndGet(); stats.req.incrementAndGet()
-    ex.sendResponseHeaders(204, -1); ex.close()
-  })
+  // ------------------------------------------------------------- routes
+  // One declaration per route (see [[Routes]]); the handlers below take
+  // the matched request.
+  server.createContext("/", new Router({
+    val read = Priv(Auth.ReadPrivilege)
+    val write = Priv(Auth.WritePrivilege)
+    val readStore = Priv(Auth.ReadPrivilege, _("store"))
+    val readRepo = Priv(Auth.ReadPrivilege, _("repo"))
+    val writeRepo = Priv(Auth.WritePrivilege, _("repo"))
+    val queryMeter = Some(Meter(stats.queryReq, stats.queryReqDurationNs))
+    val writeMeter = Some(Meter(stats.writeReq, stats.writeReqDurationNs,
+      Some(stats.write400ErrReq)))
+    val logstream = "/repo/{repo}/logstreams/{stream}"
+    Seq(
+      route("GET HEAD", "/ping", Open) { r =>
+        stats.pingReq.incrementAndGet()
+        r.ex.getResponseHeaders.set("X-Gemini-Compat", "graft")
+        r.empty(204)
+      },
+      // deprecated alias for /ping (handler.go:1711 serveStatus)
+      route("GET HEAD", "/status", Open) { r =>
+        stats.statusReq.incrementAndGet(); r.empty(204)
+      },
+      route("GET", "/metrics", Open)(metricsText),
+      route("GET", "/api/v1/status/buildinfo", Open)(buildInfo),
+      // Flux is not served, exactly like a default-config reference node
+      // (handler.go:240 AddFluxAPIRoute with FluxEnabled=false → 403)
+      route("POST", "/api/v2/query", Open)(_.respond(403,
+        "{\"error\":\"Flux query service disabled. Verify flux-enabled=" +
+          "true in the [http] section of the InfluxDB config.\"}")),
+      route("GET", "/debug/vars", Admin)(_.respond(200, statsJson)),
+      route("GET", "/debug/query", Admin)(debugQuery),
+      route("POST", "/debug/ctrl", Admin)(debugCtrl),
+      route("POST", "/failpoint", Admin, form = true)(failpoint),
+      route("POST", "/backup/run", Admin)(backupRun),
+      route("POST", "/backup/status", Admin)(_.respond(200,
+        backupJob.map(_.renderJson).getOrElse("{\"status\":\"idle\"}"))),
+      route("POST", "/backup/abort", Admin)(backupAbort),
+      route("GET", "/fence/match_batch", write)(fenceMatch),
+      route("POST", "/fence/delete_fence", write)(fenceDelete),
+      route("GET POST", "/query", Authed, form = true,
+        meter = queryMeter)(handleQuery),
+      route("POST", "/write", write, meter = writeMeter)(
+        handleWrite(_, v2 = false)),
+      // influxdb-2.x write compat (handler.go:1470 serveWriteV2): the v2
+      // `bucket` maps onto the v1 database[/rp]
+      route("POST", "/api/v2/write", Priv(Auth.WritePrivilege, bucketDb),
+        meter = writeMeter)(handleWrite(_, v2 = true)),
+      route("POST", "/api/v1/arrow/doput", write)(handleArrowDoPut),
+      route("GET POST", "/api/v1/arrow/doget", Authed, form = true)(
+        handleArrowDoGet),
+      // OTLP metrics remote write (handler.go:316, handler_otlp.go:109)
+      route("POST", "/api/v1/otlp/metrics", write)(handleOtlp(_) { body =>
+        val samples = OtlpMetrics.decode(body)
+        if (samples.isEmpty) sys.error("no metric data points in request")
+        OtlpMetrics.toMeasurements(spark, samples)
+      }),
+      // OTLP logs remote write (handler.go:320 -> the `logs` measurement)
+      route("POST", "/api/v1/otlp/logs", write)(handleOtlp(_) { body =>
+        val samples = OtlpLogs.decode(body)
+        if (samples.isEmpty) sys.error("no log records in request")
+        Map(OtlpLogs.Measurement -> OtlpLogs.toMeasurement(spark, samples))
+      }),
+      // OTLP traces remote write (handler.go:312 -> the `spans` measurement)
+      route("POST", "/api/v1/otlp/traces", write)(handleOtlp(_) { body =>
+        val samples = OtlpTraces.decode(body)
+        if (samples.isEmpty) sys.error("no spans in request")
+        Map(OtlpTraces.Measurement -> OtlpTraces.toMeasurement(spark, samples))
+      }),
+      // Prometheus remote write and read; the reference serves write at
+      // both `/api/v1/write` (handler.go:333) and `/api/v1/prom/write`
+      // (handler.go:637)
+      route("POST", "/api/v1/write", write)(handlePromWrite),
+      route("POST", "/api/v1/prom/write", write)(handlePromWrite),
+      route("POST", "/api/v1/read", read)(handlePromRead),
+      route("GET", "/api/v1/metadata", read, Prom)(promMetadata),
+      route("GET POST", "/api/v1/series", read, Prom, form = true)(
+        handleSeries),
+      route("GET POST", "/api/v1/labels", read, Prom) { r =>
+        val cat = promCatOf(r)
+        labels(r, cat.values, Some(cat.keys))
+      },
+      route("GET", "/api/v1/label/{label}/values", read, Prom) { r =>
+        val cat = promCatOf(r)
+        labelValues(r, cat.values, Some(cat.keys))
+      },
+      // the reference also serves the PromQL evaluator at /api/v1/prom/*
+      // (handler.go:633 route table) — same handler, second mount
+      route("GET POST", "/api/v1/query", read, Prom, form = true)(
+        promQuery(range = false)),
+      route("GET POST", "/api/v1/query_range", read, Prom, form = true)(
+        promQuery(range = true)),
+      route("GET POST", "/api/v1/prom/query", read, Prom, form = true)(
+        promQuery(range = false)),
+      route("GET POST", "/api/v1/prom/query_range", read, Prom, form = true)(
+        promQuery(range = true)),
+      route("POST", "/api/v1/tsdb/{tsdb}",
+        Priv(Auth.WritePrivilege, _("tsdb")))(createTsdb),
+      // metric-store-scoped prom API (handler.go:397-433): the store is
+      // one measurement holding all its series (__name__ as a label).
+      // read/series remain on the default-namespace routes — store
+      // queries address the mst.
+      route("POST", "/prometheus/{store}/api/v1/write",
+        Priv(Auth.WritePrivilege, _("store")))(handlePromStoreWrite),
+      route("GET POST", "/prometheus/{store}/api/v1/query", readStore, Prom,
+        form = true)(storeQuery(range = false)),
+      route("GET POST", "/prometheus/{store}/api/v1/query_range", readStore,
+        Prom, form = true)(storeQuery(range = true)),
+      route("GET POST", "/prometheus/{store}/api/v1/labels", readStore, Prom)(
+        r => labels(r, promStores.get(storeOf(r)), None)),
+      route("GET", "/prometheus/{store}/api/v1/label/{label}/values",
+        readStore, Prom)(r => labelValues(r, promStores.get(storeOf(r)), None)),
+      // Logkeeper CRUD (handler.go:483-512, handler_logstore.go): a
+      // REPOSITORY is a database and a LOGSTREAM is a measurement in it
+      route("GET", "/api/v1/repository", read)(_.respond(200,
+        dbs.keys.toSeq.sorted.map(jsonStr).mkString("[", ",", "]"))),
+      route("POST", "/api/v1/repository/{repo}", writeRepo)(createRepository),
+      route("DELETE", "/api/v1/repository/{repo}", writeRepo)(dropRepository),
+      route("GET", "/api/v1/logstream/{repo}", readRepo)(r => r.respond(200,
+        repoNamed(r("repo")).msts.keys.toSeq.sorted.map(jsonStr)
+          .mkString("[", ",", "]"))),
+      route("POST", "/api/v1/logstream/{repo}/{stream}", writeRepo)(
+        createLogstream),
+      route("DELETE", "/api/v1/logstream/{repo}/{stream}", writeRepo)(
+        dropLogstream),
+      route("POST", s"$logstream/stream-task", writeRepo, Logkeeper)(
+        createStreamTask),
+      route("DELETE", s"$logstream/stream-task/{task}", writeRepo, Logkeeper)(
+        dropStreamTask)
+    ) ++
+      // Logkeeper pipe-syntax queries (handler.go:532-560 route table)
+      Seq("logs", "histogram", "analytics").map(a =>
+        route("GET POST", s"$logstream/$a", readRepo, Logkeeper, form = true)(
+          logQuery(a))) ++
+      Seq("consume/cursors", "consume/logs", "consume/cursor-time",
+          "context").map(a =>
+        route("GET POST", s"$logstream/$a", readRepo, Logkeeper)(consume(a))) ++
+      // empty handlers in the reference (serveQueryLogByCursor :57,
+      // serveGetCursor / servePullLog :1006-1008): authed 200, no body
+      Seq("logbycursor", "cursor", "cursor/{cursor}").map(a =>
+        route("GET POST", s"$logstream/$a", readRepo, Logkeeper)(
+          _.respond(200, ""))) ++
+      Seq("records", "upload", "recalldata").map(a =>
+        route("POST", s"$logstream/$a", writeRepo, Logkeeper)(logIngest(a)))
+  }, auth, requireAuth, stats))
+
   // GET /metrics (handler.go:329 serveMetrics): Prometheus text
   // exposition of the serving counters. The reference mounts promhttp
   // over its statistics collectors and — like /ping — does NOT require
   // auth on this route (route table auth flag false); the counter set
   // here is the same handler-module set /debug/vars renders as JSON.
-  server.createContext("/metrics", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "GET")
-      respond(ex, 405, "{\"error\":\"invalid method\"}")
-    else {
-      val rt = Runtime.getRuntime
-      val (hits, evals) = resultsCache.stats
-      val counters = Seq(
-        "handler_req_total" -> stats.req.get,
-        "handler_query_req_total" -> stats.queryReq.get,
-        "handler_write_req_total" -> stats.writeReq.get,
-        "handler_points_written_ok_total" -> stats.pointsWrittenOK.get,
-        "handler_write_400_err_req_total" -> stats.write400ErrReq.get,
-        "handler_ping_req_total" -> stats.pingReq.get,
-        "handler_status_req_total" -> stats.statusReq.get,
-        "handler_auth_fail_total" -> stats.authFail.get,
-        "handler_client_error_total" -> stats.clientError.get,
-        "handler_server_error_total" -> stats.serverError.get,
-        "handler_query_req_duration_ns_total" ->
-          stats.queryReqDurationNs.get,
-        "handler_write_req_duration_ns_total" ->
-          stats.writeReqDurationNs.get,
-        "results_cache_hits_total" -> hits,
-        "results_cache_evals_total" -> evals)
-      val gauges = Seq(
-        "runtime_total_memory_bytes" -> rt.totalMemory,
-        "runtime_free_memory_bytes" -> rt.freeMemory,
-        "runtime_available_processors" -> rt.availableProcessors.toLong)
-      val body = new StringBuilder
-      counters.foreach { case (n, v) =>
-        body.append(s"# TYPE graft_$n counter\n")
-        body.append(s"graft_$n $v\n")
-      }
-      gauges.foreach { case (n, v) =>
-        body.append(s"# TYPE graft_$n gauge\n")
-        body.append(s"graft_$n $v\n")
-      }
-      ex.getResponseHeaders.set("Content-Type",
-        "text/plain; version=0.0.4; charset=utf-8")
-      val bytes = body.toString.getBytes("UTF-8")
-      ex.sendResponseHeaders(200, bytes.length)
-      ex.getResponseBody.write(bytes); ex.close()
+  private def metricsText(r: Request): Unit = {
+    val rt = Runtime.getRuntime
+    val (hits, evals) = resultsCache.stats
+    val counters = Seq(
+      "handler_req_total" -> stats.req.get,
+      "handler_query_req_total" -> stats.queryReq.get,
+      "handler_write_req_total" -> stats.writeReq.get,
+      "handler_points_written_ok_total" -> stats.pointsWrittenOK.get,
+      "handler_write_400_err_req_total" -> stats.write400ErrReq.get,
+      "handler_ping_req_total" -> stats.pingReq.get,
+      "handler_status_req_total" -> stats.statusReq.get,
+      "handler_auth_fail_total" -> stats.authFail.get,
+      "handler_client_error_total" -> stats.clientError.get,
+      "handler_server_error_total" -> stats.serverError.get,
+      "handler_query_req_duration_ns_total" ->
+        stats.queryReqDurationNs.get,
+      "handler_write_req_duration_ns_total" ->
+        stats.writeReqDurationNs.get,
+      "results_cache_hits_total" -> hits,
+      "results_cache_evals_total" -> evals)
+    val gauges = Seq(
+      "runtime_total_memory_bytes" -> rt.totalMemory,
+      "runtime_free_memory_bytes" -> rt.freeMemory,
+      "runtime_available_processors" -> rt.availableProcessors.toLong)
+    val body = new StringBuilder
+    counters.foreach { case (n, v) =>
+      body.append(s"# TYPE graft_$n counter\n")
+      body.append(s"graft_$n $v\n")
     }
-  })
-  // internal serving metrics in /debug/vars format (handler.go:1806
-  // serveExpvar; module/field names per handler_statistics.go)
-  server.createContext("/debug/vars", (ex: HttpExchange) =>
-    if (adminGuard(ex, params(ex, readBody = false)))
-      respond(ex, 200, stats.renderJson))
+    gauges.foreach { case (n, v) =>
+      body.append(s"# TYPE graft_$n gauge\n")
+      body.append(s"graft_$n $v\n")
+    }
+    r.respond(200, body.toString, "text/plain; version=0.0.4; charset=utf-8")
+  }
+
+  // Grafana probes buildinfo on datasource connect and falls back to
+  // legacy behavior on 404 — answer with a prom-compatible version body
+  private def buildInfo(r: Request): Unit =
+    r.respond(200, """{"status":"success","data":{"version":"2.45.0",""" +
+      """"application":"graft","features":{}}}""")
+
   // /debug/query?mod=shards&db=… (syscontrol.go:15 serveDebugQuery):
-  // GET-only (405), empty/unknown mod is a 400, mod=shards returns the
-  // db's derived shard-group status
-  server.createContext("/debug/query", (ex: HttpExchange) => {
-    val p = params(ex, readBody = false)
-    if (!adminGuard(ex, p)) ()
-    else if (ex.getRequestMethod != "GET")
-      respond(ex, 405, "{\"error\":\"invalid method\"}")
-    else p.get("mod") match {
-      case None | Some("") =>
-        respond(ex, 400, "{\"error\":\"invalid mod\"}")
-      case Some("shards") =>
-        val db = p.getOrElse("db", defaultDb)
-        val rows = shardGroupsOf(db).map { case (rp, g, s0, e0, x0) =>
-          "{\"id\":" + g + ",\"rp\":" + jsonStr(rp) +
-            ",\"start\":" + jsonStr(rfc3339(s0)) +
-            ",\"end\":" + jsonStr(rfc3339(e0)) +
-            ",\"expiry\":" + jsonStr(rfc3339(x0)) + "}"
-        }
-        respond(ex, 200, "{\"db\":" + jsonStr(db) +
-          ",\"shards\":[" + rows.mkString(",") + "]}")
-      case Some(m) =>
-        respond(ex, 400, "{\"error\":\"process query request error: " +
-          "unknown mod: " + m + "\"}")
-    }
-  })
+  // empty/unknown mod is a 400, mod=shards returns the db's derived
+  // shard-group status
+  private def debugQuery(r: Request): Unit = r.params.get("mod") match {
+    case None | Some("") =>
+      r.respond(400, "{\"error\":\"invalid mod\"}")
+    case Some("shards") =>
+      val db = r.params.getOrElse("db", defaultDb)
+      val rows = shardGroupsOf(db).map { case (rp, g, s0, e0, x0) =>
+        "{\"id\":" + g + ",\"rp\":" + jsonStr(rp) +
+          ",\"start\":" + jsonStr(rfc3339(s0)) +
+          ",\"end\":" + jsonStr(rfc3339(e0)) +
+          ",\"expiry\":" + jsonStr(rfc3339(x0)) + "}"
+      }
+      r.respond(200, "{\"db\":" + jsonStr(db) +
+        ",\"shards\":[" + rows.mkString(",") + "]}")
+    case Some(m) =>
+      r.respond(400, "{\"error\":\"process query request error: " +
+        "unknown mod: " + m + "\"}")
+  }
+
   // POST /debug/ctrl?mod=…&switchon=… (handler.go:462 serveSysCtrl →
   // syscontrol.go:53 serveDebug): admin-only runtime toggles. The mods
   // that map to real switches in this engine flip them (disableWrite /
@@ -1229,37 +1352,32 @@ final class HttpGateway(spark: SparkSession,
   // syscontrol mods are accepted as no-ops on a single-node Spark
   // engine (their effect is a store/cluster knob we don't have);
   // unknown mods are the reference's "unknown sysctrl mod" 400.
-  server.createContext("/debug/ctrl", (ex: HttpExchange) => {
-    val p = params(ex, readBody = false)
-    if (!adminGuard(ex, p)) ()
-    else if (ex.getRequestMethod != "POST")
-      respond(ex, 405, "{\"error\":\"invalid method\"}")
-    else p.get("mod") match {
-      case None | Some("") =>
-        respond(ex, 400, "{\"error\":\"invalid mod\"}")
-      case Some(mod) =>
-        val on = p.get("switchon").exists(_.equalsIgnoreCase("true"))
-        val known = Set("flush", "compen", "merge", "snapshot",
-          "downsample_in_order", "verifynode", "memusagelimit",
-          "backgroundReadLimiter", "readonly", "chunk_reader_parallel",
-          "binary_tree_merge", "print_logical_plan",
-          "sliding_window_push_up", "log_rows", "force_broadcast_query",
-          "time_filter_protection", "interruptquery", "uppermemusepct",
-          "parallelbatch", "write_stream_points_enable")
-        mod match {
-          case "disablewrite" =>
-            writesDisabled = on
-            respond(ex, 200, "{\n\t\"success\"\n}\n")
-          case "disableread" =>
-            readsDisabled = on
-            respond(ex, 200, "{\n\t\"success\"\n}\n")
-          case m if known.contains(m) =>
-            respond(ex, 200, "{\n\t\"success\"\n}\n")
-          case m => respond(ex, 400,
-            s"""{"error":"sysctrl execute error: unknown sysctrl mod: $m"}""")
-        }
-    }
-  })
+  private def debugCtrl(r: Request): Unit = r.params.get("mod") match {
+    case None | Some("") =>
+      r.respond(400, "{\"error\":\"invalid mod\"}")
+    case Some(mod) =>
+      val on = r.params.get("switchon").exists(_.equalsIgnoreCase("true"))
+      val known = Set("flush", "compen", "merge", "snapshot",
+        "downsample_in_order", "verifynode", "memusagelimit",
+        "backgroundReadLimiter", "readonly", "chunk_reader_parallel",
+        "binary_tree_merge", "print_logical_plan",
+        "sliding_window_push_up", "log_rows", "force_broadcast_query",
+        "time_filter_protection", "interruptquery", "uppermemusepct",
+        "parallelbatch", "write_stream_points_enable")
+      mod match {
+        case "disablewrite" =>
+          writesDisabled = on
+          r.respond(200, "{\n\t\"success\"\n}\n")
+        case "disableread" =>
+          readsDisabled = on
+          r.respond(200, "{\n\t\"success\"\n}\n")
+        case m if known.contains(m) =>
+          r.respond(200, "{\n\t\"success\"\n}\n")
+        case m => r.respond(400,
+          s"""{"error":"sysctrl execute error: unknown sysctrl mod: $m"}""")
+      }
+  }
+
   // POST /failpoint?point=…&flag=enable|disable (handler.go:1717
   // failPoint): a fault-injection registry for tests. Enabled points
   // carry their `term`; the wired point `graft/query-error` makes
@@ -1267,81 +1385,61 @@ final class HttpGateway(spark: SparkSession,
   // route is unauthenticated but only exists in failpoint test builds;
   // here the registry is always live, so the route requires admin —
   // an anonymous enable would be a one-request denial of service.
-  server.createContext("/failpoint", (ex: HttpExchange) => {
-    val p = params(ex, readBody = true)
-    if (!adminGuard(ex, p)) ()
-    else if (ex.getRequestMethod != "POST")
-      respond(ex, 405, "{\"error\":\"invalid method\"}")
-    else (p.get("point").filter(_.nonEmpty), p.getOrElse("flag", "")) match {
+  private def failpoint(r: Request): Unit =
+    (r.params.get("point").filter(_.nonEmpty),
+        r.params.getOrElse("flag", "")) match {
       case (Some(pt), "enable") =>
-        failpoints.put(pt, p.getOrElse("term", "injected"))
-        respond(ex, 200, "{\n\t\"success\"\n}\n")
+        failpoints.put(pt, r.params.getOrElse("term", "injected"))
+        r.respond(200, "{\n\t\"success\"\n}\n")
       case (Some(pt), "disable") =>
         failpoints.remove(pt)
-        respond(ex, 200, "{\n\t\"success\"\n}\n")
-      case _ => respond(ex, 400, "{\"error\":\"invalid failpoint\"}")
+        r.respond(200, "{\n\t\"success\"\n}\n")
+      case _ => r.respond(400, "{\"error\":\"invalid failpoint\"}")
     }
-  })
+
   // backup service routes (handler.go:466-474 → syscontrol Backup/
-  // AbortBackup/BackupStatus, lib/backup/backup.go): POST-only; run
-  // copies the persisted store to backupPath/data_backup on its own
-  // thread (isInc=true = manifest-diff incremental), status polls the
-  // job, abort stops it between files
+  // AbortBackup/BackupStatus, lib/backup/backup.go): run copies the
+  // persisted store to backupPath/data_backup on its own thread
+  // (isInc=true = manifest-diff incremental), status polls the job,
+  // abort stops it between files
   @volatile private var backupJob: Option[Backup.Job] = None
-  server.createContext("/backup/run", (ex: HttpExchange) => {
-    val p = params(ex, readBody = false)
-    if (!adminGuard(ex, p)) ()
-    else if (ex.getRequestMethod != "POST")
-      respond(ex, 405, "{\"error\":\"invalid method\"}")
-    else if (persistDir.isEmpty)
-      respond(ex, 400,
-        "{\"error\":\"backup execute error: no persisted store\"}")
-    else p.get("backupPath").filter(_.nonEmpty) match {
-      case None => respond(ex, 400,
+  private def backupRun(r: Request): Unit =
+    if (persistDir.isEmpty)
+      r.respond(400, "{\"error\":\"backup execute error: no persisted store\"}")
+    else r.params.get("backupPath").filter(_.nonEmpty) match {
+      case None => r.respond(400,
         "{\"error\":\"backup execute error: backupPath required\"}")
       case Some(bp) => synchronized {
         if (backupJob.exists(_.status == "running"))
-          respond(ex, 400,
+          r.respond(400,
             "{\"error\":\"backup execute error: backup already running\"}")
         else {
-          val job = new Backup.Job(bp, p.get("isInc").contains("true"))
+          val job = new Backup.Job(bp, r.params.get("isInc").contains("true"))
           backupJob = Some(job)
           val t = new Thread(() => Backup.run(persistDir.get, job),
             "graft-backup")
           t.setDaemon(true); t.start()
-          respond(ex, 200, "{\"status\":\"started\",\"backupPath\":" +
+          r.respond(200, "{\"status\":\"started\",\"backupPath\":" +
             jsonStr(bp) + "}")
         }
       }
     }
-  })
-  server.createContext("/backup/status", (ex: HttpExchange) =>
-    if (!adminGuard(ex, params(ex, readBody = false))) ()
-    else if (ex.getRequestMethod != "POST")
-      respond(ex, 405, "{\"error\":\"invalid method\"}")
-    else respond(ex, 200, backupJob.map(_.renderJson)
-      .getOrElse("{\"status\":\"idle\"}")))
-  server.createContext("/backup/abort", (ex: HttpExchange) =>
-    if (!adminGuard(ex, params(ex, readBody = false))) ()
-    else if (ex.getRequestMethod != "POST")
-      respond(ex, 405, "{\"error\":\"invalid method\"}")
-    else backupJob match {
-      case Some(j) if j.status == "running" =>
-        j.abort.set(true)
-        respond(ex, 200, "{\"status\":\"aborting\"}")
-      case _ => respond(ex, 400,
-        "{\"error\":\"backup execute error: no backup running\"}")
-    })
+
+  private def backupAbort(r: Request): Unit = backupJob match {
+    case Some(j) if j.status == "running" =>
+      j.abort.set(true)
+      r.respond(200, "{\"status\":\"aborting\"}")
+    case _ => r.respond(400,
+      "{\"error\":\"backup execute error: no backup running\"}")
+  }
+
   // fence routes (handler.go:288,292 → handler_fence.go): GET
   // match_batch takes a JSON float array [lat,lon,…] and answers the
   // BatchFenceMatchResponse shape; POST delete_fence removes by id
-  server.createContext("/fence/match_batch", (ex: HttpExchange) => {
-    val p = params(ex, readBody = false)
-    if (guard(ex, p, Auth.WritePrivilege, "write").isDefined) {
-    val pts = p.getOrElse("points", "")
+  private def fenceMatch(r: Request): Unit = {
     val parsed: Option[Seq[Double]] =
       try {
-        val t = pts.trim
+        val t = r.params.getOrElse("points", "").trim
         if (!t.startsWith("[") || !t.endsWith("]")) None
         else {
           val inner = t.substring(1, t.length - 1).trim
@@ -1351,7 +1449,7 @@ final class HttpGateway(spark: SparkSession,
       } catch { case _: Exception => None }
     parsed.filter(_.size % 2 == 0) match {
       case None =>
-        respond(ex, 200,
+        r.respond(200,
           "{\"code\":-1,\"error\":\"invalid points\",\"result\":null}")
       case Some(flat) =>
         val fs = fences.values.toSeq
@@ -1362,27 +1460,23 @@ final class HttpGateway(spark: SparkSession,
             else ids.map(jsonStr).mkString("[", ",", "]")
           "{\"seq\":" + i + ",\"fence_id\":" + fid + "}"
         }.mkString(",")
-        respond(ex, 200,
+        r.respond(200,
           "{\"code\":0,\"error\":\"\",\"result\":[" + results + "]}")
     }
-    }
-  })
-  server.createContext("/fence/delete_fence", (ex: HttpExchange) => {
-    val p = params(ex, readBody = false)
-    if (guard(ex, p, Auth.WritePrivilege, "write").isDefined) {
-    val id = p.getOrElse("fenceId", "")
+  }
+
+  private def fenceDelete(r: Request): Unit = {
+    val id = r.params.getOrElse("fenceId", "")
     synchronized {
       if (fences.contains(id)) {
         fences = fences - id
         persistFences()
-        respond(ex, 200, "{\"code\":0,\"error\":\"\",\"result\":null}")
-      } else respond(ex, 200,
+        r.respond(200, "{\"code\":0,\"error\":\"\",\"result\":null}")
+      } else r.respond(200,
         "{\"code\":-1,\"error\":\"remove fence file err\",\"result\":null}")
     }
-    }
-  })
-  // Flux is not served, exactly like a default-config reference node
-  // (handler.go:240 AddFluxAPIRoute with FluxEnabled=false → 403)
+  }
+
   // POST /api/v1/tsdb/{tsdb} (handler.go:393 servePromCreateTSDB):
   // creates a metric-store namespace ahead of writes. Name rules are
   // the reference's (meta ValidMeasurementName: printable, none of
@@ -1390,179 +1484,21 @@ final class HttpGateway(spark: SparkSession,
   // storage-backend config with no analogue here (persistDir IS the
   // store) — accepted and ignored. Registers an empty store frame so
   // the scoped query routes answer empty-success immediately.
-  server.createContext("/api/v1/tsdb/", (ex: HttpExchange) => {
-    val name = dec(ex.getRequestURI.getPath.stripPrefix("/api/v1/tsdb/"))
-    if (guardDb(ex, params(ex, readBody = false), Auth.WritePrivilege,
-        "write", name).isEmpty) ()
-    else if (ex.getRequestMethod != "POST")
-      respond(ex, 405, "{\"error\":\"invalid method\"}")
-    else if (name.isEmpty)
-      respond(ex, 400, "{\"error\":\"tsdb name should not be none\"}")
+  private def createTsdb(r: Request): Unit = {
+    val name = r("tsdb")
+    if (name.isEmpty)
+      r.respond(400, "{\"error\":\"tsdb name should not be none\"}")
     else if (name == "." || name == ".." ||
         name.exists(c => ",;/\\".contains(c) || !(c >= ' ')))
-      respond(ex, 400, "{\"error\":\"invalid tsdb name\"}")
+      r.respond(400, "{\"error\":\"invalid tsdb name\"}")
     else {
       synchronized {
-        if (!promStores.contains(name)) {
-          import org.apache.spark.sql.types._
-          val empty = spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](),
-            StructType(Seq(StructField("__name__", StringType),
-              StructField("value", DoubleType),
-              StructField("ts", TimestampType))))
-          promStores = promStores +
-            (name -> PromQL.Metric(empty, Seq("__name__"), "ts", "value"))
-        }
+        if (!promStores.contains(name))
+          promStores = promStores + (name -> emptyStore)
       }
-      respond(ex, 200, "")
+      r.respond(200, "")
     }
-  })
-  // metric-store-scoped prom API (handler.go:397-433,
-  // /prometheus/{metric_store}/api/v1/*): the store is one measurement
-  // holding all its series (__name__ as a label). read/series remain on
-  // the default-namespace routes — store queries address the mst.
-  server.createContext("/prometheus", (ex: HttpExchange) => {
-    val parts = ex.getRequestURI.getPath
-      .stripPrefix("/prometheus/").split("/").toList
-    parts match {
-      case store :: "api" :: "v1" :: rest if store.nonEmpty =>
-        rest match {
-          case List("write") => handlePromStoreWrite(ex, store)
-          case List("query") | List("query_range") =>
-            val range = rest == List("query_range")
-            promStores.get(store) match {
-              case Some(m) => handleProm(ex, range,
-                () => new StoreCatView(m), s"store:$store|",
-                tenant = store)
-              case None =>
-                val rt = if (range) "matrix" else "vector"
-                respond(ex, 200, "{\"status\":\"success\",\"data\":" +
-                  "{\"resultType\":\"" + rt + "\",\"result\":[]}}")
-            }
-          case List("labels") =>
-            if (guardDb(ex, params(ex, readBody = false),
-                Auth.ReadPrivilege, "read", store).isDefined) {
-              val names = promStores.get(store)
-                .map(_.labels.sorted).getOrElse(Nil)
-              respond(ex, 200, "{\"status\":\"success\",\"data\":[" +
-                names.map(jsonStr).mkString(",") + "]}")
-            }
-          case List("label", label, "values") =>
-            if (guardDb(ex, params(ex, readBody = false),
-                Auth.ReadPrivilege, "read", store).isDefined) {
-              val vals = promStores.get(store).toSeq.flatMap { m =>
-                if (!m.df.columns.contains(label)) Nil
-                else m.df.select(label).distinct().orderBy(label)
-                  .limit(1000).collect()
-                  .flatMap(r => Option(r.getString(0))).toSeq
-              }
-              respond(ex, 200, "{\"status\":\"success\",\"data\":[" +
-                vals.map(jsonStr).mkString(",") + "]}")
-            }
-          case _ => respond(ex, 404, "{\"error\":\"not found\"}")
-        }
-      case _ =>
-        // empty {metric_store}: the reference's InvalidPromMstName 404
-        respond(ex, 404, "{\"error\":\"invalid the metric store\"}")
-    }
-  })
-  server.createContext("/api/v2/query", (ex: HttpExchange) =>
-    respond(ex, 403, "{\"error\":\"Flux query service disabled. " +
-      "Verify flux-enabled=true in the [http] section of the InfluxDB " +
-      "config.\"}"))
-  server.createContext("/query", (ex: HttpExchange) => handleQuery(ex))
-  server.createContext("/write", (ex: HttpExchange) => handleWrite(ex))
-  // influxdb-2.x write compat (handler.go:1470 serveWriteV2): the v2
-  // `bucket` maps onto the v1 database[/rp]; body and precision are the
-  // same line protocol
-  server.createContext("/api/v2/write",
-    (ex: HttpExchange) => handleWrite(ex, v2 = true))
-  server.createContext("/api/v1/query_range",
-    (ex: HttpExchange) => handleProm(ex, range = true))
-  server.createContext("/api/v1/query",
-    (ex: HttpExchange) => handleProm(ex, range = false))
-  server.createContext("/api/v1/labels",
-    (ex: HttpExchange) => handleLabels(ex))
-  server.createContext("/api/v1/label/",
-    (ex: HttpExchange) => handleLabelValues(ex))
-  server.createContext("/api/v1/series",
-    (ex: HttpExchange) => handleSeries(ex))
-  // Prometheus remote write — the reference serves it at both
-  // `/api/v1/write` (handler.go:333) and `/api/v1/prom/write`
-  // (handler.go:637)
-  server.createContext("/api/v1/write",
-    (ex: HttpExchange) => handlePromWrite(ex))
-  server.createContext("/api/v1/prom/write",
-    (ex: HttpExchange) => handlePromWrite(ex))
-  server.createContext("/api/v1/read",
-    (ex: HttpExchange) => handlePromRead(ex))
-  // the reference also serves the PromQL evaluator at /api/v1/prom/query
-  // (handler.go:633 route table) — same handler, second mount
-  server.createContext("/api/v1/prom/query_range",
-    (ex: HttpExchange) => handleProm(ex, range = true))
-  server.createContext("/api/v1/prom/query",
-    (ex: HttpExchange) => handleProm(ex, range = false))
-  // Logkeeper CRUD (handler.go:483-512, handler_logstore.go): a
-  // REPOSITORY is a database and a LOGSTREAM is a measurement in it —
-  // the thin mapping the reference's own handlers perform against the
-  // meta client. Log INGEST rides the ordinary paths (/write?db=repo
-  // line protocol; OTLP logs land in the `logs` measurement).
-  server.createContext("/api/v1/repository",
-    (ex: HttpExchange) => handleRepository(ex))
-  server.createContext("/api/v1/logstream",
-    (ex: HttpExchange) => handleLogstream(ex))
-  // Logkeeper pipe-syntax query surface (handler.go:532-560 route table):
-  // /repo/{repository}/logstreams/{logStream}/{logs|histogram|analytics},
-  // the `content:err | EXTRACT … | stats` language of logparser/sql.y
-  // compiled by [[graft.query.LogPipe]] onto the measurement frame.
-  server.createContext("/repo",
-    (ex: HttpExchange) => handleLogQueryRoutes(ex))
-  server.createContext("/api/v1/arrow/doput",
-    (ex: HttpExchange) => handleArrowDoPut(ex))
-  server.createContext("/api/v1/arrow/doget",
-    (ex: HttpExchange) => handleArrowDoGet(ex))
-  // OTLP metrics remote write (handler.go:316, handler_otlp.go:109)
-  server.createContext("/api/v1/otlp/metrics", (ex: HttpExchange) =>
-    handleOtlp(ex) { body =>
-      val samples = OtlpMetrics.decode(body)
-      if (samples.isEmpty) sys.error("no metric data points in request")
-      OtlpMetrics.toMeasurements(spark, samples)
-    })
-  // OTLP logs remote write (handler.go:320 -> the `logs` measurement)
-  server.createContext("/api/v1/otlp/logs", (ex: HttpExchange) =>
-    handleOtlp(ex) { body =>
-      val samples = OtlpLogs.decode(body)
-      if (samples.isEmpty) sys.error("no log records in request")
-      Map(OtlpLogs.Measurement -> OtlpLogs.toMeasurement(spark, samples))
-    })
-  // OTLP traces remote write (handler.go:312 -> the `spans` measurement)
-  server.createContext("/api/v1/otlp/traces", (ex: HttpExchange) =>
-    handleOtlp(ex) { body =>
-      val samples = OtlpTraces.decode(body)
-      if (samples.isEmpty) sys.error("no spans in request")
-      Map(OtlpTraces.Measurement -> OtlpTraces.toMeasurement(spark, samples))
-    })
-  // Prom metric metadata (handler.go:385 servePromQueryMetaData):
-  // every known metric reported untyped with empty help/unit — the
-  // engine's catalog carries no HELP/TYPE declarations
-  server.createContext("/api/v1/metadata", (ex: HttpExchange) => {
-    if (guard(ex, params(ex, readBody = false),
-        Auth.ReadPrivilege, "read from").nonEmpty) {
-      val entries = promCat.keys.toSeq.sorted.map(m =>
-        s"${jsonStr(m)}:[{\"type\":\"unknown\",\"help\":\"\",\"unit\":\"\"}]")
-      respond(ex, 200, s"""{"status":"success","data":{${entries.mkString(",")}}}""")
-    }
-  })
-  // Grafana probes buildinfo on datasource connect and falls back to
-  // legacy behavior on 404 — answer with a prom-compatible version body
-  server.createContext("/api/v1/status/buildinfo", (ex: HttpExchange) => {
-    val body = """{"status":"success","data":{"version":"2.45.0",""" +
-      """"application":"graft","features":{}}}"""
-    val bytes = body.getBytes("UTF-8")
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(200, bytes.length)
-    ex.getResponseBody.write(bytes); ex.close()
-  })
+  }
 
   def start(): Int = { server.start(); boundPort }
   def stop(): Unit = {
@@ -1616,129 +1552,6 @@ final class HttpGateway(spark: SparkSession,
 
   /** (cached samples served, gap evaluations run) — results cache. */
   def resultsCacheStats: (Long, Long) = resultsCache.stats
-
-  // ------------------------------------------------------------ plumbing
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  private def respond(ex: HttpExchange, code: Int, body: String,
-                      ctype: String = "application/json"): Unit = {
-    if (code == 401 || code == 403) stats.authFail.incrementAndGet()
-    if (code >= 400 && code < 500) stats.clientError.incrementAndGet()
-    else if (code >= 500) stats.serverError.incrementAndGet()
-    val bytes = body.getBytes(UTF_8)
-    ex.getResponseHeaders.set("Content-Type", ctype)
-    ex.sendResponseHeaders(code, if (bytes.isEmpty) -1L else bytes.length.toLong)
-    if (bytes.nonEmpty) ex.getResponseBody.write(bytes)
-    ex.close()
-  }
-
-
-  /** URI query params, plus form-encoded POST body params for /query
-    * (the reference accepts `q` in either place). */
-  private def params(ex: HttpExchange, readBody: Boolean): Map[String, String] = {
-    val ct = Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
-    val fromBody =
-      if (readBody && ex.getRequestMethod == "POST" &&
-          ct.startsWith("application/x-www-form-urlencoded"))
-        new String(ex.getRequestBody.readAllBytes(), UTF_8)
-      else ""
-    (Option(ex.getRequestURI.getRawQuery).getOrElse("") + "&" + fromBody)
-      .split('&').filter(_.nonEmpty).map { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => dec(k) -> dec(v)
-          case Array(k) => dec(k) -> ""
-        }
-      }.toMap
-  }
-
-  // ---------------------------------------------------------------- auth
-  /** Resolve the request's principal (`handler.go:1913` authenticate):
-    * when auth is off — or no admin exists yet (the bootstrap window
-    * that lets the first `CREATE USER … WITH ALL PRIVILEGES` through,
-    * `handler.go:1923`) — requests run unrestricted with no principal.
-    * Otherwise credentials come from `u`/`p` params, `Basic`, or
-    * `Token user:pw` headers (`handler.go:1861` ParseCredentials); the
-    * two 401 messages mirror the reference's. Returns None after
-    * answering 401 itself. */
-  private def authed(ex: HttpExchange,
-                     p: Map[String, String]): Option[Option[Auth.User]] =
-    if (!requireAuth || !auth.adminExists) Some(None)
-    else {
-      def deny(msg: String): Option[Option[Auth.User]] = {
-        ex.getResponseHeaders.set("WWW-Authenticate", "Basic realm=\"graft\"")
-        respond(ex, 401, s"""{"error":${jsonStr(msg)}}""")
-        None
-      }
-      val creds: Option[(String, String)] = (p.get("u"), p.get("p")) match {
-        case (Some(u), Some(pw)) if u.nonEmpty && pw.nonEmpty => Some((u, pw))
-        case _ =>
-          Option(ex.getRequestHeaders.getFirst("Authorization")).flatMap { h =>
-            h.split(" ", 2) match {
-              case Array("Basic", b64) =>
-                val up = new String(
-                  java.util.Base64.getDecoder.decode(b64), UTF_8)
-                up.split(":", 2) match {
-                  case Array(u, pw) => Some((u, pw)); case _ => None
-                }
-              case Array("Token", tok) => tok.split(":", 2) match {
-                case Array(u, pw) => Some((u, pw)); case _ => None
-              }
-              case _ => None
-            }
-          }
-      }
-      creds match {
-        case None => deny("unable to parse authentication credentials")
-        case Some((u, pw)) => auth.authenticate(u, pw) match {
-          case Some(user) => Some(Some(user))
-          case None => deny("authorization failed")
-        }
-      }
-    }
-
-  /** Authenticate AND check one privilege on the request's `db` param —
-    * the per-route guard for write/prom endpoints. Answers 401/403
-    * itself and returns None when the request is already done. */
-  private def guard(ex: HttpExchange, p: Map[String, String], need: Int,
-                    verb: String): Option[Option[Auth.User]] =
-    guardDb(ex, p, need, verb, p.getOrElse("db", ""))
-
-  /** [[guard]] against an explicit database name (for routes that carry
-    * the store/db in the path rather than a `db` param). */
-  private def guardDb(ex: HttpExchange, p: Map[String, String], need: Int,
-                      verb: String, db: String): Option[Option[Auth.User]] =
-    authed(ex, p) match {
-      case None => None
-      case Some(principal) =>
-        principal match {
-          case Some(u) if !u.authorizeDatabase(need, db) =>
-            respond(ex, 403, s"""{"error":${jsonStr(
-              s"""user "${u.name}" is not authorized to $verb database "$db"""")}}""")
-            None
-          case pr => Some(pr)
-        }
-    }
-
-  /** Admin-only route guard (the reference's `handler.go` checkAuth
-    * wrapping backup/debug syscontrol routes): authenticates, then —
-    * when auth is live — requires the admin flag. Answers 401/403
-    * itself; true means proceed. */
-  private def adminGuard(ex: HttpExchange, p: Map[String, String]): Boolean =
-    authed(ex, p) match {
-      case None => false
-      case Some(Some(u)) if !u.admin =>
-        respond(ex, 403, s"""{"error":${jsonStr(
-          s"""user "${u.name}" is not authorized, requires admin privilege""")}}""")
-        false
-      case _ => true
-    }
 
   /** Whole-query pre-authorization, the reference's shape
     * (`authorizer.go:92` AuthorizeQuery loops statements before any
@@ -1847,593 +1660,575 @@ final class HttpGateway(spark: SparkSession,
     out.result()
   }
 
-  private def handleQuery(ex: HttpExchange): Unit = {
-    stats.queryReq.incrementAndGet(); stats.req.incrementAndGet()
+  private def handleQuery(req: Request): Unit = {
     // syscontrol disableRead (syscontrol.go:526 case disableRead) and
     // the failpoint registry (handler.go:1717) both gate the read path
     if (readsDisabled) {
-      respond(ex, 400, "{\"error\":\"disable read!\"}"); return
+      req.respond(400, "{\"error\":\"disable read!\"}"); return
     }
     val fpTerm = failpoints.get("graft/query-error")
     if (fpTerm != null) {
-      respond(ex, 500, s"""{"error":${jsonStr(fpTerm)}}"""); return
+      req.respond(500, s"""{"error":${jsonStr(fpTerm)}}"""); return
     }
-    val _t0 = System.nanoTime()
-    try handleQuery0(ex)
-    finally stats.queryReqDurationNs.addAndGet(System.nanoTime() - _t0)
-  }
-
-  private def handleQuery0(ex: HttpExchange): Unit =
+    val p = req.params
+    val principal = req.principal
+    val q = p.getOrElse("q",
+      sys.error("missing required parameter \"q\""))
+    val bound0 = p.get("params").map(bindParams(q, _)).getOrElse(q)
+    // plain comments strip here; optimizer-hint comments (`SELECT
+    // /*+ full_series */ …`) stay — the engine reads them off the
+    // statement text (Query.hints) and the lexer skips them for
+    // parsing. Quote-aware (a literal "/*" is content, not a comment).
+    val bound = InfluxQL.stripComments(bound0, keepHints = true)
+    // no epoch param → the reference's default RFC3339 rendering
+    val epoch = p.getOrElse("epoch", "rfc3339")
+    val statements =
+      splitStatements(bound).map(s => s -> Statement.classify(s))
+    require(statements.nonEmpty, "empty query")
+    val denial = principal.flatMap(user =>
+      authorizeStatements(user, p.getOrElse("db", ""), statements))
+    denial match {
+      case Some(msg) =>
+        req.respond(403, s"""{"error":${jsonStr(msg)}}""")
+        return
+      case None => ()
+    }
+    // attach to the live registry for SHOW QUERIES / KILL QUERY;
+    // detach when the request finishes, success or failure
+    val rq = attachQuery(bound, p.getOrElse("db", ""))
+    // request database: empty/missing db param targets the default
+    // database; existence is checked per data statement, so
+    // CREATE DATABASE / user statements still run against a fresh name
+    val reqDb = p.get("db").filter(_.nonEmpty).getOrElse(defaultDb)
+    def reqCat(db: String = reqDb) = catalogFor(db, principal)
     try {
-      val p = params(ex, readBody = true)
-      val principal = authed(ex, p) match {
-        case None => return
-        case Some(pr) => pr
-      }
-      val q = p.getOrElse("q",
-        sys.error("missing required parameter \"q\""))
-      val bound0 = p.get("params").map(bindParams(q, _)).getOrElse(q)
-      // plain comments strip here; optimizer-hint comments (`SELECT
-      // /*+ full_series */ …`) stay — the engine reads them off the
-      // statement text (Query.hints) and the lexer skips them for
-      // parsing. Quote-aware (a literal "/*" is content, not a comment).
-      val bound = InfluxQL.stripComments(bound0, keepHints = true)
-      // no epoch param → the reference's default RFC3339 rendering
-      val epoch = p.getOrElse("epoch", "rfc3339")
-      val statements =
-        splitStatements(bound).map(s => s -> Statement.classify(s))
-      require(statements.nonEmpty, "empty query")
-      val denial = principal.flatMap(user =>
-        authorizeStatements(user, p.getOrElse("db", ""), statements))
-      denial match {
-        case Some(msg) =>
-          respond(ex, 403, s"""{"error":${jsonStr(msg)}}""")
-          return
-        case None => ()
-      }
-      // attach to the live registry for SHOW QUERIES / KILL QUERY;
-      // detach when the request finishes, success or failure
-      val rq = attachQuery(bound, p.getOrElse("db", ""))
-      // request database: empty/missing db param targets the default
-      // database; existence is checked per data statement, so
-      // CREATE DATABASE / user statements still run against a fresh name
-      val reqDb = p.get("db").filter(_.nonEmpty).getOrElse(defaultDb)
-      def reqCat(db: String = reqDb) = catalogFor(db, principal)
-      try {
 
-      /** A gateway-built series as its own result object. */
-      def rowsObj(name: String, cols: Seq[String], rows: Seq[Seq[Any]],
-                  id: Int): String =
-        ResultShaper.toResultObj(gatewayRowsDf(cols, rows), name, Nil, cols,
-          epoch, id)
-      /** The `"series":[…]` members of a [[rowsObj]]. */
-      def seriesOf(name: String, cols: Seq[String], rows: Seq[Seq[Any]],
-                   id: Int): String = {
-        val o = rowsObj(name, cols, rows, id)
-        val i = o.indexOf("\"series\":[")
-        if (i < 0) "" else o.substring(i + 10, o.length - 2)
-      }
-      /** Commit a DDL registry change under the gateway monitor. */
-      def ddl(id: Int)(change: => Unit): String = {
-        synchronized { change; persistDdl() }
+    /** A gateway-built series as its own result object. */
+    def rowsObj(name: String, cols: Seq[String], rows: Seq[Seq[Any]],
+                id: Int): String =
+      ResultShaper.toResultObj(gatewayRowsDf(cols, rows), name, Nil, cols,
+        epoch, id)
+    /** The `"series":[…]` members of a [[rowsObj]]. */
+    def seriesOf(name: String, cols: Seq[String], rows: Seq[Seq[Any]],
+                 id: Int): String = {
+      val o = rowsObj(name, cols, rows, id)
+      val i = o.indexOf("\"series\":[")
+      if (i < 0) "" else o.substring(i + 10, o.length - 2)
+    }
+    /** Commit a DDL registry change under the gateway monitor. */
+    def ddl(id: Int)(change: => Unit): String = {
+      synchronized { change; persistDdl() }
+      s"""{"statement_id":$id}"""
+    }
+
+    /** Statement `stmt`'s result object; a data statement's reply
+      * frame renders through `data`. `SHOW … ON <db>` kinds scope to
+      * that database (the ON clause wins over the request's db param,
+      * like the reference's statement rewrite). */
+    def resultObj(stmt: String, kind: Statement, id: Int)(
+        data: DataReply => String): String = kind match {
+      case Statement.Invalid(e, _) => throw e
+      case Statement.ShowQueries =>
+        // the live registry, not the library's empty frame
+        // (statement_executor.go:2127 column set incl. host)
+        val nowNs = System.nanoTime()
+        val rows = running.synchronized(running.values.toSeq)
+          .map(r => Seq[Any](r.qid, r.query, r.db,
+            fmtDur(nowNs - r.startNs), r.status,
+            s"127.0.0.1:$boundPort"))
+        rowsObj("queries", Seq("qid", "query", "database", "duration",
+          "status", "host"), rows, id)
+      case Statement.KillQuery(qid) =>
+        killQuery(qid)
         s"""{"statement_id":$id}"""
-      }
-
-      /** Statement `stmt`'s result object; a data statement's reply
-        * frame renders through `data`. `SHOW … ON <db>` kinds scope to
-        * that database (the ON clause wins over the request's db param,
-        * like the reference's statement rewrite). */
-      def resultObj(stmt: String, kind: Statement, id: Int)(
-          data: DataReply => String): String = kind match {
-        case Statement.Invalid(e, _) => throw e
-        case Statement.ShowQueries =>
-          // the live registry, not the library's empty frame
-          // (statement_executor.go:2127 column set incl. host)
-          val nowNs = System.nanoTime()
-          val rows = running.synchronized(running.values.toSeq)
-            .map(r => Seq[Any](r.qid, r.query, r.db,
-              fmtDur(nowNs - r.startNs), r.status,
-              s"127.0.0.1:$boundPort"))
-          rowsObj("queries", Seq("qid", "query", "database", "duration",
-            "status", "host"), rows, id)
-        case Statement.KillQuery(qid) =>
-          killQuery(qid)
-          s"""{"statement_id":$id}"""
-        case Statement.Users(_) =>
-          // mutate+persist as one unit on the auth monitor: concurrent
-          // user statements can't interleave a stale snapshot over a
-          // newer one (lost update)
-          auth.synchronized {
-            auth.execute(stmt) match {
-              case None =>
-                persistUsers() // user catalog mutated — journal it
-                s"""{"statement_id":$id}"""
-              case Some((name, cols, rows)) => rowsObj(name, cols, rows, id)
-            }
+      case Statement.Users(_) =>
+        // mutate+persist as one unit on the auth monitor: concurrent
+        // user statements can't interleave a stale snapshot over a
+        // newer one (lost update)
+        auth.synchronized {
+          auth.execute(stmt) match {
+            case None =>
+              persistUsers() // user catalog mutated — journal it
+              s"""{"statement_id":$id}"""
+            case Some((name, cols, rows)) => rowsObj(name, cols, rows, id)
           }
-        case Statement.ShowDatabases(detail) =>
-          // the gateway's real database set (the library's constant is
-          // its single-db standalone answer). The implicit default
-          // database lists only once it holds anything or was created
-          // explicitly — a fresh server shows none (DefaultDBAndRP exp
-          // lists db0 alone).
-          val listed = dbs.keys.toSeq.sorted
-            .filter(db => db != defaultDb || defaultDbTouched)
-          if (detail)
-            // SHOW DATABASES DETAIL: ReplicaN + tag-attribute columns
-            // (statement_executor.go executeShowDatabasesDetail)
-            rowsObj("databases", Seq("name", "ReplicaN", "Tag Attribute"),
-              listed.map(db => Seq[Any](db, 1L, "default")), id)
-          else if (listed.isEmpty)
-            // zero databases still render the column-only series
-            // (DatabaseCommands "show database should have no results")
-            s"""{"statement_id":$id,"series":[{"name":"databases","columns":["name"]}]}"""
-          else rowsObj("databases", Seq("name"), listed.map(Seq(_)), id)
-        case Statement.CreateDatabase(name, named, withDurS) =>
-          // real database DDL (meta/database.go CreateDatabase); name
-          // validation (meta validation: "." names are invalid) is
-          // statement-level (DatabaseCommands "invalid name" goldens)
-          def validName(n: String): Unit =
-            if (n == "." || n == ".." || n.contains("/"))
-              throw new InfluxQL.StatementError("invalid name")
-          synchronized {
-            validName(name)
-            // WITH … NAME <rp> names the born-default retention policy
-            // (parser.go parseCreateDatabaseStatement — `CREATE DATABASE
-            // db4 WITH SHARD DURATION 12h … NAME rp3`)
-            named.foreach(validName)
-            // WITH DURATION on an EXISTING database must agree with the
-            // default policy (meta CreateDatabaseWithRetentionPolicy
-            // conflict — DatabaseCommands golden); shard/index/hot/warm
-            // duration options don't constrain it (PreAgg_OutOfOrderData
-            // re-creates db3 WITH SHARD DURATION … without conflict)
-            if (dbs.contains(name) && withDurS.isDefined) {
-              val existing = dbs(name).rps.values.find(_.default)
-              if (!existing.exists(_.durationS == withDurS.get))
+        }
+      case Statement.ShowDatabases(detail) =>
+        // the gateway's real database set (the library's constant is
+        // its single-db standalone answer). The implicit default
+        // database lists only once it holds anything or was created
+        // explicitly — a fresh server shows none (DefaultDBAndRP exp
+        // lists db0 alone).
+        val listed = dbs.keys.toSeq.sorted
+          .filter(db => db != defaultDb || defaultDbTouched)
+        if (detail)
+          // SHOW DATABASES DETAIL: ReplicaN + tag-attribute columns
+          // (statement_executor.go executeShowDatabasesDetail)
+          rowsObj("databases", Seq("name", "ReplicaN", "Tag Attribute"),
+            listed.map(db => Seq[Any](db, 1L, "default")), id)
+        else if (listed.isEmpty)
+          // zero databases still render the column-only series
+          // (DatabaseCommands "show database should have no results")
+          s"""{"statement_id":$id,"series":[{"name":"databases","columns":["name"]}]}"""
+        else rowsObj("databases", Seq("name"), listed.map(Seq(_)), id)
+      case Statement.CreateDatabase(name, named, withDurS) =>
+        // real database DDL (meta/database.go CreateDatabase); name
+        // validation (meta validation: "." names are invalid) is
+        // statement-level (DatabaseCommands "invalid name" goldens)
+        def validName(n: String): Unit =
+          if (n == "." || n == ".." || n.contains("/"))
+            throw new InfluxQL.StatementError("invalid name")
+        synchronized {
+          validName(name)
+          // WITH … NAME <rp> names the born-default retention policy
+          // (parser.go parseCreateDatabaseStatement — `CREATE DATABASE
+          // db4 WITH SHARD DURATION 12h … NAME rp3`)
+          named.foreach(validName)
+          // WITH DURATION on an EXISTING database must agree with the
+          // default policy (meta CreateDatabaseWithRetentionPolicy
+          // conflict — DatabaseCommands golden); shard/index/hot/warm
+          // duration options don't constrain it (PreAgg_OutOfOrderData
+          // re-creates db3 WITH SHARD DURATION … without conflict)
+          if (dbs.contains(name) && withDurS.isDefined) {
+            val existing = dbs(name).rps.values.find(_.default)
+            if (!existing.exists(_.durationS == withDurS.get))
+              throw new InfluxQL.StatementError(
+                "retention policy conflicts with an existing policy")
+          }
+          if (name == defaultDb) defaultDbTouched = true
+          if (!dbs.contains(name)) {
+            val rp0 = Retention.autogen.head._2
+              .copy(durationS = withDurS.getOrElse(0L))
+            dbs = dbs +
+              (name -> Db(rps = Map(named.getOrElse("autogen") -> rp0)))
+          }
+          persistDatabases()
+        }
+        s"""{"statement_id":$id}"""
+      case Statement.DropDatabase(name) =>
+        synchronized { dropDb(name); persistDatabases() }
+        s"""{"statement_id":$id}"""
+      case Statement.RetentionDdl(st) =>
+        if (!dbs.contains(st.db)) {
+          // DROP on a missing database is a silent no-op; CREATE/ALTER
+          // carry the error INSIDE the result
+          // (RetentionPolicyCommands goldens)
+          if (st.verb == "drop") return s"""{"statement_id":$id}"""
+          throw new InfluxQL.StatementError(
+            s"database not found: ${st.db}")
+        }
+        synchronized {
+          val rps = dbNamed(st.db).rps
+          def setRps(to: Map[String, Retention.Rp]): Unit =
+            updDb(st.db)(_.copy(rps = to))
+          st.verb match {
+            case "create" =>
+              if (st.rp == "." || st.rp == ".." || st.rp.contains("/"))
+                throw new InfluxQL.StatementError("invalid name")
+              val d = st.durationS.getOrElse(0L)
+              // meta validation: 0 = infinite, else ≥ 1h
+              // (RetentionPolicyCommands golden, verbatim)
+              if (d > 0L && d < 3600L)
+                throw new InfluxQL.StatementError(
+                  "retention policy duration must be at least 1h0m0s")
+              val rp = Retention.Rp(d,
+                st.shardGroupS.getOrElse(Retention.shardGroupFor(d)),
+                st.replicaN.getOrElse(1L), st.default,
+                st.hotS.getOrElse(0L), st.warmS.getOrElse(0L))
+              if (rps.contains(st.rp)) {
+                // idempotent when identical; a differing spec is the
+                // reference's conflict error
+                val prev = rps(st.rp)
+                if (prev.durationS == rp.durationS &&
+                    prev.replicaN == rp.replicaN &&
+                    prev.default == rp.default)
+                  return s"""{"statement_id":$id}"""
                 throw new InfluxQL.StatementError(
                   "retention policy conflicts with an existing policy")
-            }
-            if (name == defaultDb) defaultDbTouched = true
-            if (!dbs.contains(name)) {
-              val rp0 = Retention.autogen.head._2
-                .copy(durationS = withDurS.getOrElse(0L))
-              dbs = dbs +
-                (name -> Db(rps = Map(named.getOrElse("autogen") -> rp0)))
-            }
-            persistDatabases()
+              }
+              val cleared = if (st.default)
+                rps.view.mapValues(_.copy(default = false)).toMap else rps
+              setRps(cleared + (st.rp -> rp))
+            case "alter" =>
+              val prev = rps.getOrElse(st.rp,
+                sys.error(s"retention policy not found: ${st.rp}"))
+              val d = st.durationS.getOrElse(prev.durationS)
+              val rp = prev.copy(durationS = d,
+                shardGroupS = st.shardGroupS.getOrElse(
+                  if (st.durationS.isDefined) Retention.shardGroupFor(d)
+                  else prev.shardGroupS),
+                replicaN = st.replicaN.getOrElse(prev.replicaN),
+                default = prev.default || st.default,
+                hotS = st.hotS.getOrElse(prev.hotS),
+                warmS = st.warmS.getOrElse(prev.warmS))
+              val cleared = if (st.default)
+                rps.view.mapValues(_.copy(default = false)).toMap else rps
+              setRps(cleared + (st.rp -> rp))
+            case "drop" =>
+              // dropping the default policy is allowed (the reference
+              // drops it and the database keeps no default —
+              // RetentionPolicyCommands "drop rp0" golden); a missing
+              // policy is a silent no-op like a missing database
+              if (rps.contains(st.rp)) setRps(rps - st.rp)
+            case v => sys.error(s"unsupported retention verb $v")
           }
-          s"""{"statement_id":$id}"""
-        case Statement.DropDatabase(name) =>
-          synchronized { dropDb(name); persistDatabases() }
-          s"""{"statement_id":$id}"""
-        case Statement.RetentionDdl(st) =>
-          if (!dbs.contains(st.db)) {
-            // DROP on a missing database is a silent no-op; CREATE/ALTER
-            // carry the error INSIDE the result
-            // (RetentionPolicyCommands goldens)
-            if (st.verb == "drop") return s"""{"statement_id":$id}"""
-            throw new InfluxQL.StatementError(
-              s"database not found: ${st.db}")
+          persistDatabases()
+        }
+        s"""{"statement_id":$id}"""
+      case Statement.ShowRetentionPolicies(on) =>
+        // full reference column set (meta/data.go:2061) — hot/warm
+        // are the hierarchical tier bounds; index duration is meta
+        // the engine does not organize by (0s)
+        val rows = dbNamed(on.getOrElse(reqDb)).rps.toSeq
+          .sortBy(_._1).map { case (n, rp) => Seq[Any](n,
+            Retention.renderDuration(rp.durationS),
+            Retention.renderDuration(rp.shardGroupS),
+            Retention.renderDuration(rp.hotS),
+            Retention.renderDuration(rp.warmS),
+            // index group duration defaults to the shard group
+            // duration (meta/data.go; DefaultDBAndRP golden)
+            Retention.renderDuration(rp.shardGroupS),
+            rp.replicaN, rp.default) }
+        // models.Row name,omitempty: SHOW RETENTION POLICIES series
+        // are UNNAMED (DefaultDBAndRP golden)
+        rowsObj("", Seq("name", "duration", "shardGroupDuration",
+          "hot duration", "warm duration", "index duration",
+          "replicaN", "default"), rows, id)
+      case Statement.CreateCq(cq) => ddl(id)(registerCq(reqDb, cq, stmt.trim))
+      case Statement.DropCq(name, on) =>
+        ddl(id)(updDb(on.getOrElse(reqDb))(x => x.copy(cqs = x.cqs - name)))
+      case Statement.ShowCqs =>
+        val rows = dbs.get(reqDb).toSeq.flatMap(_.cqs)
+          .map { case (name, e) => Seq[Any](name, e.text) }
+          .sortBy(_.head.toString)
+        rowsObj(reqDb, Seq("name", "query"), rows, id)
+      case Statement.CreateMeasurement(sc) => ddl(id)(registerMst(reqDb, sc))
+      case Statement.AlterShardKey(dbOpt, name, key, tpe) =>
+        val db = dbOpt.getOrElse(reqDb)
+        ddl(id) {
+          val sc = dbs.get(db).flatMap(_.schemas.get(name)).getOrElse(
+            if (mstsOf(db).contains(name))
+              MeasurementDDL.Schema(Some(db), None, name, Nil, Nil,
+                Nil, "hash", "tsstore", Nil, Nil, Nil)
+            else sys.error(s"measurement not found: $name"))
+          updDb(db)(x => x.copy(schemas =
+            x.schemas + (name -> sc.copy(shardKey = key, shardType = tpe))))
+        }
+      case Statement.ShowMeasurementInfo(kind, dbOpt, name) =>
+        val db = dbOpt.getOrElse(reqDb)
+        val sc = dbs.get(db).flatMap(_.schemas.get(name))
+          .getOrElse(sys.error("measurement not found"))
+        val colstoreOnly = Set("primarykey", "sortkey", "property",
+          "compact")
+        if (colstoreOnly(kind) && sc.engineType != "columnstore")
+          sys.error("only support for COLUMNSTORE engine")
+        // statement_executor.go:1366-1432 row shapes
+        def section(kind: String): String = {
+          val (cols, rows) = kind match {
+            case "shardkey" => (Seq("SHARD_KEY", "TYPE", "SHARD_GROUP"),
+              if (sc.shardKey.isEmpty) Nil
+              else Seq(Seq[Any](sc.shardKey, sc.shardType, 0L)))
+            case "enginetype" =>
+              (Seq("ENGINETYPE"), Seq(Seq[Any](sc.engineType)))
+            case "indexes" => (Seq("INDEXES"),
+              sc.indexes.map { case (n, cols) =>
+                Seq[Any](s"${n.toUpperCase}(${cols.mkString(",")})") })
+            case "primarykey" =>
+              (Seq("PRIMARY_KEY"), Seq(Seq[Any](sc.primaryKey)))
+            case "sortkey" =>
+              (Seq("SORT_KEY"), Seq(Seq[Any](sc.sortKey)))
+            case "property" =>
+              (Seq("PROPERTY_KEY", "PROPERTY_VALUE"),
+                Seq(Seq[Any](Seq.empty[String], Seq.empty[String])))
+            case "compact" =>
+              (Seq("COMPACTION_TYPE"), Seq(Seq[Any]("row")))
+            case other => sys.error(s"$other is not support")
           }
-          synchronized {
-            val rps = dbNamed(st.db).rps
-            def setRps(to: Map[String, Retention.Rp]): Unit =
-              updDb(st.db)(_.copy(rps = to))
-            st.verb match {
-              case "create" =>
-                if (st.rp == "." || st.rp == ".." || st.rp.contains("/"))
-                  throw new InfluxQL.StatementError("invalid name")
-                val d = st.durationS.getOrElse(0L)
-                // meta validation: 0 = infinite, else ≥ 1h
-                // (RetentionPolicyCommands golden, verbatim)
-                if (d > 0L && d < 3600L)
-                  throw new InfluxQL.StatementError(
-                    "retention policy duration must be at least 1h0m0s")
-                val rp = Retention.Rp(d,
-                  st.shardGroupS.getOrElse(Retention.shardGroupFor(d)),
-                  st.replicaN.getOrElse(1L), st.default,
-                  st.hotS.getOrElse(0L), st.warmS.getOrElse(0L))
-                if (rps.contains(st.rp)) {
-                  // idempotent when identical; a differing spec is the
-                  // reference's conflict error
-                  val prev = rps(st.rp)
-                  if (prev.durationS == rp.durationS &&
-                      prev.replicaN == rp.replicaN &&
-                      prev.default == rp.default)
-                    return s"""{"statement_id":$id}"""
-                  throw new InfluxQL.StatementError(
-                    "retention policy conflicts with an existing policy")
-                }
-                val cleared = if (st.default)
-                  rps.view.mapValues(_.copy(default = false)).toMap else rps
-                setRps(cleared + (st.rp -> rp))
-              case "alter" =>
-                val prev = rps.getOrElse(st.rp,
-                  sys.error(s"retention policy not found: ${st.rp}"))
-                val d = st.durationS.getOrElse(prev.durationS)
-                val rp = prev.copy(durationS = d,
-                  shardGroupS = st.shardGroupS.getOrElse(
-                    if (st.durationS.isDefined) Retention.shardGroupFor(d)
-                    else prev.shardGroupS),
-                  replicaN = st.replicaN.getOrElse(prev.replicaN),
-                  default = prev.default || st.default,
-                  hotS = st.hotS.getOrElse(prev.hotS),
-                  warmS = st.warmS.getOrElse(prev.warmS))
-                val cleared = if (st.default)
-                  rps.view.mapValues(_.copy(default = false)).toMap else rps
-                setRps(cleared + (st.rp -> rp))
-              case "drop" =>
-                // dropping the default policy is allowed (the reference
-                // drops it and the database keeps no default —
-                // RetentionPolicyCommands "drop rp0" golden); a missing
-                // policy is a silent no-op like a missing database
-                if (rps.contains(st.rp)) setRps(rps - st.rp)
-              case v => sys.error(s"unsupported retention verb $v")
-            }
-            persistDatabases()
+          seriesOf("", cols, rows, id)
+        }
+        val kinds =
+          if (kind != "schema") Seq(kind)
+          else if (sc.engineType == "columnstore")
+            Seq("shardkey", "enginetype", "indexes", "primarykey",
+              "sortkey", "compact")
+          else Seq("shardkey", "enginetype", "indexes")
+        val series = kinds.map(section).filter(_.nonEmpty).mkString(",")
+        s"""{"statement_id":$id,"series":[$series]}"""
+      case Statement.CreateSubscription(sub) => ddl(id)(registerSub(sub))
+      case Statement.DropSubscription(name, db, rp) =>
+        ddl(id) {
+          if (!dbs.get(db).exists(_.subs.contains((rp, name))))
+            sys.error(s"subscription not found: $name")
+          updDb(db)(x => x.copy(subs = x.subs - ((rp, name))))
+        }
+      case Statement.ShowShards =>
+        // meta/data.go:1974 ShowShards: one series per database,
+        // 10-column set; 1 shard per group, single-node owner
+        val cols = Seq("id", "database", "retention_policy",
+          "shard_group", "start_time", "end_time", "expiry_time",
+          "owners", "tier", "downSample_level")
+        val nowTier = System.currentTimeMillis()
+        val series = dbs.keys.toSeq.sorted.map { db =>
+          val rows = shardGroupsOf(db).map { case (rp, g, s0, e0, x0) =>
+            Seq[Any](g, db, rp, g, rfc3339(s0), rfc3339(e0),
+              rfc3339(x0), "0", tierOf(db, e0, nowTier), 0L) }
+          if (rows.isEmpty) "" else seriesOf(db, cols, rows, id)
+        }.filter(_.nonEmpty)
+        s"""{"statement_id":$id,"series":[${series.mkString(",")}]}"""
+      case Statement.ShowShardGroups =>
+        // meta/data.go:2015: one series "shard groups", all databases
+        val rows = dbs.keys.toSeq.sorted.flatMap { db =>
+          shardGroupsOf(db).map { case (rp, g, s0, e0, x0) =>
+            Seq[Any](g, db, rp, rfc3339(s0), rfc3339(e0), rfc3339(x0)) }
+        }
+        rowsObj("shard groups", Seq("id", "database", "retention_policy",
+          "start_time", "end_time", "expiry_time"), rows, id)
+      case Statement.DropShard(sid) =>
+        // data.go:2271 DropShard(id) — scoped here to the request
+        // database (ids are per-db group indexes, not a global counter)
+        synchronized {
+          val before = mstsOf(reqDb)
+          if (!dropShardData(reqDb, sid))
+            sys.error(s"shard not found: $sid")
+          journalDml(reqDb, stmt.trim, System.currentTimeMillis())
+          propagateDml(reqDb, before, mstsOf(reqDb))
+        }
+        s"""{"statement_id":$id}"""
+      case Statement.ShowSubscriptions =>
+        // one series per database (meta SHOW SUBSCRIPTIONS shape);
+        // the gateway's single-db request view renders reqDb's series
+        val rows = dbs.get(reqDb).toSeq.flatMap(_.subs)
+          .map { case ((rp, name), s) =>
+            Seq[Any](rp, name, s.mode, s.destinations) }
+          .sortBy(r => (r.head.toString, r(1).toString))
+        rowsObj(reqDb, Seq("retention_policy", "name", "mode",
+          "destinations"), rows, id)
+      case Statement.CreateStream(st) =>
+        ddl(id)(registerStream(reqDb, st, stmt.trim, Long.MinValue))
+      case Statement.DropStream(name) =>
+        // DROP STREAM 'name' (sql.y DROP STREAM STRING_TYPE)
+        ddl(id) {
+          if (!dbs.get(reqDb).exists(_.streams.contains(name)))
+            sys.error(s"stream not found: $name")
+          updDb(reqDb)(x => x.copy(streams = x.streams - name))
+        }
+      case Statement.ShowStreams(on) =>
+        val db = on.getOrElse(reqDb)
+        // meta/data.go:3918 ShowStreams column set
+        val rows = dbs.get(db).toSeq.flatMap(_.streams)
+          .map { case (name, e) =>
+            val st = e.stmt
+            Seq[Any](db, "autogen", st.target, name,
+              s"$db.autogen.${st.from}",
+              st.tags.mkString(","),
+              st.calls.map { case (fn, f) => s"$fn($f)" }.mkString(","),
+              Retention.renderDuration(st.intervalNs / 1000000000L),
+              Retention.renderDuration(st.delayNs / 1000000000L),
+              "") }
+          .sortBy(_(3).toString)
+        rowsObj("streams", Seq("database", "retention", "measurement",
+          "Name", "source measurement", "dimensions", "calls", "interval",
+          "delay", "condition"), rows, id)
+      case Statement.CreateDownsample(ds) => ddl(id)(registerDs(reqDb, ds))
+      case Statement.DropDownsample(dbOpt, None) =>
+        // DROP DOWNSAMPLES [ON db]
+        ddl(id)(
+          updDb(dbOpt.getOrElse(reqDb))(_.copy(downsamples = Map.empty)))
+      case Statement.DropDownsample(dbOpt, Some(rp)) =>
+        // DROP DOWNSAMPLE ON [db.]rp
+        val db = dbOpt.getOrElse(reqDb)
+        ddl(id) {
+          if (!dbs.get(db).exists(_.downsamples.contains(rp)))
+            sys.error(s"downsample policy not found on $db.$rp")
+          updDb(db)(x => x.copy(downsamples = x.downsamples - rp))
+        }
+      case Statement.ShowDownsamples(on) =>
+        // meta/data.go:3827 ShowDownSamplePolicies column set
+        val rows = dbs.get(on.getOrElse(reqDb)).toSeq.flatMap(_.downsamples)
+          .map { case (rp, p) =>
+            Seq[Any](rp, p.fieldOperator,
+              Retention.renderDuration(p.durationS),
+              p.sampleS.map(Retention.renderDuration).mkString(","),
+              p.timeS.map(Retention.renderDuration).mkString(",")) }
+          .sortBy(_.head.toString)
+        rowsObj("downsamples", Seq("rpName", "field_operator", "duration",
+          "sampleInterval", "timeInterval"), rows, id)
+      case Statement.SetConfig(component, key, rawVal, isString) =>
+        // The executor accepts only the sql component's logging.level
+        // with a string value (statement_executor.go:2572); a non-
+        // string there is "illegal type of logging level input", any
+        // other component/key is "unsupported config command".
+        if (!(component == "sql" && key == "logging.level"))
+          throw new InfluxQL.StatementError("unsupported config command")
+        if (!isString)
+          throw new InfluxQL.StatementError(
+            "illegal type of logging level input")
+        val lvl = rawVal.stripPrefix("'").stripSuffix("'").toLowerCase
+        // the reference delegates to its zap-backed logger.SetLevel;
+        // mirror zap's accepted level atoms
+        if (!Set("debug", "info", "warn", "error", "dpanic", "panic",
+            "fatal").contains(lvl))
+          throw new InfluxQL.StatementError(
+            s"""unrecognized level: "$rawVal"""")
+        loggingLevel = lvl
+        s"""{"statement_id":$id}"""
+      case Statement.ShowConfigs =>
+        // the gateway's ACTUAL effective knobs in the reference's
+        // 4-column shape (executeShowConfigs,
+        // statement_executor.go:2560: component, instance, name,
+        // value — names sorted, instance = bind address). Reference
+        // names where a knob maps onto one of its config keys;
+        // graft-specific knobs keep their own dotted namespace.
+        val lim = Validation.defaults
+        val knobs: Seq[(String, Any)] = Seq(
+          "http.auth-enabled" -> requireAuth,
+          "http.bind-address" -> s"127.0.0.1:$boundPort",
+          "http.max-row-limit" -> maxRowLimit,
+          "limits.enforce-metadata-metric-name" -> lim.enforceMetricName,
+          "limits.max-label-name-length" -> lim.maxLabelNameLength,
+          "limits.max-label-names-per-series" ->
+            lim.maxLabelNamesPerSeries,
+          "limits.max-label-value-length" -> lim.maxLabelValueLength,
+          "limits.prom-limit-enabled" -> lim.promLimitEnabled,
+          "limits.reject-old-samples" -> lim.rejectOldSamples,
+          "logging.level" -> loggingLevel,
+          "storage.hot-tier-max-bytes" -> spark.conf.get(
+            graft.Tables.hotTierConfKey,
+            graft.Tables.hotTierDefaultMaxBytes.toString),
+          "spark.sql.shuffle.partitions" -> spark.conf
+            .get("spark.sql.shuffle.partitions"))
+        // values keep their native JSON types (the reference emits
+        // bools/numbers unquoted in the config table) — rendered
+        // directly, the row set is driver-known and tiny
+        def jval(v: Any): String = v match {
+          case b: Boolean => b.toString
+          case n: Int => n.toString
+          case n: Long => n.toString
+          case s => jsonStr(String.valueOf(s))
+        }
+        val inst = jsonStr(s"127.0.0.1:$boundPort")
+        val values = knobs.sortBy(_._1).map { case (k, v) =>
+          s"""["sql",$inst,${jsonStr(k)},${jval(v)}]""" }.mkString(",")
+        s"""{"statement_id":$id,"series":[{"columns":""" +
+          s"""["component","instance","name","value"],""" +
+          s""""values":[$values]}]}"""        case Statement.Unsupported =>
+        // parsed but rejected, the reference's exact error
+        // (statement_executor.go:409-416 returns
+        // meta2.ErrUnsupportCommand for PrepareSnapshot/
+        // EndPrepareSnapshot/GetRuntimeInfo)
+        throw new InfluxQL.StatementError("unsupported command")
+      case Statement.Manage =>
+        synchronized {
+          val before = mstsOf(reqDb)
+          val nowMs = System.currentTimeMillis()
+          val after = Map.empty ++
+            InfluxQL.executeManage(reqCat(), stmt, nowMs)
+          setMsts(reqDb, after)
+          // journal only statements that actually changed data — the
+          // accepted-no-op meta statements (CREATE DATABASE, GRANT …)
+          // return the catalog's own entries untouched
+          val changed = before.keySet != after.keySet ||
+            after.exists { case (k, m) => !before.get(k).exists(_ eq m) }
+          if (changed) {
+            journalDml(reqDb, stmt.trim, nowMs)
+            propagateDml(reqDb, before, after)
           }
-          s"""{"statement_id":$id}"""
-        case Statement.ShowRetentionPolicies(on) =>
-          // full reference column set (meta/data.go:2061) — hot/warm
-          // are the hierarchical tier bounds; index duration is meta
-          // the engine does not organize by (0s)
-          val rows = dbNamed(on.getOrElse(reqDb)).rps.toSeq
-            .sortBy(_._1).map { case (n, rp) => Seq[Any](n,
-              Retention.renderDuration(rp.durationS),
-              Retention.renderDuration(rp.shardGroupS),
-              Retention.renderDuration(rp.hotS),
-              Retention.renderDuration(rp.warmS),
-              // index group duration defaults to the shard group
-              // duration (meta/data.go; DefaultDBAndRP golden)
-              Retention.renderDuration(rp.shardGroupS),
-              rp.replicaN, rp.default) }
-          // models.Row name,omitempty: SHOW RETENTION POLICIES series
-          // are UNNAMED (DefaultDBAndRP golden)
-          rowsObj("", Seq("name", "duration", "shardGroupDuration",
-            "hot duration", "warm duration", "index duration",
-            "replicaN", "default"), rows, id)
-        case Statement.CreateCq(cq) => ddl(id)(registerCq(reqDb, cq, stmt.trim))
-        case Statement.DropCq(name, on) =>
-          ddl(id)(updDb(on.getOrElse(reqDb))(x => x.copy(cqs = x.cqs - name)))
-        case Statement.ShowCqs =>
-          val rows = dbs.get(reqDb).toSeq.flatMap(_.cqs)
-            .map { case (name, e) => Seq[Any](name, e.text) }
-            .sortBy(_.head.toString)
-          rowsObj(reqDb, Seq("name", "query"), rows, id)
-        case Statement.CreateMeasurement(sc) => ddl(id)(registerMst(reqDb, sc))
-        case Statement.AlterShardKey(dbOpt, name, key, tpe) =>
-          val db = dbOpt.getOrElse(reqDb)
-          ddl(id) {
-            val sc = dbs.get(db).flatMap(_.schemas.get(name)).getOrElse(
-              if (mstsOf(db).contains(name))
-                MeasurementDDL.Schema(Some(db), None, name, Nil, Nil,
-                  Nil, "hash", "tsstore", Nil, Nil, Nil)
-              else sys.error(s"measurement not found: $name"))
-            updDb(db)(x => x.copy(schemas =
-              x.schemas + (name -> sc.copy(shardKey = key, shardType = tpe))))
-          }
-        case Statement.ShowMeasurementInfo(kind, dbOpt, name) =>
-          val db = dbOpt.getOrElse(reqDb)
-          val sc = dbs.get(db).flatMap(_.schemas.get(name))
-            .getOrElse(sys.error("measurement not found"))
-          val colstoreOnly = Set("primarykey", "sortkey", "property",
-            "compact")
-          if (colstoreOnly(kind) && sc.engineType != "columnstore")
-            sys.error("only support for COLUMNSTORE engine")
-          // statement_executor.go:1366-1432 row shapes
-          def section(kind: String): String = {
-            val (cols, rows) = kind match {
-              case "shardkey" => (Seq("SHARD_KEY", "TYPE", "SHARD_GROUP"),
-                if (sc.shardKey.isEmpty) Nil
-                else Seq(Seq[Any](sc.shardKey, sc.shardType, 0L)))
-              case "enginetype" =>
-                (Seq("ENGINETYPE"), Seq(Seq[Any](sc.engineType)))
-              case "indexes" => (Seq("INDEXES"),
-                sc.indexes.map { case (n, cols) =>
-                  Seq[Any](s"${n.toUpperCase}(${cols.mkString(",")})") })
-              case "primarykey" =>
-                (Seq("PRIMARY_KEY"), Seq(Seq[Any](sc.primaryKey)))
-              case "sortkey" =>
-                (Seq("SORT_KEY"), Seq(Seq[Any](sc.sortKey)))
-              case "property" =>
-                (Seq("PROPERTY_KEY", "PROPERTY_VALUE"),
-                  Seq(Seq[Any](Seq.empty[String], Seq.empty[String])))
-              case "compact" =>
-                (Seq("COMPACTION_TYPE"), Seq(Seq[Any]("row")))
-              case other => sys.error(s"$other is not support")
-            }
-            seriesOf("", cols, rows, id)
-          }
-          val kinds =
-            if (kind != "schema") Seq(kind)
-            else if (sc.engineType == "columnstore")
-              Seq("shardkey", "enginetype", "indexes", "primarykey",
-                "sortkey", "compact")
-            else Seq("shardkey", "enginetype", "indexes")
-          val series = kinds.map(section).filter(_.nonEmpty).mkString(",")
-          s"""{"statement_id":$id,"series":[$series]}"""
-        case Statement.CreateSubscription(sub) => ddl(id)(registerSub(sub))
-        case Statement.DropSubscription(name, db, rp) =>
-          ddl(id) {
-            if (!dbs.get(db).exists(_.subs.contains((rp, name))))
-              sys.error(s"subscription not found: $name")
-            updDb(db)(x => x.copy(subs = x.subs - ((rp, name))))
-          }
-        case Statement.ShowShards =>
-          // meta/data.go:1974 ShowShards: one series per database,
-          // 10-column set; 1 shard per group, single-node owner
-          val cols = Seq("id", "database", "retention_policy",
-            "shard_group", "start_time", "end_time", "expiry_time",
-            "owners", "tier", "downSample_level")
-          val nowTier = System.currentTimeMillis()
-          val series = dbs.keys.toSeq.sorted.map { db =>
-            val rows = shardGroupsOf(db).map { case (rp, g, s0, e0, x0) =>
-              Seq[Any](g, db, rp, g, rfc3339(s0), rfc3339(e0),
-                rfc3339(x0), "0", tierOf(db, e0, nowTier), 0L) }
-            if (rows.isEmpty) "" else seriesOf(db, cols, rows, id)
-          }.filter(_.nonEmpty)
-          s"""{"statement_id":$id,"series":[${series.mkString(",")}]}"""
-        case Statement.ShowShardGroups =>
-          // meta/data.go:2015: one series "shard groups", all databases
-          val rows = dbs.keys.toSeq.sorted.flatMap { db =>
-            shardGroupsOf(db).map { case (rp, g, s0, e0, x0) =>
-              Seq[Any](g, db, rp, rfc3339(s0), rfc3339(e0), rfc3339(x0)) }
-          }
-          rowsObj("shard groups", Seq("id", "database", "retention_policy",
-            "start_time", "end_time", "expiry_time"), rows, id)
-        case Statement.DropShard(sid) =>
-          // data.go:2271 DropShard(id) — scoped here to the request
-          // database (ids are per-db group indexes, not a global counter)
-          synchronized {
-            val before = mstsOf(reqDb)
-            if (!dropShardData(reqDb, sid))
-              sys.error(s"shard not found: $sid")
-            journalDml(reqDb, stmt.trim, System.currentTimeMillis())
-            propagateDml(reqDb, before, mstsOf(reqDb))
-          }
-          s"""{"statement_id":$id}"""
-        case Statement.ShowSubscriptions =>
-          // one series per database (meta SHOW SUBSCRIPTIONS shape);
-          // the gateway's single-db request view renders reqDb's series
-          val rows = dbs.get(reqDb).toSeq.flatMap(_.subs)
-            .map { case ((rp, name), s) =>
-              Seq[Any](rp, name, s.mode, s.destinations) }
-            .sortBy(r => (r.head.toString, r(1).toString))
-          rowsObj(reqDb, Seq("retention_policy", "name", "mode",
-            "destinations"), rows, id)
-        case Statement.CreateStream(st) =>
-          ddl(id)(registerStream(reqDb, st, stmt.trim, Long.MinValue))
-        case Statement.DropStream(name) =>
-          // DROP STREAM 'name' (sql.y DROP STREAM STRING_TYPE)
-          ddl(id) {
-            if (!dbs.get(reqDb).exists(_.streams.contains(name)))
-              sys.error(s"stream not found: $name")
-            updDb(reqDb)(x => x.copy(streams = x.streams - name))
-          }
-        case Statement.ShowStreams(on) =>
-          val db = on.getOrElse(reqDb)
-          // meta/data.go:3918 ShowStreams column set
-          val rows = dbs.get(db).toSeq.flatMap(_.streams)
-            .map { case (name, e) =>
-              val st = e.stmt
-              Seq[Any](db, "autogen", st.target, name,
-                s"$db.autogen.${st.from}",
-                st.tags.mkString(","),
-                st.calls.map { case (fn, f) => s"$fn($f)" }.mkString(","),
-                Retention.renderDuration(st.intervalNs / 1000000000L),
-                Retention.renderDuration(st.delayNs / 1000000000L),
-                "") }
-            .sortBy(_(3).toString)
-          rowsObj("streams", Seq("database", "retention", "measurement",
-            "Name", "source measurement", "dimensions", "calls", "interval",
-            "delay", "condition"), rows, id)
-        case Statement.CreateDownsample(ds) => ddl(id)(registerDs(reqDb, ds))
-        case Statement.DropDownsample(dbOpt, None) =>
-          // DROP DOWNSAMPLES [ON db]
-          ddl(id)(
-            updDb(dbOpt.getOrElse(reqDb))(_.copy(downsamples = Map.empty)))
-        case Statement.DropDownsample(dbOpt, Some(rp)) =>
-          // DROP DOWNSAMPLE ON [db.]rp
-          val db = dbOpt.getOrElse(reqDb)
-          ddl(id) {
-            if (!dbs.get(db).exists(_.downsamples.contains(rp)))
-              sys.error(s"downsample policy not found on $db.$rp")
-            updDb(db)(x => x.copy(downsamples = x.downsamples - rp))
-          }
-        case Statement.ShowDownsamples(on) =>
-          // meta/data.go:3827 ShowDownSamplePolicies column set
-          val rows = dbs.get(on.getOrElse(reqDb)).toSeq.flatMap(_.downsamples)
-            .map { case (rp, p) =>
-              Seq[Any](rp, p.fieldOperator,
-                Retention.renderDuration(p.durationS),
-                p.sampleS.map(Retention.renderDuration).mkString(","),
-                p.timeS.map(Retention.renderDuration).mkString(",")) }
-            .sortBy(_.head.toString)
-          rowsObj("downsamples", Seq("rpName", "field_operator", "duration",
-            "sampleInterval", "timeInterval"), rows, id)
-        case Statement.SetConfig(component, key, rawVal, isString) =>
-          // The executor accepts only the sql component's logging.level
-          // with a string value (statement_executor.go:2572); a non-
-          // string there is "illegal type of logging level input", any
-          // other component/key is "unsupported config command".
-          if (!(component == "sql" && key == "logging.level"))
-            throw new InfluxQL.StatementError("unsupported config command")
-          if (!isString)
-            throw new InfluxQL.StatementError(
-              "illegal type of logging level input")
-          val lvl = rawVal.stripPrefix("'").stripSuffix("'").toLowerCase
-          // the reference delegates to its zap-backed logger.SetLevel;
-          // mirror zap's accepted level atoms
-          if (!Set("debug", "info", "warn", "error", "dpanic", "panic",
-              "fatal").contains(lvl))
-            throw new InfluxQL.StatementError(
-              s"""unrecognized level: "$rawVal"""")
-          loggingLevel = lvl
-          s"""{"statement_id":$id}"""
-        case Statement.ShowConfigs =>
-          // the gateway's ACTUAL effective knobs in the reference's
-          // 4-column shape (executeShowConfigs,
-          // statement_executor.go:2560: component, instance, name,
-          // value — names sorted, instance = bind address). Reference
-          // names where a knob maps onto one of its config keys;
-          // graft-specific knobs keep their own dotted namespace.
-          val lim = Validation.defaults
-          val knobs: Seq[(String, Any)] = Seq(
-            "http.auth-enabled" -> requireAuth,
-            "http.bind-address" -> s"127.0.0.1:$boundPort",
-            "http.max-row-limit" -> maxRowLimit,
-            "limits.enforce-metadata-metric-name" -> lim.enforceMetricName,
-            "limits.max-label-name-length" -> lim.maxLabelNameLength,
-            "limits.max-label-names-per-series" ->
-              lim.maxLabelNamesPerSeries,
-            "limits.max-label-value-length" -> lim.maxLabelValueLength,
-            "limits.prom-limit-enabled" -> lim.promLimitEnabled,
-            "limits.reject-old-samples" -> lim.rejectOldSamples,
-            "logging.level" -> loggingLevel,
-            "storage.hot-tier-max-bytes" -> spark.conf.get(
-              graft.Tables.hotTierConfKey,
-              graft.Tables.hotTierDefaultMaxBytes.toString),
-            "spark.sql.shuffle.partitions" -> spark.conf
-              .get("spark.sql.shuffle.partitions"))
-          // values keep their native JSON types (the reference emits
-          // bools/numbers unquoted in the config table) — rendered
-          // directly, the row set is driver-known and tiny
-          def jval(v: Any): String = v match {
-            case b: Boolean => b.toString
-            case n: Int => n.toString
-            case n: Long => n.toString
-            case s => jsonStr(String.valueOf(s))
-          }
-          val inst = jsonStr(s"127.0.0.1:$boundPort")
-          val values = knobs.sortBy(_._1).map { case (k, v) =>
-            s"""["sql",$inst,${jsonStr(k)},${jval(v)}]""" }.mkString(",")
-          s"""{"statement_id":$id,"series":[{"columns":""" +
-            s"""["component","instance","name","value"],""" +
-            s""""values":[$values]}]}"""        case Statement.Unsupported =>
-          // parsed but rejected, the reference's exact error
-          // (statement_executor.go:409-416 returns
-          // meta2.ErrUnsupportCommand for PrepareSnapshot/
-          // EndPrepareSnapshot/GetRuntimeInfo)
-          throw new InfluxQL.StatementError("unsupported command")
-        case Statement.Manage =>
-          synchronized {
-            val before = mstsOf(reqDb)
-            val nowMs = System.currentTimeMillis()
-            val after = Map.empty ++
-              InfluxQL.executeManage(reqCat(), stmt, nowMs)
-            setMsts(reqDb, after)
-            // journal only statements that actually changed data — the
-            // accepted-no-op meta statements (CREATE DATABASE, GRANT …)
-            // return the catalog's own entries untouched
-            val changed = before.keySet != after.keySet ||
-              after.exists { case (k, m) => !before.get(k).exists(_ eq m) }
-            if (changed) {
-              journalDml(reqDb, stmt.trim, nowMs)
-              propagateDml(reqDb, before, after)
-            }
-          }
-          s"""{"statement_id":$id}"""
-        case Statement.SelectInto =>
-          val cat = reqCat()
-          val (cat2, df) = InfluxQL.executeInto(cat, stmt)
-          val written = df.count()
-          // only the INTO target changed; writes that landed meanwhile
-          // in other measurements stay
-          synchronized {
-            setMsts(reqDb, mstsOf(reqDb) ++ cat2.filter { case (k, m) =>
-              !cat.get(k).exists(_ eq m) })
-          }
-          s"""{"statement_id":$id,"series":[{"name":"result","columns":["time","written"],"values":[[0,$written]]}]}"""
-        case Statement.Data(on, pruneNullCols) =>
-          val cat = reqCat(on.getOrElse(reqDb))
-          val (name, tags, df0, desc) = InfluxQL.executeShapedOrd(cat, stmt)
-          val (df, timeNs) = HttpGateway.edgeTime(df0)
-          // `__series_name` names each row's series (per-measurement
-          // SHOW output)
-          val nameCol =
-            if (df.columns.contains("__series_name")) Some("__series_name")
-            else None
-          // a group tag the statement explicitly projects (or a grouped
-          // field dimension under a star) renders as a COLUMN too
-          val alsoCols = InfluxQL.alsoColumnTags(cat, stmt)
-            .filter(df.columns.contains).toSet
-          val valueCols = HttpGateway.shapedValueCols(
-            df.columns.toIndexedSeq.filterNot(nameCol.contains),
-            tags.filterNot(alsoCols.contains))
-          data(DataReply(df, name, tags, valueCols, timeNs, desc, nameCol,
-            pruneNullCols))
+        }
+        s"""{"statement_id":$id}"""
+      case Statement.SelectInto =>
+        val cat = reqCat()
+        val (cat2, df) = InfluxQL.executeInto(cat, stmt)
+        val written = df.count()
+        // only the INTO target changed; writes that landed meanwhile
+        // in other measurements stay
+        synchronized {
+          setMsts(reqDb, mstsOf(reqDb) ++ cat2.filter { case (k, m) =>
+            !cat.get(k).exists(_ eq m) })
+        }
+        s"""{"statement_id":$id,"series":[{"name":"result","columns":["time","written"],"values":[[0,$written]]}]}"""
+      case Statement.Data(on, pruneNullCols) =>
+        val cat = reqCat(on.getOrElse(reqDb))
+        val (name, tags, df0, desc) = InfluxQL.executeShapedOrd(cat, stmt)
+        val (df, timeNs) = HttpGateway.edgeTime(df0)
+        // `__series_name` names each row's series (per-measurement
+        // SHOW output)
+        val nameCol =
+          if (df.columns.contains("__series_name")) Some("__series_name")
+          else None
+        // a group tag the statement explicitly projects (or a grouped
+        // field dimension under a star) renders as a COLUMN too
+        val alsoCols = InfluxQL.alsoColumnTags(cat, stmt)
+          .filter(df.columns.contains).toSet
+        val valueCols = HttpGateway.shapedValueCols(
+          df.columns.toIndexedSeq.filterNot(nameCol.contains),
+          tags.filterNot(alsoCols.contains))
+        data(DataReply(df, name, tags, valueCols, timeNs, desc, nameCol,
+          pruneNullCols))
+    }
+
+    // statement-level errors land INSIDE the statement's result
+    // object with a 200 (the reference's compile-error contract, e.g.
+    // "mixing aggregate and non-aggregate queries" —
+    // tests/server_test.go:5401); parse and transport errors still 400
+    // at the request level below
+    def answer(stmt: (String, Statement), id: Int)(
+        data: DataReply => String): String =
+      try resultObj(stmt._1, stmt._2, id)(data)
+      catch { case e: InfluxQL.StatementError =>
+        s"""{"statement_id":$id,"error":${jsonStr(e.getMessage)}}"""
       }
 
-      // statement-level errors land INSIDE the statement's result
-      // object with a 200 (the reference's compile-error contract, e.g.
-      // "mixing aggregate and non-aggregate queries" —
-      // tests/server_test.go:5401); parse and transport errors still 400
-      // at the request level below
-      def answer(stmt: (String, Statement), id: Int)(
-          data: DataReply => String): String =
-        try resultObj(stmt._1, stmt._2, id)(data)
-        catch { case e: InfluxQL.StatementError =>
-          s"""{"statement_id":$id,"error":${jsonStr(e.getMessage)}}"""
-        }
-
-      val chunked = p.get("chunked").contains("true")
-      val lines: Iterator[String] =
-        if (chunked) {
-          // chunked emission is per-series-batch within ONE statement
-          require(statements.size == 1,
-            "chunked=true supports a single statement")
-          // a non-positive chunk_size takes the default, like the
-          // reference's handler
-          val n = p.get("chunk_size").map(_.toInt).filter(_ > 0)
-            .getOrElse(10000)
-          // a data statement streams chunk documents as they come off
-          // toLocalIterator — driver heap stays bounded by one partition
-          // + one chunk no matter how many rows the statement returns
-          // (the reference's httpsender streams the same way), exempt
-          // from max-row-limit like the reference's; a statement the
-          // gateway answers itself is one chunk
-          var streamed: Option[Iterator[String]] = None
-          val obj = answer(statements.head, 0) { r =>
-            streamed = Some(ResultShaper.streamSeriesJsonChunked(
-              r.df, r.name, r.tags, r.valueCols, n, epoch,
-              timeNs = r.timeNs, seriesDesc = r.desc, nameCol = r.nameCol))
-            ""
-          }
-          streamed.getOrElse(Iterator(s"""{"results":[$obj]}"""))
-        } else {
-          val objs = statements.zipWithIndex.map { case (s, i) =>
-            // non-chunked responses are bounded by http.max-row-limit
-            // (config.go:37) — over-limit series are truncated and marked
-            // partial; use chunked=true to stream past the limit
-            answer(s, i)(r => ResultShaper.toResultObj(r.df, r.name, r.tags,
-              r.valueCols, epoch, i, maxRowLimit, timeNs = r.timeNs,
-              seriesDesc = r.desc, nameCol = r.nameCol,
-              pruneNullCols = r.pruneNullCols))
-          }
-          Iterator(s"""{"results":[${objs.mkString(",")}]}""")
-        }
-      // a KILL that landed before this query's job was submitted cancels
-      // nothing (cancelJobGroup hits active jobs only) — the killed flag
-      // closes that window: results are discarded
-      if (rq.status == "killed")
-        sys.error(s"query ${rq.qid} was killed")
+    val chunked = p.get("chunked").contains("true")
+    val lines: Iterator[String] =
       if (chunked) {
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(200, 0)
-        val os = ex.getResponseBody
-        try lines.foreach { l => os.write(l.getBytes(UTF_8)); os.write('\n') }
-        finally { os.close(); ex.close() }
-      } else respond(ex, 200, lines.next())
+        // chunked emission is per-series-batch within ONE statement
+        require(statements.size == 1,
+          "chunked=true supports a single statement")
+        // a non-positive chunk_size takes the default, like the
+        // reference's handler
+        val n = p.get("chunk_size").map(_.toInt).filter(_ > 0)
+          .getOrElse(10000)
+        // a data statement streams chunk documents as they come off
+        // toLocalIterator — driver heap stays bounded by one partition
+        // + one chunk no matter how many rows the statement returns
+        // (the reference's httpsender streams the same way), exempt
+        // from max-row-limit like the reference's; a statement the
+        // gateway answers itself is one chunk
+        var streamed: Option[Iterator[String]] = None
+        val obj = answer(statements.head, 0) { r =>
+          streamed = Some(ResultShaper.streamSeriesJsonChunked(
+            r.df, r.name, r.tags, r.valueCols, n, epoch,
+            timeNs = r.timeNs, seriesDesc = r.desc, nameCol = r.nameCol))
+          ""
+        }
+        streamed.getOrElse(Iterator(s"""{"results":[$obj]}"""))
+      } else {
+        val objs = statements.zipWithIndex.map { case (s, i) =>
+          // non-chunked responses are bounded by http.max-row-limit
+          // (config.go:37) — over-limit series are truncated and marked
+          // partial; use chunked=true to stream past the limit
+          answer(s, i)(r => ResultShaper.toResultObj(r.df, r.name, r.tags,
+            r.valueCols, epoch, i, maxRowLimit, timeNs = r.timeNs,
+            seriesDesc = r.desc, nameCol = r.nameCol,
+            pruneNullCols = r.pruneNullCols))
+        }
+        Iterator(s"""{"results":[${objs.mkString(",")}]}""")
+      }
+    // a KILL that landed before this query's job was submitted cancels
+    // nothing (cancelJobGroup hits active jobs only) — the killed flag
+    // closes that window: results are discarded
+    if (rq.status == "killed")
+      sys.error(s"query ${rq.qid} was killed")
+    if (chunked) {
+      req.ex.getResponseHeaders.set("Content-Type", "application/json")
+      req.ex.sendResponseHeaders(200, 0)
+      val os = req.ex.getResponseBody
+      try lines.foreach { l => os.write(l.getBytes(UTF_8)); os.write('\n') }
+      finally { os.close(); req.ex.close() }
+    } else req.respond(200, lines.next())
 
-      } finally detachQuery(rq)
-    } catch {
-      case e: Throwable =>
-        // a failure after chunked streaming began cannot 400 anymore —
-        // headers are out; drop the connection like the reference does
-        try respond(ex, 400,
-          s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
-        catch { case _: Throwable => ex.close() }
-    }
+    } finally detachQuery(rq)
+  }
 
   /** A data statement's reply frame as the HTTP edge shapes it. */
   private case class DataReply(df: DataFrame, name: String, tags: Seq[String],
@@ -2444,62 +2239,46 @@ final class HttpGateway(spark: SparkSession,
   // ------------------------------------------------------------- /write
   private val TimeUnset = Long.MinValue
 
-  private def handleWrite(ex: HttpExchange, v2: Boolean = false): Unit = {
-    stats.writeReq.incrementAndGet(); stats.req.incrementAndGet()
+  /** `/write`, or with `v2` influxdb-2.x's `/api/v2/write`, whose
+    * `bucket` names the database. */
+  private def handleWrite(r: Request, v2: Boolean): Unit = {
     // syscontrol disableWrite (syscontrol.go:518): reject before parse
     if (writesDisabled) {
-      respond(ex, 400, "{\"error\":\"disable write!\"}"); return
+      r.respond(400, "{\"error\":\"disable write!\"}"); return
     }
-    val _t0 = System.nanoTime()
-    try handleWrite0(ex, v2)
-    finally stats.writeReqDurationNs.addAndGet(System.nanoTime() - _t0)
+    // v2: bucket → database (`bucket2dbrp`); missing bucket is a 404
+    if (v2 && r.params.get("bucket").forall(_.isEmpty))
+      throw new Routes.Status(404, "bucket name is required")
+    val wdb = writeDb(if (v2) Some(bucketDb(r)) else r.params.get("db"))
+    val mult = r.params.getOrElse("precision", "ns") match {
+      case "ns" | "n" => 1L
+      case "u" | "µ" => 1000L
+      case "ms" => 1000000L
+      case "s" => 1000000000L
+      case "m" => 60L * 1000000000L
+      case "h" => 3600L * 1000000000L
+      case x => sys.error(s"invalid precision $x")
+    }
+    val nowNs = System.currentTimeMillis() * 1000000L
+    val body = new String(r.body(), UTF_8)
+    val parsed = body.split('\n').toSeq
+      .map(l => LineProtocol.parseLineFanned(l, TimeUnset))
+    // tag-array fan-out writes DISTINCT rows even at one ns
+    // (server_test.go:13187 keeps the plain tv9 point and the
+    // array's tv9 point side by side) — skip the point merge for
+    // the measurements a fanned line touched
+    val fannedMsts = parsed.filter(_.size > 1)
+      .flatMap(_.map(_.measurement)).toSet
+    val pts = parsed.flatten
+      .map(pt => pt.copy(
+        time = if (pt.time == TimeUnset) nowNs else pt.time * mult))
+    ingestPoints(wdb, pts, noMergeMsts = fannedMsts)
+    r.empty(204)
   }
 
-  private def handleWrite0(ex: HttpExchange, v2: Boolean): Unit =
-    try {
-      val p0 = params(ex, readBody = false)
-      // v2: bucket → database (`bucket2dbrp`); missing bucket is a 404
-      val p =
-        if (!v2) p0
-        else p0.get("bucket").filter(_.nonEmpty) match {
-          case Some(b) => p0 + ("db" -> b.split("/", 2)(0))
-          case None =>
-            respond(ex, 404, s"""{"error":${jsonStr(
-              "bucket name is required")}}""")
-            return
-        }
-      if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-      val wdb = writeDb(ex, p).getOrElse(return)
-      val mult = p.getOrElse("precision", "ns") match {
-        case "ns" | "n" => 1L
-        case "u" | "µ" => 1000L
-        case "ms" => 1000000L
-        case "s" => 1000000000L
-        case "m" => 60L * 1000000000L
-        case "h" => 3600L * 1000000000L
-        case x => sys.error(s"invalid precision $x")
-      }
-      val nowNs = System.currentTimeMillis() * 1000000L
-      val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-      val parsed = body.split('\n').toSeq
-        .map(l => LineProtocol.parseLineFanned(l, TimeUnset))
-      // tag-array fan-out writes DISTINCT rows even at one ns
-      // (server_test.go:13187 keeps the plain tv9 point and the
-      // array's tv9 point side by side) — skip the point merge for
-      // the measurements a fanned line touched
-      val fannedMsts = parsed.filter(_.size > 1)
-        .flatMap(_.map(_.measurement)).toSet
-      val pts = parsed.flatten
-        .map(pt => pt.copy(
-          time = if (pt.time == TimeUnset) nowNs else pt.time * mult))
-      ingestPoints(wdb, pts, noMergeMsts = fannedMsts)
-      ex.sendResponseHeaders(204, -1); ex.close()
-    } catch {
-      case e: Throwable =>
-        stats.write400ErrReq.incrementAndGet()
-        respond(ex, 400, s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
-    }
-
+  /** The database of a v2 write's `bucket` (database[/rp]). */
+  private def bucketDb(r: Request): String =
+    r.params.getOrElse("bucket", "").split("/", 2)(0)
 
   /** Shared ingest core for the write-family routes (/write, /api/v2/
     * write, logkeeper /records and /upload): fence registration, the
@@ -2598,16 +2377,12 @@ final class HttpGateway(spark: SparkSession,
 
   /** Resolve the ingest database for a write-family route: missing/
     * empty db targets the default database; an uncreated one is the
-    * reference's HTTP 404 (errno.HttpDatabaseNotFound). Returns None
-    * after responding. */
-  private def writeDb(ex: HttpExchange,
-                      p: Map[String, String]): Option[String] = {
-    val wdb = p.get("db").filter(_.nonEmpty).getOrElse(defaultDb)
-    if (!dbs.contains(wdb)) {
-      respond(ex, 404, s"""{"error":${jsonStr(
-        "write error: database not found!")}}""")
-      None
-    } else Some(wdb)
+    * reference's HTTP 404 (errno.HttpDatabaseNotFound). */
+  private def writeDb(db: Option[String]): String = {
+    val wdb = db.filter(_.nonEmpty).getOrElse(defaultDb)
+    if (!dbs.contains(wdb))
+      throw new Routes.Status(404, "write error: database not found!")
+    wdb
   }
 
   /** Arrow do-put (`services/arrowflight/service.go:291` DoPut): the
@@ -2618,20 +2393,13 @@ final class HttpGateway(spark: SparkSession,
     * documents the divergence). Batches append to the measurement
     * under the request database, write-privilege checked like every
     * other ingest route. */
-  private def handleArrowDoPut(ex: HttpExchange): Unit =
-    try {
-      val p = params(ex, readBody = false)
-      if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-      val wdb = writeDb(ex, p).getOrElse(return)
-      val mst = p.getOrElse("mst", sys.error("missing measurement (mst)"))
-      val (df, tagKeys) = graft.sources.ArrowIngest.decode(
-        spark, ex.getRequestBody.readAllBytes())
-      synchronized { append(wdb, mst, df, tagKeys) }
-      respond(ex, 200, s"""{"rows":${df.count()}}""")
-    } catch {
-      case e: Throwable =>
-        respond(ex, 400, s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
-    }
+  private def handleArrowDoPut(r: Request): Unit = {
+    val wdb = writeDb(r.params.get("db"))
+    val mst = r.params.getOrElse("mst", sys.error("missing measurement (mst)"))
+    val (df, tagKeys) = graft.sources.ArrowIngest.decode(spark, r.body())
+    synchronized { append(wdb, mst, df, tagKeys) }
+    r.respond(200, s"""{"rows":${df.count()}}""")
+  }
 
   /** Arrow do-get (`services/arrowflight/service.go:349` DoGet →
     * HandleQuery): run an InfluxQL statement and stream the result
@@ -2639,70 +2407,51 @@ final class HttpGateway(spark: SparkSession,
     * `db`/`q` params mirror the Flight ticket; rows stream off
     * `toLocalIterator` capped at `http.max-row-limit` (the non-chunked
     * truncation contract). */
-  private def handleArrowDoGet(ex: HttpExchange): Unit =
-    try {
-      val p = params(ex, readBody = true)
-      val principal = authed(ex, p) match {
-        case None => return
-        case Some(pr) => pr
+  private def handleArrowDoGet(r: Request): Unit = {
+    val p = r.params
+    val q = p.getOrElse("q", sys.error("missing required parameter \"q\""))
+    val reqDb = p.get("db").filter(_.nonEmpty).getOrElse(defaultDb)
+    r.principal.foreach { user =>
+      authorizeStatements(user, p.getOrElse("db", ""),
+          Seq(q -> Statement.classify(q))).foreach {
+        msg => r.respond(403, s"""{"error":${jsonStr(msg)}}"""); return
       }
-      val q = p.getOrElse("q", sys.error("missing required parameter \"q\""))
-      val reqDb = p.get("db").filter(_.nonEmpty).getOrElse(defaultDb)
-      principal.foreach { user =>
-        authorizeStatements(user, p.getOrElse("db", ""),
-            Seq(q -> Statement.classify(q))).foreach {
-          msg => respond(ex, 403, s"""{"error":${jsonStr(msg)}}"""); return
-        }
-      }
-      val (_, _, df) = InfluxQL.executeShaped(
-        catalogFor(reqDb, principal), q)
-      ex.getResponseHeaders.set("Content-Type",
-        "application/vnd.apache.arrow.stream")
-      ex.sendResponseHeaders(200, 0)
-      val os = ex.getResponseBody
-      try graft.sources.ArrowIngest.writeStream(df, os,
-        maxRows = maxRowLimit.toLong)
-      finally { os.close(); ex.close() }
-    } catch {
-      case e: Throwable =>
-        try respond(ex, 400,
-          s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
-        catch { case _: Throwable => ex.close() }
     }
+    val (_, _, df) = InfluxQL.executeShaped(
+      catalogFor(reqDb, r.principal), q)
+    r.ex.getResponseHeaders.set("Content-Type",
+      "application/vnd.apache.arrow.stream")
+    r.ex.sendResponseHeaders(200, 0)
+    val os = r.ex.getResponseBody
+    try graft.sources.ArrowIngest.writeStream(df, os,
+      maxRows = maxRowLimit.toLong)
+    finally { os.close(); r.ex.close() }
+  }
 
   /** Metric-store remote write (`handler_prom.go:91`
     * servePromWriteWithMetricStore): every series in the body lands in
     * the ONE measurement named by the URL's {metric_store}, `__name__`
     * kept as an ordinary label. The store is immediately queryable on
     * the scoped prom routes AND as an InfluxQL measurement. */
-  private def handlePromStoreWrite(ex: HttpExchange, store: String): Unit =
-    try {
-      val p = params(ex, readBody = false)
-      if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-      val body = ex.getRequestBody.readAllBytes()
-      val series0 = PromRemoteWrite.decode(body)
-      if (series0.isEmpty) sys.error("no timeseries in write request")
-      // per-tenant write limits, tenant = the metric store (mst)
-      val (series, partialErr) = filterInvalidSeries(store, series0)
-      if (series.isEmpty)
-        sys.error(partialErr.getOrElse("timeseries have no sample"))
-      val (df, tagKeys) =
-        PromRemoteWrite.toStoreMeasurement(spark, series, store)
-      synchronized {
-        append(defaultDb, store, df, tagKeys, Store.PromStore)
-      }
-      resultsCache.invalidateAll()
-      partialErr match {
-        // the valid series landed; a 400 carrying the first validation
-        // error reports the dropped ones (servePromWriteBase:203)
-        case Some(err) =>
-          respond(ex, 400, s"""{"error":${jsonStr(err)}}""")
-        case None => ex.sendResponseHeaders(204, -1); ex.close()
-      }
-    } catch {
-      case e: Throwable =>
-        respond(ex, 400, s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
+  private def handlePromStoreWrite(r: Request): Unit = {
+    val store = storeOf(r)
+    val series0 = PromRemoteWrite.decode(r.body())
+    if (series0.isEmpty) sys.error("no timeseries in write request")
+    // per-tenant write limits, tenant = the metric store (mst)
+    val (series, partialErr) = filterInvalidSeries(store, series0)
+    if (series.isEmpty)
+      sys.error(partialErr.getOrElse("timeseries have no sample"))
+    val (df, tagKeys) =
+      PromRemoteWrite.toStoreMeasurement(spark, series, store)
+    synchronized {
+      append(defaultDb, store, df, tagKeys, Store.PromStore)
     }
+    resultsCache.invalidateAll()
+    // the valid series landed; a 400 carrying the first validation
+    // error reports the dropped ones (servePromWriteBase:203)
+    partialErr.foreach(sys.error)
+    r.empty(204)
+  }
 
   /** Prometheus remote write (`handler_prom.go:86` servePromWrite): a
     * snappy+protobuf `WriteRequest` body ingested via
@@ -2710,37 +2459,27 @@ final class HttpGateway(spark: SparkSession,
     * measurements (tags + `value` field, like `timeSeries2Rows` rows)
     * and as PromQL metrics, immediately queryable from `/query` and
     * `/api/v1/query_range` alike. */
-  private def handlePromWrite(ex: HttpExchange): Unit =
-    try {
-      val p = params(ex, readBody = false)
-      if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-      val wdb = writeDb(ex, p).getOrElse(return)
-      val body = ex.getRequestBody.readAllBytes()
-      val series0 = PromRemoteWrite.decode(body)
-      if (series0.isEmpty) sys.error("no timeseries in write request")
-      // plain route: tenant = EmptyPromMst (servePromWrite passes "")
-      val (series, promPartialErr) = filterInvalidSeries("", series0)
-      if (series.isEmpty)
-        sys.error(promPartialErr.getOrElse("timeseries have no sample"))
-      synchronized {
-        PromRemoteWrite.toMeasurements(spark, series).foreach {
-          case (metric, (df, tagKeys)) =>
-            // the prom query surface is one namespace = the default
-            // database; other dbs' series stay InfluxQL-queryable only
-            append(wdb, metric, df, tagKeys,
-              if (wdb == defaultDb) Store.Prom else Store.Plain)
-        }
+  private def handlePromWrite(r: Request): Unit = {
+    val wdb = writeDb(r.params.get("db"))
+    val series0 = PromRemoteWrite.decode(r.body())
+    if (series0.isEmpty) sys.error("no timeseries in write request")
+    // plain route: tenant = EmptyPromMst (servePromWrite passes "")
+    val (series, promPartialErr) = filterInvalidSeries("", series0)
+    if (series.isEmpty)
+      sys.error(promPartialErr.getOrElse("timeseries have no sample"))
+    synchronized {
+      PromRemoteWrite.toMeasurements(spark, series).foreach {
+        case (metric, (df, tagKeys)) =>
+          // the prom query surface is one namespace = the default
+          // database; other dbs' series stay InfluxQL-queryable only
+          append(wdb, metric, df, tagKeys,
+            if (wdb == defaultDb) Store.Prom else Store.Plain)
       }
-      resultsCache.invalidateAll()
-      promPartialErr match {
-        case Some(err) =>
-          respond(ex, 400, s"""{"error":${jsonStr(err)}}""")
-        case None => ex.sendResponseHeaders(204, -1); ex.close()
-      }
-    } catch {
-      case e: Throwable =>
-        respond(ex, 400, s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
     }
+    resultsCache.invalidateAll()
+    promPartialErr.foreach(sys.error)
+    r.empty(204)
+  }
 
   /** OTLP writes (`handler_otlp.go:104-114`): `batches` decodes the
     * body into frames (with tag keys) per measurement. Metric data
@@ -2750,94 +2489,83 @@ final class HttpGateway(spark: SparkSession,
     * span_id tags, duration_nano and friends as fields); log records
     * in `logs` (severity/body fields, attrs as tags). Success is an
     * empty Export*ServiceResponse. */
-  private def handleOtlp(ex: HttpExchange)(
-      batches: Array[Byte] => Map[String, (DataFrame, Seq[String])]): Unit =
-    try {
-      val p = params(ex, readBody = false)
-      if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-      val wdb = writeDb(ex, p).getOrElse(return)
-      val bs = batches(ex.getRequestBody.readAllBytes())
-      synchronized {
-        bs.foreach { case (m, (df, tagKeys)) =>
-          append(wdb, m, df, tagKeys) }
-      }
-      ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
-      ex.sendResponseHeaders(200, -1); ex.close()
-    } catch {
-      case e: Throwable =>
-        respond(ex, 400, s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
+  private def handleOtlp(r: Request)(
+      batches: Array[Byte] => Map[String, (DataFrame, Seq[String])]): Unit = {
+    val wdb = writeDb(r.params.get("db"))
+    val bs = batches(r.body())
+    synchronized {
+      bs.foreach { case (m, (df, tagKeys)) =>
+        append(wdb, m, df, tagKeys) }
     }
+    r.ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
+    r.empty(200)
+  }
 
   /** Prometheus remote read (`handler_prom.go:303` servePromReadBase):
     * each decoded Query becomes a Spark range+matcher filter over the
     * matching metrics; raw samples come back as a snappy+protobuf
     * `ReadResponse`. Missing labels match the empty string, Prometheus
     * matcher semantics. */
-  private def handlePromRead(ex: HttpExchange): Unit =
-    try {
-      if (guard(ex, params(ex, readBody = false),
-          Auth.ReadPrivilege, "read from").isEmpty) return
-      import org.apache.spark.sql.functions.{coalesce, col, lit, unix_millis}
-      val queries =
-        PromRemoteRead.decodeRequest(ex.getRequestBody.readAllBytes())
-      if (queries.isEmpty) sys.error("no queries in read request")
-      val results = queries.map { q =>
-        val nameM = q.matchers.filter(_.name == PromRemoteWrite.MetricLabel)
-        val labelM = q.matchers.filterNot(_.name == PromRemoteWrite.MetricLabel)
-        promCat.toSeq.filter { case (name, _) => nameM.forall(_.matches(name)) }
-          .sortBy(_._1)
-          .flatMap { case (name, mt) =>
-            val tus = unix_millis(col(mt.time))
-            var df = mt.df.filter(tus >= q.startMs && tus <= q.endMs)
-            labelM.foreach { m =>
-              val c =
-                if (df.columns.contains(m.name))
-                  coalesce(col(m.name).cast("string"), lit(""))
-                else lit("")
-              df = df.filter(m.typ match {
-                case 0 => c === m.value
-                case 1 => c =!= m.value
-                case 2 => c.rlike("^(?:" + m.value + ")$")
-                case 3 => !c.rlike("^(?:" + m.value + ")$")
-                case t => sys.error(s"unknown matcher type $t")
-              })
-            }
-            // http.max-row-limit (config.go:37 DefaultMaxRowNum): bound
-            // the driver-side collect like the reference bounds its
-            // result emission — a wide-open read errs, not OOMs
-            val rows = df.select(
-              mt.labels.map(l =>
-                coalesce(col(l).cast("string"), lit("")).as(l)) ++
-                Seq(tus.as("_t"), col(mt.value).cast("double").as("_v")): _*)
-              .limit(maxRowLimit + 1).collect()
-            if (rows.length > maxRowLimit)
-              sys.error(s"remote read exceeds max-row-limit ($maxRowLimit); " +
-                "narrow the time range or matchers")
-            rows.groupBy(r => mt.labels.map(l => r.getAs[String](l)))
-              .toSeq.sortBy(_._1)(Ordering.Implicits.seqOrdering)
-              .map { case (lv, rs) =>
-                val labels = mt.labels.zip(lv).filter(_._2.nonEmpty).toMap +
-                  (PromRemoteWrite.MetricLabel -> name)
-                PromRemoteWrite.Series(labels,
-                  rs.map(r => (r.getAs[Long]("_t"), r.getAs[Double]("_v")))
-                    .sortBy(_._1).toSeq)
-              }
+  private def handlePromRead(r: Request): Unit = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, unix_millis}
+    val queries = PromRemoteRead.decodeRequest(r.body())
+    if (queries.isEmpty) sys.error("no queries in read request")
+    val cat = promCatOf(r)
+    val results = queries.map { q =>
+      val nameM = q.matchers.filter(_.name == PromRemoteWrite.MetricLabel)
+      val labelM = q.matchers.filterNot(_.name == PromRemoteWrite.MetricLabel)
+      cat.toSeq.filter { case (name, _) => nameM.forall(_.matches(name)) }
+        .sortBy(_._1)
+        .flatMap { case (name, mt) =>
+          val tus = unix_millis(col(mt.time))
+          var df = mt.df.filter(tus >= q.startMs && tus <= q.endMs)
+          labelM.foreach { m =>
+            val c =
+              if (df.columns.contains(m.name))
+                coalesce(col(m.name).cast("string"), lit(""))
+              else lit("")
+            df = df.filter(m.typ match {
+              case 0 => c === m.value
+              case 1 => c =!= m.value
+              case 2 => c.rlike("^(?:" + m.value + ")$")
+              case 3 => !c.rlike("^(?:" + m.value + ")$")
+              case t => sys.error(s"unknown matcher type $t")
+            })
           }
-      }
-      val body = PromRemoteRead.encodeResponse(results)
-      ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
-      ex.getResponseHeaders.set("Content-Encoding", "snappy")
-      ex.sendResponseHeaders(200, body.length.toLong)
-      ex.getResponseBody.write(body); ex.close()
-    } catch {
-      case e: Throwable =>
-        respond(ex, 400, s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
+          // http.max-row-limit (config.go:37 DefaultMaxRowNum): bound
+          // the driver-side collect like the reference bounds its
+          // result emission — a wide-open read errs, not OOMs
+          val rows = df.select(
+            mt.labels.map(l =>
+              coalesce(col(l).cast("string"), lit("")).as(l)) ++
+              Seq(tus.as("_t"), col(mt.value).cast("double").as("_v")): _*)
+            .limit(maxRowLimit + 1).collect()
+          if (rows.length > maxRowLimit)
+            sys.error(s"remote read exceeds max-row-limit ($maxRowLimit); " +
+              "narrow the time range or matchers")
+          rows.groupBy(r => mt.labels.map(l => r.getAs[String](l)))
+            .toSeq.sortBy(_._1)(Ordering.Implicits.seqOrdering)
+            .map { case (lv, rs) =>
+              val labels = mt.labels.zip(lv).filter(_._2.nonEmpty).toMap +
+                (PromRemoteWrite.MetricLabel -> name)
+              PromRemoteWrite.Series(labels,
+                rs.map(r => (r.getAs[Long]("_t"), r.getAs[Double]("_v")))
+                  .sortBy(_._1).toSeq)
+            }
+        }
     }
+    val body = PromRemoteRead.encodeResponse(results)
+    r.ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
+    r.ex.getResponseHeaders.set("Content-Encoding", "snappy")
+    r.ex.sendResponseHeaders(200, body.length.toLong)
+    r.ex.getResponseBody.write(body); r.ex.close()
+  }
 
   // ---------------------------------------------------------- /api/v1/…
+  private val StepRx = """^(\d+)(ms|s|m|h|d)?$""".r
   /** `15s` / `1m` / bare seconds → engine duration string. */
   private def stepOf(s: String): String = {
-    val m = """^(\d+)(ms|s|m|h|d)?$""".r.findFirstMatchIn(s.trim)
+    val m = StepRx.findFirstMatchIn(s.trim)
       .getOrElse(sys.error(s"bad step: $s"))
     val n = m.group(1).toLong
     Option(m.group(2)).getOrElse("s") match {
@@ -2874,46 +2602,31 @@ final class HttpGateway(spark: SparkSession,
   // Series). Label names come from catalog metadata — no data pass;
   // label values and series run column-pruned distincts.
 
-  private def promSuccess(ex: HttpExchange, dataJson: String): Unit =
-    respond(ex, 200, s"""{"status":"success","data":$dataJson}""")
+  private def promSuccess(r: Request, dataJson: String): Unit =
+    r.respond(200, s"""{"status":"success","data":$dataJson}""")
 
   /** Logkeeper repository CRUD (`handler_logstore.go:199-290`): a
     * repository IS a database. GET lists (raw sorted JSON array, the
     * reference's exact body shape); POST/DELETE create/drop. */
-  private def handleRepository(ex: HttpExchange): Unit =
-    try {
-      val p = params(ex, readBody = true)
-      val path = ex.getRequestURI.getPath
-      val repo = "^/api/v1/repository/([^/]+)$".r
-        .findFirstMatchIn(path).map(_.group(1))
-      (ex.getRequestMethod.toUpperCase, repo) match {
-        case ("GET", None) =>
-          if (guard(ex, p, Auth.ReadPrivilege, "read from").isEmpty) return
-          respond(ex, 200,
-            dbs.keys.toSeq.sorted.map(jsonStr).mkString("[", ",", "]"))
-        case ("POST", Some(r)) =>
-          if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-          require(Store.persistableDb(r), s"invalid repository name: $r")
-          synchronized {
-            if (dbs.contains(r)) sys.error("repository already exists")
-            dbs = dbs + (r -> Db())
-            persistDatabases()
-          }
-          respond(ex, 200, "{}")
-        case ("DELETE", Some(r)) =>
-          if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-          synchronized {
-            if (!dbs.contains(r)) sys.error("repository not found")
-            dropDb(r)
-            persistDatabases()
-          }
-          respond(ex, 200, "{}")
-        case (m, _) => respond(ex, 405, s"""{"error":"bad $m"}""")
-      }
-    } catch {
-      case e: Throwable => respond(ex, 400,
-        s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
+  private def createRepository(r: Request): Unit = {
+    val repo = r("repo")
+    require(Store.persistableDb(repo), s"invalid repository name: $repo")
+    synchronized {
+      if (dbs.contains(repo)) sys.error("repository already exists")
+      dbs = dbs + (repo -> Db())
+      persistDatabases()
     }
+    r.respond(200, "{}")
+  }
+
+  private def dropRepository(r: Request): Unit = {
+    synchronized {
+      if (!dbs.contains(r("repo"))) sys.error("repository not found")
+      dropDb(r("repo"))
+      persistDatabases()
+    }
+    r.respond(200, "{}")
+  }
 
   private def repoNamed(repo: String): Db =
     dbs.getOrElse(repo, sys.error("repository not found"))
@@ -2934,45 +2647,29 @@ final class HttpGateway(spark: SparkSession,
   /** Logkeeper logstream CRUD (`handler_logstore.go:351+`): a logstream
     * IS a measurement of its repository. Ingest/query ride the normal
     * /write and /query paths. */
-  private def handleLogstream(ex: HttpExchange): Unit =
-    try {
-      val p = params(ex, readBody = true)
-      val path = ex.getRequestURI.getPath
-      val two = "^/api/v1/logstream/([^/]+)/([^/]+)$".r
-        .findFirstMatchIn(path).map(m => (m.group(1), m.group(2)))
-      val one = "^/api/v1/logstream/([^/]+)$".r
-        .findFirstMatchIn(path).map(_.group(1))
-      (ex.getRequestMethod.toUpperCase, two, one) match {
-        case ("GET", None, Some(repo)) =>
-          if (guard(ex, p, Auth.ReadPrivilege, "read from").isEmpty) return
-          respond(ex, 200, repoNamed(repo).msts.keys.toSeq.sorted
-            .map(jsonStr).mkString("[", ",", "]"))
-        case ("POST", Some((repo, stream)), _) =>
-          if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-          synchronized {
-            if (repoNamed(repo).msts.contains(stream))
-              sys.error("logstream already exists")
-            updDb(repo)(d => d.copy(msts = d.msts + (stream -> emptyLogStream),
-              logStores = d.logStores + stream))
-            persistLogStores()
-          }
-          respond(ex, 200, "{}")
-        case ("DELETE", Some((repo, stream)), _) =>
-          if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-          synchronized {
-            logStream(repo, stream)
-            updDb(repo)(d => d.copy(msts = d.msts - stream,
-              logStores = d.logStores - stream))
-            store.foreach(_.delete(repo, stream))
-            persistLogStores()
-          }
-          respond(ex, 200, "{}")
-        case (m, _, _) => respond(ex, 405, s"""{"error":"bad $m"}""")
-      }
-    } catch {
-      case e: Throwable => respond(ex, 400,
-        s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
+  private def createLogstream(r: Request): Unit = {
+    val (repo, stream) = (r("repo"), r("stream"))
+    synchronized {
+      if (repoNamed(repo).msts.contains(stream))
+        sys.error("logstream already exists")
+      updDb(repo)(d => d.copy(msts = d.msts + (stream -> emptyLogStream),
+        logStores = d.logStores + stream))
+      persistLogStores()
     }
+    r.respond(200, "{}")
+  }
+
+  private def dropLogstream(r: Request): Unit = {
+    val (repo, stream) = (r("repo"), r("stream"))
+    synchronized {
+      logStream(repo, stream)
+      updDb(repo)(d => d.copy(msts = d.msts - stream,
+        logStores = d.logStores - stream))
+      store.foreach(_.delete(repo, stream))
+      persistLogStores()
+    }
+    r.respond(200, "{}")
+  }
 
   /** Logkeeper pipe-syntax queries (`handler.go:532-560` routes,
     * `handler_logstore_query.go` serveQueryLog / serveAggLogQuery /
@@ -2984,125 +2681,94 @@ final class HttpGateway(spark: SparkSession,
     * Params mirror getQueryLogRequest: `from`/`to` epoch-ms (half-open),
     * `limit` (default 10, max 1000 — MaxLogLimit), `reverse` (default
     * true = newest first), `query`. All collects are limit-capped. */
-  private def handleLogQueryRoutes(ex: HttpExchange): Unit =
-    try {
-      val t0 = System.nanoTime()
-      val path = ex.getRequestURI.getPath
-      val mc0 = LogRouteRx.consume.findFirstMatchIn(path)
-      if (mc0.isDefined) {
-        val mc = mc0.get
-        handleConsumeRoutes(ex, t0, mc.group(1), mc.group(2), mc.group(3))
-        return
-      }
-      val mw0 = LogRouteRx.ingest.findFirstMatchIn(path)
-      if (mw0.isDefined) {
-        val mw = mw0.get
-        handleLogIngestRoutes(ex, mw.group(1), mw.group(2), mw.group(3))
-        return
-      }
-      val mt0 = LogRouteRx.streamTask.findFirstMatchIn(path)
-      if (mt0.isDefined) {
-        val mt = mt0.get
-        handleStreamTaskRoutes(ex, mt.group(1), mt.group(2),
-          Option(mt.group(3)))
-        return
-      }
-      val m0 = LogRouteRx.query.findFirstMatchIn(path).getOrElse {
-        respond(ex, 404, """{"error":"unknown logkeeper route"}""")
-        return
-      }
-      val (repo, stream, action) = (m0.group(1), m0.group(2), m0.group(3))
-      val p = params(ex, readBody = true) + ("db" -> repo)
-      if (guard(ex, p, Auth.ReadPrivilege, "read from").isEmpty) return
-      val meas = logStream(repo, stream)
-      val fromMs = p.get("from").filter(_.nonEmpty).map(_.toLong)
-        .getOrElse(0L)
-      val toMs = p.get("to").filter(_.nonEmpty).map(_.toLong)
-        .getOrElse(System.currentTimeMillis())
-      require(fromMs <= toMs, "from value larger than to")
-      val limit = math.min(
-        p.get("limit").filter(_.nonEmpty).map(_.toInt).getOrElse(10), 1000)
-      val reverse = p.get("reverse").filter(_.nonEmpty)
-        .forall(_.toBoolean)
-      val query = p.getOrElse("query", "")
+  private def logQuery(action: String)(r: Request): Unit = {
+    val t0 = System.nanoTime()
+    val (p, stream) = (r.params, r("stream"))
+    val meas = logStream(r("repo"), stream)
+    val fromMs = p.get("from").filter(_.nonEmpty).map(_.toLong)
+      .getOrElse(0L)
+    val toMs = p.get("to").filter(_.nonEmpty).map(_.toLong)
+      .getOrElse(System.currentTimeMillis())
+    require(fromMs <= toMs, "from value larger than to")
+    val limit = math.min(
+      p.get("limit").filter(_.nonEmpty).map(_.toInt).getOrElse(10), 1000)
+    val reverse = p.get("reverse").filter(_.nonEmpty)
+      .forall(_.toBoolean)
+    val query = p.getOrElse("query", "")
 
-      import org.apache.spark.sql.functions._
-      val timeBound = meas.df.filter(
-        unix_millis(col(meas.time)) >= fromMs &&
-        unix_millis(col(meas.time)) < toMs)
-      val (frame, sqlTail) = logPipeFrame(timeBound, query)
-      def tookMs = (System.nanoTime() - t0) / 1000000L
+    import org.apache.spark.sql.functions._
+    val timeBound = meas.df.filter(
+      unix_millis(col(meas.time)) >= fromMs &&
+      unix_millis(col(meas.time)) < toMs)
+    val (frame, sqlTail) = logPipeFrame(timeBound, query)
+    def tookMs = (System.nanoTime() - t0) / 1000000L
 
-      action match {
-        case "logs" =>
-          val ordered = frame.orderBy(
-            if (reverse) col(meas.time).desc else col(meas.time).asc)
-          logsReply(ex, ordered.limit(limit).collect(),
-            logRenderCols(frame.columns.toSeq, meas.time), meas.time, tookMs,
-            if (reverse) toMs else fromMs)
-        case "histogram" =>
-          // serveAggLogQuery: the pipe query + `select count(time)` per
-          // adaptive bucket, zero-filled across [from, to) and edge
-          // buckets clamped to the request range (GenZeroHistogram)
-          val widthMs = LogPipe.adaptiveBucketMs(fromMs, toMs)
-          val counts = frame
-            .groupBy((floor(unix_millis(col(meas.time)) / widthMs)
-              * widthMs).cast("long").as("_b"))
-            .agg(count(lit(1)).as("_n"))
-            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-          val b0 = Math.floorDiv(fromMs, widthMs) * widthMs
-          val hist = Iterator.iterate(b0)(_ + widthMs)
-            .takeWhile(_ < toMs).map { b =>
-              val from = math.max(b, fromMs)
-              val to = math.min(b + widthMs, toMs)
-              s"""{"from":$from,"to":$to,"count":${counts.getOrElse(b, 0L)}}"""
-            }.mkString("[", ",", "]")
-          val total = counts.valuesIterator.sum
-          logkeeperOk(ex,
-            s""""count":$total,"progress":"1.000000","histograms":$hist,""" +
-            s""""took_ms":$tookMs,"scroll_id":""""")
-        case "analytics" =>
-          // serveAnalytics: no SELECT tail → the nil-request empty body
-          sqlTail match {
-            case None =>
-              logkeeperOk(ex,
-                s""""total_size":0,"progress":"Complete","took_ms":$tookMs,""" +
-                s""""scroll_id":""""")
-            case Some(sql) =>
-              // rewriteStatementForLogStore pins the statement's source
-              // to the logstream regardless of any FROM in the text —
-              // execute against a one-measurement catalog of the
-              // PPL-filtered frame, inserting the FROM when omitted
-              val cat = Map(stream -> meas.copy(df = frame, extentMs = None))
-              val out = InfluxQL.execute(cat, withFrom(sql, stream))
-              val cols = out.columns.toSeq
-              val dataCols = cols.filterNot(_ == "time") ++
-                (if (cols.contains("time")) Seq("time") else Nil)
-              val rows = out.limit(maxRowLimit + 1).collect()
-              val header = dataCols.map(jsonStr).mkString("[", ",", "]")
-              val body = rows.take(maxRowLimit).map { r =>
-                dataCols.map { c =>
-                  r.get(r.fieldIndex(c)) match {
-                    case null => "\"\""
-                    case ts: java.sql.Timestamp => jsonStr(ts.getTime.toString)
-                    case d: Double => jsonStr(
-                      if (d == d.floor && !d.isInfinite) d.toLong.toString
-                      else d.toString)
-                    case v => jsonStr(v.toString)
-                  }
-                }.mkString("[", ",", "]")
-              }
-              logkeeperOk(ex,
-                s""""total_size":${math.min(rows.length, maxRowLimit)},""" +
-                s""""progress":"Complete","took_ms":$tookMs,"scroll_id":"",""" +
-                s""""groupInfo":[],"dataset":${(header +: body).mkString("[", ",", "]")}""")
-          }
-      }
-    } catch {
-      case e: Throwable => respond(ex, 400,
-        s"""{"success":false,"code":"400","message":${
-          jsonStr(String.valueOf(e.getMessage))}}""")
+    action match {
+      case "logs" =>
+        val ordered = frame.orderBy(
+          if (reverse) col(meas.time).desc else col(meas.time).asc)
+        logsReply(r, ordered.limit(limit).collect(),
+          logRenderCols(frame.columns.toSeq, meas.time), meas.time, tookMs,
+          if (reverse) toMs else fromMs)
+      case "histogram" =>
+        // serveAggLogQuery: the pipe query + `select count(time)` per
+        // adaptive bucket, zero-filled across [from, to) and edge
+        // buckets clamped to the request range (GenZeroHistogram)
+        val widthMs = LogPipe.adaptiveBucketMs(fromMs, toMs)
+        val counts = frame
+          .groupBy((floor(unix_millis(col(meas.time)) / widthMs)
+            * widthMs).cast("long").as("_b"))
+          .agg(count(lit(1)).as("_n"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val b0 = Math.floorDiv(fromMs, widthMs) * widthMs
+        val hist = Iterator.iterate(b0)(_ + widthMs)
+          .takeWhile(_ < toMs).map { b =>
+            val from = math.max(b, fromMs)
+            val to = math.min(b + widthMs, toMs)
+            s"""{"from":$from,"to":$to,"count":${counts.getOrElse(b, 0L)}}"""
+          }.mkString("[", ",", "]")
+        val total = counts.valuesIterator.sum
+        logkeeperOk(r,
+          s""""count":$total,"progress":"1.000000","histograms":$hist,""" +
+          s""""took_ms":$tookMs,"scroll_id":""""")
+      case "analytics" =>
+        // serveAnalytics: no SELECT tail → the nil-request empty body
+        sqlTail match {
+          case None =>
+            logkeeperOk(r,
+              s""""total_size":0,"progress":"Complete","took_ms":$tookMs,""" +
+              s""""scroll_id":""""")
+          case Some(sql) =>
+            // rewriteStatementForLogStore pins the statement's source
+            // to the logstream regardless of any FROM in the text —
+            // execute against a one-measurement catalog of the
+            // PPL-filtered frame, inserting the FROM when omitted
+            val cat = Map(stream -> meas.copy(df = frame, extentMs = None))
+            val out = InfluxQL.execute(cat, withFrom(sql, stream))
+            val cols = out.columns.toSeq
+            val dataCols = cols.filterNot(_ == "time") ++
+              (if (cols.contains("time")) Seq("time") else Nil)
+            val rows = out.limit(maxRowLimit + 1).collect()
+            val header = dataCols.map(jsonStr).mkString("[", ",", "]")
+            val body = rows.take(maxRowLimit).map { r =>
+              dataCols.map { c =>
+                r.get(r.fieldIndex(c)) match {
+                  case null => "\"\""
+                  case ts: java.sql.Timestamp => jsonStr(ts.getTime.toString)
+                  case d: Double => jsonStr(
+                    if (d == d.floor && !d.isInfinite) d.toLong.toString
+                    else d.toString)
+                  case v => jsonStr(v.toString)
+                }
+              }.mkString("[", ",", "]")
+            }
+            logkeeperOk(r,
+              s""""total_size":${math.min(rows.length, maxRowLimit)},""" +
+              s""""progress":"Complete","took_ms":$tookMs,"scroll_id":"",""" +
+              s""""groupInfo":[],"dataset":${(header +: body).mkString("[", ",", "]")}""")
+        }
     }
+  }
 
   /** A logkeeper query's PPL stage over `df`, and the SQL tail after
     * the pipe. `__log___` resolves to the stream's content column (the
@@ -3132,40 +2798,25 @@ final class HttpGateway(spark: SparkSession,
 
   /** A logkeeper success reply: the reference's envelope around
     * `fields`. */
-  private def logkeeperOk(ex: HttpExchange, fields: String): Unit =
-    respond(ex, 200, s"""{"success":true,"code":"200","message":"",""" +
+  private def logkeeperOk(r: Request, fields: String): Unit =
+    r.respond(200, s"""{"success":true,"code":"200","message":"",""" +
       s""""request_id":${jsonStr(java.util.UUID.randomUUID.toString)},""" +
       fields + "}")
 
   /** The `logs` and `context` reply: `rows` rendered over `cols`, the
     * time column keyed `time`. */
-  private def logsReply(ex: HttpExchange,
+  private def logsReply(r: Request,
                         rows: Array[org.apache.spark.sql.Row],
                         cols: Seq[String], time: String, tookMs: Long,
                         cursorMs: Long): Unit = {
     def key(c: String) = jsonStr(if (c == time) "time" else c)
     val logs = rows.map(r => cols.map(c =>
       s"${key(c)}:${logCell(r.get(r.fieldIndex(c)))}").mkString("{", ",", "}"))
-    logkeeperOk(ex, s""""count":${rows.length},"progress":"Complete",""" +
+    logkeeperOk(r, s""""count":${rows.length},"progress":"Complete",""" +
       s""""logs":${logs.mkString("[", ",", "]")},""" +
       s""""keys":${cols.map(key).mkString("[", ",", "]")},""" +
       s""""took_ms":$tookMs,"cursor_time":$cursorMs,""" +
       s""""complete_progress":1.0,"scroll_id":""""")
-  }
-
-  /** Pre-compiled logkeeper route patterns (per-request compile is
-    * avoidable hot-path work). */
-  private object LogRouteRx {
-    val consume =
-      ("^/repo/([^/]+)/logstreams/([^/]+)/" +
-        "(consume/cursors|consume/logs|consume/cursor-time|context|" +
-        "logbycursor|cursor(?:/[^/]*)?)$").r
-    val ingest =
-      "^/repo/([^/]+)/logstreams/([^/]+)/(records|upload|recalldata)$".r
-    val streamTask =
-      "^/repo/([^/]+)/logstreams/([^/]+)/stream-task(?:/([^/]+))?$".r
-    val query =
-      "^/repo/([^/]+)/logstreams/([^/]+)/(logs|histogram|analytics)$".r
   }
 
   /** Logkeeper ingest routes (`handler_logstore.go`): POST /records
@@ -3181,28 +2832,20 @@ final class HttpGateway(spark: SparkSession,
     * target is an idempotent 200). All three reuse [[ingestPoints]],
     * so fence registration / schema conflict / persistence behave
     * exactly like /write. */
-  private def handleLogIngestRoutes(ex: HttpExchange, repo: String,
-                                    stream: String,
-                                    action: String): Unit = {
-    val p = params(ex, readBody = false) + ("db" -> repo)
-    if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
-    if (ex.getRequestMethod != "POST") {
-      respond(ex, 405, "{\"error\":\"invalid method\"}"); return
-    }
+  private def logIngest(action: String)(r: Request): Unit = {
+    val (p, repo, stream) = (r.params, r("repo"), r("stream"))
     logStream(repo, stream)
-    if (action == "recalldata") { respond(ex, 200, ""); return }
-    val rawBody = ex.getRequestBody.readAllBytes()
+    if (action == "recalldata") { r.respond(200, ""); return }
+    val rawBody = r.body()
     val body =
-      if (Option(ex.getRequestHeaders.getFirst("x-log-compresstype"))
-          .contains("gzip")) {
+      if (r.header("x-log-compresstype").contains("gzip")) {
         val gz = new java.util.zip.GZIPInputStream(
           new java.io.ByteArrayInputStream(rawBody))
         try new String(gz.readAllBytes(), UTF_8) finally gz.close()
       } else new String(rawBody, UTF_8)
     val nowNs = System.currentTimeMillis() * 1000000L
     val logTags: Map[String, String] =
-      Option(ex.getRequestHeaders.getFirst("log-tags"))
-        .filter(_.nonEmpty)
+      r.header("log-tags").filter(_.nonEmpty)
         .map(MiniJson.parseObject(_).map { case (k, v) =>
           k -> String.valueOf(v) })
         .getOrElse(Map.empty)
@@ -3276,7 +2919,7 @@ final class HttpGateway(spark: SparkSession,
     // logkeeper streams are LOG stores: rows at the same ns are
     // distinct records, never merged into one point
     ingestPoints(repo, pts, mergeSameTime = false)
-    respond(ex, 200, "")
+    r.respond(200, "")
   }
 
   /** Logkeeper stream tasks (`handler_logstore_stream.go`): POST
@@ -3288,52 +2931,49 @@ final class HttpGateway(spark: SparkSession,
     * stream registry: the task compiles to a canonical CREATE STREAM
     * statement, journals like every other stream, and flushes under
     * the same sweep. DELETE /stream-task/{taskId} drops it. */
-  private def handleStreamTaskRoutes(ex: HttpExchange, repo: String,
-                                     stream: String,
-                                     taskId: Option[String]): Unit = {
-    val p = params(ex, readBody = false) + ("db" -> repo)
-    if (guard(ex, p, Auth.WritePrivilege, "write to").isEmpty) return
+  private def createStreamTask(r: Request): Unit = {
+    val (repo, stream) = (r("repo"), r("stream"))
     logStream(repo, stream)
-    (ex.getRequestMethod, taskId) match {
-      case ("POST", None) =>
-        val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-        val cfg = MiniJson.parseObject(body)
-        val id = cfg.get("id").map(String.valueOf(_))
-          .filter(_.nonEmpty).getOrElse(sys.error("id is required"))
-        val query = cfg.get("query").map(String.valueOf(_))
-          .filter(_.nonEmpty).getOrElse(sys.error("query is required"))
-        // a pipe-less `select …` is pure SQL (getPureSqlQuery arm);
-        // otherwise the SELECT is the query's last pipe segment
-        val (_, sqlTail) = LogPipe.splitPplSql(query)
-        val sql = sqlTail.getOrElse {
-          if (query.trim.toLowerCase.startsWith("select")) query.trim
-          else sys.error("query needs a SELECT")
-        }
-        val view = s"view-$stream-$id"
-        val ddl = s"CREATE STREAM '$id' INTO '$view' ON " +
-          withFrom(sql.trim, stream)
-        // StreamCheck: only min/max/sum/count stream-aggregate
-        val st = StreamDDL.parse(ddl)
-        val bad = st.calls.map(_._1)
-          .filterNot(Set("min", "max", "sum", "count"))
-        require(bad.isEmpty,
-          s"unsupported call in stream task: ${bad.mkString(",")}")
-        require(st.from == stream, "stream task must read its logstream")
-        synchronized { registerStream(repo, st, ddl, Long.MinValue)
-          persistDdl() }
-        respond(ex, 200, s"""{"query":${jsonStr(ddl)},""" +
-          s""""repo":${jsonStr(repo)},"logStream":${jsonStr(view)}}""")
-      case ("DELETE", Some(id)) =>
-        synchronized {
-          if (!dbs.get(repo).exists(_.streams.contains(id)))
-            sys.error(s"stream task not found: $id")
-          updDb(repo)(x => x.copy(streams = x.streams - id))
-          persistDdl()
-        }
-        respond(ex, 200, "{}")
-      case (m, t) => respond(ex, 405,
-        s"""{"error":"bad stream-task request: $m $t"}""")
+    val body = new String(r.body(), UTF_8)
+    val cfg = MiniJson.parseObject(body)
+    val id = cfg.get("id").map(String.valueOf(_))
+      .filter(_.nonEmpty).getOrElse(sys.error("id is required"))
+    val query = cfg.get("query").map(String.valueOf(_))
+      .filter(_.nonEmpty).getOrElse(sys.error("query is required"))
+    // a pipe-less `select …` is pure SQL (getPureSqlQuery arm);
+    // otherwise the SELECT is the query's last pipe segment
+    val (_, sqlTail) = LogPipe.splitPplSql(query)
+    val sql = sqlTail.getOrElse {
+      if (query.trim.toLowerCase.startsWith("select")) query.trim
+      else sys.error("query needs a SELECT")
     }
+    val view = s"view-$stream-$id"
+    val ddl = s"CREATE STREAM '$id' INTO '$view' ON " +
+      withFrom(sql.trim, stream)
+    // StreamCheck: only min/max/sum/count stream-aggregate
+    val st = StreamDDL.parse(ddl)
+    val bad = st.calls.map(_._1)
+      .filterNot(Set("min", "max", "sum", "count"))
+    require(bad.isEmpty,
+      s"unsupported call in stream task: ${bad.mkString(",")}")
+    require(st.from == stream, "stream task must read its logstream")
+    synchronized { registerStream(repo, st, ddl, Long.MinValue)
+      persistDdl() }
+    r.respond(200, s"""{"query":${jsonStr(ddl)},""" +
+      s""""repo":${jsonStr(repo)},"logStream":${jsonStr(view)}}""")
+  }
+
+  /** DELETE /stream-task/{taskId} drops a stream task. */
+  private def dropStreamTask(r: Request): Unit = {
+    val (repo, id) = (r("repo"), r("task"))
+    logStream(repo, r("stream"))
+    synchronized {
+      if (!dbs.get(repo).exists(_.streams.contains(id)))
+        sys.error(s"stream task not found: $id")
+      updDb(repo)(x => x.copy(streams = x.streams - id))
+      persistDdl()
+    }
+    r.respond(200, "{}")
   }
 
   /** Logkeeper consume surface (`handler_logstore_consume.go`): the
@@ -3347,15 +2987,10 @@ final class HttpGateway(spark: SparkSession,
     * servePullLog :1006-1008) and mirror that here: authed 200, no body.
     * All collects are (skip + count + 1)-bounded with skip capped at
     * maxRowLimit. */
-  private def handleConsumeRoutes(ex: HttpExchange, t0: Long,
-                                  repo: String, stream: String,
-                                  action: String): Unit = {
-    val p = params(ex, readBody = false) + ("db" -> repo)
-    if (guard(ex, p, Auth.ReadPrivilege, "read from").isEmpty) return
-    if (action == "logbycursor" || action.startsWith("cursor")) {
-      respond(ex, 200, ""); return
-    }
-    val meas = logStream(repo, stream)
+  private def consume(action: String)(r: Request): Unit = {
+    val t0 = System.nanoTime()
+    val (p, stream) = (r.params, r("stream"))
+    val meas = logStream(r("repo"), stream)
     import org.apache.spark.sql.functions._
     def tookMs = (System.nanoTime() - t0) / 1000000L
     def jnum(l: Long) = l.toString
@@ -3387,7 +3022,7 @@ final class HttpGateway(spark: SparkSession,
             Consume.mint(e - 1, stream, reverse = true,
               taskNum = taskNum).encode)}"""
         }.getOrElse(",\"end_cursor\":\"\"")
-        respond(ex, 200,
+        r.respond(200,
           s"""[{"from_cursor":${jsonStr(fromCur.encode)}${endPart}}]""")
 
       case "consume/cursor-time" =>
@@ -3399,7 +3034,7 @@ final class HttpGateway(spark: SparkSession,
           if (ts.isEmpty) (cur.time, cur.time)
           else if (cur.reverse) (ts.max, ts.min)
           else (ts.min, ts.max)
-        respond(ex, 200, s"""{"cursor_time":${jnum(t / 1000000L)},""" +
+        r.respond(200, s"""{"cursor_time":${jnum(t / 1000000L)},""" +
           s""""max_cursor_time":${jnum(maxT / 1000000L)}}""")
 
       case "consume/logs" =>
@@ -3457,7 +3092,7 @@ final class HttpGateway(spark: SparkSession,
             curr = task.curr.copy(timestamp = lastNs, blockId = atLast))))
         }.getOrElse(fromCur)
         val maxLog = batch.lastOption.map(_.getLong(nsIdx)).getOrElse(0L)
-        respond(ex, 200,
+        r.respond(200,
           s"""{"is_complete":$isComplete,"total_count":${batch.length},""" +
           s""""max_log_time":$maxLog,"took_ms":$tookMs,"logs":$logs,""" +
           s""""from_cursor":${jsonStr(newCur.encode)}""" +
@@ -3505,7 +3140,7 @@ final class HttpGateway(spark: SparkSession,
               && col("_ns") < toMs * 1000000L)
         val frame = logPipeFrame(bounded, query)._1
           .orderBy(if (reverse) col(meas.time).desc else col(meas.time).asc)
-        logsReply(ex, frame.limit(limit).collect(), logRenderCols(
+        logsReply(r, frame.limit(limit).collect(), logRenderCols(
           frame.columns.toSeq.filterNot(_ == "_ns"), meas.time), meas.time,
           tookMs, pivotNs / 1000000L)
     }
@@ -3526,82 +3161,103 @@ final class HttpGateway(spark: SparkSession,
     }
   }
 
-  private def handleLabels(ex: HttpExchange): Unit =
-    try {
-      if (guard(ex, params(ex, readBody = false),
-          Auth.ReadPrivilege, "read from").isEmpty) return
-      val names = ("__name__" +: promCat.values.flatMap(_.labels).toSeq)
-        .distinct.sorted
-      promSuccess(ex, names.map(jsonStr).mkString("[", ",", "]"))
-    } catch {
-      case e: Throwable => respond(ex, 400,
-        s"""{"status":"error","error":${jsonStr(String.valueOf(e.getMessage))}}""")
-    }
+  /** The database a plain prom read names: `db`, else the default. */
+  private def promDb(r: Request): String =
+    r.params.get("db").filter(_.nonEmpty).getOrElse(defaultDb)
 
-  private def handleLabelValues(ex: HttpExchange): Unit =
-    try {
-      if (guard(ex, params(ex, readBody = false),
-          Auth.ReadPrivilege, "read from").isEmpty) return
-      val path = ex.getRequestURI.getPath
-      val m = "^/api/v1/label/([^/]+)/values$".r.findFirstMatchIn(path)
-        .getOrElse(sys.error(s"bad label values path: $path"))
-      val label = dec(m.group(1))
-      val values =
-        if (label == "__name__") promCat.keys.toSeq.sorted
-        else promCat.values.toSeq.filter(_.labels.contains(label))
-          .flatMap { mt =>
-            mt.df.select(org.apache.spark.sql.functions.col(label))
-              .distinct().collect()
-              .map(r => String.valueOf(r.get(0)))
-          }.filter(v => v != null && v.nonEmpty && v != "null")
-          .distinct.sorted
-      promSuccess(ex, values.map(jsonStr).mkString("[", ",", "]"))
-    } catch {
-      case e: Throwable => respond(ex, 400,
-        s"""{"status":"error","error":${jsonStr(String.valueOf(e.getMessage))}}""")
-    }
+  /** The prom catalog of a plain prom read: the default database's
+    * metrics, or none for another database — prom series live in the
+    * default database only. */
+  private def promCatOf(r: Request): Map[String, PromQL.Metric] =
+    if (promDb(r) == defaultDb) promCat else Map.empty
 
-  private def handleSeries(ex: HttpExchange): Unit =
-    try {
-      val p = params(ex, readBody = true)
-      if (guard(ex, p, Auth.ReadPrivilege, "read from").isEmpty) return
-      val sel = p.getOrElse("match[]",
-        sys.error("""missing required parameter "match[]""""))
-      PromQL.parse(sel) match {
-        case s: PromQL.Sel =>
-          val mt = promCat.getOrElse(s.name,
-            sys.error(s"unknown metric ${s.name}"))
-          var df = mt.df
-          s.matchers.foreach { case (label, op, v) =>
-            import org.apache.spark.sql.functions.{col, lit}
-            val c = if (df.columns.contains(label)) col(label) else lit("")
-            df = df.filter(op match {
-              case "=" => c === v
-              case "!=" => c =!= v
-              case "=~" => c.rlike("^(?:" + v + ")$")
-              case "!~" => !c.rlike("^(?:" + v + ")$")
+  /** The `{store}` of a metric-store route; an empty one is the
+    * reference's InvalidPromMstName 404. */
+  private def storeOf(r: Request): String = {
+    val s = r("store")
+    if (s.isEmpty) throw new Routes.Status(404, "invalid the metric store")
+    s
+  }
+
+  private def promQuery(range: Boolean)(r: Request): Unit =
+    handleProm(r, range, promCatOf(r), s"db:${promDb(r)}|")
+
+  /** A store query resolves each selector inside the store; a store
+    * nobody created reads as an empty one. */
+  private def storeQuery(range: Boolean)(r: Request): Unit = {
+    val s = storeOf(r)
+    handleProm(r, range, new StoreCatView(promStores.getOrElse(s, emptyStore)),
+      s"store:$s|", tenant = s)
+  }
+
+  /** The label names of a prom namespace: its metric frames' labels, and
+    * `__name__` when `names` lists the metrics (a store's metric names
+    * are its own `__name__` label). */
+  private def labels(r: Request, frames: Iterable[PromQL.Metric],
+                     names: Option[Iterable[String]]): Unit =
+    promSuccess(r, (names.map(_ => "__name__") ++ frames.flatMap(_.labels))
+      .toSeq.distinct.sorted.map(jsonStr).mkString("[", ",", "]"))
+
+  /** The first [[MaxLabelValues]] values of label `{label}` in a prom
+    * namespace (see [[labels]]). */
+  private def labelValues(r: Request, frames: Iterable[PromQL.Metric],
+                          names: Option[Iterable[String]]): Unit = {
+    import org.apache.spark.sql.functions.col
+    val label = r("label")
+    val values = names.filter(_ => label == "__name__").map(_.toSeq)
+      .getOrElse(frames.toSeq.filter(_.labels.contains(label)).flatMap { m =>
+        m.df.select(col(label).cast("string").as("v")).distinct()
+          .orderBy("v").limit(MaxLabelValues).collect()
+          .flatMap(row => Option(row.getString(0)))
+      })
+    promSuccess(r, values.filter(_.nonEmpty).distinct.sorted
+      .take(MaxLabelValues).map(jsonStr).mkString("[", ",", "]"))
+  }
+  private val MaxLabelValues = 1000
+
+  // Prom metric metadata (handler.go:385 servePromQueryMetaData):
+  // every known metric reported untyped with empty help/unit — the
+  // engine's catalog carries no HELP/TYPE declarations
+  private def promMetadata(r: Request): Unit = {
+    val entries = promCatOf(r).keys.toSeq.sorted.map(m =>
+      s"${jsonStr(m)}:[{\"type\":\"unknown\",\"help\":\"\",\"unit\":\"\"}]")
+    promSuccess(r, entries.mkString("{", ",", "}"))
+  }
+
+  private def handleSeries(r: Request): Unit = {
+    val sel = r.params.getOrElse("match[]",
+      sys.error("""missing required parameter "match[]""""))
+    PromQL.parse(sel) match {
+      case s: PromQL.Sel =>
+        val mt = promCatOf(r).getOrElse(s.name,
+          sys.error(s"unknown metric ${s.name}"))
+        var df = mt.df
+        s.matchers.foreach { case (label, op, v) =>
+          import org.apache.spark.sql.functions.{col, lit}
+          val c = if (df.columns.contains(label)) col(label) else lit("")
+          df = df.filter(op match {
+            case "=" => c === v
+            case "!=" => c =!= v
+            case "=~" => c.rlike("^(?:" + v + ")$")
+            case "!~" => !c.rlike("^(?:" + v + ")$")
+          })
+        }
+        val rows = df
+          .select(mt.labels.map(org.apache.spark.sql.functions.col): _*)
+          .distinct().limit(1000).collect()
+        val sets = rows.map { r =>
+          val pairs = (s"""${jsonStr("__name__")}:${jsonStr(s.name)}""" +:
+            mt.labels.zipWithIndex.collect {
+              case (l, i) if r.get(i) != null &&
+                  String.valueOf(r.get(i)).nonEmpty =>
+                s"${jsonStr(l)}:${jsonStr(String.valueOf(r.get(i)))}"
             })
-          }
-          val rows = df
-            .select(mt.labels.map(org.apache.spark.sql.functions.col): _*)
-            .distinct().limit(1000).collect()
-          val sets = rows.map { r =>
-            val pairs = (s"""${jsonStr("__name__")}:${jsonStr(s.name)}""" +:
-              mt.labels.zipWithIndex.collect {
-                case (l, i) if r.get(i) != null &&
-                    String.valueOf(r.get(i)).nonEmpty =>
-                  s"${jsonStr(l)}:${jsonStr(String.valueOf(r.get(i)))}"
-              })
-            pairs.mkString("{", ",", "}")
-          }
-          promSuccess(ex, sets.sorted.mkString("[", ",", "]"))
-        case other => sys.error(s"match[] must be a selector, got $other")
-      }
-    } catch {
-      case e: Throwable => respond(ex, 400,
-        s"""{"status":"error","errorType":"bad_data","error":${
-          jsonStr(String.valueOf(e.getMessage))}}""")
+          pairs.mkString("{", ",", "}")
+        }
+        promSuccess(r, sets.sorted.mkString("[", ",", "]"))
+      case other => sys.error(s"match[] must be a selector, got $other")
     }
+  }
 
   /** One collected (series, step) sample — the results-cache payload. */
   private case class Sample(labels: Seq[(String, String)], evalMs: Long,
@@ -3629,90 +3285,79 @@ final class HttpGateway(spark: SparkSession,
         r.getAs[Long]("eval_ms"), r.getAs[Double]("value")))
   }
 
-  private def handleProm(ex: HttpExchange, range: Boolean,
-                         cat: () => Map[String, PromQL.Metric] = () => promCat,
-                         cacheKeyPrefix: String = "",
-                         tenant: String = ""): Unit =
-    try {
-      val cat0 = cat()
-      val p = params(ex, readBody = true)
-      if (guard(ex, p, Auth.ReadPrivilege, "read from").isEmpty) return
-      val query = p.getOrElse("query",
-        sys.error("missing required parameter \"query\""))
-      // instant queries evaluate the last 5m of buckets ending at `time`
-      // and report the freshest one — Prometheus's instant-vector
-      // lookback (its staleness delta), over this engine's step-bucketed
-      // evaluation.
-      val lookbackMs = 300000L
-      val (loMs, hiMs, step) =
-        if (range) {
-          val lo = promTimeMs(p.getOrElse("start", sys.error("missing start")))
-          val hi = promTimeMs(p.getOrElse("end", sys.error("missing end")))
-          (lo, hi, stepOf(p.getOrElse("step", sys.error("missing step"))))
-        } else {
-          val t = promTimeMs(p.getOrElse("time", sys.error("missing time")))
-          (t - lookbackMs, t, "1 seconds")
-        }
-      // per-tenant max query length (validate.go:172, enforced at the
-      // prom query entry like handler_prom_util.go:498) — RANGE queries
-      // only: an instant query's (lo, hi) is the synthesized 5-minute
-      // lookback, not a user-requested range, and must not trip a
-      // sub-5-minute limit
-      val rangeErr =
-        if (range) Validation.validateQueryTimeRange(
-          runtimeOverrides.limitsFor(tenant), loMs, hiMs)
-        else None
-      if (rangeErr.isDefined) {
-        respond(ex, 400, s"""{"status":"error","errorType":"bad_data",""" +
-          s""""error":${jsonStr(rangeErr.get)}}""")
-        return
+  /** A PromQL instant or range query over `cat`; its range results
+    * cache under `cacheKeyPrefix`, and `tenant`'s limits apply. */
+  private def handleProm(r: Request, range: Boolean,
+                       cat: Map[String, PromQL.Metric],
+                       cacheKeyPrefix: String,
+                       tenant: String = ""): Unit = {
+    val p = r.params
+    val query = p.getOrElse("query",
+      sys.error("missing required parameter \"query\""))
+    // instant queries evaluate the last 5m of buckets ending at `time`
+    // and report the freshest one — Prometheus's instant-vector
+    // lookback (its staleness delta), over this engine's step-bucketed
+    // evaluation.
+    val lookbackMs = 300000L
+    val (loMs, hiMs, step) =
+      if (range) {
+        val lo = promTimeMs(p.getOrElse("start", sys.error("missing start")))
+        val hi = promTimeMs(p.getOrElse("end", sys.error("missing end")))
+        (lo, hi, stepOf(p.getOrElse("step", sys.error("missing step"))))
+      } else {
+        val t = promTimeMs(p.getOrElse("time", sys.error("missing time")))
+        (t - lookbackMs, t, "1 seconds")
       }
-      // range queries flow through the extent-splitting results cache
-      // (`results_cache.go`); `Cache-Control: no-store` opts out like
-      // the reference's shouldCache. Queries pinned with `@ start()`/
-      // `@ end()` bypass it entirely (Cortex isAtModifierCachable):
-      // their pins resolve from the request bounds, so cached extents
-      // are not reusable across requests and gap evaluation with gap
-      // sub-range bounds would silently shift the pin.
-      val noStore =
-        Option(ex.getRequestHeaders.getFirst("Cache-Control"))
-          .exists(_.contains("no-store"))
-      // a job group like /query's: listed by SHOW QUERIES, killable
-      val rq = attachQuery(query, "")
-      val samples =
-        try {
-          if (range && !noStore && !PromQL.usesBoundRelativeAt(query))
-            resultsCache.fetch(s"$cacheKeyPrefix$query|$step", loMs, hiMs,
-              System.currentTimeMillis())(
-              collectSamples(cat0, query, step, _, _))
-          else collectSamples(cat0, query, step, loMs, hiMs)
-        } finally detachQuery(rq)
-      val grouped = samples.groupBy(_.labels)
-        .toSeq.sortBy(_._1.map(_._2).mkString(" "))
-      val result = grouped.flatMap { case (labels, rs) =>
-        val metric = labels.filter(_._2 != null).filter(_._2.nonEmpty)
-          .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }
-          .mkString("{", ",", "}")
-        val inWindow = rs.sortBy(_.evalMs)
-        if (range) {
-          val vals = inWindow.map(s =>
-            s"[${fmtSec(s.evalMs)},${jsonStr(fmtVal(s.value))}]")
-          Some(s"""{"metric":$metric,"values":${
-            vals.mkString("[", ",", "]")}}""")
-        } else inWindow.lastOption.map { s =>
-          val v = s"[${fmtSec(hiMs)},${jsonStr(fmtVal(s.value))}]"
-          s"""{"metric":$metric,"value":$v}"""
-        }
-      }.mkString("[", ",", "]")
-      val rt = if (range) "matrix" else "vector"
-      respond(ex, 200,
-        s"""{"status":"success","data":{"resultType":"$rt","result":$result}}""")
-    } catch {
-      case e: Throwable =>
-        respond(ex, 400,
-          s"""{"status":"error","errorType":"bad_data","error":${
-            jsonStr(String.valueOf(e.getMessage))}}""")
-    }
+    // per-tenant max query length (validate.go:172, enforced at the
+    // prom query entry like handler_prom_util.go:498) — RANGE queries
+    // only: an instant query's (lo, hi) is the synthesized 5-minute
+    // lookback, not a user-requested range, and must not trip a
+    // sub-5-minute limit
+    val rangeErr =
+      if (range) Validation.validateQueryTimeRange(
+        runtimeOverrides.limitsFor(tenant), loMs, hiMs)
+      else None
+    rangeErr.foreach(sys.error)
+    // range queries flow through the extent-splitting results cache
+    // (`results_cache.go`); `Cache-Control: no-store` opts out like
+    // the reference's shouldCache. Queries pinned with `@ start()`/
+    // `@ end()` bypass it entirely (Cortex isAtModifierCachable):
+    // their pins resolve from the request bounds, so cached extents
+    // are not reusable across requests and gap evaluation with gap
+    // sub-range bounds would silently shift the pin.
+    val noStore =
+      r.header("Cache-Control").exists(_.contains("no-store"))
+    // a job group like /query's: listed by SHOW QUERIES, killable
+    val rq = attachQuery(query, "")
+    val samples =
+      try {
+        if (range && !noStore && !PromQL.usesBoundRelativeAt(query))
+          resultsCache.fetch(s"$cacheKeyPrefix$query|$step", loMs, hiMs,
+            System.currentTimeMillis())(
+            collectSamples(cat, query, step, _, _))
+        else collectSamples(cat, query, step, loMs, hiMs)
+      } finally detachQuery(rq)
+    val grouped = samples.groupBy(_.labels)
+      .toSeq.sortBy(_._1.map(_._2).mkString(" "))
+    val result = grouped.flatMap { case (labels, rs) =>
+      val metric = labels.filter(_._2 != null).filter(_._2.nonEmpty)
+        .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }
+        .mkString("{", ",", "}")
+      val inWindow = rs.sortBy(_.evalMs)
+      if (range) {
+        val vals = inWindow.map(s =>
+          s"[${fmtSec(s.evalMs)},${jsonStr(fmtVal(s.value))}]")
+        Some(s"""{"metric":$metric,"values":${
+          vals.mkString("[", ",", "]")}}""")
+      } else inWindow.lastOption.map { s =>
+        val v = s"[${fmtSec(hiMs)},${jsonStr(fmtVal(s.value))}]"
+        s"""{"metric":$metric,"value":$v}"""
+      }
+    }.mkString("[", ",", "]")
+    val rt = if (range) "matrix" else "vector"
+    r.respond(200,
+      s"""{"status":"success","data":{"resultType":"$rt","result":$result}}""")
+  }
 }
 
 object HttpGateway {

@@ -116,17 +116,23 @@ object ResultShaper {
     }
   }
 
-  private def jsonScalar(v: Any, epoch: String = "ms"): String = v match {
-    case null => "null"
-    case d: Double => goFloat(d)
-    case f: Float => goFloat(f.toDouble)
-    case s: String => "\"" + s.flatMap {
+  /** `s` as a JSON string literal, the escape form of every reply the
+    * gateway renders: quote, backslash and newline take their short
+    * forms, other control characters a four-hex-digit escape. */
+  def jsonStr(s: String): String =
+    "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
       case '\n' => "\\n"
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+
+  private def jsonScalar(v: Any, epoch: String = "ms"): String = v match {
+    case null => "null"
+    case d: Double => goFloat(d)
+    case f: Float => goFloat(f.toDouble)
+    case s: String => jsonStr(s)
     case b: Boolean => b.toString
     case ts: java.sql.Timestamp if epoch == "rfc3339" =>
       // the reference's DEFAULT time rendering (no epoch= param):

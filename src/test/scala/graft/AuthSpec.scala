@@ -451,6 +451,176 @@ class AuthSpec extends SparkSpec {
     } finally g.stop()
   }
 
+  test("route privilege table: one request per route against anonymous, " +
+      "READ on d, WRITE on d and admin") {
+    import graft.server.Consume
+    import graft.sources.PromRemoteWrite
+    val prom = Map("events" -> PromQL.Metric(
+      events.withColumn("user", col("user_id").cast("string")),
+      labels = Seq("event_type", "user"), time = "ts", value = "value"))
+    val g = new HttpGateway(spark, Map.empty, prom, requireAuth = true)
+    g.start()
+    def send(method: String, path: String, body: Array[Byte],
+             user: Option[(String, String)]) = {
+      var b = HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:${g.boundPort}$path"))
+      b = method match {
+        case "GET" => b.GET()
+        case "DELETE" => b.DELETE()
+        case _ => b.POST(HttpRequest.BodyPublishers.ofByteArray(body))
+      }
+      user.foreach { case (u, p) => b = b.header(basic(u, p)._1, basic(u, p)._2) }
+      http.send(b.build(), HttpResponse.BodyHandlers.ofString())
+    }
+    val admin = Some(("root", "rpw"))
+    val reader = Some(("reader", "pw"))
+    val writer = Some(("writer", "pw"))
+    def asAdmin(method: String, path: String, body: String = "") = {
+      val r = send(method, path, body.getBytes(UTF_8), admin)
+      assert(r.statusCode() < 300, s"$method $path: ${r.body()}")
+    }
+    def iql(q: String) = s"/query?db=d&q=${enc(q)}"
+    def remote(name: String) = PromRemoteWrite.encode(Seq(PromRemoteWrite
+      .Series(Map("__name__" -> name, "host" -> "a"), Seq((1000L, 1.0)))))
+    try {
+      asAdmin("GET", iql("CREATE USER root WITH PASSWORD 'rpw' WITH ALL " +
+        "PRIVILEGES"))
+      Seq("CREATE DATABASE d", "CREATE USER reader WITH PASSWORD 'pw'",
+          "CREATE USER writer WITH PASSWORD 'pw'", "GRANT READ ON d TO reader",
+          "GRANT WRITE ON d TO writer").foreach(q => asAdmin("GET", iql(q)))
+      asAdmin("POST", "/write?db=d&precision=ms", "m,host=a v=1 1000")
+      asAdmin("POST", "/api/v1/logstream/d/ls")
+      asAdmin("POST", "/repo/d/logstreams/ls/upload", "hello")
+      val cursor = enc(Consume.mint(0L, "ls").encode)
+      val pivot = enc(java.util.Base64.getEncoder.encodeToString(
+        "^^0".getBytes(UTF_8)))
+      val range = "&start=1704067200&end=1704070800&step=1h"
+      val ls = "/repo/d/logstreams/ls"
+      val (ok, no, bad) = (200, 403, 400)
+      // (method, path, body) -> (anonymous, reader, writer, admin); rows
+      // run in order, and a create that one caller made is a 400 for the
+      // next
+      val table: Seq[((String, String, Array[Byte]), (Int, Int, Int, Int))] =
+        Seq[(String, String, Array[Byte], (Int, Int, Int, Int))](
+          ("GET", "/ping", Array(), (204, 204, 204, 204)),
+          ("GET", "/status", Array(), (204, 204, 204, 204)),
+          ("GET", "/metrics", Array(), (ok, ok, ok, ok)),
+          ("GET", "/api/v1/status/buildinfo", Array(), (ok, ok, ok, ok)),
+          ("POST", "/api/v2/query", Array(), (no, no, no, no)),
+          ("GET", "/debug/vars", Array(), (401, no, no, ok)),
+          ("GET", "/debug/query?mod=shards&db=d", Array(), (401, no, no, ok)),
+          ("POST", "/debug/ctrl?mod=snapshot", Array(), (401, no, no, ok)),
+          ("POST", "/failpoint?point=p1&flag=disable", Array(),
+            (401, no, no, ok)),
+          // no persist dir: admin passes the guard, then the run refuses
+          ("POST", "/backup/run?backupPath=/tmp/x", Array(), (401, no, no, bad)),
+          ("POST", "/backup/status", Array(), (401, no, no, ok)),
+          ("POST", "/backup/abort", Array(), (401, no, no, bad)),
+          ("GET", "/fence/match_batch?db=d&points=" + enc("[1.0,2.0]"),
+            Array(), (401, no, ok, ok)),
+          ("POST", "/fence/delete_fence?db=d&fenceId=f1", Array(),
+            (401, no, ok, ok)),
+          ("GET", iql("SELECT count(v) FROM m"), Array(), (401, ok, no, ok)),
+          ("POST", "/write?db=d", "m,host=b v=2".getBytes(UTF_8),
+            (401, no, 204, 204)),
+          ("POST", "/api/v2/write?bucket=d", "m,host=c v=3".getBytes(UTF_8),
+            (401, no, 204, 204)),
+          // an empty Arrow / OTLP body passes the guard, then fails to decode
+          ("POST", "/api/v1/arrow/doput?db=d&mst=arw", Array(),
+            (401, no, bad, bad)),
+          ("GET", "/api/v1/arrow/doget?db=d&q=" + enc("SELECT v FROM m"),
+            Array(), (401, ok, no, ok)),
+          ("POST", "/api/v1/otlp/metrics?db=d", Array(), (401, no, bad, bad)),
+          ("POST", "/api/v1/otlp/logs?db=d", Array(), (401, no, bad, bad)),
+          ("POST", "/api/v1/otlp/traces?db=d", Array(), (401, no, bad, bad)),
+          ("POST", "/api/v1/write?db=d", remote("rw"), (401, no, 204, 204)),
+          ("POST", "/api/v1/prom/write?db=d", remote("rw"), (401, no, 204, 204)),
+          ("POST", "/api/v1/read?db=d", Array(), (401, bad, no, bad)),
+          ("GET", "/api/v1/metadata?db=d", Array(), (401, ok, no, ok)),
+          // prom series live in the default database: `db=d` reads an
+          // empty prom catalog, never the default database's metrics
+          ("GET", "/api/v1/series?db=d&match[]=events", Array(),
+            (401, bad, no, bad)),
+          ("GET", "/api/v1/labels?db=d", Array(), (401, ok, no, ok)),
+          ("GET", "/api/v1/label/__name__/values?db=d", Array(),
+            (401, ok, no, ok)),
+          ("GET", "/api/v1/query?db=d&time=1704067200&query=" +
+            enc("sum(events)"), Array(), (401, bad, no, bad)),
+          ("GET", "/api/v1/query_range?db=d&query=" + enc("sum(events)") +
+            range, Array(), (401, bad, no, bad)),
+          ("GET", "/api/v1/prom/query?db=d&time=1704067200&query=" +
+            enc("sum(events)"), Array(), (401, bad, no, bad)),
+          ("GET", "/api/v1/prom/query_range?db=d&query=" +
+            enc("sum(events)") + range, Array(), (401, bad, no, bad)),
+          ("GET", "/api/v1/query_range?db=graft&query=" + enc("sum(events)") +
+            range, Array(), (401, no, no, ok)),
+          ("POST", "/api/v1/tsdb/d", Array(), (401, no, ok, ok)),
+          // every /prometheus/{store}/… route authorizes {store}, never
+          // the `db` param
+          ("POST", "/prometheus/d/api/v1/write", remote("cpu"),
+            (401, no, 204, 204)),
+          ("POST", "/prometheus/s9/api/v1/write?db=d", remote("cpu"),
+            (401, no, no, 204)),
+          ("GET", "/prometheus/d/api/v1/query?query=cpu&time=1", Array(),
+            (401, ok, no, ok)),
+          ("GET", "/prometheus/nostore/api/v1/query?db=d&query=x&time=0",
+            Array(), (401, no, no, ok)),
+          ("GET", "/prometheus/d/api/v1/query_range?query=cpu&start=0" +
+            "&end=10&step=1s", Array(), (401, ok, no, ok)),
+          ("GET", "/prometheus/d/api/v1/labels", Array(), (401, ok, no, ok)),
+          ("GET", "/prometheus/d/api/v1/label/host/values", Array(),
+            (401, ok, no, ok)),
+          ("GET", "/api/v1/repository?db=d", Array(), (401, ok, no, ok)),
+          ("POST", "/api/v1/repository/r2", Array(), (401, no, no, ok)),
+          ("DELETE", "/api/v1/repository/r2", Array(), (401, no, no, ok)),
+          ("GET", "/api/v1/logstream/d", Array(), (401, ok, no, ok)),
+          ("POST", "/api/v1/logstream/d/ls2", Array(), (401, no, ok, bad)),
+          ("DELETE", "/api/v1/logstream/d/ls2", Array(), (401, no, ok, bad)),
+          ("GET", s"$ls/logs?from=0&to=9999", Array(), (401, ok, no, ok)),
+          ("GET", s"$ls/histogram?from=0&to=9999", Array(), (401, ok, no, ok)),
+          ("GET", s"$ls/analytics?from=0&to=9999", Array(), (401, ok, no, ok)),
+          ("GET", s"$ls/consume/cursors?from=0", Array(), (401, ok, no, ok)),
+          ("GET", s"$ls/consume/logs?from_cursor=$cursor", Array(),
+            (401, ok, no, ok)),
+          ("GET", s"$ls/consume/cursor-time?cursor=$cursor", Array(),
+            (401, ok, no, ok)),
+          ("GET", s"$ls/context?cursor=$pivot&from=0&to=9999", Array(),
+            (401, ok, no, ok)),
+          ("GET", s"$ls/logbycursor", Array(), (401, ok, no, ok)),
+          ("GET", s"$ls/cursor", Array(), (401, ok, no, ok)),
+          ("GET", s"$ls/cursor/c1", Array(), (401, ok, no, ok)),
+          ("POST", s"$ls/records", """{"time":1,"msg":"a"}""".getBytes(UTF_8),
+            (401, no, ok, ok)),
+          ("POST", s"$ls/upload", "line".getBytes(UTF_8), (401, no, ok, ok)),
+          ("POST", s"$ls/recalldata", Array(), (401, no, ok, ok)),
+          ("POST", s"$ls/stream-task", ("""{"id":"t1","query":"select """ +
+            """count(v) from ls group by time(5s)"}""").getBytes(UTF_8),
+            (401, no, ok, bad)),
+          ("DELETE", s"$ls/stream-task/t1", Array(), (401, no, ok, bad))
+        ).map { case (m, p, b, want) => ((m, p, b), want) }
+      table.foreach { case ((method, path, body), (an, rd, wr, ad)) =>
+        Seq(None -> an, reader -> rd, writer -> wr, admin -> ad).foreach {
+          case (user, want) =>
+            val got = send(method, path, body, user)
+            assert(got.statusCode() == want, s"${user.map(_._1)
+              .getOrElse("anonymous")}: $method $path -> " +
+              s"${got.statusCode()} ${got.body()}")
+        }
+      }
+      // the reader's READ on d shows none of the default database's
+      // prom metrics
+      val names = send("GET", "/api/v1/label/__name__/values?db=d",
+        Array(), reader).body()
+      assert(names == """{"status":"success","data":[]}""", names)
+      val labels = send("GET", "/api/v1/labels?db=d", Array(), reader).body()
+      assert(labels == """{"status":"success","data":["__name__"]}""", labels)
+      // a store write lands in its store whatever `db` says
+      val store = send("GET", "/prometheus/s9/api/v1/labels", Array(),
+        admin).body()
+      assert(store.contains("host"), store)
+    } finally g.stop()
+  }
+
   test("Auth unit: SET PASSWORD re-salts (old snapshot can't precompute)") {
     val a = new Auth
     a.execute("CREATE USER u1 WITH PASSWORD 'pw'")

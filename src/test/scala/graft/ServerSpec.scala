@@ -717,6 +717,25 @@ class ServerSpec extends SparkSpec {
       (s \ "event_type") == JString("click")))
   }
 
+  test("label values answer at most 1,000 values, like the store route") {
+    val df = spark.range(1001).selectExpr("format_string('v%04d', id) AS k",
+      "CAST(id AS DOUBLE) AS value", "timestamp_seconds(id) AS ts")
+    val g = new HttpGateway(spark, Map.empty,
+      Map("wide" -> PromQL.Metric(df, labels = Seq("k"), time = "ts",
+        value = "value")))
+    g.start()
+    try {
+      val r = http.send(HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:${g.boundPort}/api/v1/label/k/values")).GET()
+        .build(), HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200, r.body())
+      val JArray(vals) = (JsonMethods.parse(r.body()) \ "data")
+        .asInstanceOf[JArray]
+      assert(vals.size == 1000 && vals.head == JString("v0000") &&
+        vals.last == JString("v0999"), r.body().take(200))
+    } finally g.stop()
+  }
+
   test("/api/v1/query_range rejects bad queries with a prom error document") {
     val r = get(s"/api/v1/query_range?query=${enc("nope(")}" +
       "&start=0&end=10&step=1s")
@@ -994,6 +1013,7 @@ class ServerSpec extends SparkSpec {
         URI.create(s"http://127.0.0.1:${g.boundPort}$path")).GET().build(),
         HttpResponse.BodyHandlers.ofString())
       assert(req("/ping").statusCode() == 204)
+      assert(req("/api/v1/labels").statusCode() == 200)
       val m = req("/metrics")
       assert(m.statusCode() == 200)
       assert(m.headers().firstValue("Content-Type").orElse("")
@@ -1003,6 +1023,10 @@ class ServerSpec extends SparkSpec {
       val v = "graft_handler_ping_req_total (\\d+)".r
         .findFirstMatchIn(m.body()).map(_.group(1).toLong)
       assert(v.exists(_ >= 1), m.body().take(400))
+      // every request counts once: /ping, /api/v1/labels and /metrics
+      val all = "graft_handler_req_total (\\d+)".r
+        .findFirstMatchIn(m.body()).map(_.group(1).toLong)
+      assert(all.contains(3L), m.body().take(400))
       assert(m.body().contains("graft_runtime_total_memory_bytes"))
     } finally g.stop()
   }
@@ -2249,6 +2273,18 @@ class ServerSpec extends SparkSpec {
       val c = ask(g2, "SELECT count(v), sum(v) FROM bk").body()
       assert(c.contains(",2,4.0]") || c.contains(",2,4]"), c)
     } finally g2.stop()
+  }
+
+  test("backup status JSON escapes quotes, backslashes and control " +
+      "characters in a failure message") {
+    import graft.server.{Backup, MiniJson}
+    val job = new Backup.Job("/tmp/x", isInc = false)
+    val msg = "copy \"a\\b\"\nfailed:\tC:\\dir"
+    job.status = "failed"
+    job.error = Some(msg)
+    val parsed = MiniJson.parseObject(job.renderJson)
+    assert(parsed("error") == msg && parsed("status") == "failed",
+      job.renderJson)
   }
 
   test("geo fences: register via write, match_batch, delete, restart") {
