@@ -1540,10 +1540,14 @@ object InfluxQL {
     * with the result registered as a queryable measurement (the
     * reference's IntoClause writes it into the database; our catalog is
     * the functional equivalent — callers persist via parquet/LineProtocol
-    * sinks when durability is wanted). */
-  def executeInto(catalog: Map[String, Measurement],
-                  sql: String): (Map[String, Measurement], DataFrame) = {
-    val (q, df) = executeStatement(catalog, sql)
+    * sinks when durability is wanted). `keep` turns the statement's
+    * frame into the one that is registered and returned (the gateway
+    * materializes it, so reads of the target never re-run the SELECT). */
+  def executeInto(catalog: Map[String, Measurement], sql: String,
+                  keep: DataFrame => DataFrame = identity)
+      : (Map[String, Measurement], DataFrame) = {
+    val (q, df0) = executeStatement(catalog, sql)
+    val df = keep(df0)
     q.flatMap(_.into) match {
       case Some(target) =>
         val m = Measurement(

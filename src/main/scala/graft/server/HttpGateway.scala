@@ -966,41 +966,53 @@ final class HttpGateway(spark: SparkSession,
     }
   }
 
-  // Each write path grows its measurement by one unionByName per
-  // request; left unchecked the logical plan (and every query's
-  // analysis cost) grows linearly with write count. Every
-  // `CompactEvery` unions the accumulated plan is truncated with an
-  // eager localCheckpoint — the in-memory analogue of the /write
-  // path's parquet [[graft.sources.Compaction]]. Guarded by the same
-  // `synchronized` the write paths already hold.
-  private val CompactEvery = 32
-  private def maybeCompact(db: String, lineage: String,
-                           df: DataFrame): DataFrame = {
+  /** Compute `df` once, at write time: at most `defaultParallelism`
+    * partitions (a union of many batches, or a shuffle's output, would
+    * otherwise give every later read one task per partition), held as
+    * an eager local checkpoint, so no read re-runs its lineage — the
+    * in-memory analogue of the reference's memtable holding decoded
+    * rows (SURVEY §3.3). */
+  private def materialize(df: DataFrame): DataFrame =
+    df.coalesce(spark.sparkContext.defaultParallelism).localCheckpoint(true)
+
+  // Each write path grows its measurement by one unionByName of a
+  // materialized batch per request; left unchecked the logical plan
+  // (and every query's analysis and task count) grows linearly with
+  // write count. Every `CompactEvery` unions the accumulated plan is
+  // materialized — the in-memory analogue of the /write path's parquet
+  // [[graft.sources.Compaction]]. A point merge (`merged`) is
+  // materialized when it is made, so it counts as a compaction.
+  // Guarded by the same `synchronized` the write paths already hold.
+  private def maybeCompact(db: String, lineage: String, df: DataFrame,
+                           merged: Boolean = false): DataFrame = {
     val d = dbs.get(db).flatMap(_.depths.get(lineage)).getOrElse(0) + 1
-    val full = d >= CompactEvery
+    val full = merged || d >= HttpGateway.CompactEvery
     updDb(db)(x =>
       x.copy(depths = x.depths + (lineage -> (if (full) 0 else d))))
-    if (full) df.localCheckpoint(true) else df
+    if (full) materialize(df) else df
   }
 
-  /** The one write path: persist `batch` (time column `ts`) as
-    * measurement `name` of database `db`, then grow the live entry — a
-    * point-merge when `pointMerge` (the batch overlaps the known
-    * extent), else a union — and, for the prom kinds, the metric or
-    * metric-store twin. Callers hold `synchronized`. */
+  /** The one write path: materialize `batch` (time column `ts`) once,
+    * persist that frame as measurement `name` of database `db`, then
+    * grow the live entry with the same rows — a point-merge when
+    * `pointMerge` (the batch overlaps the known extent), else a union —
+    * and, for the prom kinds, the metric or metric-store twin. Returns
+    * the materialized batch. Callers hold `synchronized`. */
   private def append(db: String, name: String, batch: DataFrame,
                      tagKeys: Seq[String], kind: Store.Kind = Store.Plain,
-                     pointMerge: Boolean = false): Unit = {
+                     pointMerge: Boolean = false): DataFrame = {
     dbNamed(db)
-    store.foreach(_.append(db, name, batch, tagKeys, kind))
+    val rows = materialize(batch)
+    store.foreach(_.append(db, name, rows, tagKeys, kind))
     val grown = mstsOf(db).get(name) match {
       case Some(prev) =>
         val tags = (prev.tags ++ tagKeys).distinct
         InfluxQL.Measurement(maybeCompact(db, name,
-          if (pointMerge) HttpGateway.mergePoints(prev.df, batch, tags)
-          else prev.df.unionByName(batch, allowMissingColumns = true)),
+          if (pointMerge) HttpGateway.mergePoints(prev.df, rows, tags)
+          else prev.df.unionByName(rows, allowMissingColumns = true),
+          merged = pointMerge),
           tags, prev.time)
-      case None => InfluxQL.Measurement(batch, tagKeys, "ts")
+      case None => InfluxQL.Measurement(rows, tagKeys, "ts")
     }
     setMsts(db, mstsOf(db) + (name -> grown))
     // prom writes land in the default database only, so `name` is the
@@ -1009,15 +1021,16 @@ final class HttpGateway(spark: SparkSession,
       twins + (name -> (twins.get(name) match {
         case Some(prev) => prev.copy(
           df = maybeCompact(db, lineage,
-            prev.df.unionByName(batch, allowMissingColumns = true)),
+            prev.df.unionByName(rows, allowMissingColumns = true)),
           labels = (prev.labels ++ tagKeys).distinct, extentMs = None)
-        case None => PromQL.Metric(batch, tagKeys, "ts", "value")
+        case None => PromQL.Metric(rows, tagKeys, "ts", "value")
       }))
     kind match {
       case Store.Prom => promCat = grow(promCat, s"prom:$name")
       case Store.PromStore => promStores = grow(promStores, s"promstore:$name")
       case _ =>
     }
+    rows
   }
   // extent-splitting PromQL range results cache (results_cache.go);
   // invalidated whenever the prom catalog changes (remote write)
@@ -1169,8 +1182,10 @@ final class HttpGateway(spark: SparkSession,
       route("POST", "/backup/status", Admin)(_.respond(200,
         backupJob.map(_.renderJson).getOrElse("{\"status\":\"idle\"}"))),
       route("POST", "/backup/abort", Admin)(backupAbort),
-      route("GET", "/fence/match_batch", write)(fenceMatch),
-      route("POST", "/fence/delete_fence", write)(fenceDelete),
+      // fences are one gateway-wide registry, not a database's: any
+      // authenticated user may match against them, only an admin delete
+      route("GET", "/fence/match_batch", Authed)(fenceMatch),
+      route("POST", "/fence/delete_fence", Admin)(fenceDelete),
       route("GET POST", "/query", Authed, form = true,
         meter = queryMeter)(handleQuery),
       route("POST", "/write", write, meter = writeMeter)(
@@ -1245,8 +1260,12 @@ final class HttpGateway(spark: SparkSession,
         readStore, Prom)(r => labelValues(r, promStores.get(storeOf(r)), None)),
       // Logkeeper CRUD (handler.go:483-512, handler_logstore.go): a
       // REPOSITORY is a database and a LOGSTREAM is a measurement in it
-      route("GET", "/api/v1/repository", read)(_.respond(200,
-        dbs.keys.toSeq.sorted.map(jsonStr).mkString("[", ",", "]"))),
+      // only the repositories the caller may read (all of them for an
+      // admin, or with auth off)
+      route("GET", "/api/v1/repository", Authed)(r => r.respond(200,
+        dbs.keys.toSeq.sorted.filter(db => r.principal.forall(
+          _.authorizeDatabase(Auth.ReadPrivilege, db)))
+          .map(jsonStr).mkString("[", ",", "]"))),
       route("POST", "/api/v1/repository/{repo}", writeRepo)(createRepository),
       route("DELETE", "/api/v1/repository/{repo}", writeRepo)(dropRepository),
       route("GET", "/api/v1/logstream/{repo}", readRepo)(r => r.respond(200,
@@ -2137,7 +2156,7 @@ final class HttpGateway(spark: SparkSession,
         s"""{"statement_id":$id}"""
       case Statement.SelectInto =>
         val cat = reqCat()
-        val (cat2, df) = InfluxQL.executeInto(cat, stmt)
+        val (cat2, df) = InfluxQL.executeInto(cat, stmt, materialize)
         val written = df.count()
         // only the INTO target changed; writes that landed meanwhile
         // in other measurements stay
@@ -2323,13 +2342,7 @@ final class HttpGateway(spark: SparkSession,
     synchronized {
       pts.groupBy(_.measurement).foreach { case (m, ps) =>
         val tagKeys = ps.flatMap(_.tags.keys).distinct.sorted
-        val pdf = spark.createDataset(ps)(
-          Encoders.product[LineProtocol.Point]).toDF()
-        val tbl = LineProtocol.toMeasurementTable(pdf, m, tagKeys,
-          ps.flatMap(_.floatFields.keys).distinct.sorted,
-          ps.flatMap(_.intFields.keys).distinct.sorted,
-          ps.flatMap(_.boolFields.keys).distinct.sorted,
-          ps.flatMap(_.stringFields.keys).distinct.sorted)
+        val tbl = HttpGateway.pointsTable(spark, m, ps)
         val d = dbNamed(wdb)
         // log stores (logkeeper logstreams) append: same-ns rows are
         // distinct log records, never one point
@@ -2397,8 +2410,8 @@ final class HttpGateway(spark: SparkSession,
     val wdb = writeDb(r.params.get("db"))
     val mst = r.params.getOrElse("mst", sys.error("missing measurement (mst)"))
     val (df, tagKeys) = graft.sources.ArrowIngest.decode(spark, r.body())
-    synchronized { append(wdb, mst, df, tagKeys) }
-    r.respond(200, s"""{"rows":${df.count()}}""")
+    val rows = synchronized { append(wdb, mst, df, tagKeys) }
+    r.respond(200, s"""{"rows":${rows.count()}}""")
   }
 
   /** Arrow do-get (`services/arrowflight/service.go:349` DoGet →
@@ -3364,6 +3377,22 @@ object HttpGateway {
   /** The database a request without `db` reads and writes. */
   val DefaultDb = "graft"
 
+  /** Unions a live write lineage takes before it is compacted. */
+  private[graft] val CompactEvery = 32
+
+  /** Measurement `m`'s points of one write batch as its ingest table
+    * ([[LineProtocol.toMeasurementTable]]): the batch's tag keys and
+    * its fields of each type, each set in sorted order. */
+  private[graft] def pointsTable(spark: SparkSession, m: String,
+                                 ps: Seq[LineProtocol.Point]): DataFrame =
+    LineProtocol.toMeasurementTable(
+      spark.createDataset(ps)(Encoders.product[LineProtocol.Point]).toDF(),
+      m, ps.flatMap(_.tags.keys).distinct.sorted,
+      ps.flatMap(_.floatFields.keys).distinct.sorted,
+      ps.flatMap(_.intFields.keys).distinct.sorted,
+      ps.flatMap(_.boolFields.keys).distinct.sorted,
+      ps.flatMap(_.stringFields.keys).distinct.sorted)
+
   /** A statement's frame with its `time` column as the HTTP edge renders
     * it (epoch=/RFC3339), and whether that axis is epoch ns. The engine's
     * `time` output is epoch ms (LONG) — or the exact epoch-ns `__tns`
@@ -3400,9 +3429,9 @@ object HttpGateway {
     * nodes). The append-vs-overwrite decision lives in the caller
     * (ingestPoints tracks each measurement's known ns extent and skips
     * the merge entirely for non-overlapping batches). */
-  private[server] def mergePoints(prev: org.apache.spark.sql.DataFrame,
-                                  fresh: org.apache.spark.sql.DataFrame,
-                                  tagKeys: Seq[String])
+  private[graft] def mergePoints(prev: org.apache.spark.sql.DataFrame,
+                                 fresh: org.apache.spark.sql.DataFrame,
+                                 tagKeys: Seq[String])
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     // prev is already one-row-per-point; any fresh row outranks it —
@@ -3416,8 +3445,8 @@ object HttpGateway {
   }
 
   /** [[mergePoints]] for a single batch (line order = write order). */
-  private[server] def mergeBatch(tbl: org.apache.spark.sql.DataFrame,
-                                 tagKeys: Seq[String])
+  private[graft] def mergeBatch(tbl: org.apache.spark.sql.DataFrame,
+                                tagKeys: Seq[String])
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     dedupPoints(tbl.withColumn("__ds_seq", monotonically_increasing_id()),

@@ -1,5 +1,7 @@
 package graft.server
 
+import graft.sources.ResultShaper
+
 /** Minimal recursive-descent JSON parser for gateway request bodies
   * (log records ingest, mapping params). Returns
   * Map[String, Any] / Vector[Any] / String / Double / Boolean / null.
@@ -28,18 +30,7 @@ object MiniJson {
   def render(v: Any): String = v match {
     case null => "null"
     case l: Long => l.toString
-    case s: String =>
-      val b = new StringBuilder("\"")
-      s.foreach {
-        case '"' => b.append("\\\"")
-        case '\\' => b.append("\\\\")
-        case '\n' => b.append("\\n")
-        case '\r' => b.append("\\r")
-        case '\t' => b.append("\\t")
-        case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-        case c => b.append(c)
-      }
-      b.append("\"").result()
+    case s: String => ResultShaper.jsonStr(s)
     case d: Double =>
       if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15)
         d.toLong.toString

@@ -516,10 +516,12 @@ class AuthSpec extends SparkSpec {
           ("POST", "/backup/run?backupPath=/tmp/x", Array(), (401, no, no, bad)),
           ("POST", "/backup/status", Array(), (401, no, no, ok)),
           ("POST", "/backup/abort", Array(), (401, no, no, bad)),
+          // fences are gateway-wide: any user matches, only an admin
+          // deletes, whatever `db` names
           ("GET", "/fence/match_batch?db=d&points=" + enc("[1.0,2.0]"),
-            Array(), (401, no, ok, ok)),
+            Array(), (401, ok, ok, ok)),
           ("POST", "/fence/delete_fence?db=d&fenceId=f1", Array(),
-            (401, no, ok, ok)),
+            (401, no, no, ok)),
           ("GET", iql("SELECT count(v) FROM m"), Array(), (401, ok, no, ok)),
           ("POST", "/write?db=d", "m,host=b v=2".getBytes(UTF_8),
             (401, no, 204, 204)),
@@ -570,7 +572,8 @@ class AuthSpec extends SparkSpec {
           ("GET", "/prometheus/d/api/v1/labels", Array(), (401, ok, no, ok)),
           ("GET", "/prometheus/d/api/v1/label/host/values", Array(),
             (401, ok, no, ok)),
-          ("GET", "/api/v1/repository?db=d", Array(), (401, ok, no, ok)),
+          // lists only the repositories the caller may read
+          ("GET", "/api/v1/repository?db=d", Array(), (401, ok, ok, ok)),
           ("POST", "/api/v1/repository/r2", Array(), (401, no, no, ok)),
           ("DELETE", "/api/v1/repository/r2", Array(), (401, no, no, ok)),
           ("GET", "/api/v1/logstream/d", Array(), (401, ok, no, ok)),
@@ -618,6 +621,14 @@ class AuthSpec extends SparkSpec {
       val store = send("GET", "/prometheus/s9/api/v1/labels", Array(),
         admin).body()
       assert(store.contains("host"), store)
+      // the repository list shows a user only what they may read
+      asAdmin("GET", iql("CREATE DATABASE e"))
+      def repos(user: Option[(String, String)]) =
+        send("GET", "/api/v1/repository", Array(), user).body()
+      assert(repos(reader) == "[\"d\"]", repos(reader))
+      assert(repos(writer) == "[]", repos(writer))
+      assert(repos(admin).contains("\"e\"") && repos(admin).contains("\"d\""),
+        repos(admin))
     } finally g.stop()
   }
 

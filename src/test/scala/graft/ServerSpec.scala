@@ -1160,6 +1160,52 @@ class ServerSpec extends SparkSpec {
     } finally g.stop()
   }
 
+  test("logkeeper records: control characters in a fail row's content and " +
+      "a nested field render as a /query reply renders them") {
+    val g = new HttpGateway(spark, Map.empty, Map.empty)
+    g.start()
+    try {
+      def req(method: String, path: String, body: String = "") = {
+        val b = HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${g.boundPort}$path"))
+        http.send((method match {
+          case "GET" => b.GET()
+          case _ => b.POST(HttpRequest.BodyPublishers.ofString(body))
+        }).build(), HttpResponse.BodyHandlers.ofString())
+      }
+      def iql(sql: String) = {
+        val r = req("GET", "/query?db=esc&epoch=ms&q=" + enc(sql))
+        assert(r.statusCode() == 200, r.body())
+        r.body()
+      }
+      assert(req("POST", "/api/v1/repository/esc").statusCode() == 200)
+      assert(req("POST", "/api/v1/logstream/esc/web").statusCode() == 200)
+      val raw = "a\r\tb"
+      // one record with the characters in a string and a nested field,
+      // and one array element that is no record (a fail row whose
+      // content is the element's JSON text)
+      val body = """[{"time": 1, "msg": "a\r\tb", """ +
+        """"obj": {"k": "a\r\tb"}}, "a\r\tb"]"""
+      val w = req("POST", "/repo/esc/logstreams/web/records?type=jsonArray" +
+        "&precision=ms", body)
+      assert(w.statusCode() == 200, w.body())
+      // how a /query reply renders the characters
+      val rendered = ResultShaper.jsonStr(raw)
+      assert(rendered == "\"a\\u000d\\u0009b\"", rendered)
+      val msg = iql("SELECT msg FROM web")
+      assert(msg.contains("[1," + rendered + "]"), msg)
+      // the nested field and the fail row hold that same rendering
+      val JArray(rows) =
+        JsonMethods.parse(iql("SELECT obj, content FROM web")) \\ "values"
+      val cells = rows.flatMap {
+        case JArray(_ :: cs) => cs
+        case x => fail(x.toString)
+      }
+      assert(cells.filter(_ != JNull).toSet ==
+        Set(JString("{\"k\":" + rendered + "}"), JString(rendered)), rows)
+    } finally g.stop()
+  }
+
   test("consume is ns-exact: a from-cursor inside a partial millisecond " +
       "neither skips nor re-serves sub-ms rows") {
     val g = new HttpGateway(spark, Map.empty, Map.empty)
